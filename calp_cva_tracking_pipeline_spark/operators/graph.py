@@ -422,18 +422,6 @@ def pagerank_weighted_sql(
     )
 
 
-def _tri_cut(df: DataFrame, name: str) -> DataFrame:
-    """r16 A/B knob: lazy-cut ``df`` iff ``name`` is in the
-    SPARK_GRAFT_TRI_CUTS env list (default: the shipped cut set).
-    Temporary harness for the barrier-placement bisect; the winner is
-    pinned and this indirection stays only as documentation of the
-    tested alternatives."""
-    import os
-
-    cuts = os.environ.get("SPARK_GRAFT_TRI_CUTS", "e").split(",")
-    return df.localCheckpoint(eager=False) if name in cuts else df
-
-
 def triangle_stats(
     edges: DataFrame,
     src_col: str = "src",
@@ -484,7 +472,9 @@ def triangle_stats(
         .filter(F.col(u) != F.col(v))
         .distinct()
     )
-    e = _tri_cut(e, "e")
+    # the one lazy cut; the tested alternatives (cuts on {e, o, adj}
+    # and no cut at all) and their timings are in the docstring
+    e = e.localCheckpoint(eager=False)
     deg = (
         e.select(F.col(u).alias("n"))
         .union(e.select(F.col(v).alias("n")))
@@ -517,7 +507,6 @@ def triangle_stats(
         )
         .select("edge.s", "edge.t")
     )
-    o = _tri_cut(o, "o")
     # Close triangles EDGE-centrically (r15, guide §2.3 "shuffle fewer
     # bytes"): every triangle {a,b,c} with orientation a→b, a→c, b→c
     # is witnessed exactly once, at the a→b edge between its two
@@ -534,9 +523,7 @@ def triangle_stats(
     # joins stay explicitly SHUFFLE_HASH: an adjacency table is NOT a
     # dimension table, and a planner broadcast of a many-MB side would
     # be driver-heap roulette at real edge counts.
-    adj = _tri_cut(
-        o.groupBy("s").agg(F.collect_list("t").alias("__ts")), "adj"
-    )
+    adj = o.groupBy("s").agg(F.collect_list("t").alias("__ts"))
     tri = (
         o.select("s", "t")
         .join(adj.hint("shuffle_hash"), "s")

@@ -2063,18 +2063,6 @@ def ivf_cell_balance(
     )
 
 
-def _fr_cut(df: DataFrame, name: str) -> DataFrame:
-    """r16 A/B knob (same pattern as graph._tri_cut): lazy-cut ``df``
-    iff ``name`` is in the SPARK_GRAFT_FR_CUTS env list (default: the
-    shipped cut set for graph_search_frontier)."""
-    import os
-
-    cuts = os.environ.get(
-        "SPARK_GRAFT_FR_CUTS", "edges,q,brute,cvec,cand,entries"
-    ).split(",")
-    return df.localCheckpoint(eager=False) if name in cuts else df
-
-
 def graph_search_frontier(
     corpus: DataFrame,
     queries: DataFrame,
@@ -2103,203 +2091,198 @@ def graph_search_frontier(
     layer assignment); per hop, the candidate set grows by the
     out-neighbors of the current top-``beam`` candidates (cosine 6 dp
     desc, id tie-break), and recall@k reads the top-k of the candidate
-    set. Per-query state is bounded by entry_n + hops·beam·edge_k —
-    INDEPENDENT of corpus size; the corpus-scale work is the one-time
-    graph build (T93, measured) plus one vector-fetch join per hop
-    against the bounded candidate list. Self-matches are excluded to
-    match brute ground truth.
+    set. Self-matches are excluded to match brute ground truth. Corpus
+    ids and query ids must each be unique.
+
+    Execution: an incremental beam search over ONE row of bounded state
+    per query — query vector and norm, brute-force truth ids, the
+    top-max(k, beam) list (cosine desc, id asc), the visited ids and
+    the per-hop hit and candidate counts. The top-m of a growing
+    candidate set is the top-m of (previous top-m ∪ new candidates), so
+    each hop scores only the neighbors it adds and merges them into the
+    list (the reuse of the previous top-k in Incremental Based Framework
+    for Efficient Top-K Similarity Search, EDBT 2020). One hop is:
+    explode the beam ids, left-join the node table (corpus id → its own
+    vector and its out-neighbors with their vectors and norms), group by
+    query, then score the unvisited neighbors and merge them in SQL
+    higher-order functions.
+
+    Physical shape: one lazy cut, on the node table (the corpus-scale
+    build: knn_graph plus the vector joins), and one exchange per hop,
+    the query grouping. The node-table join carries no broadcast hint:
+    a node table too large to broadcast adds the join's id-keyed
+    exchange, and when AQE broadcasts a small one the state stays
+    hash-partitioned by query, so hops after the first need no
+    exchange at all. The lineage is linear — no frame is
+    consumed twice — so no per-hop cut is needed. Per-query state is
+    bounded by entry_n + hops·beam·edge_k visited ids, INDEPENDENT of
+    corpus size. Measured on 4 cores (128 × 64-dim corpus, 32 queries,
+    3 hops): 21 Spark jobs per run, build and execution together.
 
     Output one row per hop count: (hops, k, n_pairs, n_hit,
     recall_ppm, mean_cands = avg distinct candidates scored per query,
     integer div) — recall_ppm is the quality axis, mean_cands the cost
-    axis of the curve.
+    axis of the curve. An empty query frame yields max_hops + 1 rows of
+    zero counts.
     """
     if entry_n <= 0 or beam <= 0 or max_hops < 0:
         raise ValueError(
             f"entry_n/beam must be positive, max_hops >= 0: "
             f"{entry_n}/{beam}/{max_hops}"
         )
-    # All lineage cuts in this kernel are LAZY (eager=False, r15) and,
-    # per the r16 verdict-ask-#1 bisect, applied ONLY to the expensive
-    # subtrees (guide §2.4): edges (the knn_graph build), brute (the
-    # exact ground truth), cvec (the corpus projection+norm each hop
-    # streams), q (dim-sized but feeds brute + every hop's scorer +
-    # the seed), plus the tiny per-hop CANDIDATE frames (the recursion
-    # variable: cutting cand truncates the hop-to-hop lineage growth at
-    # a materialization cost of nq x bounded rows — near-free barriers).
-    # The r15 per-hop cuts on the SCORED frames were pruned: their
-    # replans are broadcast-join streams over the already-cut cvec RDD
-    # (no parquet re-read, no shuffle — the cheap-replan class, <= 3
-    # replans per hop off the shallow cand RDD), while each scored cut
-    # cost a corpus-stream materialization barrier plus driver-side
-    # planning per hop. Cold-JVM A/B this session: r15 shipped set
-    # (edges,q,brute,cvec,sc) 7.8s median; drop-sc 6.5-7.2; this set
-    # 6.4 with the tightest spread; no-cuts 8.7 with unbounded scans;
-    # dropping q or cvec regressed (6.9-10.0).
-    edges = _fr_cut(
-        knn_graph(
-            corpus,
-            id_col,
-            vec_col,
-            k=edge_k,
-            n_centroids=n_centroids,
-            nprobe=nprobe,
-        ).select(F.col(id_col).alias("__src"), F.col("neighbor_id")),
-        "edges",
+    m = max(k, beam)
+    edges = knn_graph(
+        corpus, id_col, vec_col, k=edge_k, n_centroids=n_centroids,
+        nprobe=nprobe,
     )
-    # query frame is dim-sized and static. NOT cache(): Spark's
-    # CacheManager matches identical logical plans ACROSS bench runs of
-    # the same query, which is cross-run result caching — banned (r15
-    # verdict #4; de-minimis here, but the rule has no de-minimis
-    # clause). The lazy localCheckpoint dedups execution within one run
-    # and is rebuilt by the next run like every other cut.
-    q = _fr_cut(
+    # corpus-side norms fold once per vector row, not once per (query x
+    # candidate) pair (the r12 knn_graph pattern)
+    vecs = corpus.select(
+        F.col(id_col).alias("__nid"), F.col(vec_col).alias("__v")
+    ).withColumn("__n", norm(F.col("__v")))
+    out_nbrs = (
+        edges.join(
+            vecs.select(
+                F.col("__nid").alias("neighbor_id"),
+                F.struct(
+                    F.col("__nid").alias("id"),
+                    F.col("__v").alias("v"),
+                    F.col("__n").alias("n"),
+                ).alias("__nb"),
+            ),
+            "neighbor_id",
+        )
+        .groupBy(F.col(id_col).alias("__nid"))
+        .agg(F.collect_list("__nb").alias("__nbrs"))
+    )
+    # The node table feeds the brute truth, the entry points and every
+    # hop's join: the one lazy cut, so the corpus is read and the k-NN
+    # graph built once. Nodes without out-edges (exact duplicates that
+    # knn_graph collapsed) keep their own vector, with null __nbrs.
+    nodes = vecs.join(out_nbrs, "__nid", "left").localCheckpoint(
+        eager=False
+    )
+    truth = (
+        brute_force_topk(
+            nodes, queries, "__nid", "__v", query_id_col, query_vec_col,
+            k=k,
+        )
+        .groupBy("query_id")
+        .agg(F.collect_list("neighbor_id").alias("__truth"))
+    )
+    entries = (
+        nodes.orderBy("__nid")
+        .limit(entry_n)
+        .agg(
+            F.collect_list(
+                F.struct(
+                    F.col("__nid").alias("id"),
+                    F.col("__v").alias("v"),
+                    F.col("__n").alias("n"),
+                )
+            ).alias("__new")
+        )
+    )
+    # truth and entries are query- resp. entry_n-bounded: broadcast, so
+    # the query stream is not shuffled before the first hop's grouping.
+    # Hop 0 scores the entries (__new) against an empty top list.
+    id_t = corpus.schema[id_col].dataType.simpleString()
+    state = (
         queries.select(
             F.col(query_id_col).alias("query_id"),
-            F.col(query_vec_col).alias("__qvec"),
-        ).withColumn("__qnrm", norm(F.col("__qvec"))),
-        "q",
-    )
-    brute = _fr_cut(
-        brute_force_topk(
-            corpus, q, id_col, vec_col, "query_id", "__qvec", k=k
-        ).select("query_id", "neighbor_id"),
-        "brute",
-    )
-    # corpus-side norm folds once per fetched vector row, not once per
-    # (query x candidate) pair (the r12 knn_graph pattern). Checkpointed
-    # (lazy) because every hop's vector fetch re-reads it: without the
-    # cut each hop re-scans the embeddings parquet and re-folds the
-    # norms (r15 plan audit: 8 corpus FileScans in one frontier plan).
-    cvec = _fr_cut(
-        corpus.select(
-            F.col(id_col).alias("cand_id"), F.col(vec_col).alias("__cvec")
-        ).withColumn("__cnrm", norm(F.col("__cvec"))),
-        "cvec",
-    )
-    # n_queries enters the plan as a 1-row aggregate over the cached
-    # query frame instead of a driver-side count(): the r15 job audit
-    # read 4 count jobs (q + one per hop) in the build phase — folding
-    # them into the final plan computes the same integers during the
-    # one output job (the per-hop candidate counts aggregate over the
-    # ALREADY-CHECKPOINTED scored frames, so no work is duplicated).
-    n_queries_df = q.agg(
-        F.count(F.lit(1)).cast("bigint").alias("__nq")
-    )
-
-    # entries is a corpus-wide TakeOrdered whose result is entry_n rows:
-    # without a cut each hop-0 consumer replans the corpus scan (r16
-    # plan audit: 2 parquet scans re-appeared once the scored cuts were
-    # pruned). Cutting it is a 4-row materialization — the §2.4
-    # expensive-subtree/cheap-result shape the cut policy exists for.
-    entries = _fr_cut(
-        corpus.select(F.col(id_col).alias("cand_id"))
-        .orderBy("cand_id")
-        .limit(entry_n),
-        "entries",
-    )
-    # candidate sets are per-query bounded (entry_n + hops*beam*edge_k);
-    # score per hop against the bounded list (r16: the per-hop scored
-    # frames are no longer cut — see the cut-policy comment above)
-    def scored(cand):
-        # the candidate list is the bounded side (nq x (entry_n +
-        # h*beam*edge_k) rows — the same dimension contract under which
-        # q itself is broadcast below); broadcasting it makes the
-        # corpus-sized vector fetch a streamed BroadcastHashJoin
-        # instead of a per-hop SortMergeJoin that shuffles the corpus
-        # by cand_id (r15 plan audit: 12 SMJs across the 3 hops)
-        return (
-            cvec.join(F.broadcast(cand), "cand_id")
-            .join(F.broadcast(q), "query_id")
-            .filter(F.col("cand_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                "cand_id",
-                F.round(
-                    dot(F.col("__qvec"), F.col("__cvec"))
-                    / (F.col("__qnrm") * F.col("__cnrm")),
-                    6,
-                ).alias("__cos"),
-            )
+            F.col(query_vec_col).alias("__qv"),
         )
-
-    # the seed candidate frame is queries x entry_n rows off the cached
-    # q — trivially replanned; its former eager localCheckpoint paid a
-    # whole job to save nothing (r15 job audit)
-    cand = q.select("query_id").crossJoin(F.broadcast(entries))
-    parts = []
+        .withColumn("__qn", norm(F.col("__qv")))
+        .join(F.broadcast(truth), "query_id", "left")
+        .withColumn("__truth", F.coalesce("__truth", F.array()))
+        .crossJoin(F.broadcast(entries))
+        .selectExpr(
+            "*",
+            f"CAST(array() AS array<struct<c:double,id:{id_t}>>) AS __top",
+            f"CAST(array() AS array<{id_t}>) AS __vis",
+            "CAST(array() AS array<int>) AS __hits",
+            "CAST(array() AS array<int>) AS __ncand",
+        )
+    )
+    # cosine exactly as brute_force_topk computes it (same IEEE ops)
+    cos = (
+        "round(aggregate(zip_with(__qv, x.v, (a, b) -> CAST(a AS DOUBLE)"
+        " * CAST(b AS DOUBLE)), 0D, (s, p) -> s + p) / (__qn * x.n), 6)"
+    )
+    by_rank = (
+        "(l, r) -> CASE WHEN l.c > r.c THEN -1 WHEN l.c < r.c THEN 1"
+        " WHEN l.id < r.id THEN -1 WHEN l.id > r.id THEN 1 ELSE 0 END"
+    )
+    carried = ["__qv", "__qn", "__truth", "__top", "__vis", "__hits", "__ncand"]
     for h in range(max_hops + 1):
-        sc = _fr_cut(scored(cand), "sc")
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("__cos").desc(), F.col("cand_id")
-        )
-        topk = sc.withColumn("__r", F.row_number().over(w)).filter(
-            F.col("__r") <= k
-        )
-        # both sides of the recall join are bounded by contract (nq·k
-        # rows each); the planner still SMJ'd them — 2 exchanges + 2
-        # sorts of tiny frames per hop (r15 executed-plan audit).
-        # Broadcasting the served side makes each a streamed
-        # BroadcastHashJoin off the already-cut brute frame.
-        joined = brute.join(
-            F.broadcast(topk),
-            (brute["query_id"] == topk["query_id"])
-            & (brute["neighbor_id"] == topk["cand_id"]),
-            "left",
-        ).select(
-            F.when(topk["cand_id"].isNotNull(), 1)
-            .otherwise(0)
-            .alias("__hit")
-        )
-        n_cands_df = sc.agg(
-            F.count(F.lit(1)).cast("bigint").alias("__ncands")
-        )
-        parts.append(
-            joined.agg(
-                F.lit(h).cast("int").alias("hops"),
-                F.lit(k).cast("bigint").alias("k"),
-                F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
-                F.coalesce(F.sum("__hit"), F.lit(0))
-                .cast("bigint")
-                .alias("n_hit"),
-            )
-            .crossJoin(F.broadcast(n_cands_df))
-            .crossJoin(F.broadcast(n_queries_df))
-            .select(
-                "hops",
-                "k",
-                "n_pairs",
-                "n_hit",
-                F.expr(
-                    "CAST(1000000 * n_hit div n_pairs AS BIGINT)"
-                ).alias("recall_ppm"),
-                F.when(
-                    F.col("__nq") > 0,
-                    F.expr("CAST(__ncands div __nq AS BIGINT)"),
+        if h:
+            # gather the out-neighbors of each query's beam
+            state = (
+                state.selectExpr(
+                    "query_id", *carried,
+                    "explode_outer(transform("
+                    f"slice(__top, 1, {beam}), t -> t.id)) AS __b",
                 )
-                .otherwise(F.lit(0))
-                .cast("bigint")
-                .alias("mean_cands"),
+                .join(
+                    nodes.select("__nid", "__nbrs"),
+                    F.col("__b") == F.col("__nid"),
+                    "left",
+                )
+                .groupBy("query_id")
+                .agg(
+                    *(F.first(c).alias(c) for c in carried),
+                    F.flatten(F.collect_list("__nbrs")).alias("__new"),
+                )
             )
+        # score the unvisited neighbors only; one reached from several
+        # beam nodes scores to the same (c, id) struct, kept once
+        state = state.selectExpr(
+            "query_id", *carried,
+            "array_distinct(transform(filter(__new, x -> x.id != query_id"
+            " AND NOT array_contains(__vis, x.id)),"
+            f" x -> named_struct('c', {cos}, 'id', x.id))) AS __sc",
+        ).selectExpr(
+            "query_id", "__qv", "__qn", "__truth",
+            f"slice(array_sort(concat(__top, __sc), {by_rank}), 1, {m})"
+            " AS __top",
+            "concat(__vis, transform(__sc, x -> x.id)) AS __vis",
+            "__hits", "__ncand",
+        ).selectExpr(
+            "query_id", "__qv", "__qn", "__truth", "__top", "__vis",
+            "concat(__hits, array(size(array_intersect(__truth,"
+            f" transform(slice(__top, 1, {k}), t -> t.id))))) AS __hits",
+            "concat(__ncand, array(size(__vis))) AS __ncand",
         )
-        if h < max_hops:
-            beam_f = sc.withColumn(
-                "__r", F.row_number().over(w)
-            ).filter(F.col("__r") <= beam)
-            nbrs = beam_f.join(
-                edges, beam_f["cand_id"] == edges["__src"]
-            ).select("query_id", F.col("neighbor_id").alias("cand_id"))
-            # r16: the cut moved from the scored frames to HERE — cand
-            # is the recursion variable, so cutting it bounds the
-            # hop-to-hop plan depth at the cost of materializing
-            # nq x bounded rows (near-free), where the scored cuts
-            # paid a corpus-stream barrier per hop (see the cut-policy
-            # comment at the top of the kernel).
-            cand = _fr_cut(cand.unionByName(nbrs).distinct(), "cand")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.orderBy("hops")
+    # one global aggregate (one row even over zero queries), then one
+    # row per hop
+    sums = state.agg(
+        F.count(F.lit(1)).cast("bigint").alias("__nq"),
+        F.coalesce(F.sum(F.size("__truth")), F.lit(0))
+        .cast("bigint")
+        .alias("n_pairs"),
+        *(
+            F.coalesce(F.sum(F.col("__hits")[h]), F.lit(0))
+            .cast("bigint")
+            .alias(f"__hit{h}")
+            for h in range(max_hops + 1)
+        ),
+        *(
+            F.coalesce(F.sum(F.col("__ncand")[h]), F.lit(0))
+            .cast("bigint")
+            .alias(f"__nc{h}")
+            for h in range(max_hops + 1)
+        ),
+    )
+    rows = ", ".join(
+        f"named_struct('hops', {h}, 'k', CAST({k} AS BIGINT),"
+        f" 'n_pairs', n_pairs, 'n_hit', __hit{h},"
+        f" 'recall_ppm', CAST(IF(n_pairs > 0,"
+        f" 1000000 * __hit{h} div n_pairs, 0) AS BIGINT),"
+        f" 'mean_cands', CAST(IF(__nq > 0, __nc{h} div __nq, 0)"
+        " AS BIGINT))"
+        for h in range(max_hops + 1)
+    )
+    return sums.selectExpr(f"inline(array({rows}))").orderBy("hops")
 
 
 def ivf_range_search(

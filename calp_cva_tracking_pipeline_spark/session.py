@@ -15,6 +15,7 @@ Local testing runs on ``local[N]`` but every default here is chosen for the
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -169,6 +170,19 @@ def normalize_session(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _package_zip_name(pkg_dir: Path, sources: list[Path]) -> str:
+    """Name of the shipped package zip, keyed on a content hash of the
+    package sources: an edited source gets a new zip, so Python workers
+    never import a zip left over from older code."""
+    h = hashlib.sha256()
+    for py in sources:
+        h.update(py.relative_to(pkg_dir).as_posix().encode())
+        h.update(b"\0")
+        h.update(py.read_bytes())
+        h.update(b"\0")
+    return f"calp_cva_pkg_{h.hexdigest()[:16]}.zip"
+
+
 def _ship_package(spark: SparkSession) -> None:
     sc = spark.sparkContext
     if getattr(sc, "_calp_pkg_shipped", False):
@@ -176,13 +190,12 @@ def _ship_package(spark: SparkSession) -> None:
     import calp_cva_tracking_pipeline_spark as pkg
 
     pkg_dir = Path(pkg.__file__).resolve().parent
-    zpath = (
-        Path(tempfile.gettempdir()) / f"calp_cva_pkg_{pkg.__version__}.zip"
-    )
+    sources = sorted(pkg_dir.rglob("*.py"))
+    zpath = Path(tempfile.gettempdir()) / _package_zip_name(pkg_dir, sources)
     if not zpath.exists():
         tmp = zpath.with_suffix(f".{os.getpid()}.tmp")
         with zipfile.ZipFile(tmp, "w") as zf:
-            for py in sorted(pkg_dir.rglob("*.py")):
+            for py in sources:
                 zf.write(py, f"{pkg_dir.name}/{py.relative_to(pkg_dir)}")
         os.replace(tmp, zpath)
     sc.addPyFile(str(zpath))

@@ -50,74 +50,6 @@ def test_hits_matches_rational_reference_random_digraphs(spark):
         assert got == exp, f"trial {trial}"
 
 
-def test_graph_search_frontier_matches_python_beam(spark):
-    """graph_search_frontier's recall rows == a pure-Python beam search
-    over the SAME edge set (built by knn_graph) and the same brute
-    ground truth — the deterministic expansion contract, replayed."""
-    from calp_cva_tracking_pipeline_spark.operators.similarity import (
-        brute_force_topk,
-        graph_search_frontier,
-        knn_graph,
-    )
-
-    rng = random.Random(1307)
-    dim, n = 6, 40
-    vecs = {
-        i: [round(rng.uniform(-1, 1), 3) for _ in range(dim)]
-        for i in range(n)
-    }
-    df = spark.createDataFrame(
-        [(i, v) for i, v in vecs.items()], "vec_id long, embedding array<double>"
-    )
-    queries = df.filter("vec_id >= 30")
-    k, beam, entry_n, hops = 3, 4, 2, 2
-
-    out = {
-        r.hops: (r.n_pairs, r.n_hit, r.recall_ppm)
-        for r in graph_search_frontier(
-            df, queries, "vec_id", "embedding", "vec_id", "embedding",
-            edge_k=3, n_centroids=4, nprobe=2,
-            entry_n=entry_n, beam=beam, max_hops=hops, k=k,
-        ).collect()
-    }
-
-    edges = {}
-    for r in knn_graph(
-        df, "vec_id", "embedding", k=3, n_centroids=4, nprobe=2
-    ).collect():
-        edges.setdefault(r.vec_id, []).append(r.neighbor_id)
-    brute = {}
-    for r in brute_force_topk(
-        df, queries, "vec_id", "embedding", "vec_id", "embedding", k=k
-    ).collect():
-        brute.setdefault(r.query_id, set()).add(r.neighbor_id)
-
-    def cos(a, b):
-        d = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        return round(d / (na * nb), 6)
-
-    totals = {h: [0, 0] for h in range(hops + 1)}  # h -> [pairs, hits]
-    for q in range(30, 40):
-        cand = set(sorted(vecs)[:entry_n])
-        for h in range(hops + 1):
-            scored = sorted(
-                ((cos(vecs[q], vecs[c]), -c) for c in cand if c != q),
-                reverse=True,
-            )
-            topk = {-cid for _, cid in scored[:k]}
-            totals[h][0] += k  # brute emits k pairs per query
-            totals[h][1] += len(topk & brute[q])
-            if h < hops:
-                for b in (-cid for _, cid in scored[:beam]):
-                    cand |= set(edges.get(b, []))
-    for h in range(hops + 1):
-        pairs, hits_n = totals[h]
-        assert out[h][0] == pairs and out[h][1] == hits_n, (h, out[h], totals[h])
-        assert out[h][2] == 1_000_000 * hits_n // pairs
-
-
 def test_sprt_matches_python_reference(spark):
     """sprt_audit == a pure-Python Wald SPRT with the same nano-literal
     weights on randomized daily counters, including the first-crossing
