@@ -80,10 +80,6 @@ def SQL_MONEY_SUM(expr: str) -> str:
     return f"CAST(SUM(CAST({expr} AS DECIMAL(18,2))) AS DOUBLE)"
 
 
-def SQL_PRODUCT_SUM(expr: str) -> str:
-    return f"CAST(SUM(CAST({expr} AS DECIMAL(27,6))) AS DOUBLE)"
-
-
 def SQL_MONEY_AVG(expr: str) -> str:
     return (
         f"CAST(CAST(SUM(CAST({expr} AS DECIMAL(18,2))) AS DOUBLE)"

@@ -12,20 +12,10 @@ table.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from calp_cva_tracking_pipeline_spark.functions.text import regex_quote
-
-
-def broadcast_enrich(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: list[str] | Column,
-    how: str = "left",
-) -> DataFrame:
-    """J2/J3/J9 — dimension enrichment with an explicit broadcast hint."""
-    return fact.join(F.broadcast(dim), on, how)
 
 
 def join_with_fallback(

@@ -2344,20 +2344,6 @@ def winsorized_stats(
     ).orderBy(*group_cols)
 
 
-def poisson1_thresholds_60(max_k: int = 8) -> list[int]:
-    """Poisson(1) inverse-CDF thresholds scaled to the 60-bit hash range
-    — plan-time Python, embedded as literals in Spark plans AND SQL
-    oracles (the dcg_weights_nano discipline: no runtime libm)."""
-    import math
-
-    out, cdf, p = [], 0.0, math.exp(-1.0)
-    for k in range(max_k):
-        cdf += p
-        out.append(int(cdf * (1 << 60)))
-        p = p / (k + 1)
-    return out
-
-
 # seed for the bootstrap replica universal-hash family — a plan-time
 # constant shared with the SQL oracle (distinct from the MinHash tiers'
 # default seed so replica draws never correlate with LSH bands)

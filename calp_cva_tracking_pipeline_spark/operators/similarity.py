@@ -70,10 +70,6 @@ def norm(a: Column) -> Column:
     )
 
 
-def cosine_similarity(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,

@@ -11,6 +11,9 @@ Local testing runs on ``local[N]`` but every default here is chosen for the
   should be ~2-3× total cluster cores in production; AQE coalesces the rest.
 - Arrow enabled so Pandas-UDF operators (ML inference, multimodal decode)
   move batches, not rows, across the JVM↔Python boundary.
+- Generated-code cache sized so a warm pass reuses every compiled class
+  (``CODEGEN_CACHE_MAX_ENTRIES``). The conf is static: it takes effect only
+  when the session is built here, never through ``normalize_session``.
 """
 
 from __future__ import annotations
@@ -36,6 +39,16 @@ TARGET_SHUFFLE_PARTITION_BYTES = 128 * 1024 * 1024
 # 100 TB / 128 MB the true need is ~800k partitions — production clusters
 # should raise this cap alongside executor count (doc: SCALE.md §shuffle).
 MAX_AUTO_SHUFFLE_PARTITIONS = 1 << 17
+
+# Entries in Spark's generated-code cache (spark.sql.codegen.cache.maxEntries,
+# default 100). The cache is an LRU, so a pass that cycles through more
+# classes than it holds evicts each class before reuse and recompiles all
+# of them on every pass. Distinct classes one pass uses, measured on 4 cores
+# with a cache that never evicts: perfbench `catalog` 167 and `cva_pipeline`
+# 127; in bench.py's suite at sf0.1 the largest single queries are
+# pf_release_report 172, dd_dup_census 153 and ann_graph_frontier 134.
+# 1000 is ~6x the largest. Static conf: read once, when the session is built.
+CODEGEN_CACHE_MAX_ENTRIES = 1000
 
 
 def get_spark(
@@ -70,6 +83,9 @@ def get_spark(
         # a wide plan build (ep2: ~900 ops) spends ~40% of its driver time
         # there. Engine errors still carry full SQL context without it.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config(
+            "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES)
+        )
         .config("spark.ui.enabled", "false")
         # the console progress bar writes \r-spam to stderr; under the
         # bench driver that stderr lands in the published artifact's
