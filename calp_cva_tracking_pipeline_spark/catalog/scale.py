@@ -3662,6 +3662,27 @@ PR_PART_OFFSET = 1_000_000  # part node ids live above supplier ids
 PR_ITERS = 3
 
 
+def _supplier_part_digraph(spark, sf_dir):
+    """The directed supplier↔part graph the link-analysis queries share,
+    derived from lineitem: supplier→part edges from even orderkeys,
+    part→supplier from odd — cycles plus genuine dangling nodes, and
+    (supplier, part) pairs repeat across orders, so the raw edge list
+    is a multigraph. Columns (src, dst); part ids are shifted by
+    PR_PART_OFFSET above the supplier ids."""
+    li = T(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_partkey", "l_suppkey"
+    )
+    fwd = li.filter(F.col("l_orderkey") % 2 == 0).select(
+        F.col("l_suppkey").alias("src"),
+        (F.col("l_partkey") + PR_PART_OFFSET).alias("dst"),
+    )
+    bwd = li.filter(F.col("l_orderkey") % 2 == 1).select(
+        (F.col("l_partkey") + PR_PART_OFFSET).alias("src"),
+        F.col("l_suppkey").alias("dst"),
+    )
+    return fwd.unionByName(bwd)
+
+
 def gr_pagerank(spark, sf_dir):
     """Fixed-iteration PageRank (operators.graph.pagerank) over the
     supplier↔part graph derived from lineitem: supplier→part edges from
@@ -3674,18 +3695,9 @@ def gr_pagerank(spark, sf_dir):
     once per round, so the plan is linear in n_iter with zero cuts."""
     from calp_cva_tracking_pipeline_spark.operators.graph import pagerank
 
-    li = T(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_suppkey"
+    return pagerank(
+        _supplier_part_digraph(spark, sf_dir), n_iter=PR_ITERS
     )
-    fwd = li.filter(F.col("l_orderkey") % 2 == 0).select(
-        F.col("l_suppkey").alias("src"),
-        (F.col("l_partkey") + PR_PART_OFFSET).alias("dst"),
-    )
-    bwd = li.filter(F.col("l_orderkey") % 2 == 1).select(
-        (F.col("l_partkey") + PR_PART_OFFSET).alias("src"),
-        F.col("l_suppkey").alias("dst"),
-    )
-    return pagerank(fwd.union(bwd), n_iter=PR_ITERS)
 
 
 def _gr_pagerank_sql() -> str:
@@ -10556,19 +10568,8 @@ def gr_adamic_adar(spark, sf_dir):
         adamic_adar,
     )
 
-    li = T(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_suppkey"
-    )
-    fwd = li.filter(F.col("l_orderkey") % 2 == 0).select(
-        F.col("l_suppkey").alias("src"),
-        (F.col("l_partkey") + PR_PART_OFFSET).alias("dst"),
-    )
-    bwd = li.filter(F.col("l_orderkey") % 2 == 1).select(
-        (F.col("l_partkey") + PR_PART_OFFSET).alias("src"),
-        F.col("l_suppkey").alias("dst"),
-    )
     return adamic_adar(
-        fwd.union(bwd),
+        _supplier_part_digraph(spark, sf_dir),
         min_shared=AA_MIN_SHARED,
         max_neighbors=AA_CAP,
         top_k_per_node=AA_TOPK,
@@ -13949,22 +13950,11 @@ def gr_ppr(spark, sf_dir):
         personalized_pagerank,
     )
 
-    li = T(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_suppkey"
-    )
-    fwd = li.filter(F.col("l_orderkey") % 2 == 0).select(
-        F.col("l_suppkey").alias("src"),
-        (F.col("l_partkey") + PR_PART_OFFSET).alias("dst"),
-    )
-    bwd = li.filter(F.col("l_orderkey") % 2 == 1).select(
-        (F.col("l_partkey") + PR_PART_OFFSET).alias("src"),
-        F.col("l_suppkey").alias("dst"),
-    )
     seeds = spark.createDataFrame(
         [(int(x),) for x in PPR_SEEDS], "node long"
     )
     return personalized_pagerank(
-        fwd.unionByName(bwd), seeds, "src", "dst",
+        _supplier_part_digraph(spark, sf_dir), seeds, "src", "dst",
         n_iter=PPR_ITER,
     )
 
@@ -14002,18 +13992,10 @@ def gr_hits(spark, sf_dir):
     the unrolled SQL recurrence (the pagerank nano discipline)."""
     from calp_cva_tracking_pipeline_spark.operators.graph import hits
 
-    li = T(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_suppkey"
+    return hits(
+        _supplier_part_digraph(spark, sf_dir), "src", "dst",
+        n_iter=HITS_ITER,
     )
-    fwd = li.filter(F.col("l_orderkey") % 2 == 0).select(
-        F.col("l_suppkey").alias("src"),
-        (F.col("l_partkey") + PR_PART_OFFSET).alias("dst"),
-    )
-    bwd = li.filter(F.col("l_orderkey") % 2 == 1).select(
-        (F.col("l_partkey") + PR_PART_OFFSET).alias("src"),
-        F.col("l_suppkey").alias("dst"),
-    )
-    return hits(fwd.unionByName(bwd), "src", "dst", n_iter=HITS_ITER)
 
 
 def _gr_hits_sql() -> str:
@@ -14073,18 +14055,7 @@ def gr_reciprocity(spark, sf_dir):
         reciprocity,
     )
 
-    li = T(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_suppkey"
-    )
-    fwd = li.filter(F.col("l_orderkey") % 2 == 0).select(
-        F.col("l_suppkey").alias("src"),
-        (F.col("l_partkey") + PR_PART_OFFSET).alias("dst"),
-    )
-    bwd = li.filter(F.col("l_orderkey") % 2 == 1).select(
-        (F.col("l_partkey") + PR_PART_OFFSET).alias("src"),
-        F.col("l_suppkey").alias("dst"),
-    )
-    return reciprocity(fwd.unionByName(bwd), "src", "dst")
+    return reciprocity(_supplier_part_digraph(spark, sf_dir), "src", "dst")
 
 
 GR_RECIPROCITY_SQL = f"""
@@ -14123,19 +14094,9 @@ def gr_hits_weighted(spark, sf_dir):
         hits_weighted,
     )
 
-    li = T(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_suppkey"
-    )
-    fwd = li.filter(F.col("l_orderkey") % 2 == 0).select(
-        F.col("l_suppkey").alias("src"),
-        (F.col("l_partkey") + PR_PART_OFFSET).alias("dst"),
-    )
-    bwd = li.filter(F.col("l_orderkey") % 2 == 1).select(
-        (F.col("l_partkey") + PR_PART_OFFSET).alias("src"),
-        F.col("l_suppkey").alias("dst"),
-    )
     return hits_weighted(
-        fwd.unionByName(bwd), "src", "dst", n_iter=HITS_ITER
+        _supplier_part_digraph(spark, sf_dir), "src", "dst",
+        n_iter=HITS_ITER,
     )
 
 
@@ -14149,23 +14110,14 @@ def gr_pagerank_weighted(spark, sf_dir):
     (VERDICT r14 ask #7). Same integer nano-unit rounds, sentinel
     dangling accumulator, and linear plan as the unweighted flagship;
     degenerates to pagerank bit-for-bit on a deduplicated edge list
-    (property-pinned in tests/test_wave_r15.py)."""
+    (property-pinned in tests/test_graph.py)."""
     from calp_cva_tracking_pipeline_spark.operators.graph import (
         pagerank_weighted,
     )
 
-    li = T(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_suppkey"
+    return pagerank_weighted(
+        _supplier_part_digraph(spark, sf_dir), n_iter=PR_ITERS
     )
-    fwd = li.filter(F.col("l_orderkey") % 2 == 0).select(
-        F.col("l_suppkey").alias("src"),
-        (F.col("l_partkey") + PR_PART_OFFSET).alias("dst"),
-    )
-    bwd = li.filter(F.col("l_orderkey") % 2 == 1).select(
-        (F.col("l_partkey") + PR_PART_OFFSET).alias("src"),
-        F.col("l_suppkey").alias("dst"),
-    )
-    return pagerank_weighted(fwd.unionByName(bwd), n_iter=PR_ITERS)
 
 
 def _gr_pagerank_weighted_sql() -> str:

@@ -1,4 +1,22 @@
-"""Graph operators: fixed-iteration PageRank over an edge DataFrame.
+"""Graph operators over an edge DataFrame: link ranking, triangle and
+clustering census, communities, neighbourhoods and reachability.
+
+The link rankers are two private kernels behind five public wrappers:
+
+- ``_sentinel_pagerank`` — the fixed-iteration sentinel PageRank
+  recurrence over a weighted edge frame (src, dst, __w) with an
+  optional teleport seed set — runs ``pagerank`` (distinct edges,
+  w = 1, uniform teleport), ``pagerank_weighted`` (link-multiplicity
+  weights) and ``personalized_pagerank`` (distinct edges, seed
+  teleport);
+- ``_hits`` — fixed-iteration un-normalized HITS over (__s, __d, __w)
+  — runs ``hits`` (distinct edges, w = 1) and ``hits_weighted``
+  (link-multiplicity weights).
+
+The wrappers only frame the input (``_edge_frame``); their SQL twins
+(``pagerank_sql``, ``pagerank_weighted_sql``, ``ppr_sql`` and the
+catalog's HITS builders) stay independent spellings of the same
+recurrences, so oracle parity checks the kernels.
 
 No reference counterpart (the reference has no graph algorithms); engine
 addition for link-style analyses a corpus pipeline runs at scale —
@@ -6,7 +24,7 @@ ranking crawl hosts by the link graph, weighting documents by citation
 structure, prioritizing dedup-cluster exemplars (the candidate-pair
 graph from ``dedup.py`` IS an edge list this consumes directly).
 
-Scale design:
+PageRank scale design:
 
 - Each iteration is one null-safe equi-join of the rank vector against
   the STATIC augmented contribution graph (keyed on the source node)
@@ -20,9 +38,9 @@ Scale design:
   SENTINEL row of the rank vector: static (dangling → sentinel,
   share 1) edges collect it and static (sentinel → node, share N)
   edges fan it back uniformly — one round lagged, initialized exactly
-  (see ``pagerank``'s docstring).
-- The node and source counts are the only driver-side values (two
-  bounded collects at build time).
+  (see ``_sentinel_pagerank``'s docstring).
+- The node, seed and dangling counts are the only driver-side values
+  (one bounded collect at build time).
 
 Determinism (why an iterative float algorithm can hash-match a SQL
 oracle): ranks live in integer NANO-UNITS (BIGINT). Every step — the
@@ -72,113 +90,158 @@ def _cut(df: DataFrame, checkpoint: str, eager: bool = True) -> DataFrame:
     )
 
 
-def pagerank(
+def _edge_frame(
     edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    n_iter: int = 3,
-    damping_pct: int = 85,
-    checkpoint: str = "local",
+    src_col: str,
+    dst_col: str,
+    names: tuple[str, str],
+    weighted: bool,
 ) -> DataFrame:
-    """Fixed-iteration PageRank. Returns (node, rank_nano) — integer
-    nano-units per the module contract; rank_nano/1e9 is the usual
-    probability-mass rank. Duplicate edges collapse (unweighted graph);
-    edges with a NULL endpoint are dropped (a NULL end is a malformed
-    edge, and NULL is the sentinel key below); every node appearing as
-    source OR destination is ranked, including pure sinks.
+    """The rankers' input framing: NULL-endpoint edges dropped (a NULL
+    end is a malformed edge, and NULL is the PageRank sentinel key),
+    endpoints renamed to ``names``, and an integer weight ``__w`` —
+    the link multiplicity of each collapsed (src, dst) pair when
+    ``weighted``, else 1 over the DISTINCT edges."""
+    s, d = names
+    e = edges.filter(
+        F.col(src_col).isNotNull() & F.col(dst_col).isNotNull()
+    ).select(F.col(src_col).alias(s), F.col(dst_col).alias(d))
+    if weighted:
+        return e.groupBy(s, d).agg(
+            F.count(F.lit(1)).cast("long").alias("__w")
+        )
+    return e.distinct().withColumn("__w", F.lit(1).cast("long"))
+
+
+def _sentinel_pagerank(
+    e: DataFrame,
+    seeds: DataFrame | None,
+    n_iter: int,
+    damping_pct: int,
+    checkpoint: str,
+) -> DataFrame:
+    """The one PageRank kernel behind ``pagerank``, ``pagerank_weighted``
+    and ``personalized_pagerank``: the fixed-iteration sentinel
+    recurrence over the framed edge set ``e`` = (src, dst, __w). Each
+    round an edge passes floor((rank·w) / W_src) of its source's rank,
+    W_src = Σ out-weights. ``seeds`` is the one-column (node) teleport
+    set; None means uniform teleport — every node is a seed, so no seed
+    join runs. Seeds outside the edge set's node universe are ignored
+    and duplicate seed ids collapse. Returns (node, rank_nano),
+    unordered; all-zero ranks when no seed lies in the graph (which,
+    uniformly, means an empty graph).
 
     SINGLE-REFERENCE round (round 11; supersedes the r10 periodic
-    lineage cut): dangling mass no longer needs a second aggregate over
-    the evolving rank vector. The vector carries one SENTINEL row
-    (node = NULL) holding the dangling accumulator, and the STATIC
-    contribution graph is augmented with (dangling node → sentinel,
-    share 1) and (sentinel → every node, share N) edges. Each round is
-    then exactly ONE null-safe src-keyed join + ONE dst-keyed aggregate
-    + the node-frame left join — the evolving frame is referenced ONCE,
-    so the logical plan grows LINEARLY in n_iter with ZERO per-round
+    lineage cut): the rank vector carries one SENTINEL row (node =
+    NULL) holding the dangling accumulator, and the STATIC contribution
+    graph is augmented with (dangling node → sentinel, share 1) and
+    (sentinel → each seed, share |S|) edges. Each round is then exactly
+    ONE null-safe src-keyed join + ONE dst-keyed aggregate + the
+    node-frame left join — the evolving frame is referenced ONCE, so
+    the logical plan grows LINEARLY in n_iter with ZERO per-round
     lineage cuts (the r9 plan doubled per round — scans 25 → 55 → 115
-    → 235 for n_iter 2 → 5; the r10 periodic cut bounded it at the
-    price of materialization barriers every 4th round). Only the two
-    static frames (augmented edges, node set) are checkpointed, once.
+    → 235 for n_iter 2 → 5). Only the static frames (edges with
+    out-weights, seed set, augmented edges, node set) are cut, once,
+    lazily.
 
     Semantics note: routing dangling mass through the sentinel makes it
-    re-enter circulation with a ONE-ROUND LAG (the standard single-pass
-    formulation — the sentinel receives this round's dangling mass
-    while fanning out last round's), initialized exactly (s₀ = the
-    uniform init's dangling sum), so round 1 matches the same-round
-    variant bit-for-bit and graphs with no dangling nodes match at
-    every round. At termination up to one round's dangling mass is in
-    transit in the sentinel (excluded from the output); ``pagerank_sql``
-    unrolls the identical recurrence, so oracle parity is exact. Plan
-    linearity pinned by
-    tests/test_plan_shapes.py::test_pagerank_plan_bounded_in_rounds."""
-    e = (
-        edges.filter(
-            F.col(src_col).isNotNull() & F.col(dst_col).isNotNull()
-        )
-        .select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .distinct()
-    )
-    deg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
-    # ONE materialization of the expensive shuffles (distinct + degree
-    # agg + join): every static frame below derives from this cached
-    # RDD, so the build phase never re-runs the raw edge pipeline
-    e_deg = _cut(e.join(deg, "src"), checkpoint, eager=False)
+    re-enter circulation with a ONE-ROUND LAG (the sentinel receives
+    this round's dangling mass while fanning out last round's),
+    initialized exactly (s₀ = the init vector's dangling sum), so round
+    1 matches the same-round variant bit-for-bit and graphs with no
+    dangling nodes match at every round. At termination up to one
+    round's dangling mass is in transit in the sentinel (excluded from
+    the output). The init vector IS the teleport vector (seeds
+    SCALE//|S|, others 0) and the per-round base term lands on seeds
+    only.
+
+    Arithmetic: integer nano-units throughout (module contract). The
+    per-edge contribution is chosen per row from the data: w = 1 (every
+    edge of a distinct edge set, and every sentinel edge) divides in
+    BIGINT; a weight above 1 keeps the exact DECIMAL(38,0) product
+    (rank ≤ total mass ~1e9 × any integer weight cannot overflow 38
+    digits). Both arms agree for w = 1 on the non-negative ranks, and
+    truncating ``div`` matches DuckDB's ``//`` there. The BIGINT arm is
+    a speed choice: routing every edge through the DECIMAL product
+    made gr_pagerank about 70% slower in a probe (3.6 → 6.1 s at sf0.1
+    on 4 cores)."""
+    wt = e.groupBy("src").agg(F.sum("__w").cast("long").alias("__wt"))
+    # ONE materialization of the expensive shuffles (edge collapse +
+    # out-weight agg + join): every static frame below derives from
+    # this cached RDD, so the build never re-runs the raw edge pipeline
+    e_deg = _cut(e.join(wt, "src"), checkpoint, eager=False)
     nodes = (
         e_deg.select(F.col("src").alias("node"))
         .union(e_deg.select(F.col("dst").alias("node")))
         .distinct()
     )
     srcs = e_deg.select("src").distinct()
-    # the two bounded driver-side statistics, folded into ONE action
+    if seeds is None:
+        sd, flagged, is_seed = nodes, nodes, F.lit(True)
+    else:
+        sd = _cut(
+            seeds.distinct().join(nodes, ["node"]), checkpoint, eager=False
+        )
+        flagged = nodes.join(
+            sd.select(F.col("node").alias("__sn")),
+            nodes["node"] == F.col("__sn"),
+            "left",
+        )
+        is_seed = F.col("__sn").isNotNull()
+    # the bounded driver-side statistics, folded into ONE action
     stats = (
-        nodes.join(srcs, nodes["node"] == srcs["src"], "left")
+        flagged.join(srcs, nodes["node"] == srcs["src"], "left")
         .agg(
-            F.count(F.lit(1)).alias("n"),
+            F.coalesce(F.sum(is_seed.cast("long")), F.lit(0)).alias("m"),
             F.coalesce(
-                F.sum(F.isnull("src").cast("long")), F.lit(0)
-            ).alias("nd"),
+                F.sum((is_seed & F.isnull("src")).cast("long")), F.lit(0)
+            ).alias("md"),
         )
         .collect()[0]
     )
-    n, n_dang = stats["n"], stats["nd"]
-    if n == 0:  # empty graph (e.g. an empty date slice): empty ranking
+    m, m_dang = stats["m"], stats["md"]
+    if m == 0:  # empty graph, or no in-graph seed: no teleport mass
         return nodes.select(
-            F.col("node"), F.lit(0).cast("bigint").alias("rank_nano")
+            "node", F.lit(0).cast("bigint").alias("rank_nano")
         )
-    base = (RANK_SCALE - damping_pct * RANK_SCALE // 100) // n
-    init = RANK_SCALE // n
+    base = (RANK_SCALE - damping_pct * RANK_SCALE // 100) // m
+    init = RANK_SCALE // m
     ntype = nodes.schema["node"].dataType
     null_node = F.lit(None).cast(ntype)
 
-    # static across iterations; checkpointed once so every round's
-    # visible plan starts from an RDD scan, not re-expanded edge lineage
+    # static across iterations; cut once so every round's visible plan
+    # starts from an RDD scan, not re-expanded edge lineage
     aug = (
         e_deg.select(
             F.col("src").alias("asrc"),
             F.col("dst").alias("adst"),
-            F.col("outdeg").cast("long").alias("share"),
+            F.col("__w").cast("long").alias("__aw"),
+            F.col("__wt").cast("long").alias("__awt"),
         )
         .unionByName(
             nodes.join(srcs, nodes["node"] == srcs["src"], "left_anti")
             .select(
                 F.col("node").alias("asrc"),
                 null_node.alias("adst"),
-                F.lit(1).cast("long").alias("share"),
+                F.lit(1).cast("long").alias("__aw"),
+                F.lit(1).cast("long").alias("__awt"),
             )
         )
         .unionByName(
-            nodes.select(
+            sd.select(
                 null_node.alias("asrc"),
                 F.col("node").alias("adst"),
-                F.lit(n).cast("long").alias("share"),
+                F.lit(1).cast("long").alias("__aw"),
+                F.lit(m).cast("long").alias("__awt"),
             )
         )
     )
     aug = _cut(aug, checkpoint, eager=False)
     nodes_aug = _cut(
-        nodes.unionByName(
-            edges.sparkSession.range(1).select(null_node.alias("node"))
+        flagged.select("node", is_seed.alias("__seed")).unionByName(
+            e.sparkSession.range(1).select(
+                null_node.alias("node"), F.lit(False).alias("__seed")
+            )
         ),
         checkpoint,
         eager=False,
@@ -186,8 +249,9 @@ def pagerank(
 
     ranks = nodes_aug.select(
         "node",
-        F.when(F.col("node").isNull(), F.lit(n_dang * init))
-        .otherwise(F.lit(init))
+        F.when(F.col("node").isNull(), F.lit(m_dang * init))
+        .when(F.col("__seed"), F.lit(init))
+        .otherwise(F.lit(0))
         .cast("long")
         .alias("rank"),
     )
@@ -196,7 +260,11 @@ def pagerank(
             aug, ranks["node"].eqNullSafe(aug["asrc"])
         ).select(
             F.col("adst").alias("node"),
-            F.expr("rank div share").alias("c"),
+            F.expr(
+                "CASE WHEN __aw = 1 THEN rank div __awt ELSE CAST(("
+                "CAST(rank AS DECIMAL(38,0)) * __aw) div __awt AS BIGINT)"
+                " END"
+            ).alias("c"),
         )
         g = contrib.groupBy("node").agg(F.sum("c").alias("inflow"))
         ranks = (
@@ -210,7 +278,9 @@ def pagerank(
                     F.coalesce(g["inflow"], F.lit(0)),
                 )
                 .otherwise(
-                    F.lit(base)
+                    F.when(nodes_aug["__seed"], F.lit(base)).otherwise(
+                        F.lit(0)
+                    )
                     + F.expr(
                         f"({damping_pct} * coalesce(inflow, 0)) div 100"
                     )
@@ -222,6 +292,33 @@ def pagerank(
     return ranks.filter(F.col("node").isNotNull()).select(
         "node", F.col("rank").alias("rank_nano")
     )
+
+
+def pagerank(
+    edges: DataFrame,
+    src_col: str = "src",
+    dst_col: str = "dst",
+    n_iter: int = 3,
+    damping_pct: int = 85,
+    checkpoint: str = "local",
+) -> DataFrame:
+    """Fixed-iteration PageRank with uniform teleport. Returns (node,
+    rank_nano) — integer nano-units per the module contract;
+    rank_nano/1e9 is the usual probability-mass rank. Duplicate edges
+    collapse (unweighted graph; ``pagerank_weighted`` is the multigraph
+    form); edges with a NULL endpoint are dropped; every node appearing
+    as source OR destination is ranked, including pure sinks.
+
+    Runs ``_sentinel_pagerank`` (see its docstring) on the distinct
+    edges with w = 1: dangling mass rides the NULL-keyed sentinel row
+    with a ONE-ROUND LAG, exact at round 1 and on graphs with no
+    dangling nodes; ``pagerank_sql`` unrolls the identical recurrence,
+    so oracle parity is exact. Plan: one null-safe src-keyed join + one
+    dst-keyed aggregate per round, linear in n_iter with zero
+    per-round cuts — pinned by
+    tests/test_plan_shapes.py::test_pagerank_plan_bounded_in_rounds."""
+    e = _edge_frame(edges, src_col, dst_col, ("src", "dst"), weighted=False)
+    return _sentinel_pagerank(e, None, n_iter, damping_pct, checkpoint)
 
 
 def pagerank_weighted(
@@ -242,128 +339,14 @@ def pagerank_weighted(
     duplicate edges every w = 1 and W = outdeg, so the recurrence
     degenerates to ``pagerank`` BIT-FOR-BIT (property-pinned).
 
-    Same engine-exactness + plan contract as ``pagerank`` (see that
-    docstring): integer nano-unit state, the sentinel-row dangling
-    accumulator with one-round lag, one null-safe src-keyed join + one
-    dst-keyed aggregate per round, evolving frame referenced ONCE —
-    plan linear in n_iter with zero per-round cuts; only the static
-    frames are checkpointed. The contribution product runs in
-    DECIMAL(38,0) (rank ≤ total mass ~1e9 × arbitrary integer weight
-    cannot overflow a 38-digit product), truncating division matches
-    DuckDB's ``//`` on the non-negative operands. Output:
+    Same kernel and contract as ``pagerank`` (``_sentinel_pagerank``):
+    integer nano-unit state, the sentinel-row dangling accumulator with
+    one-round lag, plan linear in n_iter with zero per-round cuts. A
+    weight above 1 runs its product in DECIMAL(38,0). Output:
     (node, rank_nano). Oracle: ``pagerank_weighted_sql``.
     """
-    e = (
-        edges.filter(
-            F.col(src_col).isNotNull() & F.col(dst_col).isNotNull()
-        )
-        .select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).cast("long").alias("__w"))
-    )
-    deg = e.groupBy("src").agg(F.sum("__w").cast("long").alias("wout"))
-    e_deg = _cut(e.join(deg, "src"), checkpoint, eager=False)
-    nodes = (
-        e_deg.select(F.col("src").alias("node"))
-        .union(e_deg.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    srcs = e_deg.select("src").distinct()
-    stats = (
-        nodes.join(srcs, nodes["node"] == srcs["src"], "left")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.sum(F.isnull("src").cast("long")), F.lit(0)
-            ).alias("nd"),
-        )
-        .collect()[0]
-    )
-    n, n_dang = stats["n"], stats["nd"]
-    if n == 0:
-        return nodes.select(
-            F.col("node"), F.lit(0).cast("bigint").alias("rank_nano")
-        )
-    base = (RANK_SCALE - damping_pct * RANK_SCALE // 100) // n
-    init = RANK_SCALE // n
-    ntype = nodes.schema["node"].dataType
-    null_node = F.lit(None).cast(ntype)
-
-    aug = (
-        e_deg.select(
-            F.col("src").alias("asrc"),
-            F.col("dst").alias("adst"),
-            F.col("__w").cast("long").alias("__aw"),
-            F.col("wout").cast("long").alias("__awt"),
-        )
-        .unionByName(
-            nodes.join(srcs, nodes["node"] == srcs["src"], "left_anti")
-            .select(
-                F.col("node").alias("asrc"),
-                null_node.alias("adst"),
-                F.lit(1).cast("long").alias("__aw"),
-                F.lit(1).cast("long").alias("__awt"),
-            )
-        )
-        .unionByName(
-            nodes.select(
-                null_node.alias("asrc"),
-                F.col("node").alias("adst"),
-                F.lit(1).cast("long").alias("__aw"),
-                F.lit(n).cast("long").alias("__awt"),
-            )
-        )
-    )
-    aug = _cut(aug, checkpoint, eager=False)
-    nodes_aug = _cut(
-        nodes.unionByName(
-            edges.sparkSession.range(1).select(null_node.alias("node"))
-        ),
-        checkpoint,
-        eager=False,
-    )
-
-    ranks = nodes_aug.select(
-        "node",
-        F.when(F.col("node").isNull(), F.lit(n_dang * init))
-        .otherwise(F.lit(init))
-        .cast("long")
-        .alias("rank"),
-    )
-    for _ in range(n_iter):
-        contrib = ranks.join(
-            aug, ranks["node"].eqNullSafe(aug["asrc"])
-        ).select(
-            F.col("adst").alias("node"),
-            F.expr(
-                "CAST((CAST(rank AS DECIMAL(38,0)) * __aw) div __awt"
-                " AS BIGINT)"
-            ).alias("c"),
-        )
-        g = contrib.groupBy("node").agg(F.sum("c").alias("inflow"))
-        ranks = (
-            nodes_aug.join(
-                g, nodes_aug["node"].eqNullSafe(g["node"]), "left"
-            )
-            .select(
-                nodes_aug["node"].alias("node"),
-                F.when(
-                    nodes_aug["node"].isNull(),
-                    F.coalesce(g["inflow"], F.lit(0)),
-                )
-                .otherwise(
-                    F.lit(base)
-                    + F.expr(
-                        f"({damping_pct} * coalesce(inflow, 0)) div 100"
-                    )
-                )
-                .cast("long")
-                .alias("rank"),
-            )
-        )
-    return ranks.filter(F.col("node").isNotNull()).select(
-        "node", F.col("rank").alias("rank_nano")
-    )
+    e = _edge_frame(edges, src_col, dst_col, ("src", "dst"), weighted=True)
+    return _sentinel_pagerank(e, None, n_iter, damping_pct, checkpoint)
 
 
 def pagerank_weighted_sql(
@@ -1814,51 +1797,32 @@ FROM stats CROSS JOIN sq
 """
 
 
-def hits(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    n_iter: int = 3,
-    checkpoint: str = "local",
-) -> DataFrame:
-    """Fixed-iteration HITS (Kleinberg hubs & authorities) over a
-    DIRECTED edge set — the link-analysis complement of PageRank:
-    authorities collect endorsement from good hubs (a ← Σ h over
-    in-edges), hubs from pointing at good authorities (h ← Σ a over
-    out-edges). On a curation graph (crawl source → document,
-    citing → cited) the authority score ranks content worth keeping
-    and the hub score ranks feeds worth crawling.
+def _hits(e: DataFrame, n_iter: int, checkpoint: str, name: str) -> DataFrame:
+    """The one HITS kernel behind ``hits`` and ``hits_weighted``:
+    fixed-iteration weighted rounds a ← Σ w·h over in-edges and
+    h ← Σ w·a over out-edges on the framed edge set ``e`` =
+    (__s, __d, __w). ``name`` labels the overflow error.
 
     Engine-exactness (the pagerank nano discipline, adapted): rounds
     run UN-normalized over exact integer state carried as
     decimal(38,0) — per-round L1 normalization would reference the
     evolving frame twice per round (the ev_markov_stationary
     exponential-planning trap) and per-round floor rounding would
-    compound; unnormalized sums stay exact (bounded by
-    (d_max²)^n_iter · 1e9 — 38 digits hold any realistic graph at 3
-    rounds) and ONE final L1 normalization to integer nano units
-    makes both scores bit-identical across engines/partitionings via
-    the unrolled SQL recurrence. Multi-edges collapse to DISTINCT
-    edges first (endorsement is a link, not a link count — weighted
-    HITS is a different declared operator).
+    compound; unnormalized sums stay exact and ONE final L1
+    normalization to integer nano units makes both scores
+    bit-identical across engines/partitionings via the unrolled SQL
+    recurrence.
 
-    Plan shape: the distinct edge set is the static frame (checkpoint
+    Plan shape: the framed edge set is the static frame (checkpoint
     once); each round is one src-keyed join + dst-keyed aggregate and
     its mirror — the evolving score frames are referenced ONCE per
-    round, so the plan is linear in n_iter with zero further cuts.
-    Nodes with no in-edges report authority 0 (no out-edges → hub 0);
-    every node of the edge set appears. Output: (node, hub_nano,
-    auth_nano), ordered by node.
+    round, so the plan is linear in n_iter; the shared 2t-round prefix
+    is cut once at the last authority frame. Nodes with no in-edges
+    report authority 0 (no out-edges → hub 0); every node of the edge
+    set appears. Output: (node, hub_nano, auth_nano), ordered by node.
     """
     if n_iter < 1:
         raise ValueError(f"n_iter must be >= 1: {n_iter}")
-    e = (
-        edges.select(
-            F.col(src_col).alias("__s"), F.col(dst_col).alias("__d")
-        )
-        .filter(F.col("__s").isNotNull() & F.col("__d").isNotNull())
-        .distinct()
-    )
     e = _cut(e, checkpoint)
     nodes = (
         e.select(F.col("__s").alias("node"))
@@ -1867,28 +1831,29 @@ def hits(
     )
     # loud overflow guard (one cheap pass over the checkpointed edge
     # frame): unnormalized scores are bounded by
-    # n · (d_out_max · d_in_max)^n_iter · 1e9; past decimal(38,0) /
-    # HUGEINT range, ANSI engines throw but a non-ANSI Spark session
-    # would return NULL sums that the zero-score reattachment silently
-    # maps to 0 — fail loudly here instead.
+    # n · (W_out_max · W_in_max)^n_iter · 1e9 (weighted degrees; plain
+    # degrees on a distinct edge set); past decimal(38,0) / HUGEINT
+    # range, ANSI engines throw but a non-ANSI Spark session would
+    # return NULL sums that the zero-score reattachment silently maps
+    # to 0 — fail loudly here instead.
     deg = (
         e.groupBy("__s")
-        .agg(F.count(F.lit(1)).alias("__c"))
+        .agg(F.sum("__w").alias("__c"))
         .agg(
-            F.max("__c").alias("do"),
+            F.max("__c").alias("wo"),
             F.count(F.lit(1)).alias("ns"),
         )
         .crossJoin(
             e.groupBy("__d")
-            .agg(F.count(F.lit(1)).alias("__c"))
-            .agg(F.max("__c").alias("di"))
+            .agg(F.sum("__w").alias("__c"))
+            .agg(F.max("__c").alias("wi"))
         )
         .collect()
     )
     deg = deg[0] if deg else None
-    if deg is not None and deg["do"] is not None:
+    if deg is not None and deg["wo"] is not None:
         bound = (
-            (deg["do"] * deg["di"]) ** n_iter * (10**9) * max(deg["ns"], 1)
+            (deg["wo"] * deg["wi"]) ** n_iter * (10**9) * max(deg["ns"], 1)
         )
         # the guarded quantity is the FINAL normalization multiply
         # (score * 1e9 before the div), not the raw score bound — a
@@ -1897,20 +1862,28 @@ def hits(
         # (round-13 advisor catch)
         if bound * (10**9) >= 10**38:
             raise ValueError(
-                "hits(): normalization bound "
-                f"n·(d_out·d_in)^t·1e18 ≈ 1e{len(str(bound)) + 8} exceeds "
-                "decimal(38,0)/HUGEINT range — lower n_iter or pre-cap "
-                "hub degrees (degree cap is the documented contract for "
-                "supercritical graphs, as in gr_adamic_adar)"
+                f"{name}(): normalization bound "
+                f"n·(W_out·W_in)^t·1e18 ≈ 1e{len(str(bound)) + 8} "
+                "exceeds decimal(38,0)/HUGEINT range — lower n_iter or "
+                "pre-cap hub degrees (degree cap is the documented "
+                "contract for supercritical graphs, as in gr_adamic_adar)"
             )
     one = F.lit(1_000_000_000).cast("decimal(38,0)")
+    # w = 1 (every edge of a distinct edge set) skips the DECIMAL
+    # multiply: the same value, and multiplying every edge made gr_hits
+    # ~4% slower (median of 15 warm runs, sf0.1, 4 cores)
+    w_score = (
+        F.when(F.col("__w") == 1, F.col("score"))
+        .otherwise(F.col("__w") * F.col("score"))
+        .cast("decimal(38,0)")
+    )
     h = nodes.select("node", one.alias("score"))
     a = None
     for i in range(n_iter):
         a = (
             e.join(h, e["__s"] == h["node"])
             .groupBy(F.col("__d").alias("node"))
-            .agg(F.sum("score").cast("decimal(38,0)").alias("score"))
+            .agg(F.sum(w_score).cast("decimal(38,0)").alias("score"))
         )
         if i == n_iter - 1:
             # cut ONCE at the shared prefix: hub's lineage extends a's
@@ -1922,7 +1895,7 @@ def hits(
         h = (
             e.join(a, e["__d"] == a["node"])
             .groupBy(F.col("__s").alias("node"))
-            .agg(F.sum("score").cast("decimal(38,0)").alias("score"))
+            .agg(F.sum(w_score).cast("decimal(38,0)").alias("score"))
         )
     # re-attach zero-score nodes (no out-edges / no in-edges) and take
     # the single final normalization per vector
@@ -1971,6 +1944,36 @@ def hits(
     return hub.join(auth, ["node"]).orderBy("node")
 
 
+def hits(
+    edges: DataFrame,
+    src_col: str = "src",
+    dst_col: str = "dst",
+    n_iter: int = 3,
+    checkpoint: str = "local",
+) -> DataFrame:
+    """Fixed-iteration HITS (Kleinberg hubs & authorities) over a
+    DIRECTED edge set — the link-analysis complement of PageRank:
+    authorities collect endorsement from good hubs (a ← Σ h over
+    in-edges), hubs from pointing at good authorities (h ← Σ a over
+    out-edges). On a curation graph (crawl source → document,
+    citing → cited) the authority score ranks content worth keeping
+    and the hub score ranks feeds worth crawling. Multi-edges collapse
+    to DISTINCT edges first (endorsement is a link, not a link count —
+    ``hits_weighted`` is the multigraph form).
+
+    Runs ``_hits`` (see its docstring) on the distinct edges with
+    w = 1: un-normalized rounds over exact decimal(38,0) integers
+    (bounded by (d_max²)^n_iter · 1e9 — 38 digits hold any realistic
+    graph at 3 rounds), ONE final L1 normalization to integer nano
+    units, and a loud overflow guard that covers that final ×1e9
+    multiply. Plan linear in n_iter: one join + one aggregate per
+    direction per round, the evolving frames referenced ONCE. Output:
+    (node, hub_nano, auth_nano), ordered by node.
+    """
+    e = _edge_frame(edges, src_col, dst_col, ("__s", "__d"), weighted=False)
+    return _hits(e, n_iter, checkpoint, "hits")
+
+
 def hits_weighted(
     edges: DataFrame,
     src_col: str = "src",
@@ -1983,133 +1986,19 @@ def hits_weighted(
     the LINK COUNT (parallel (src, dst) edges collapse to one edge of
     integer weight w = multiplicity), so a feed that links a document
     five times endorses it five times. Rounds are the weighted sums
-    a ← Σ w·h over in-edges and h ← Σ w·a over out-edges.
+    a ← Σ w·h over in-edges and h ← Σ w·a over out-edges; with no
+    duplicate edges the result equals ``hits`` bit-for-bit.
 
-    Same engine-exactness contract as ``hits`` (shared discipline —
-    see that docstring): un-normalized rounds over exact decimal(38,0)
-    integers, ONE final L1 normalization to integer nano units, loud
-    overflow guard. The guarded bound swaps degree products for
-    WEIGHTED-degree products (max Σ_out w · max Σ_in w per round) and
-    includes the final ×1e9 normalization multiply. Plan shape is
-    hits()'s: weight aggregation is one keyed exchange checkpointed
-    once; each round is one join + one aggregate per direction with
-    the evolving frame referenced ONCE; the shared 2t-round prefix is
-    cut once at the last authority frame. Output: (node, hub_nano,
+    Same kernel and contract as ``hits`` (``_hits``): un-normalized
+    rounds over exact decimal(38,0) integers, ONE final L1
+    normalization to integer nano units, loud overflow guard over
+    WEIGHTED-degree products (max Σ_out w · max Σ_in w per round)
+    including the final ×1e9 multiply, plan linear in n_iter with the
+    shared 2t-round prefix cut once. Output: (node, hub_nano,
     auth_nano), ordered by node.
     """
-    if n_iter < 1:
-        raise ValueError(f"n_iter must be >= 1: {n_iter}")
-    e = (
-        edges.select(
-            F.col(src_col).alias("__s"), F.col(dst_col).alias("__d")
-        )
-        .filter(F.col("__s").isNotNull() & F.col("__d").isNotNull())
-        .groupBy("__s", "__d")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("__w"))
-    )
-    e = _cut(e, checkpoint)
-    nodes = (
-        e.select(F.col("__s").alias("node"))
-        .unionByName(e.select(F.col("__d").alias("node")))
-        .distinct()
-    )
-    deg = (
-        e.groupBy("__s")
-        .agg(F.sum("__w").alias("__c"))
-        .agg(
-            F.max("__c").alias("wo"),
-            F.count(F.lit(1)).alias("ns"),
-        )
-        .crossJoin(
-            e.groupBy("__d")
-            .agg(F.sum("__w").alias("__c"))
-            .agg(F.max("__c").alias("wi"))
-        )
-        .collect()
-    )
-    deg = deg[0] if deg else None
-    if deg is not None and deg["wo"] is not None:
-        bound = (
-            (deg["wo"] * deg["wi"]) ** n_iter * (10**9) * max(deg["ns"], 1)
-        )
-        # includes the final ×1e9 normalization factor (the round-13
-        # advisor catch on hits() — see that guard)
-        if bound * (10**9) >= 10**38:
-            raise ValueError(
-                "hits_weighted(): normalization bound "
-                f"n·(W_out·W_in)^t·1e18 ≈ 1e{len(str(bound)) + 8} "
-                "exceeds decimal(38,0)/HUGEINT range — lower n_iter or "
-                "pre-cap weighted degrees (the hits()/gr_adamic_adar "
-                "degree-cap contract)"
-            )
-    one = F.lit(1_000_000_000).cast("decimal(38,0)")
-    h = nodes.select("node", one.alias("score"))
-    a = None
-    for i in range(n_iter):
-        a = (
-            e.join(h, e["__s"] == h["node"])
-            .groupBy(F.col("__d").alias("node"))
-            .agg(
-                F.sum(
-                    (F.col("__w") * F.col("score")).cast("decimal(38,0)")
-                )
-                .cast("decimal(38,0)")
-                .alias("score")
-            )
-        )
-        if i == n_iter - 1:
-            # cut ONCE at the shared prefix (the hits() discipline)
-            a = _cut(a, checkpoint)
-        h = (
-            e.join(a, e["__d"] == a["node"])
-            .groupBy(F.col("__s").alias("node"))
-            .agg(
-                F.sum(
-                    (F.col("__w") * F.col("score")).cast("decimal(38,0)")
-                )
-                .cast("decimal(38,0)")
-                .alias("score")
-            )
-        )
-    hub = nodes.join(
-        h.withColumnRenamed("score", "__h"), ["node"], "left"
-    ).select(
-        "node",
-        F.coalesce(F.col("__h"), F.lit(0).cast("decimal(38,0)")).alias(
-            "__h"
-        ),
-    )
-    auth = nodes.join(
-        a.withColumnRenamed("score", "__a"), ["node"], "left"
-    ).select(
-        "node",
-        F.coalesce(F.col("__a"), F.lit(0).cast("decimal(38,0)")).alias(
-            "__a"
-        ),
-    )
-    hub = _cut(hub, checkpoint)
-    auth = _cut(auth, checkpoint)
-    hub = hub.crossJoin(
-        F.broadcast(
-            hub.agg(F.sum("__h").cast("decimal(38,0)").alias("__th"))
-        )
-    ).select(
-        "node",
-        F.expr("CAST((__h * 1000000000) div __th AS BIGINT)").alias(
-            "hub_nano"
-        ),
-    )
-    auth = auth.crossJoin(
-        F.broadcast(
-            auth.agg(F.sum("__a").cast("decimal(38,0)").alias("__ta"))
-        )
-    ).select(
-        "node",
-        F.expr("CAST((__a * 1000000000) div __ta AS BIGINT)").alias(
-            "auth_nano"
-        ),
-    )
-    return hub.join(auth, ["node"]).orderBy("node")
+    e = _edge_frame(edges, src_col, dst_col, ("__s", "__d"), weighted=True)
+    return _hits(e, n_iter, checkpoint, "hits_weighted")
 
 
 def personalized_pagerank(
@@ -2128,155 +2017,24 @@ def personalized_pagerank(
     score candidate documents by proximity to a seed corpus, the
     graph-side sibling of embedding hard-negative mining.
 
-    Same sentinel single-reference discipline as ``pagerank`` (shared
-    contract; see that docstring for the one-round-lag dangling
-    semantics): the static graph gains (dangling → sentinel, share 1)
-    and (sentinel → each seed, share |S|) edges, the init vector IS the
-    teleport vector (seeds SCALE//|S|, others 0), and the per-round
-    base term lands on seeds only. Seeds outside the edge set's node
-    universe are ignored (documented: a seed with no edges contributes
-    no mass and receives only teleport); duplicate seed ids collapse.
+    Same sentinel single-reference kernel as ``pagerank``
+    (``_sentinel_pagerank``, over the distinct edges with w = 1 — see
+    its docstring for the one-round-lag dangling semantics): the static
+    graph gains (dangling → sentinel, share 1) and (sentinel → each
+    seed, share |S|) edges, the init vector IS the teleport vector
+    (seeds SCALE//|S|, others 0), and the per-round base term lands on
+    seeds only. Seeds outside the edge set's node universe are ignored
+    (documented: a seed with no edges contributes no mass and receives
+    only teleport); duplicate seed ids collapse; with no in-graph seed
+    every rank is 0. Static frames are cut with ``localCheckpoint``.
     Integer nano arithmetic throughout — ``ppr_sql`` unrolls the
     identical recurrence. Output: (node, rank_nano) over every graph
     node, ordered by node.
     """
-    e = (
-        edges.filter(
-            F.col(src_col).isNotNull() & F.col(dst_col).isNotNull()
-        )
-        .select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .distinct()
-    )
-    deg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
-    e_deg = e.join(deg, "src").localCheckpoint(eager=False)
-    nodes = (
-        e_deg.select(F.col("src").alias("node"))
-        .union(e_deg.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    sd = (
-        seeds.select(F.col(seed_col).alias("node"))
-        .distinct()
-        .join(nodes, ["node"])
-        .localCheckpoint(eager=False)
-    )
-    srcs = e_deg.select("src").distinct()
-    stats = (
-        nodes.join(
-            sd.select(F.col("node").alias("__sn")),
-            nodes["node"] == F.col("__sn"),
-            "left",
-        )
-        .join(srcs, nodes["node"] == srcs["src"], "left")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.sum(F.col("__sn").isNotNull().cast("long")), F.lit(0)
-            ).alias("m"),
-            F.coalesce(
-                F.sum(
-                    (
-                        F.col("__sn").isNotNull() & F.isnull("src")
-                    ).cast("long")
-                ),
-                F.lit(0),
-            ).alias("md"),
-        )
-        .collect()[0]
-    )
-    n, m, m_dang = stats["n"], stats["m"], stats["md"]
-    if n == 0 or m == 0:
-        # empty graph or no in-graph seeds: no teleport mass anywhere
-        return nodes.select(
-            "node", F.lit(0).cast("bigint").alias("rank_nano")
-        ).orderBy("node")
-    base = (RANK_SCALE - damping_pct * RANK_SCALE // 100) // m
-    init = RANK_SCALE // m
-    ntype = nodes.schema["node"].dataType
-    null_node = F.lit(None).cast(ntype)
-
-    aug = (
-        e_deg.select(
-            F.col("src").alias("asrc"),
-            F.col("dst").alias("adst"),
-            F.col("outdeg").cast("long").alias("share"),
-        )
-        .unionByName(
-            nodes.join(srcs, nodes["node"] == srcs["src"], "left_anti")
-            .select(
-                F.col("node").alias("asrc"),
-                null_node.alias("adst"),
-                F.lit(1).cast("long").alias("share"),
-            )
-        )
-        .unionByName(
-            sd.select(
-                null_node.alias("asrc"),
-                F.col("node").alias("adst"),
-                F.lit(m).cast("long").alias("share"),
-            )
-        )
-        .localCheckpoint(eager=False)
-    )
-    nodes_aug = (
-        nodes.join(
-            sd.select(F.col("node").alias("__sn")),
-            nodes["node"] == F.col("__sn"),
-            "left",
-        )
-        .select("node", F.col("__sn").isNotNull().alias("__seed"))
-        .unionByName(
-            edges.sparkSession.range(1).select(
-                null_node.alias("node"), F.lit(False).alias("__seed")
-            )
-        )
-        .localCheckpoint(eager=False)
-    )
-
-    ranks = nodes_aug.select(
-        "node",
-        "__seed",
-        F.when(F.col("node").isNull(), F.lit(m_dang * init))
-        .when(F.col("__seed"), F.lit(init))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("rank"),
-    )
-    for _ in range(n_iter):
-        contrib = ranks.join(
-            aug, ranks["node"].eqNullSafe(aug["asrc"])
-        ).select(
-            F.col("adst").alias("node"),
-            F.expr("rank div share").alias("c"),
-        )
-        g = contrib.groupBy("node").agg(F.sum("c").alias("inflow"))
-        ranks = (
-            nodes_aug.join(
-                g, nodes_aug["node"].eqNullSafe(g["node"]), "left"
-            )
-            .select(
-                nodes_aug["node"].alias("node"),
-                nodes_aug["__seed"].alias("__seed"),
-                F.when(
-                    nodes_aug["node"].isNull(),
-                    F.coalesce(g["inflow"], F.lit(0)),
-                )
-                .otherwise(
-                    F.when(nodes_aug["__seed"], F.lit(base)).otherwise(
-                        F.lit(0)
-                    )
-                    + F.expr(
-                        f"({damping_pct} * coalesce(inflow, 0)) div 100"
-                    )
-                )
-                .cast("long")
-                .alias("rank"),
-            )
-        )
-    return (
-        ranks.filter(F.col("node").isNotNull())
-        .select("node", F.col("rank").alias("rank_nano"))
-        .orderBy("node")
+    e = _edge_frame(edges, src_col, dst_col, ("src", "dst"), weighted=False)
+    sd = seeds.select(F.col(seed_col).alias("node"))
+    return _sentinel_pagerank(e, sd, n_iter, damping_pct, "local").orderBy(
+        "node"
     )
 
 
@@ -2310,13 +2068,10 @@ def ppr_sql(
         f"r0 AS (SELECT nodes.node, CASE WHEN sd.node IS NOT NULL"
         f" THEN COALESCE({s} // NULLIF(cnt, 0), 0) ELSE 0 END AS rank"
         f" FROM nodes CROSS JOIN m LEFT JOIN sd ON sd.node = nodes.node)",
-        "s0 AS (SELECT COALESESCE_PLACEHOLDER AS sv FROM r0)",
-    ]
-    # s0 = dangling mass of the init vector
-    parts[-1] = (
+        # s0 = dangling mass of the init vector
         "s0 AS (SELECT COALESCE(SUM(r0.rank), 0) AS sv FROM r0"
-        " LEFT JOIN deg ON r0.node = deg.src WHERE deg.src IS NULL)"
-    )
+        " LEFT JOIN deg ON r0.node = deg.src WHERE deg.src IS NULL)",
+    ]
     for i in range(1, n_iter + 1):
         p, c = f"r{i - 1}", f"r{i}"
         if i > 1:

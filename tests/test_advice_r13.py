@@ -1,7 +1,8 @@
 """Round-13 advisor-pass regression pins (the judge's ADVICE.md was
 empty this round, so the builder ran its own review over the round-13
 diff; each finding fixed and pinned here — the tests/test_advice_r12.py
-discipline)."""
+discipline). The two HITS pins (findings 1 and 4) live in
+tests/test_graph.py with the rest of the rank family."""
 
 from __future__ import annotations
 
@@ -17,42 +18,6 @@ pytestmark = pytest.mark.exhaustive
 
 def _executed(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_hits_cuts_shared_prefix_once(spark):
-    """Finding 1: hub's and auth's checkpoints both re-executed the full
-    2t-round join lineage (nothing cut the shared prefix). The last
-    round's authority frame now localCheckpoints, so the result plan's
-    live lineage is one round deep — pinned via the scan count of the
-    returned frame (checkpointed RDD scans, bounded; before the fix the
-    hub side carried every round)."""
-    from calp_cva_tracking_pipeline_spark.operators.graph import hits
-
-    df = spark.createDataFrame(
-        [(i, (i * 3 + 1) % 7) for i in range(7)], "src long, dst long"
-    )
-    out = hits(df, "src", "dst", n_iter=3)
-    out.count()
-    plan = _executed(out)
-    # the live plan reads checkpointed RDDs (edge frame + cut score
-    # frames), never a 6-round join chain: bound the join count
-    n_joins = plan.count("Join")
-    assert n_joins <= 8, f"hits plan carries the full lineage: {n_joins}"
-    assert "ExistingRDD" in plan
-
-
-def test_hits_overflow_guard_raises_loudly(spark):
-    """Finding 4: past decimal(38,0)/HUGEINT range a non-ANSI session
-    would NULL the sums and the zero-score reattachment would silently
-    report 0 — the conservative bound must refuse instead."""
-    from calp_cva_tracking_pipeline_spark.operators.graph import hits
-
-    df = spark.createDataFrame(
-        [(a, b) for a in range(5) for b in range(5) if a != b],
-        "src long, dst long",
-    )
-    with pytest.raises(ValueError, match="decimal"):
-        hits(df, "src", "dst", n_iter=40)
 
 
 def test_calibration_catalog_drops_null_text_like_its_oracle(spark):

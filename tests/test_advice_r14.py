@@ -1,7 +1,8 @@
 """Round-14 pins for the four ADVICE.md findings (judge round 13):
 
 1. hits() overflow guard must cover the FINAL ×1e9 normalization
-   multiply, not just the raw unnormalized bound (graph.py:1560);
+   multiply, not just the raw unnormalized bound (pinned in
+   tests/test_graph.py with the rest of the rank family);
 2. ppr_sql must not divide by zero when the seed set is disjoint from
    the graph — it mirrors native's m==0 all-zero early-return
    (graph.py:1826);
@@ -21,27 +22,6 @@ from pyspark.sql import functions as F
 # r16: catalog-wide sweep / historical-pin tier — excluded from the
 # driver's default run (see pytest.ini); run with -m exhaustive.
 pytestmark = pytest.mark.exhaustive
-
-
-def test_hits_guard_covers_final_normalization(spark):
-    """Finding 1: a bound in [1e29, 1e38) passed the old raw-score
-    guard yet the final `__h * 1e9` multiply overflowed decimal(38,0),
-    silently NULLing on non-ANSI Spark. 25-node complete digraph:
-    (24·24)^7·1e9·25 ≈ 5e29 — must now raise; one fewer round
-    (≈9e26) stays under 1e29 and must still run NULL-free."""
-    from calp_cva_tracking_pipeline_spark.operators.graph import hits
-
-    df = spark.createDataFrame(
-        [(a, b) for a in range(25) for b in range(25) if a != b],
-        "src long, dst long",
-    )
-    with pytest.raises(ValueError, match="decimal"):
-        hits(df, "src", "dst", n_iter=7)
-    rows = hits(df, "src", "dst", n_iter=6).collect()
-    assert len(rows) == 25
-    assert all(
-        r.hub_nano is not None and r.auth_nano is not None for r in rows
-    )
 
 
 def test_ppr_sql_disjoint_seed_set_matches_native(spark):

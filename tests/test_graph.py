@@ -1,10 +1,19 @@
-"""PageRank tests: the integer recurrence vs a pure-Python reference,
-structural rank ordering, dangling-mass handling, mass conservation,
-and partition-independence (the property the nano-unit design buys)."""
+"""Graph operator tests. The rank family (pagerank, pagerank_weighted,
+personalized_pagerank, hits, hits_weighted): the integer recurrences vs
+pure-Python references, structural rank ordering, dangling-mass
+handling, mass conservation, partition-independence (the property the
+nano-unit design buys), the wrappers' bit-for-bit degenerations onto
+each other, plan linearity and the HITS overflow guard. Then the
+triangle census and neighbour similarity."""
 
 from __future__ import annotations
 
 import random
+from fractions import Fraction
+
+import duckdb
+import pandas as pd
+import pytest
 
 from calp_cva_tracking_pipeline_spark.operators.graph import (
     RANK_SCALE,
@@ -106,6 +115,279 @@ def test_pagerank_duplicate_edges_collapse(spark):
     once = _run(spark, [(1, 2), (2, 1), (1, 3)])
     dup = _run(spark, [(1, 2), (1, 2), (2, 1), (1, 3), (1, 3)])
     assert once == dup
+
+
+# --- weighted PageRank ------------------------------------------------------
+
+
+def _ranks(df):
+    return {r.node: r.rank_nano for r in df.collect()}
+
+
+def test_pagerank_weighted_degenerates_to_pagerank(spark):
+    """With no duplicate edges every w = 1 and W = outdeg, so the
+    weighted recurrence must reproduce pagerank BIT-FOR-BIT — cycles,
+    dangling nodes and all."""
+    from calp_cva_tracking_pipeline_spark.operators.graph import (
+        pagerank,
+        pagerank_weighted,
+    )
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (1, 3)],
+        "src long, dst long",
+    )
+    assert _ranks(pagerank_weighted(edges)) == _ranks(pagerank(edges))
+
+
+def test_pagerank_weighted_multiplicity_shifts_rank(spark):
+    """1 links 2 three times and 3 once: with weighted out-shares node
+    2 must out-rank node 3; the unweighted collapse ranks them equal.
+    The DuckDB twin must agree on every rank."""
+    from calp_cva_tracking_pipeline_spark.operators.graph import (
+        pagerank,
+        pagerank_weighted,
+        pagerank_weighted_sql,
+    )
+
+    raw = [(1, 2), (1, 2), (1, 2), (1, 3), (2, 1), (3, 1)]
+    edges = spark.createDataFrame(raw, "src long, dst long")
+    got = _ranks(pagerank_weighted(edges))
+    assert got[2] > got[3]
+    flat = _ranks(pagerank(edges))
+    assert flat[2] == flat[3]
+
+    cte = "SELECT src, dst FROM raw_edges"
+    con = duckdb.connect()
+    con.register("raw_edges", pd.DataFrame(raw, columns=["src", "dst"]))
+    oracle = {
+        int(r[0]): int(r[1])
+        for r in con.sql(pagerank_weighted_sql(cte)).fetchall()
+    }
+    assert got == oracle, (got, oracle)
+
+
+def test_pagerank_weighted_null_and_empty_edges(spark):
+    """NULL-endpoint edges drop (malformed; NULL is the sentinel key)
+    and an empty graph yields an empty ranking — the pagerank
+    degenerate contract."""
+    from calp_cva_tracking_pipeline_spark.operators.graph import (
+        pagerank_weighted,
+    )
+
+    edges = spark.createDataFrame(
+        [(1, 2), (None, 2), (1, None)], "src long, dst long"
+    )
+    got = _ranks(pagerank_weighted(edges))
+    assert set(got) == {1, 2}
+    empty = spark.createDataFrame([], "src long, dst long")
+    assert pagerank_weighted(empty).count() == 0
+
+
+def test_pagerank_weighted_plan_linear_in_rounds(spark):
+    """The evolving rank vector is referenced once per round — the
+    executed plan's scan count must grow at most linearly in n_iter
+    (the kcore 3^n lesson, pinned like the unweighted flagship)."""
+    from calp_cva_tracking_pipeline_spark.operators.graph import (
+        pagerank_weighted,
+    )
+
+    edges = spark.createDataFrame(
+        [(i, (i * 3 + 1) % 7) for i in range(7)] + [(1, 2), (1, 2)],
+        "src long, dst long",
+    )
+
+    def scans(n):
+        df = pagerank_weighted(edges, n_iter=n)
+        df.count()
+        return df._jdf.queryExecution().executedPlan().toString().count(
+            "Scan"
+        )
+
+    s3, s7 = scans(3), scans(7)
+    assert s7 - s3 <= 4 * (7 - 3) + 8, (s3, s7)
+
+
+# --- personalized PageRank -------------------------------------------------
+
+
+def test_ppr_with_full_seed_set_equals_uniform_pagerank(spark):
+    """personalized_pagerank degenerates EXACTLY to pagerank when the
+    seed set is the whole node universe (teleport uniform, sentinel
+    fans to every node, base everywhere) — bit-for-bit on random
+    digraphs with dangling nodes; and with a proper subset, seeds
+    carry strictly more rank than the graph minimum."""
+    import random
+
+    from calp_cva_tracking_pipeline_spark.operators.graph import (
+        pagerank,
+        personalized_pagerank,
+    )
+
+    rng = random.Random(1321)
+    for trial in range(2):
+        edges = {
+            (rng.randrange(12), rng.randrange(12))
+            for _ in range(rng.randint(6, 30))
+        }
+        df = spark.createDataFrame(sorted(edges), "src long, dst long")
+        nodes = sorted({s for s, _ in edges} | {d for _, d in edges})
+        all_seeds = spark.createDataFrame(
+            [(v,) for v in nodes], "node long"
+        )
+        pr = {r.node: r.rank_nano for r in pagerank(df).collect()}
+        ppr = {
+            r.node: r.rank_nano
+            for r in personalized_pagerank(df, all_seeds).collect()
+        }
+        assert ppr == pr, f"trial {trial}"
+
+        sub = spark.createDataFrame([(nodes[0],)], "node long")
+        pp = {
+            r.node: r.rank_nano
+            for r in personalized_pagerank(df, sub).collect()
+        }
+        assert pp[nodes[0]] > min(pp.values())
+
+
+# --- HITS ------------------------------------------------------------------
+
+
+def _executed(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_hits_matches_rational_reference_random_digraphs(spark):
+    """hits() == exact rational-arithmetic HITS (unnormalized rounds,
+    final L1 floor normalization) on random directed graphs, including
+    dangling nodes, sources, multi-edges (collapsed) and self-loops."""
+    from calp_cva_tracking_pipeline_spark.operators.graph import hits
+
+    rng = random.Random(1301)
+    for trial in range(3):
+        n = rng.randint(5, 14)
+        edges = set()
+        for _ in range(rng.randint(4, 40)):
+            edges.add((rng.randrange(n), rng.randrange(n)))
+        rows = list(edges) + [rng.choice(list(edges))]  # a multi-edge
+        df = spark.createDataFrame(rows, "src long, dst long")
+        got = {
+            r.node: (r.hub_nano, r.auth_nano)
+            for r in hits(df, "src", "dst", n_iter=3).collect()
+        }
+
+        nodes = sorted({s for s, _ in edges} | {d for _, d in edges})
+        h = {v: Fraction(10**9) for v in nodes}
+        a = {}
+        for _ in range(3):
+            a = {v: Fraction(0) for v in nodes}
+            for s, d in edges:
+                a[d] += h[s]
+            h = {v: Fraction(0) for v in nodes}
+            for s, d in edges:
+                h[s] += a[d]
+        th, ta = sum(h.values()), sum(a.values())
+        exp = {
+            v: (
+                int(h[v] * 10**9 // th) if th else 0,
+                int(a[v] * 10**9 // ta) if ta else 0,
+            )
+            for v in nodes
+        }
+        assert got == exp, f"trial {trial}"
+
+
+def test_hits_weighted_equals_hits_on_simple_graph(spark):
+    """On a graph with NO parallel edges every weight is 1, so weighted
+    HITS must reproduce hits() bit-for-bit (same decimal rounds, same
+    normalization)."""
+    from calp_cva_tracking_pipeline_spark.operators.graph import (
+        hits,
+        hits_weighted,
+    )
+
+    e = spark.createDataFrame(
+        [(i, (i * 3 + 1) % 11) for i in range(11)] + [(2, 5), (7, 1)],
+        "src long, dst long",
+    )
+    a = [tuple(r) for r in hits(e).collect()]
+    b = [tuple(r) for r in hits_weighted(e).collect()]
+    assert a == b
+
+
+def test_hits_weighted_multiplicity_shifts_authority(spark):
+    """Duplicating one edge 5x must strictly raise the authority of its
+    destination relative to the unweighted run — the semantics hits()'s
+    docstring declares out of scope."""
+    from calp_cva_tracking_pipeline_spark.operators.graph import (
+        hits_weighted,
+    )
+
+    base = [(1, 2), (1, 3), (4, 2), (4, 3), (2, 4)]
+    flat = spark.createDataFrame(base, "src long, dst long")
+    heavy = spark.createDataFrame(
+        base + [(1, 3)] * 5, "src long, dst long"
+    )
+    a_flat = {r.node: r.auth_nano for r in hits_weighted(flat).collect()}
+    a_heavy = {r.node: r.auth_nano for r in hits_weighted(heavy).collect()}
+    assert a_heavy[3] > a_flat[3]
+
+
+def test_hits_cuts_shared_prefix_once(spark):
+    """Finding 1: hub's and auth's checkpoints both re-executed the full
+    2t-round join lineage (nothing cut the shared prefix). The last
+    round's authority frame now localCheckpoints, so the result plan's
+    live lineage is one round deep — pinned via the scan count of the
+    returned frame (checkpointed RDD scans, bounded; before the fix the
+    hub side carried every round)."""
+    from calp_cva_tracking_pipeline_spark.operators.graph import hits
+
+    df = spark.createDataFrame(
+        [(i, (i * 3 + 1) % 7) for i in range(7)], "src long, dst long"
+    )
+    out = hits(df, "src", "dst", n_iter=3)
+    out.count()
+    plan = _executed(out)
+    # the live plan reads checkpointed RDDs (edge frame + cut score
+    # frames), never a 6-round join chain: bound the join count
+    n_joins = plan.count("Join")
+    assert n_joins <= 8, f"hits plan carries the full lineage: {n_joins}"
+    assert "ExistingRDD" in plan
+
+
+def test_hits_overflow_guard_raises_loudly(spark):
+    """Finding 4: past decimal(38,0)/HUGEINT range a non-ANSI session
+    would NULL the sums and the zero-score reattachment would silently
+    report 0 — the conservative bound must refuse instead."""
+    from calp_cva_tracking_pipeline_spark.operators.graph import hits
+
+    df = spark.createDataFrame(
+        [(a, b) for a in range(5) for b in range(5) if a != b],
+        "src long, dst long",
+    )
+    with pytest.raises(ValueError, match="decimal"):
+        hits(df, "src", "dst", n_iter=40)
+
+
+def test_hits_guard_covers_final_normalization(spark):
+    """Finding 1: a bound in [1e29, 1e38) passed the old raw-score
+    guard yet the final `__h * 1e9` multiply overflowed decimal(38,0),
+    silently NULLing on non-ANSI Spark. 25-node complete digraph:
+    (24·24)^7·1e9·25 ≈ 5e29 — must now raise; one fewer round
+    (≈9e26) stays under 1e29 and must still run NULL-free."""
+    from calp_cva_tracking_pipeline_spark.operators.graph import hits
+
+    df = spark.createDataFrame(
+        [(a, b) for a in range(25) for b in range(25) if a != b],
+        "src long, dst long",
+    )
+    with pytest.raises(ValueError, match="decimal"):
+        hits(df, "src", "dst", n_iter=7)
+    rows = hits(df, "src", "dst", n_iter=6).collect()
+    assert len(rows) == 25
+    assert all(
+        r.hub_nano is not None and r.auth_nano is not None for r in rows
+    )
 
 
 # --- triangle census --------------------------------------------------------

@@ -1,46 +1,10 @@
-"""Round-14 wave properties: weighted HITS degenerates to HITS on a
-simple graph, the gate sweep is monotone, the script census conserves
-docs, and the MAD profile agrees with a python reference."""
+"""Round-14 wave properties: the gate sweep is monotone, the script
+census conserves docs, and the MAD profile agrees with a python
+reference. The weighted HITS pins live in tests/test_graph.py."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-
-
-def test_hits_weighted_equals_hits_on_simple_graph(spark):
-    """On a graph with NO parallel edges every weight is 1, so weighted
-    HITS must reproduce hits() bit-for-bit (same decimal rounds, same
-    normalization)."""
-    from calp_cva_tracking_pipeline_spark.operators.graph import (
-        hits,
-        hits_weighted,
-    )
-
-    e = spark.createDataFrame(
-        [(i, (i * 3 + 1) % 11) for i in range(11)] + [(2, 5), (7, 1)],
-        "src long, dst long",
-    )
-    a = [tuple(r) for r in hits(e).collect()]
-    b = [tuple(r) for r in hits_weighted(e).collect()]
-    assert a == b
-
-
-def test_hits_weighted_multiplicity_shifts_authority(spark):
-    """Duplicating one edge 5x must strictly raise the authority of its
-    destination relative to the unweighted run — the semantics hits()'s
-    docstring declares out of scope."""
-    from calp_cva_tracking_pipeline_spark.operators.graph import (
-        hits_weighted,
-    )
-
-    base = [(1, 2), (1, 3), (4, 2), (4, 3), (2, 4)]
-    flat = spark.createDataFrame(base, "src long, dst long")
-    heavy = spark.createDataFrame(
-        base + [(1, 3)] * 5, "src long, dst long"
-    )
-    a_flat = {r.node: r.auth_nano for r in hits_weighted(flat).collect()}
-    a_heavy = {r.node: r.auth_nano for r in hits_weighted(heavy).collect()}
-    assert a_heavy[3] > a_flat[3]
 
 
 def test_gate_sweep_monotone_and_conserving(spark, sf_dir):

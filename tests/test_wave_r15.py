@@ -1,99 +1,7 @@
-"""Round-15 wave pins: weighted PageRank (the multigraph follow-through
-VERDICT r14 ask #7 — link-multiplicity out-shares with the same
-integer-nano sentinel rounds as the unweighted flagship)."""
+"""Round-15 wave pins. The weighted PageRank pins live in
+tests/test_graph.py with the rest of the rank family."""
 
 from __future__ import annotations
-
-import duckdb
-import pandas as pd
-
-
-def _ranks(df):
-    return {r.node: r.rank_nano for r in df.collect()}
-
-
-def test_pagerank_weighted_degenerates_to_pagerank(spark):
-    """With no duplicate edges every w = 1 and W = outdeg, so the
-    weighted recurrence must reproduce pagerank BIT-FOR-BIT — cycles,
-    dangling nodes and all."""
-    from calp_cva_tracking_pipeline_spark.operators.graph import (
-        pagerank,
-        pagerank_weighted,
-    )
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (1, 3)],
-        "src long, dst long",
-    )
-    assert _ranks(pagerank_weighted(edges)) == _ranks(pagerank(edges))
-
-
-def test_pagerank_weighted_multiplicity_shifts_rank(spark):
-    """1 links 2 three times and 3 once: with weighted out-shares node
-    2 must out-rank node 3; the unweighted collapse ranks them equal.
-    The DuckDB twin must agree on every rank."""
-    from calp_cva_tracking_pipeline_spark.operators.graph import (
-        pagerank,
-        pagerank_weighted,
-        pagerank_weighted_sql,
-    )
-
-    raw = [(1, 2), (1, 2), (1, 2), (1, 3), (2, 1), (3, 1)]
-    edges = spark.createDataFrame(raw, "src long, dst long")
-    got = _ranks(pagerank_weighted(edges))
-    assert got[2] > got[3]
-    flat = _ranks(pagerank(edges))
-    assert flat[2] == flat[3]
-
-    cte = "SELECT src, dst FROM raw_edges"
-    con = duckdb.connect()
-    con.register("raw_edges", pd.DataFrame(raw, columns=["src", "dst"]))
-    oracle = {
-        int(r[0]): int(r[1])
-        for r in con.sql(pagerank_weighted_sql(cte)).fetchall()
-    }
-    assert got == oracle, (got, oracle)
-
-
-def test_pagerank_weighted_null_and_empty_edges(spark):
-    """NULL-endpoint edges drop (malformed; NULL is the sentinel key)
-    and an empty graph yields an empty ranking — the pagerank
-    degenerate contract."""
-    from calp_cva_tracking_pipeline_spark.operators.graph import (
-        pagerank_weighted,
-    )
-
-    edges = spark.createDataFrame(
-        [(1, 2), (None, 2), (1, None)], "src long, dst long"
-    )
-    got = _ranks(pagerank_weighted(edges))
-    assert set(got) == {1, 2}
-    empty = spark.createDataFrame([], "src long, dst long")
-    assert pagerank_weighted(empty).count() == 0
-
-
-def test_pagerank_weighted_plan_linear_in_rounds(spark):
-    """The evolving rank vector is referenced once per round — the
-    executed plan's scan count must grow at most linearly in n_iter
-    (the kcore 3^n lesson, pinned like the unweighted flagship)."""
-    from calp_cva_tracking_pipeline_spark.operators.graph import (
-        pagerank_weighted,
-    )
-
-    edges = spark.createDataFrame(
-        [(i, (i * 3 + 1) % 7) for i in range(7)] + [(1, 2), (1, 2)],
-        "src long, dst long",
-    )
-
-    def scans(n):
-        df = pagerank_weighted(edges, n_iter=n)
-        df.count()
-        return df._jdf.queryExecution().executedPlan().toString().count(
-            "Scan"
-        )
-
-    s3, s7 = scans(3), scans(7)
-    assert s7 - s3 <= 4 * (7 - 3) + 8, (s3, s7)
 
 
 def test_ml_real_path_skip_is_the_torch_gate():
