@@ -39,6 +39,7 @@ from calp_cva_tracking_pipeline_spark.operators.similarity import (
     random_planes,
 )
 from calp_cva_tracking_pipeline_spark.operators.textops import add_text_features
+from calp_cva_tracking_pipeline_spark.session import cut
 from calp_cva_tracking_pipeline_spark.streaming.events import (
     sessionize,
     windowed_agg,
@@ -4211,10 +4212,9 @@ def pf_cms(spark, sf_dir):
     # bit-identical (bucket sums are additive), the fan-out moves to
     # vocab-sized rows, and the lazy cut bounds the whole query to one
     # corpus pass.
-    tok_counts = (
+    tok_counts = cut(
         toks.groupBy("token")
         .agg(F.count(F.lit(1)).alias("exact_n"))
-        .localCheckpoint(eager=False)
     )
     sk = cms_sketch(tok_counts, "token", weight_col="exact_n")
     est = cms_estimate(sk, tok_counts.select("token"), "token")
@@ -11012,7 +11012,7 @@ def pf_release_report(spark, sf_dir):
         toks.alias("__tok"),
         F.length("text").alias("__chars"),
     )
-    cells = base.groupBy("source", "lang", "__dig").agg(
+    cells = cut(base.groupBy("source", "lang", "__dig").agg(
         F.count(F.lit(1)).cast("bigint").alias("__n"),
         F.coalesce(F.sum("__tok"), F.lit(0)).cast("bigint").alias("__ts"),
         F.coalesce(F.sum("__chars"), F.lit(0))
@@ -11040,7 +11040,7 @@ def pf_release_report(spark, sf_dir):
     # single text passes (ReadSchemas verified pruned — text is
     # semantically required per corner, so a shared text-sized cut
     # would pin the corpus in block storage and was rejected).
-    ).localCheckpoint(eager=False)
+    ))
     n_text = F.sum(
         F.when(F.col("__dig").isNotNull(), F.col("__n")).otherwise(0)
     ).cast("bigint")
@@ -11285,13 +11285,10 @@ def dd_dup_census(spark, sf_dir):
     kernels now run as parallel stages of the one timed job
     (interleaved A/B at sf0.1: 4.41s → 2.83s, rows identical).
 
-    r16: the digest-cell aggregation carries ONE lazy cut. AQE
-    exchange reuse covered it only PARTIALLY at runtime (2 reuse nodes
-    over 3+ planned copies of the double-md5 text pass; reuse requires
-    byte-identical subplans after per-branch pruning — fragile). The
-    cut makes single execution structural; the cut frame is
-    digest-cardinality and narrow (no text), so the barrier is
-    cells-sized while the saved replan is a full corpus pass."""
+    The digest-cell aggregation is NOT cut: its consumers share it
+    through AQE exchange reuse, and a lazy cut there measured no gain in
+    an interleaved A/B (5 fresh processes per side, median of 5 at
+    sf0.1, 4 cores: 4.52 s with the cut, 4.37 s without)."""
     from calp_cva_tracking_pipeline_spark.functions.text import (
         ASCII_PUNCT_CLASS,
     )
@@ -11317,10 +11314,6 @@ def dd_dup_census(spark, sf_dir):
         "\\s+",
         " ",
     )
-    # r16: same fix as pf_release_report — one lazy cut on the NARROW
-    # digest-cardinality frame (source + two digests + a counter,
-    # never text); see the docstring's r16 note for the AQE-reuse
-    # fragility this replaces.
     cells = (
         d.select(
             "source",
@@ -11329,7 +11322,6 @@ def dd_dup_census(spark, sf_dir):
         )
         .groupBy("source", "__raw", "__norm")
         .agg(F.count(F.lit(1)).cast("bigint").alias("__n"))
-        .localCheckpoint(eager=False)
     )
 
     def corners(grouped):

@@ -21,6 +21,7 @@ from calp_cva_tracking_pipeline_spark.functions.hashing import (
 from calp_cva_tracking_pipeline_spark.operators.partitioning import (
     spread_small_input,
 )
+from calp_cva_tracking_pipeline_spark.session import cut
 
 
 def priority_dedup(
@@ -417,7 +418,7 @@ def connected_components(
 
     Iterative-by-nature (SURVEY §2 has no counterpart; this is engine
     scale tier): each round is one shuffle of the label table. The
-    per-round label state localCheckpoints (the kcore/pagerank lineage
+    per-round label state is cut (the kcore/pagerank lineage
     discipline): each round references the evolving labels frame three
     times (neighbor-min join, left-join update, convergence check), so
     a cache alone bounds RUNTIME but lets the logical plan triple per
@@ -437,11 +438,10 @@ def connected_components(
         .distinct()
         .cache()
     )
-    labels = (
+    labels = cut(
         sym.select(F.col("__src").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
-        .localCheckpoint(eager=False)
     )
     try:
         for _ in range(max_iters):
@@ -450,7 +450,7 @@ def connected_components(
                 .groupBy(F.col("__src").alias("node"))
                 .agg(F.min("component").alias("__nbr_min"))
             )
-            new_labels = (
+            new_labels = cut(
                 labels.join(nbr_min, "node", "left")
                 .select(
                     "node",
@@ -458,7 +458,6 @@ def connected_components(
                         F.col("component"), F.col("__nbr_min")
                     ).alias("component"),
                 )
-                .localCheckpoint(eager=False)
             )
             changed = (
                 new_labels.alias("n")
@@ -940,10 +939,9 @@ def semantic_dedup(
     # upstream with zero exchange reuse — one lazy cut materializes
     # the assign_cells subtree (centroid crossJoin + argmin + corpus
     # join) once inside the output job (the knn_graph restructure).
-    assigned = (
+    assigned = cut(
         assign_cells(base, centroids, "__id", "__vec")
         .select("__id", "__vec", "__cell")
-        .localCheckpoint(eager=False)
     )
     # Within-cell bucket self-join with the vectors riding into an inline
     # cosine — measured faster than collect+expand for vector payloads
@@ -1081,7 +1079,7 @@ def jaccard_join(
     # and both verification sides) and the tokenize + shingle build is
     # the expensive corpus subtree — without a cut Catalyst replans it
     # per consumer (r15 static plan: 6 documents scans / 15 exchanges).
-    # One lazy localCheckpoint stores the arrays once inside the output
+    # One lazy cut stores the arrays once inside the output
     # job (the round-15 shared-subtree discipline).
     #
     # The size() guard sits ABOVE the cut: filtering on a column built
@@ -1093,12 +1091,12 @@ def jaccard_join(
     # duplicate-evaluation trap, hit by an interpreted expression
     # instead of a UDF). The RDD boundary blocks pushdown outright, so
     # the guard evaluates once, on the materialized column.
-    sh = base.select(
+    sh = cut(base.select(
         "__id",
         F.array_distinct(shingles_from_tokens(F.col("__toks"), k)).alias(
             "__sh"
         ),
-    ).localCheckpoint(eager=False).filter(F.size("__sh") > 0)
+    )).filter(F.size("__sh") > 0)
     toks = sh.select("__id", F.size("__sh").alias("__n"), F.explode("__sh").alias("__s"))
     freq = toks.groupBy("__s").agg(F.count(F.lit(1)).alias("__f"))
     ranked = toks.join(freq, "__s").withColumn(
@@ -1116,7 +1114,7 @@ def jaccard_join(
     # window) once PER SIDE with zero exchange reuse. The frame is the
     # rarest-(1-t) fraction of gram rows — smaller than toks — so one
     # lazy cut stores it once and both join sides stream off the RDD.
-    prefix = (
+    prefix = cut(
         ranked.filter(
             F.col("__r")
             <= F.col("__n")
@@ -1124,7 +1122,6 @@ def jaccard_join(
             + 1
         )
         .select("__id", "__s")
-        .localCheckpoint(eager=False)
     )
     cand = (
         prefix.alias("a")
@@ -1348,11 +1345,10 @@ def split_leakage_audit(
     # tiers (4 consumers via labeled() below) — without a cut each
     # consumer replans the scan + hash-assignment subtree (r15 static
     # plan: 6 source scans). The frame is 2 narrow columns per doc;
-    # one lazy localCheckpoint stores it once inside the output job.
-    assigned = (
+    # one lazy cut stores it once inside the output job.
+    assigned = cut(
         group_split(base, "__id", splits, seed=seed)
         .select("__id", F.col("split").alias("__split"))
-        .localCheckpoint(eager=False)
     )
     hashed = base.filter(F.col(text_col).isNotNull()).select(
         "__id", F.md5(F.col(text_col)).alias("__h")
@@ -1588,7 +1584,7 @@ def duplicate_run_spans(
         "__toks",
         F.explode(F.sequence(F.lit(0), last_start)).alias("__i"),
     ).select("__id", "__i", F.expr(h60).alias("__h"))
-    grams = grams.repartition(F.col("__h")).localCheckpoint(eager=False)
+    grams = cut(grams.repartition(F.col("__h")))
     dup = (
         grams.groupBy("__h")
         .agg(F.countDistinct("__id").alias("__nd"))
@@ -1735,13 +1731,12 @@ def lsh_recall_eval(
     # candidate pipeline each re-executed per consumer (14 fact scans
     # in the executed plan, 5.4s at sf0.1). One lazy cut per shared
     # frame; all three are bounded by the eval-slice contract.
-    reps = (
+    reps = cut(
         sl.groupBy(F.md5("__t").alias("__dig"), "__t")
         .agg(F.min("__id").alias("__id"))
         .select(
             "__id", shingles(F.col("__t"), k=k, distinct=True).alias("__sh")
         )
-        .localCheckpoint(eager=False)
     )
     a = reps.select(
         F.col("__id").alias("id_a"), F.col("__sh").alias("__sha")
@@ -1754,7 +1749,7 @@ def lsh_recall_eval(
         F.size("__sha") + F.size("__shb")
         - F.size(F.array_intersect(F.col("__sha"), F.col("__shb")))
     )
-    truth = (
+    truth = cut(
         a.join(F.broadcast(b), F.col("id_a") < F.col("id_b"))
         .select(
             "id_a",
@@ -1768,9 +1763,8 @@ def lsh_recall_eval(
             F.expr("__num div __den") >= F.lit(int(threshold_micro))
         )
         .select("id_a", "id_b")
-        .localCheckpoint(eager=False)
     )
-    cand = minhash_lsh_candidates(
+    cand = cut(minhash_lsh_candidates(
         df.filter(F.col(id_col) < max_eval_id),
         id_col,
         text_col,
@@ -1779,7 +1773,7 @@ def lsh_recall_eval(
         k=k,
         pre_collapse_exact=True,
         max_bucket_docs=max_bucket_docs,
-    ).select("id_a", "id_b").localCheckpoint(eager=False)
+    ).select("id_a", "id_b"))
     hit = truth.join(cand, ["id_a", "id_b"])
     n_docs = reps.agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
     n_true = truth.agg(
@@ -1918,17 +1912,15 @@ def bloom_prescreen(
     # source scans for ONE audit row). Lazy cuts store each digest set
     # once (16-byte rows); the downstream frames are m-bounded filter
     # metadata chaining off the cut RDDs.
-    h = (
+    h = cut(
         history.filter(F.col(text_col).isNotNull())
         .select(F.md5(F.col(text_col)).alias("__dig"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
-    inc = (
+    inc = cut(
         incoming.filter(F.col(text_col).isNotNull())
         .select(F.md5(F.col(text_col)).alias("__dig"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     m = h.agg(F.count("*").alias("n_history")).select(
         "n_history",
@@ -1956,17 +1948,14 @@ def bloom_prescreen(
     # the hit count AND the fp anti-join — each replan re-runs a k·n
     # position explode + distinct off the digest RDDs. Both outputs
     # are m-bounded (bit positions / hit digests): cut once.
-    bits = (
-        positions(h).select("__pos").distinct().localCheckpoint(eager=False)
-    )
-    probe = (
+    bits = cut(positions(h).select("__pos").distinct())
+    probe = cut(
         positions(inc)
         .join(bits, "__pos", "left_semi")
         .groupBy("__dig")
         .agg(F.count("*").alias("__nhit"))
         .filter(F.col("__nhit") >= k_hashes)
         .select("__dig")
-        .localCheckpoint(eager=False)
     )
     exact = inc.join(h, "__dig", "left_semi")
     fp = probe.join(h, "__dig", "left_anti")
@@ -2135,13 +2124,12 @@ def lsh_banding_tuner(
     # each config's candidate pipeline ran twice (count + hit): 36
     # fact scans in the executed plan, 5.8s at sf0.1. All cut frames
     # are bounded by the eval-slice contract.
-    reps = (
+    reps = cut(
         sl.groupBy(F.md5("__t").alias("__dig"), "__t")
         .agg(F.min("__id").alias("__id"))
         .select(
             "__id", shingles(F.col("__t"), k=k, distinct=True).alias("__sh")
         )
-        .localCheckpoint(eager=False)
     )
     a = reps.select(
         F.col("__id").alias("id_a"), F.col("__sh").alias("__sha")
@@ -2154,7 +2142,7 @@ def lsh_banding_tuner(
         F.size("__sha") + F.size("__shb")
         - F.size(F.array_intersect(F.col("__sha"), F.col("__shb")))
     )
-    truth = (
+    truth = cut(
         a.join(F.broadcast(b_), F.col("id_a") < F.col("id_b"))
         .select(
             "id_a",
@@ -2168,14 +2156,13 @@ def lsh_banding_tuner(
             F.expr("__num div __den") >= F.lit(int(threshold_micro))
         )
         .select("id_a", "id_b")
-        .localCheckpoint(eager=False)
     )
     n_true = truth.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_true_pairs")
     )
     out = None
     for bands in band_configs:
-        cand = minhash_lsh_candidates(
+        cand = cut(minhash_lsh_candidates(
             df.filter(F.col(id_col) < max_eval_id),
             id_col,
             text_col,
@@ -2184,7 +2171,7 @@ def lsh_banding_tuner(
             k=k,
             pre_collapse_exact=True,
             max_bucket_docs=max_bucket_docs,
-        ).select("id_a", "id_b").localCheckpoint(eager=False)
+        ).select("id_a", "id_b"))
         hit = truth.join(cand, ["id_a", "id_b"])
         row = (
             n_true.crossJoin(
@@ -2268,8 +2255,8 @@ def semdedup_incremental(
     # assignment per consumer with zero exchange reuse (the documented
     # emb_knn_graph/dd_semantic cell-assignment lesson, 4ff56e2; this
     # r15-wave operator had missed the cut — static plan read 31 source
-    # scans). One lazy localCheckpoint stores the assigned batch once.
-    b = (
+    # scans). One lazy cut stores the assigned batch once.
+    b = cut(
         assign_cells(
             batch.select(
                 F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec")
@@ -2281,7 +2268,6 @@ def semdedup_incremental(
         .select(
             "__id", "__vec", "__cell", norm(F.col("__vec")).alias("__nrm")
         )
-        .localCheckpoint(eager=False)
     )
     m = members.select(
         F.col("cell").alias("__mcell"),

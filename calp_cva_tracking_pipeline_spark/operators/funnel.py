@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from calp_cva_tracking_pipeline_spark.session import cut
+
 
 def funnel_steps(
     df: DataFrame,
@@ -732,7 +734,7 @@ def markov_stationary(
     reference counterpart.
     """
     w = Window.partitionBy(user_col).orderBy(ts_col, tiebreak_col)
-    pairs = (
+    pairs = cut(
         df.filter(
             F.col(ts_col).isNotNull() & F.col(type_col).isNotNull()
         )
@@ -749,7 +751,6 @@ def markov_stationary(
         # corpus window ~4x (r15 executed-plan audit at sf0.1: 37
         # parquet scans / 128 exchanges, ~7s exec). One lazy cut
         # materializes it once; everything downstream is type²-bounded.
-        .localCheckpoint(eager=False)
     )
     out_tot = pairs.groupBy("__f").agg(
         F.sum("__c").cast("bigint").alias("__rt")

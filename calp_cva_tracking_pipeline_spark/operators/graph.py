@@ -59,35 +59,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from calp_cva_tracking_pipeline_spark.session import cut
+
 RANK_SCALE = 1_000_000_000  # one unit of total rank mass, in nano-units
-
-
-def _cut(df: DataFrame, checkpoint: str, eager: bool = True) -> DataFrame:
-    """Lineage cut for the iterative operators (VERDICT r13 ask #6 —
-    the dynamic-allocation caveat as a real parameter):
-
-    - ``'local'`` (default): ``localCheckpoint`` — executor-local
-      blocks, no fault-tolerant storage round-trip. FAST, but losing an
-      executor (dynamic allocation, spot kill) loses its blocks and
-      fails the job.
-    - ``'reliable'``: RDD ``checkpoint`` to the session's checkpoint
-      directory (HDFS / object store) — survives executor loss; the
-      caller must have run ``spark.sparkContext.setCheckpointDir(...)``
-      on a fault-tolerant path first (refused loudly otherwise).
-    """
-    if checkpoint == "local":
-        return df.localCheckpoint(eager=eager)
-    if checkpoint == "reliable":
-        sc = df.sparkSession.sparkContext
-        if sc._jsc.sc().getCheckpointDir().isEmpty():
-            raise ValueError(
-                "checkpoint='reliable' requires spark.sparkContext."
-                "setCheckpointDir(<fault-tolerant path>) before the call"
-            )
-        return df.checkpoint(eager=eager)
-    raise ValueError(
-        f"checkpoint must be 'local' or 'reliable': {checkpoint!r}"
-    )
 
 
 def _edge_frame(
@@ -118,7 +92,6 @@ def _sentinel_pagerank(
     seeds: DataFrame | None,
     n_iter: int,
     damping_pct: int,
-    checkpoint: str,
 ) -> DataFrame:
     """The one PageRank kernel behind ``pagerank``, ``pagerank_weighted``
     and ``personalized_pagerank``: the fixed-iteration sentinel
@@ -169,7 +142,7 @@ def _sentinel_pagerank(
     # ONE materialization of the expensive shuffles (edge collapse +
     # out-weight agg + join): every static frame below derives from
     # this cached RDD, so the build never re-runs the raw edge pipeline
-    e_deg = _cut(e.join(wt, "src"), checkpoint, eager=False)
+    e_deg = cut(e.join(wt, "src"))
     nodes = (
         e_deg.select(F.col("src").alias("node"))
         .union(e_deg.select(F.col("dst").alias("node")))
@@ -179,9 +152,7 @@ def _sentinel_pagerank(
     if seeds is None:
         sd, flagged, is_seed = nodes, nodes, F.lit(True)
     else:
-        sd = _cut(
-            seeds.distinct().join(nodes, ["node"]), checkpoint, eager=False
-        )
+        sd = cut(seeds.distinct().join(nodes, ["node"]))
         flagged = nodes.join(
             sd.select(F.col("node").alias("__sn")),
             nodes["node"] == F.col("__sn"),
@@ -236,15 +207,13 @@ def _sentinel_pagerank(
             )
         )
     )
-    aug = _cut(aug, checkpoint, eager=False)
-    nodes_aug = _cut(
+    aug = cut(aug)
+    nodes_aug = cut(
         flagged.select("node", is_seed.alias("__seed")).unionByName(
             e.sparkSession.range(1).select(
                 null_node.alias("node"), F.lit(False).alias("__seed")
             )
-        ),
-        checkpoint,
-        eager=False,
+        )
     )
 
     ranks = nodes_aug.select(
@@ -300,7 +269,6 @@ def pagerank(
     dst_col: str = "dst",
     n_iter: int = 3,
     damping_pct: int = 85,
-    checkpoint: str = "local",
 ) -> DataFrame:
     """Fixed-iteration PageRank with uniform teleport. Returns (node,
     rank_nano) — integer nano-units per the module contract;
@@ -318,7 +286,7 @@ def pagerank(
     per-round cuts — pinned by
     tests/test_plan_shapes.py::test_pagerank_plan_bounded_in_rounds."""
     e = _edge_frame(edges, src_col, dst_col, ("src", "dst"), weighted=False)
-    return _sentinel_pagerank(e, None, n_iter, damping_pct, checkpoint)
+    return _sentinel_pagerank(e, None, n_iter, damping_pct)
 
 
 def pagerank_weighted(
@@ -327,7 +295,6 @@ def pagerank_weighted(
     dst_col: str = "dst",
     n_iter: int = 3,
     damping_pct: int = 85,
-    checkpoint: str = "local",
 ) -> DataFrame:
     """WEIGHTED fixed-iteration PageRank — the multigraph form
     ``pagerank``'s duplicate-collapse declares out of its own scope
@@ -346,7 +313,7 @@ def pagerank_weighted(
     (node, rank_nano). Oracle: ``pagerank_weighted_sql``.
     """
     e = _edge_frame(edges, src_col, dst_col, ("src", "dst"), weighted=True)
-    return _sentinel_pagerank(e, None, n_iter, damping_pct, checkpoint)
+    return _sentinel_pagerank(e, None, n_iter, damping_pct)
 
 
 def pagerank_weighted_sql(
@@ -457,7 +424,7 @@ def triangle_stats(
     )
     # the one lazy cut; the tested alternatives (cuts on {e, o, adj}
     # and no cut at all) and their timings are in the docstring
-    e = e.localCheckpoint(eager=False)
+    e = cut(e)
     deg = (
         e.select(F.col(u).alias("n"))
         .union(e.select(F.col(v).alias("n")))
@@ -732,14 +699,13 @@ def degree_assortativity(
     # upstream edge construction per reference (executed-plan audit:
     # 8 fact scans, 8.2s at sf0.1). One lazy cut, the triangle_stats
     # discipline; deg stays un-cut (node-sized, behind e's cut).
-    e = (
+    e = cut(
         edges.select(
             F.least(F.col(src_col), F.col(dst_col)).alias(u),
             F.greatest(F.col(src_col), F.col(dst_col)).alias(v),
         )
         .filter(F.col(u) != F.col(v))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     deg = (
         e.select(F.col(u).alias("n"))
@@ -827,7 +793,6 @@ def kcore(
     dst_col: str = "dst",
     k: int = 3,
     n_iter: int = 6,
-    checkpoint: str = "local",
 ) -> DataFrame:
     """Fixed-iteration k-core peeling (Seidman 1983): the maximal
     subgraph where every node keeps degree ≥ k — the standard robust-
@@ -849,7 +814,7 @@ def kcore(
     Scale shape per round: one node-keyed degree aggregation (map-side
     combined — degree partials, never raw edges, cross the wire) and
     two left-semi joins against the SURVIVOR NODE SET. The edge list
-    canonicalizes once and is ``localCheckpoint``-ed, and each round's
+    canonicalizes once and is cut (``session.cut``), and each round's
     survivor set (node-sized — the ewma-seed discipline: only bounded
     state is ever checkpointed) checkpoints too, so every round filters
     the SAME materialized edges by the latest survivors instead of
@@ -875,7 +840,7 @@ def kcore(
         .filter(F.col(u) != F.col(v))
         .distinct()
     )
-    e = _cut(e, checkpoint, eager=False)
+    e = cut(e)
     surv = None
 
     def _restrict(base):
@@ -892,11 +857,7 @@ def kcore(
             .groupBy("node")
             .agg(F.count(F.lit(1)).alias("degree"))
         )
-        surv = _cut(
-            deg.filter(F.col("degree") >= k).select("node"),
-            checkpoint,
-            eager=False,
-        )
+        surv = cut(deg.filter(F.col("degree") >= k).select("node"))
     final_deg = (
         _restrict(e)
         .select(F.explode(F.array(F.col(u), F.col(v))).alias("node"))
@@ -948,7 +909,6 @@ def label_propagation(
     src_col: str = "src",
     dst_col: str = "dst",
     n_iter: int = 4,
-    checkpoint: str = "local",
 ) -> DataFrame:
     """Fixed-iteration synchronous label propagation (Raghavan 2007):
     community detection for the co-occurrence graph tier — every node
@@ -993,8 +953,8 @@ def label_propagation(
     # the static adjacency is consumed once per round: cut it once so
     # rounds start from a materialized frame instead of n_iter replans
     # of the canonicalize+distinct subtree (the pagerank static-frame
-    # discipline; checkpoint='reliable' for dynamic-allocation clusters)
-    adj = _cut(adj, checkpoint, eager=False)
+    # discipline; reliable when the context has a checkpoint dir)
+    adj = cut(adj)
     labels = adj.select("node").distinct().select(
         "node", F.col("node").alias("lbl")
     )
@@ -1106,11 +1066,10 @@ def neighbor_similarity(
     # buckets; un-cut, every consumer re-executed the union+distinct
     # and the whole upstream edge build (12 fact scans in the executed
     # plan). One lazy cut; deg stays un-cut behind it (node-sized).
-    adj = (
+    adj = cut(
         e.select(F.col("s").alias("w"), F.col("d").alias("n"))
         .unionByName(e.select(F.col("d").alias("w"), F.col("s").alias("n")))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     deg = adj.groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("deg"))
     centers = adj
@@ -1188,7 +1147,6 @@ def bfs_layers(
     dst_col: str = "dst",
     node_col: str = "node",
     n_iter: int = 4,
-    checkpoint: str = "local",
 ) -> DataFrame:
     """Multi-source BFS over the UNDIRECTED graph behind ``edges``:
     (node, dist) = fewest hops from ANY node in ``sources``, up to
@@ -1199,10 +1157,10 @@ def bfs_layers(
     hops of a flagged account".
 
     Same lineage discipline as ``connected_components``: the symmetric
-    edge list localCheckpoints ONCE; each round is one edge join + a
+    edge list is cut ONCE; each round is one edge join + a
     dst-keyed min + a full-outer min-merge with the previous distance
     table, and the (node, dist) state — referenced twice per round —
-    localCheckpoints per round, so the visible plan is one round deep
+    is cut per round, so the visible plan is one round deep
     at any ``n_iter``. Distances are monotone under the min-merge, so
     round k holds exactly the <= k-hop closure (induction; the oracle
     unrolls the same recurrence). State is node-sized; the checkpoint
@@ -1221,12 +1179,12 @@ def bfs_layers(
         .filter(F.col("__s") != F.col("__d"))
         .distinct()
     )
-    e = _cut(e, checkpoint, eager=False)
+    e = cut(e)
     dist = sources.select(
         F.col(node_col).alias("node"), F.lit(0).cast("int").alias("dist")
     ).distinct()
     for _ in range(n_iter):
-        dist = _cut(dist, checkpoint, eager=False)
+        dist = cut(dist)
         reached = (
             e.join(dist, e["__s"] == dist["node"])
             .groupBy(F.col("__d").alias("node"))
@@ -1344,13 +1302,12 @@ def adamic_adar(
     # scan re-expands ~6x in the plan (measured 12 parquet scans at
     # sf0.01) — one lazy cut of the static frame bounds it, the
     # pagerank static-frame discipline
-    adj = (
+    adj = cut(
         e.select(F.col("s").alias("w"), F.col("d").alias("n"))
         .unionByName(
             e.select(F.col("d").alias("w"), F.col("s").alias("n"))
         )
         .distinct()
-        .localCheckpoint(eager=False)
     )
     deg = adj.groupBy("w").agg(
         F.count(F.lit(1)).cast("long").alias("deg")
@@ -1494,14 +1451,13 @@ def local_clustering_census(
     (``local_clustering_sql``).
     """
     u, v = "__u", "__v"
-    e = (
+    e = cut(
         edges.select(
             F.least(F.col(src_col), F.col(dst_col)).alias(u),
             F.greatest(F.col(src_col), F.col(dst_col)).alias(v),
         )
         .filter(F.col(u) != F.col(v))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     deg = (
         e.select(F.col(u).alias("n"))
@@ -1509,7 +1465,7 @@ def local_clustering_census(
         .groupBy("n")
         .agg(F.count("*").alias("d"))
     )
-    o = (
+    o = cut(
         e.join(deg.withColumnRenamed("n", u).withColumnRenamed("d", "du"), u)
         .join(deg.withColumnRenamed("n", v).withColumnRenamed("d", "dv"), v)
         .select(
@@ -1528,7 +1484,6 @@ def local_clustering_census(
             .alias("edge")
         )
         .select("edge.s", "edge.t")
-        .localCheckpoint(eager=False)
     )
     # Same shuffle-hash discipline as triangle_stats: the adjacency
     # table is graph-sized, never a broadcast candidate. Each edge row
@@ -1536,10 +1491,9 @@ def local_clustering_census(
     # out-neighbor with one — the same 3 credits per triangle the
     # wedge-join spelling produced by exploding (a,b,c) rows, without
     # ever materializing Σ outdeg² wedges through an exchange.
-    adj = (
+    adj = cut(
         o.groupBy("s")
         .agg(F.collect_list("t").alias("__ts"))
-        .localCheckpoint(eager=False)
     )
     inter = (
         o.select("s", "t")
@@ -1687,14 +1641,13 @@ def square_census(
     # scans in the executed plan, 7.3s at sf0.1). Cut it once, and cut
     # the symmetrized adjacency once below (its two consumers each
     # re-ran the union+distinct exchange).
-    e = (
+    e = cut(
         edges.filter(F.col(src_col) != F.col(dst_col))
         .select(
             F.least(F.col(src_col), F.col(dst_col)).alias("s"),
             F.greatest(F.col(src_col), F.col(dst_col)).alias("d"),
         )
         .distinct()
-        .localCheckpoint(eager=False)
     )
     if max_degree is not None:
         adj0 = (
@@ -1797,7 +1750,7 @@ FROM stats CROSS JOIN sq
 """
 
 
-def _hits(e: DataFrame, n_iter: int, checkpoint: str, name: str) -> DataFrame:
+def _hits(e: DataFrame, n_iter: int, name: str) -> DataFrame:
     """The one HITS kernel behind ``hits`` and ``hits_weighted``:
     fixed-iteration weighted rounds a ← Σ w·h over in-edges and
     h ← Σ w·a over out-edges on the framed edge set ``e`` =
@@ -1823,7 +1776,7 @@ def _hits(e: DataFrame, n_iter: int, checkpoint: str, name: str) -> DataFrame:
     """
     if n_iter < 1:
         raise ValueError(f"n_iter must be >= 1: {n_iter}")
-    e = _cut(e, checkpoint)
+    e = cut(e, eager=True)
     nodes = (
         e.select(F.col("__s").alias("node"))
         .unionByName(e.select(F.col("__d").alias("node")))
@@ -1891,7 +1844,7 @@ def _hits(e: DataFrame, n_iter: int, checkpoint: str, name: str) -> DataFrame:
             # checkpoints (hub, auth) never re-execute the 2t-round
             # prefix twice (round-13 advisor catch — the two consumers
             # otherwise re-ran the whole iteration independently)
-            a = _cut(a, checkpoint)
+            a = cut(a, eager=True)
         h = (
             e.join(a, e["__d"] == a["node"])
             .groupBy(F.col("__s").alias("node"))
@@ -1919,8 +1872,8 @@ def _hits(e: DataFrame, n_iter: int, checkpoint: str, name: str) -> DataFrame:
     # both consume the frame, and re-planning 2·n_iter join rounds per
     # consumer is the markov/kcore lineage trap; the totals then ride a
     # one-row broadcast, never a single-partition global window
-    hub = _cut(hub, checkpoint)
-    auth = _cut(auth, checkpoint)
+    hub = cut(hub, eager=True)
+    auth = cut(auth, eager=True)
     hub = hub.crossJoin(
         F.broadcast(
             hub.agg(F.sum("__h").cast("decimal(38,0)").alias("__th"))
@@ -1949,7 +1902,6 @@ def hits(
     src_col: str = "src",
     dst_col: str = "dst",
     n_iter: int = 3,
-    checkpoint: str = "local",
 ) -> DataFrame:
     """Fixed-iteration HITS (Kleinberg hubs & authorities) over a
     DIRECTED edge set — the link-analysis complement of PageRank:
@@ -1971,7 +1923,7 @@ def hits(
     (node, hub_nano, auth_nano), ordered by node.
     """
     e = _edge_frame(edges, src_col, dst_col, ("__s", "__d"), weighted=False)
-    return _hits(e, n_iter, checkpoint, "hits")
+    return _hits(e, n_iter, "hits")
 
 
 def hits_weighted(
@@ -1979,7 +1931,6 @@ def hits_weighted(
     src_col: str = "src",
     dst_col: str = "dst",
     n_iter: int = 3,
-    checkpoint: str = "local",
 ) -> DataFrame:
     """WEIGHTED fixed-iteration HITS — the multigraph form ``hits``'s
     docstring declares out of its own scope: endorsement strength is
@@ -1998,7 +1949,7 @@ def hits_weighted(
     auth_nano), ordered by node.
     """
     e = _edge_frame(edges, src_col, dst_col, ("__s", "__d"), weighted=True)
-    return _hits(e, n_iter, checkpoint, "hits_weighted")
+    return _hits(e, n_iter, "hits_weighted")
 
 
 def personalized_pagerank(
@@ -2026,16 +1977,14 @@ def personalized_pagerank(
     seeds only. Seeds outside the edge set's node universe are ignored
     (documented: a seed with no edges contributes no mass and receives
     only teleport); duplicate seed ids collapse; with no in-graph seed
-    every rank is 0. Static frames are cut with ``localCheckpoint``.
+    every rank is 0. Static frames are cut once (``session.cut``).
     Integer nano arithmetic throughout — ``ppr_sql`` unrolls the
     identical recurrence. Output: (node, rank_nano) over every graph
     node, ordered by node.
     """
     e = _edge_frame(edges, src_col, dst_col, ("src", "dst"), weighted=False)
     sd = seeds.select(F.col(seed_col).alias("node"))
-    return _sentinel_pagerank(e, sd, n_iter, damping_pct, "local").orderBy(
-        "node"
-    )
+    return _sentinel_pagerank(e, sd, n_iter, damping_pct).orderBy("node")
 
 
 def ppr_sql(
@@ -2132,7 +2081,7 @@ def reciprocity(
     # out-degree aggregation — un-cut, the distinct edge build (and
     # its whole upstream) re-executed 4x (8 fact scans in the executed
     # plan). One lazy cut, the static-frame discipline.
-    e = (
+    e = cut(
         edges.select(
             F.col(src_col).alias("__s"), F.col(dst_col).alias("__d")
         )
@@ -2142,7 +2091,6 @@ def reciprocity(
             & (F.col("__s") != F.col("__d"))
         )
         .distinct()
-        .localCheckpoint(eager=False)
     )
     rev = e.select(
         F.col("__d").alias("__s"), F.col("__s").alias("__d")

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from calp_cva_tracking_pipeline_spark.functions.text import regex_quote
+from calp_cva_tracking_pipeline_spark.session import cut
 
 
 def join_with_fallback(
@@ -227,13 +228,12 @@ def anti_waterfall_union(
         # sized by the waterfall contract) in executor block storage
         # for the job's duration — n_sources-1 such frames total, not
         # unpersisted mid-plan because every later anti-join's lineage
-        # still references them; local-checkpoint blocks are lost with
-        # an executor, which re-fails the job rather than corrupting
-        # it (no partial lineage replay).
-        seen = (
+        # still references them; without a checkpoint dir the blocks
+        # are lost with an executor, which re-fails the job rather than
+        # corrupting it (no partial lineage replay).
+        seen = cut(
             result.select(*keys)
             .distinct()
-            .localCheckpoint(eager=False)
         )
         result = result.unionByName(
             src.join(F.broadcast(seen), keys, "left_anti"),

@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from calp_cva_tracking_pipeline_spark.functions.numeric import money_avg
+from calp_cva_tracking_pipeline_spark.session import cut
 
 _STATS = ("n", "n_null", "min", "max", "mean", "p50")
 
@@ -2537,9 +2538,11 @@ def mann_whitney(
     # re-executed per reference (8 fact scans in the executed plan).
     # One lazy cut on the value-cardinality-bounded cell table; the
     # bounded grid/join frames downstream replan cheaply off it.
-    cells = enc.groupBy("__v", "__x").agg(
-        F.count(F.lit(1)).cast("bigint").alias("__c")
-    ).localCheckpoint(eager=False)
+    cells = cut(
+        enc.groupBy("__v", "__x").agg(
+            F.count(F.lit(1)).cast("bigint").alias("__c")
+        )
+    )
     ctrl = (
         cells.filter(F.col("__v") == control)
         .select("__x", F.col("__c").alias("__cc"))

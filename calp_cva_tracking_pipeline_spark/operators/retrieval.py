@@ -32,6 +32,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from calp_cva_tracking_pipeline_spark.session import cut
+
 
 def with_rank(
     pool: DataFrame,
@@ -190,14 +192,14 @@ def retrieval_metrics(
     # relevance feeds the hit join AND the per-query IDCG count — the
     # ground-truth table can be an expensive derived frame (e.g. a
     # label self-join of the corpus), and without a cut each consumer
-    # replans it (r15 static-plan audit). One lazy localCheckpoint on
+    # replans it (r15 static-plan audit). One lazy cut on
     # the projected pairs; the count derives from the cut RDD (same
     # rows — relevance is one row per relevant (query, doc)).
-    rel = relevance.select(
+    rel = cut(relevance.select(
         F.col(query_col).alias("__q"),
         F.col(doc_col).alias("__d"),
         F.lit(1).alias("__rel"),
-    ).localCheckpoint(eager=False)
+    ))
     n_rel = rel.groupBy("__q").agg(
         F.count(F.lit(1)).cast("bigint").alias("__nrel")
     )

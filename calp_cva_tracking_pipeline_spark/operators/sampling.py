@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from calp_cva_tracking_pipeline_spark.functions.hashing import stable_hash64
+from calp_cva_tracking_pipeline_spark.session import cut
 
 
 def stratified_split(
@@ -1013,7 +1014,7 @@ def split_balance_audit(
     # times (itself + split/label/grand totals) — checkpoint-cut so the
     # row-scaled aggregation underneath runs once (the dd_cluster_pick
     # bounded-frame discipline; un-cut this plan re-scans the input 4×)
-    cells = (
+    cells = cut(
         df.filter(F.col(split_col).isNotNull())
         .select(
             F.col(split_col).alias("split"),
@@ -1022,8 +1023,8 @@ def split_balance_audit(
             ).alias("label"),
         )
         .groupBy("split", "label")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .localCheckpoint()
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n")),
+        eager=True,
     )
     split_tot = cells.groupBy("split").agg(
         F.sum("n").cast("bigint").alias("__st")

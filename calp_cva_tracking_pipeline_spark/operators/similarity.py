@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from calp_cva_tracking_pipeline_spark.operators.partitioning import (
     spread_small_input,
 )
+from calp_cva_tracking_pipeline_spark.session import cut
 
 
 def random_planes(
@@ -886,9 +887,7 @@ def pq_topk(
     # is m·k rows: cut once, broadcast cheaply to both. A caller-passed
     # codebook is left alone (the caller owns its lineage).
     cb = (codebooks if codebooks is not None else
-          pq_codebooks(
-              corpus, id_col, vec_col, m, k_codebook, dim
-          ).localCheckpoint(eager=False))
+          cut(pq_codebooks(corpus, id_col, vec_col, m, k_codebook, dim)))
     codes = pq_encode(corpus, cb, id_col, vec_col, m, dim)
     qrows = _explode_subspaces(
         queries.select(
@@ -964,9 +963,7 @@ def ivf_pq_topk(
         F.col(id_col).alias("__id"), "__cell"
     )
     # same 2-consumer codebook cut as pq_topk (encode + LUT)
-    cb = pq_codebooks(
-        corpus, id_col, vec_col, m, k_codebook, dim
-    ).localCheckpoint(eager=False)
+    cb = cut(pq_codebooks(corpus, id_col, vec_col, m, k_codebook, dim))
     codes = pq_encode(corpus, cb, id_col, vec_col, m, dim)
     coded = codes.join(cells, "__id")
     qd = queries.select(
@@ -1183,9 +1180,7 @@ def knn_graph(
     # (the documented minhash_lsh_candidates lesson). One lazy cut
     # materializes the assignment once inside the output job: the
     # before-plan held 8 corpus scans / 24 exchanges / 0 reuse.
-    assigned = assigned.withColumn(
-        "__nrm", norm(F.col("__vec"))
-    ).localCheckpoint(eager=False)
+    assigned = cut(assigned.withColumn("__nrm", norm(F.col("__vec"))))
     l, r = assigned.alias("l"), assigned.alias("r")
     half = (
         l.join(
@@ -1265,7 +1260,7 @@ def cluster_label_eval(
     lab = df.filter(F.col(label_col).isNotNull()).select(
         F.col(id_col).alias("__lid"), F.col(label_col).alias("__lab")
     )
-    cells = (
+    cells = cut(
         assigned.join(lab, assigned[id_col] == lab["__lid"])
         .groupBy("__cell", "__lab")
         .agg(F.count(F.lit(1)).cast("bigint").alias("__ncl"))
@@ -1274,7 +1269,6 @@ def cluster_label_eval(
         # NEVER fires exchange reuse (measured, SCALE.md), so without
         # this cut the kmeans+assignment lineage re-plans per marginal
         # (117 visible scans / 116 joins in the round-10 plan audit)
-        .localCheckpoint(eager=False)
     )
     marg_c = cells.groupBy("__cell").agg(
         F.sum("__ncl").cast("bigint").alias("__nc"),
@@ -1628,13 +1622,12 @@ def matryoshka_recall(
     # cut each consumer replans the whole brute pass (r15 static plan:
     # 18 corpus scans for 3 prefixes). The frame is nq·k rows by
     # contract: cut once, every consumer streams off the RDD.
-    full = (
+    full = cut(
         brute_force_topk(
             corpus, queries, id_col, vec_col, query_id_col, query_vec_col,
             k=k,
         )
         .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=False)
     )
     # the denominator is the EVALUATED query count (from the ground
     # truth), never queries-with-hits — a prefix with zero overlap must
@@ -1874,16 +1867,17 @@ def ivf_recall_frontier(
     nprobes = sorted(set(int(p) for p in nprobes))
     if not nprobes or nprobes[0] <= 0:
         raise ValueError(f"nprobes must be positive: {nprobes}")
-    cent = train_centroids(
-        corpus, id_col, vec_col, n_centroids
-    ).localCheckpoint()
-    cells = assign_cells(
-        corpus, cent, id_col, vec_col
-    ).localCheckpoint()
-    brute = brute_force_topk(
-        corpus, queries, id_col, vec_col, query_id_col, query_vec_col,
-        k=k,
-    ).select("query_id", "neighbor_id").localCheckpoint()
+    cent = cut(
+        train_centroids(corpus, id_col, vec_col, n_centroids), eager=True
+    )
+    cells = cut(assign_cells(corpus, cent, id_col, vec_col), eager=True)
+    brute = cut(
+        brute_force_topk(
+            corpus, queries, id_col, vec_col, query_id_col, query_vec_col,
+            k=k,
+        ).select("query_id", "neighbor_id"),
+        eager=True,
+    )
     parts = []
     for np_ in nprobes:
         ivf = ivf_topk(
@@ -2155,9 +2149,7 @@ def graph_search_frontier(
     # hop's join: the one lazy cut, so the corpus is read and the k-NN
     # graph built once. Nodes without out-edges (exact duplicates that
     # knn_graph collapsed) keep their own vector, with null __nbrs.
-    nodes = vecs.join(out_nbrs, "__nid", "left").localCheckpoint(
-        eager=False
-    )
+    nodes = cut(vecs.join(out_nbrs, "__nid", "left"))
     truth = (
         brute_force_topk(
             nodes, queries, "__nid", "__v", query_id_col, query_vec_col,

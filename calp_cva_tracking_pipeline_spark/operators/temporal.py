@@ -34,6 +34,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from calp_cva_tracking_pipeline_spark.session import cut
+
 _ASOF = "__asof_payload"
 _SIDE = "__asof_side"
 
@@ -495,7 +497,7 @@ def ewma_smooth_chunked(
     is date-partitioned) → broadcast-join the key-sized seed relation →
     the same ``applyInPandas`` recurrence seeded from the carried state
     → a key-sized ``max_by`` aggregate producing the next seed. ONLY the
-    seed is ``localCheckpoint``-ed each epoch (key-sized, stays
+    seed is cut (``session.cut``, eager) each epoch (key-sized, stays
     distributed — this is an iterative operator like PageRank, and the
     checkpoint is what keeps the plan from re-running every earlier
     epoch once per later epoch; epoch outputs themselves are never
@@ -570,7 +572,7 @@ def ewma_smooth_chunked(
         )
         # keys silent this epoch keep their carried state
         carried = seed.join(new_states, keys, "left_anti")
-        seed = new_states.unionByName(carried).localCheckpoint(eager=True)
+        seed = cut(new_states.unionByName(carried), eager=True)
     if not parts:
         return df.sparkSession.createDataFrame(
             [], df.select(*keys, tiebreak_col).schema.add("ewma", "double")
@@ -1380,7 +1382,7 @@ def seasonal_anomaly(
     # executor storage per query — the resid replan costs one keyed
     # join + hour-effect agg over the ALREADY-CUT detr rows, never a
     # fact re-scan, so the storage is the bigger risk at 100 TB).
-    detr = (
+    detr = cut(
         enc.join(day_means, [*key_cols, "__day"])
         .select(
             *key_cols,
@@ -1397,7 +1399,6 @@ def seasonal_anomaly(
             .cast("bigint")
             .alias("__dc"),
         )
-        .localCheckpoint(eager=False)
     )
     hour_eff = detr.groupBy(*key_cols, "__hour").agg(
         F.round(

@@ -26,6 +26,7 @@ from calp_cva_tracking_pipeline_spark.operators.dedup import (
 from calp_cva_tracking_pipeline_spark.operators.textops import (
     add_text_features,
 )
+from calp_cva_tracking_pipeline_spark.session import cut
 
 
 def near_dup_drop_set(
@@ -204,9 +205,9 @@ def corpus_release_report(
     # labeling, the LSH candidate pass, the Jaccard verify's two
     # text-fetch joins); without lineage cuts Catalyst re-plans the
     # regex-heavy feature scan per consumer (r15 plan audit: 11
-    # documents.parquet scans in one audit plan). Lazy localCheckpoints
+    # documents.parquet scans in one audit plan). Lazy cuts
     # materialize each once inside the single output job.
-    base = feats.select(
+    base = cut(feats.select(
         id_col,
         source_col,
         text_col,
@@ -222,13 +223,11 @@ def corpus_release_report(
             & (F.col("n_tokens") >= min_tokens),
             F.lit(False),
         ).alias("__gate"),
-    ).localCheckpoint(eager=False)
+    ))
     gated = base.filter(F.col("__gate")).select(
         id_col, source_col, text_col, "n_tokens"
     )
-    exact = dedup_exact(gated, text_col, id_col).localCheckpoint(
-        eager=False
-    )
+    exact = cut(dedup_exact(gated, text_col, id_col))
     drops = near_dup_drop_set(
         exact,
         id_col,
@@ -396,7 +395,7 @@ def release_audit_cells(
     )
 
     feats = add_text_features(batch, text_col)
-    base = feats.select(
+    base = cut(feats.select(
         id_col,
         source_col,
         text_col,
@@ -406,13 +405,11 @@ def release_audit_cells(
             & (F.col("n_tokens") >= min_tokens),
             F.lit(False),
         ).alias("__gate"),
-    ).localCheckpoint(eager=False)
+    ))
     gated = base.filter(F.col("__gate")).select(
         id_col, source_col, text_col, "n_tokens"
     )
-    survivors = dedup_incremental(
-        gated, digest_store, text_col, id_col
-    ).localCheckpoint(eager=False)
+    survivors = cut(dedup_incremental(gated, digest_store, text_col, id_col))
     cand = neardup_incremental(
         survivors,
         band_store,

@@ -14,6 +14,9 @@ Local testing runs on ``local[N]`` but every default here is chosen for the
 - Generated-code cache sized so a warm pass reuses every compiled class
   (``CODEGEN_CACHE_MAX_ENTRIES``). The conf is static: it takes effect only
   when the session is built here, never through ``normalize_session``.
+- Lineage cuts (``cut``) follow the context's checkpoint dir: with
+  ``spark.checkpoint.dir`` set they write reliable checkpoints that
+  survive executor loss, otherwise executor-local ones.
 """
 
 from __future__ import annotations
@@ -24,7 +27,7 @@ import tempfile
 import zipfile
 from pathlib import Path
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -103,6 +106,18 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def cut(df: DataFrame, eager: bool = False) -> DataFrame:
+    """The engine's one lineage cut. With a checkpoint dir on the
+    SparkContext (``spark.checkpoint.dir`` or ``setCheckpointDir``) it is
+    a reliable ``checkpoint`` into that dir, which survives executor loss
+    (dynamic allocation, spot kills). Without one it is a
+    ``localCheckpoint``: executor-local blocks, no storage round trip,
+    lost with their executor."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
+        return df.localCheckpoint(eager=eager)
+    return df.checkpoint(eager=eager)
 
 
 def autoscale_shuffle_partitions(

@@ -13,9 +13,9 @@
    (profiling.py);
 4. template_census keeps the id column's native type for exemplar_id
    (a bigint cast silently NULLed string/UUID ids) (textops.py);
-5. test_graph_checkpoint's ValueError precondition is now
-   order-independent (clear/restore the context's checkpointDir var)
-   — pinned in that file itself.
+5. test_graph_checkpoint no longer leaks a checkpoint dir into later
+   tests: it sets and clears the context's checkpointDir var only
+   inside a restore-on-exit context — pinned in that file itself.
 """
 
 from __future__ import annotations

@@ -537,12 +537,12 @@ def test_runtime_bloom_filter_applies_to_fact_fact_joins(spark, sf_dir):
 
 
 def test_phash_single_python_stage_no_cartesian(spark, sf_dir):
-    """Image near-dup: exactly TWO Arrow/Python stages total (synth
-    encode + decode — the only Python in the pipeline) and candidate
-    pairing via the band-bucket aggregation, never a cartesian or a
-    derived self-join."""
+    """Image near-dup: exactly ONE Arrow/Python stage (synth encode and
+    decode fused into one ``mapInPandas`` — the only Python in the
+    pipeline) and candidate pairing via the band-bucket aggregation,
+    never a cartesian or a derived self-join."""
     plan = _executed(S.mm_phash_neardup(spark, sf_dir))
-    assert plan.count("MapInPandas") == 2
+    assert plan.count("MapInPandas") == 1
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
