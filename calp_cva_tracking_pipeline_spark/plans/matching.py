@@ -5,10 +5,12 @@ The reference matches sub-grant recipient names to survey/FTS organisation
 names through four per-name loops (exact → fuzzy → substring both ways),
 applies ~20 manual overrides, coalesces the stages, then subtracts matched
 sub-grant totals from the primary aggregate with a zero floor. Here the
-four stages are set-wise joins over the two SMALL distinct-name lists
-(hundreds to low thousands of names — BASELINE.md) so every stage is a
-broadcast nested-loop at worst; the 100 TB fact side is never involved
-until the final broadcast-mapped subtraction.
+four stages run in ONE pass over the two SMALL distinct-name lists
+(hundreds to low thousands of names — BASELINE.md): a left-outer
+broadcast nested-loop scan of every (left, right) pair, one aggregate
+per left name that picks each stage's match, and the overrides as a
+literal map lookup on the result. The 100 TB fact side is never
+involved until the final broadcast-mapped subtraction.
 """
 
 from __future__ import annotations
@@ -64,27 +66,16 @@ def match_org_names(
         canonicalize_name(F.col(right_names.columns[0])).alias("rname")
     ).distinct()
     rc = rc.filter(F.col("rname").isNotNull() & (F.col("rname") != ""))
-    # the pair scan and the join-back both consume the name lists, and
-    # Spark replans a derived frame once per consumer (exchange reuse
-    # never fires across these subtrees — the r14 plan audit read 10
-    # scans / 22 exchanges / 0 reuse for the EP3 chain): CACHE the
-    # canonical-distinct frames so execution computes them once. cache()
-    # over localCheckpoint here because checkpointing forces physical
-    # planning at CONSTRUCTION time (~0.3-2s per frame, measured — it
-    # must build the RDD), while cache registration is free and the
-    # frames are org-universe-sized by the module contract (hundreds to
-    # low thousands of names — LRU-evictable dimension state).
-    lc = lc.cache()
-    rc = rc.cache()
 
-    # ALL FOUR stages over ONE pair scan + ONE priority aggregate
-    # (round-14: the stage-per-join spelling planned 4 cross joins,
-    # 3 rank windows and 3 coalesce joins over the SAME pair space —
-    # ~10 sequential broadcast stages; the fused form is pair scan →
-    # grouped pick → one broadcast join back). Per-stage tie-breaks
-    # are bit-identical: struct-min (distance, rname) ≡ the fuzzy
-    # window's (dist asc, rname asc) row_number cut, struct-min
-    # (container_len, rname) ≡ the substring windows'
+    # ALL FOUR stages in ONE pass: a left-outer pair scan against the
+    # broadcast org list, grouped per left name, each stage's pick read
+    # straight off the aggregate. The left-outer nested loop keeps every
+    # left name (rname null when the org list is empty, so every stage
+    # misses), so the aggregate already holds every output row and each
+    # name list is read once: nothing to join back, nothing to cache.
+    # Per-stage tie-breaks are bit-identical: struct-min (distance,
+    # rname) ≡ the fuzzy window's (dist asc, rname asc) row_number cut,
+    # struct-min (container_len, rname) ≡ the substring windows'
     # shortest-container-then-lex cut — see operators.joins.
     # fuzzy_name_join / substring_join, which remain the standalone
     # J10/J11 operators with those windows.
@@ -107,7 +98,7 @@ def match_org_names(
     if fuzzy_veto:
         is_fuzzy = is_fuzzy & ~F.col("name").isin(list(fuzzy_veto))
     pairs = (
-        lc.crossJoin(F.broadcast(rc))
+        lc.join(F.broadcast(rc), F.lit(True), "left")
         .withColumn(
             "__pl",
             F.concat(
@@ -157,55 +148,38 @@ def match_org_names(
             )
         ).alias("__b"),
     )
-    out = (
-        lc.join(F.broadcast(picks), "name", "left")
-        .withColumn(
-            "matched_name",
-            F.coalesce(
-                F.col("exact_match"),
-                F.col("__f.m"),
-                F.col("__a.m"),
-                F.col("__b.m"),
-            ),
-        )
-        .withColumn(
-            "match_method",
-            F.coalesce(
-                F.when(F.col("exact_match").isNotNull(), "exact"),
-                F.when(F.col("__f").isNotNull(), "fuzzy"),
-                F.when(F.col("__a").isNotNull(), "substring_a"),
-                F.when(F.col("__b").isNotNull(), "substring_b"),
-            ),
-        )
-        .select("name", "matched_name", "match_method")
+    matched_name = F.coalesce(
+        F.col("exact_match"), F.col("__f.m"), F.col("__a.m"), F.col("__b.m")
+    )
+    match_method = F.coalesce(
+        F.when(F.col("exact_match").isNotNull(), "exact"),
+        F.when(F.col("__f").isNotNull(), "fuzzy"),
+        F.when(F.col("__a").isNotNull(), "substring_a"),
+        F.when(F.col("__b").isNotNull(), "substring_b"),
     )
     if manual_overrides:
-        # manual decisions override every automatic stage (code/10:226-285)
-        spark = out.sparkSession
-        ovr = spark.createDataFrame(
-            manual_overrides, "name string, __manual string"
+        # manual decisions override every automatic stage (code/10:226-285);
+        # dict() keeps one target per name, the last, as the reference's
+        # sequential assignments do
+        manual = F.try_element_at(
+            F.create_map(
+                *(F.lit(s) for kv in dict(manual_overrides).items() for s in kv)
+            ),
+            F.col("name"),
         )
-        out = (
-            out.join(F.broadcast(ovr), "name", "left")
-            .withColumn(
-                "matched_name", F.coalesce("__manual", "matched_name")
-            )
-            .withColumn(
-                "match_method",
-                F.when(F.col("__manual").isNotNull(), F.lit("manual"))
-                .otherwise(F.col("match_method")),
-            )
-            .drop("__manual")
+        matched_name = F.coalesce(manual, matched_name)
+        match_method = F.when(manual.isNotNull(), F.lit("manual")).otherwise(
+            match_method
         )
     for pattern, target in manual_pattern_overrides or []:
         hit = F.col("name").rlike(pattern)
-        out = out.withColumn(
-            "matched_name", F.when(hit, F.lit(target)).otherwise(F.col("matched_name"))
-        ).withColumn(
-            "match_method",
-            F.when(hit, F.lit("manual")).otherwise(F.col("match_method")),
-        )
-    return out
+        matched_name = F.when(hit, F.lit(target)).otherwise(matched_name)
+        match_method = F.when(hit, F.lit("manual")).otherwise(match_method)
+    return picks.select(
+        "name",
+        matched_name.alias("matched_name"),
+        match_method.alias("match_method"),
+    )
 
 
 def subtract_subgrants(

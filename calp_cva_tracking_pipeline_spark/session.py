@@ -11,6 +11,12 @@ Local testing runs on ``local[N]`` but every default here is chosen for the
   should be ~2-3× total cluster cores in production; AQE coalesces the rest.
 - Arrow enabled so Pandas-UDF operators (ML inference, multimodal decode)
   move batches, not rows, across the JVM↔Python boundary.
+- AQE may coalesce the output of a cached plan
+  (``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``), so a
+  cached org-sized frame is read in as many tasks as its bytes need, not
+  ``spark.sql.shuffle.partitions``. Spark defaults it off because a reader
+  that relied on the cached frame's partitioning may then need an extra
+  shuffle; a runtime conf, so ``normalize_session`` sets it too.
 - Generated-code cache sized so a warm pass reuses every compiled class
   (``CODEGEN_CACHE_MAX_ENTRIES``). The conf is static: it takes effect only
   when the session is built here, never through ``normalize_session``.
@@ -76,6 +82,7 @@ def get_spark(
         # are far above either bound, so this only affects the small end.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.shuffle.partitions", str(shuffle))
         .config("spark.sql.session.timeZone", "UTC")
@@ -185,6 +192,9 @@ def normalize_session(spark: SparkSession) -> SparkSession:
         # onto 1-2 cores
         spark.conf.set(
             "spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k"
+        )
+        spark.conf.set(
+            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
         )
         # driver-side plan-build cost: disable PySpark's per-call call-site
         # capture (see get_spark). The conf is STATIC (settable only at

@@ -62,6 +62,102 @@ def test_fuzzy_veto(spark):
     assert vetoed.collect()[0]["matched_name"] is None
 
 
+def test_empty_right_list_matches_nothing_but_overrides_apply(spark):
+    subgrants = spark.createDataFrame(
+        [("Oxfam",), ("wfp",), ("Unknown",)], "name string"
+    )
+    orgs = spark.createDataFrame([], "org string")
+    out = match_org_names(
+        subgrants, orgs, manual_overrides=[("wfp", "world food programme")]
+    )
+    got = {
+        r["name"]: (r["matched_name"], r["match_method"])
+        for r in out.collect()
+    }
+    assert got == {
+        "oxfam": (None, None),
+        "wfp": ("world food programme", "manual"),
+    }
+
+
+def test_empty_left_list_yields_no_rows(spark):
+    subgrants = spark.createDataFrame([], "name string")
+    orgs = spark.createDataFrame([("Oxfam GB",)], "org string")
+    out = match_org_names(
+        subgrants, orgs, manual_overrides=[("wfp", "world food programme")]
+    )
+    assert out.collect() == []
+
+
+def test_duplicate_override_maps_once_to_the_last_target(spark):
+    """Repeated (from, to) entries keep one mapping row per name, the
+    last entry's target (the reference assigns them in order), so the
+    subtraction counts each sub-grant once."""
+    subgrants = spark.createDataFrame([("WFP",)], "name string")
+    orgs = spark.createDataFrame(
+        [("World Food Programme",), ("UNICEF",)], "org string"
+    )
+    mapping = match_org_names(
+        subgrants,
+        orgs,
+        manual_overrides=[
+            ("wfp", "unicef"),
+            ("wfp", "world food programme"),
+            ("wfp", "world food programme"),
+        ],
+    )
+    assert [tuple(r) for r in mapping.collect()] == [
+        ("wfp", "world food programme", "manual")
+    ]
+    cva_agg = spark.createDataFrame(
+        [("world food programme", 2023, "FALSE", "UN", 10.0)],
+        "clean_org string, Year int, newMoney string, Org_type string,"
+        " `PC.USD.m` double",
+    )
+    sub_grants = spark.createDataFrame(
+        [("WFP", 2023, 3.0)], "recipient_name string, Year int, amount double"
+    )
+    pc_tv = spark.createDataFrame(
+        [(2023, 1.0)], "Year int, PC_average_used double"
+    )
+    undoubled, _ = subtract_subgrants(cva_agg, sub_grants, mapping, pc_tv)
+    (row,) = undoubled.collect()
+    assert row["PC.USD.m_subgrant"] == 3.0
+    assert row["PC.USD.m_undoubled"] == 7.0
+
+
+def test_matcher_job_ceiling(spark, tmp_path):
+    """The matcher runs as one pass: ~100 x 120 parquet-backed names map
+    in 4 Spark jobs (one shuffle per name list, the org-list broadcast and
+    the result)."""
+    orgs = [f"Org {i} Relief Fund" for i in range(120)]
+    spark.createDataFrame([(o,) for o in orgs], "org string").write.parquet(
+        str(tmp_path / "right")
+    )
+    spark.createDataFrame(
+        [(o if i % 3 else o[:-1],) for i, o in enumerate(orgs[:100])],
+        "name string",
+    ).write.parquet(str(tmp_path / "left"))
+    # read (and infer the schemas, which runs jobs of its own) first
+    left = spark.read.parquet(str(tmp_path / "left"))
+    right = spark.read.parquet(str(tmp_path / "right"))
+    sc = spark.sparkContext
+    group = "ep3-matcher-job-ceiling"
+    sc.setJobGroup(group, group)
+    try:
+        rows = match_org_names(
+            left,
+            right,
+            manual_overrides=[("org 7 relief fund", "org 8 relief fund")],
+        ).collect()
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(rows) == 100
+    assert len(jobs) <= 4, len(jobs)
+
+
 def test_subtract_subgrants_floor_and_rollup(spark):
     cva_agg = spark.createDataFrame(
         [

@@ -931,23 +931,20 @@ def test_round13_tier_plan_shapes(spark, sf_dir):
 
 
 def test_matcher_fused_plan_stays_fused(spark, sf_dir):
-    """Round-14 EP3 rework: the 4-stage matcher is ONE pair scan + ONE
-    priority aggregate + one join-back (was 4 cross joins + 3 rank
-    windows + 3 coalesce joins). Pin the fused shape: the org-match
-    chain's executed plan must carry at most 4 joins and ZERO rank
-    windows (struct-min picks replaced them), and at most 2 parquet
-    scans (name lists cached, the r14 audit read 10 before)."""
+    """The 4-stage matcher is ONE left-outer pair scan + ONE priority
+    aggregate, with the overrides as a map lookup. Pin the single pass:
+    the org-match chain's executed plan carries one join, reads each
+    name list's parquet once with no cache in between, and has ZERO
+    rank windows (struct-min picks stand in for them)."""
     import calp_cva_tracking_pipeline_spark.catalog.relational as R
 
     df = R.RELATIONAL_QUERIES["ep3_org_match"][0](spark, sf_dir)
     df.write.format("noop").mode("overwrite").save()
     plan = _executed(df)
-    # the cached name lists serve every consumer (the plan STRING still
-    # prints the cached subtree under each InMemoryRelation, so raw
-    # parquet-scan counts overstate execution — count the cache reads)
-    assert plan.count("InMemoryTableScan") >= 2, plan
+    assert plan.count("InMemoryTableScan") == 0, plan
     n_joins = plan.count("Join")
-    assert n_joins <= 4, f"matcher re-grew join stages: {n_joins}"
+    assert n_joins <= 1, f"matcher re-grew join stages: {n_joins}"
+    assert plan.count("Scan parquet") <= 2, plan
     assert "row_number" not in plan.lower().replace(
         "windowgrouplimit", ""
     ), "rank windows returned to the fused matcher"
