@@ -247,18 +247,19 @@ def centroid_confusion(
     before a probe classifier trains.
 
     Determinism: centroids are the 6-dp-rounded per-dimension means
-    (``label_centroids`` — both engines land identical decimals), the
-    squared-L2 scan is the sequential-order ``sq_dist`` fold rounded to
-    6 dp (the IVF discipline), and the argmin resolves by (distance,
-    label) — a total order. Assignment is the broadcast-scan shape the
-    kmeans tier measured (|labels|·n rows, no shuffle on the corpus
-    side); the confusion table is |labels|² — the windows over it are
-    output-sized. Rows with NULL vector or label drop. Output:
+    (``label_centroids`` — both engines land identical decimals), and
+    the assignment is the IVF tier's nearest-centroid argmin
+    (``similarity._nearest_centroids``: 6-dp ``sq_dist``, ties to the
+    lower label — a total order; a NULL distance, from a NULL element or
+    a length mismatch, sorts first) against the broadcast label
+    centroids, one min-of-struct aggregate; the confusion table is
+    |labels|² — the windows over it are output-sized. Rows with NULL
+    vector or label drop. Output:
     (label, assigned_label, n, frac) with frac = n / true-label total,
     6 dp, ordered. Engine addition; no reference counterpart.
     """
     from calp_cva_tracking_pipeline_spark.operators.similarity import (
-        sq_dist,
+        _nearest_centroids,
     )
     from pyspark.sql import Window
 
@@ -269,8 +270,8 @@ def centroid_confusion(
         F.transform(
             F.array_sort(F.collect_list(F.struct("dim", "mean"))),
             lambda s: s.getField("mean"),
-        ).alias("__carr")
-    ).select(F.col("label").alias("__clabel"), "__carr")
+        ).alias("__cent")
+    ).select(F.col("label").alias("centroid_id"), "__cent")
     rows = df.filter(
         F.col(vec_col).isNotNull() & F.col(label_col).isNotNull()
     ).select(
@@ -278,18 +279,8 @@ def centroid_confusion(
         F.col(label_col).alias("label"),
         F.col(vec_col).alias("__vec"),
     )
-    scored = rows.crossJoin(F.broadcast(carr)).select(
-        "__id",
-        "label",
-        "__clabel",
-        F.round(sq_dist(F.col("__vec"), F.col("__carr")), 6).alias("__d"),
-    )
-    m = scored.groupBy("__id", "label").agg(F.min("__d").alias("__md"))
-    best = (
-        scored.join(m, ["__id", "label"])
-        .filter(F.col("__d") == F.col("__md"))
-        .groupBy("__id", "label")
-        .agg(F.min("__clabel").alias("assigned_label"))
+    best = _nearest_centroids(rows, ["__id", "label"], "__vec", carr).select(
+        "label", F.col("__cid").alias("assigned_label")
     )
     conf = best.groupBy("label", "assigned_label").agg(
         F.count(F.lit(1)).cast("bigint").alias("n")

@@ -18,6 +18,15 @@ IVF 0.925 at nprobe=2/16 (~1/8 of corpus scored) and 0.950 at nprobe=8;
 multi-table LSH 0.40 at 4 planes x 4 tables (~1/4 of corpus), matching the
 hyperplane collision math p = (1 - theta/pi)^planes OR'd across tables.
 IVF is the default scale tier; LSH remains the no-training fallback.
+
+Every "which centroid is nearest" decision — IVF cell assignment and
+probe lists, wide-k Lloyd, PQ encoding and codebook refinement, the
+outlier screen, the incremental audit and ``linalg.centroid_confusion``
+— goes through ONE kernel, ``_nearest_centroids``: d² = ``sq_dist``
+rounded to 6 dp against a broadcast centroid frame, ordered by (d²,
+centroid id) so ties break on the lower id. The one exception is
+``train_centroids``' inline-literal Lloyd branch, which evaluates the
+same order over driver-resident literals, not a frame.
 """
 
 from __future__ import annotations
@@ -300,6 +309,58 @@ def sq_dist(a: Column, b: Column) -> Column:
     )
 
 
+def _nearest_centroids(
+    rows: DataFrame,
+    key: list[str],
+    vec: str,
+    cents: DataFrame,
+    n: int | None = None,
+    on: str | None = None,
+    carry: tuple[str, ...] = (),
+    cvec: str = "__cent",
+) -> DataFrame:
+    """The one nearest-centroid rule of the IVF, PQ and label-centroid
+    operators: squared L2 (``sq_dist``) of ``rows[vec]`` to every
+    centroid, rounded to 6 dp, ordered by (d², centroid id) — ties break
+    on the lower id, and a NULL distance (NULL vector) sorts first. The
+    DuckDB oracles replay this order on non-NULL distances.
+
+    ``cents`` holds ``centroid_id`` and the vector ``cvec`` (plus ``on``,
+    the PQ subspace ``m``) and is BROADCAST: a crossJoin, or an equi-join on
+    ``on``, so the row side never shuffles for the distances. ``key``
+    names one input row; ``carry`` columns ride along to the output.
+
+    - ``n=None``: the argmin as ONE min-of-struct aggregate on ``key`` —
+      only (key, d², cid, carry) shuffle; a carried column sits in the
+      struct behind cid, which is unique per key, so it never decides.
+      → (key…, carry…, __d2, __cid).
+    - ``n >= 1``: the ``n`` nearest as a per-key ``row_number`` window
+      (the probe list) → (key…, carry…, __d2, __cid, __rank ≤ n).
+    """
+    if n is not None and n < 1:
+        raise ValueError(f"probe count must be >= 1: {n}")
+    joined = (
+        rows.join(F.broadcast(cents), on) if on
+        else rows.crossJoin(F.broadcast(cents))
+    )
+    d2 = F.round(sq_dist(F.col(vec), F.col(cvec)), 6).alias("__d2")
+    cid = F.col("centroid_id").alias("__cid")
+    if n is None:
+        return (
+            joined.select(*key, F.struct(d2, cid, *carry).alias("__dc"))
+            .groupBy(*key)
+            .agg(F.min("__dc").alias("__dc"))
+            .select(*key, *(f"__dc.{c}" for c in carry), "__dc.__d2",
+                    "__dc.__cid")
+        )
+    w = Window.partitionBy(*key).orderBy("__d2", "__cid")
+    return (
+        joined.select(*key, *carry, d2, cid)
+        .withColumn("__rank", F.row_number().over(w))
+        .filter(F.col("__rank") <= n)
+    )
+
+
 # Auto cell-size budget for the ALL-PAIRS family (knn_graph,
 # semantic_dedup): K = ceil(N/128) keeps rows-per-cell constant as the
 # corpus grows, so the within-cell pair volume (sum(|cell|²) ≈ N·128)
@@ -457,35 +518,15 @@ def train_centroids(
             )
         else:
             # wide-k fallback: the state re-enters as a LITERAL local
-            # relation (no lineage behind the broadcast), same
-            # crossJoin + struct-min argmin as assign_cells, but the
-            # means read the argmin's carried vector — no corpus
-            # re-join
+            # relation (no lineage behind the broadcast) into the
+            # nearest-centroid kernel; the vector rides along as
+            # payload, so the means need no corpus re-join
             cframe = spark.createDataFrame(
                 state, "centroid_id long, __cent array<double>"
             )
-            assigned = (
-                base.crossJoin(F.broadcast(cframe))
-                .select(
-                    "__aid",
-                    # vec rides INSIDE the argmin struct (cid is unique,
-                    # so comparison never reaches it) — the means need
-                    # no corpus re-join
-                    F.struct(
-                        F.round(
-                            sq_dist(F.col("__avec"), F.col("__cent")), 6
-                        ).alias("d2"),
-                        F.col("centroid_id").alias("cid"),
-                        F.col("__avec").alias("vec"),
-                    ).alias("__dc"),
-                )
-                .groupBy("__aid")
-                .agg(F.min("__dc").alias("__dc"))
-                .select(
-                    F.col("__dc.cid").alias("__cell"),
-                    F.col("__dc.vec").alias("__avec"),
-                )
-            )
+            assigned = _nearest_centroids(
+                base, ["__aid"], "__avec", cframe, carry=("__avec",)
+            ).select(F.col("__cid").alias("__cell"), "__avec")
         # ONE (cell, dim)-keyed exchange; the k·d mean rows collect
         # directly (model-sized) and reassemble in Python — no second
         # per-cell aggregation stage
@@ -526,31 +567,24 @@ def assign_cells(
 ) -> DataFrame:
     """IVF index build: corpus + ``__cell`` = nearest centroid id.
 
-    Distances are computed against broadcast centroids and reduced to the
-    argmin as a min-of-struct over (rounded d², centroid_id) — ties break on
-    centroid id, deterministically. Only (id, d², cid) tuples shuffle for
-    the argmin; the corpus vectors shuffle ONCE in the join that attaches
-    the winning cell. At scale this is the one-time index build — persist
-    the result bucketed by ``__cell`` (sources.bucketed.write_bucketed) and
-    every search is exchange-free on the corpus side.
+    The cell is ``_nearest_centroids``' argmin: d² = ``sq_dist`` to the
+    broadcast centroids, rounded to 6 dp, min-of-struct over (d²,
+    centroid_id) so ties break on the lower id (a NULL vector lands in
+    the lowest-id cell; no centroids, no rows). Only (id, d², cid)
+    tuples shuffle for the argmin; the corpus vectors shuffle ONCE in
+    the join that attaches the winning cell. At scale this is the
+    one-time index build — persist the result bucketed by ``__cell``
+    (sources.bucketed.write_bucketed) and every search is exchange-free
+    on the corpus side.
     """
-    dists = corpus.select(
-        F.col(id_col).alias("__aid"), F.col(vec_col).alias("__avec")
-    ).crossJoin(F.broadcast(centroids))
-    best = (
-        dists.select(
-            "__aid",
-            F.struct(
-                F.round(sq_dist(F.col("__avec"), F.col("__cent")), 6).alias(
-                    "d2"
-                ),
-                F.col("centroid_id").alias("cid"),
-            ).alias("__dc"),
-        )
-        .groupBy("__aid")
-        .agg(F.min("__dc").alias("__dc"))
-        .select("__aid", F.col("__dc.cid").alias("__cell"))
-    )
+    best = _nearest_centroids(
+        corpus.select(
+            F.col(id_col).alias("__aid"), F.col(vec_col).alias("__avec")
+        ),
+        ["__aid"],
+        "__avec",
+        centroids,
+    ).select("__aid", F.col("__cid").alias("__cell"))
     return corpus.join(
         best, F.col(id_col) == F.col("__aid"), "inner"
     ).drop("__aid")
@@ -652,18 +686,19 @@ def ivf_topk(
         F.col(vec_col).alias("__cvec"),
         "__cell",
     ).withColumn("__cnrm", norm(F.col("__cvec")))
-    qd = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_vec_col).alias("__qvec"),
-    ).crossJoin(F.broadcast(cent))
-    pw = Window.partitionBy("query_id").orderBy(
-        F.round(sq_dist(F.col("__qvec"), F.col("__cent")), 6),
-        F.col("centroid_id"),
-    )
     probes = (
-        qd.withColumn("__pr", F.row_number().over(pw))
-        .filter(F.col("__pr") <= nprobe)
-        .select("query_id", "__qvec", F.col("centroid_id").alias("__cell"))
+        _nearest_centroids(
+            queries.select(
+                F.col(query_id_col).alias("query_id"),
+                F.col(query_vec_col).alias("__qvec"),
+            ),
+            ["query_id"],
+            "__qvec",
+            cent,
+            n=nprobe,
+            carry=("__qvec",),
+        )
+        .select("query_id", "__qvec", F.col("__cid").alias("__cell"))
         .withColumn("__qnrm", norm(F.col("__qvec")))
     )
     scored = (
@@ -764,23 +799,14 @@ def pq_codebooks(
         dim,
     )
     for _ in range(iters):
-        assigned = (
-            rows.join(F.broadcast(cb), "m")
-            .select(
-                "__id",
-                "m",
-                "__sub",
-                F.struct(
-                    F.round(
-                        sq_dist(F.col("__sub"), F.col("__cb")), 6
-                    ).alias("d2"),
-                    F.col("centroid_id").alias("cid"),
-                ).alias("__dc"),
-            )
-            .groupBy("__id", "m", "__sub")
-            .agg(F.min("__dc").alias("__dc"))
-            .select("m", F.col("__dc.cid").alias("centroid_id"), "__sub")
-        )
+        assigned = _nearest_centroids(
+            rows,
+            ["__id", "m", "__sub"],
+            "__sub",
+            cb,
+            on="m",
+            cvec="__cb",
+        ).select("m", F.col("__cid").alias("centroid_id"), "__sub")
         means = (
             assigned.select(
                 "m",
@@ -835,22 +861,14 @@ def pq_encode(
         m,
         dim,
     )
-    return (
-        rows.join(F.broadcast(codebooks), "m")
-        .select(
-            "__id",
-            "m",
-            F.struct(
-                F.round(sq_dist(F.col("__sub"), F.col("__cb")), 6).alias(
-                    "d2"
-                ),
-                F.col("centroid_id").alias("cid"),
-            ).alias("__dc"),
-        )
-        .groupBy("__id", "m")
-        .agg(F.min("__dc").alias("__dc"))
-        .select("__id", "m", F.col("__dc.cid").alias("code"))
-    )
+    return _nearest_centroids(
+        rows,
+        ["__id", "m"],
+        "__sub",
+        codebooks,
+        on="m",
+        cvec="__cb",
+    ).select("__id", "m", F.col("__cid").alias("code"))
 
 
 def pq_topk(
@@ -966,19 +984,16 @@ def ivf_pq_topk(
     cb = cut(pq_codebooks(corpus, id_col, vec_col, m, k_codebook, dim))
     codes = pq_encode(corpus, cb, id_col, vec_col, m, dim)
     coded = codes.join(cells, "__id")
-    qd = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_vec_col).alias("__qvec"),
-    ).crossJoin(F.broadcast(cent))
-    pw = Window.partitionBy("query_id").orderBy(
-        F.round(sq_dist(F.col("__qvec"), F.col("__cent")), 6),
-        F.col("centroid_id"),
-    )
-    probes = (
-        qd.withColumn("__pr", F.row_number().over(pw))
-        .filter(F.col("__pr") <= nprobe)
-        .select("query_id", F.col("centroid_id").alias("__cell"))
-    )
+    probes = _nearest_centroids(
+        queries.select(
+            F.col(query_id_col).alias("query_id"),
+            F.col(query_vec_col).alias("__qvec"),
+        ),
+        ["query_id"],
+        "__qvec",
+        cent,
+        n=nprobe,
+    ).select("query_id", F.col("__cid").alias("__cell"))
     qrows = _explode_subspaces(
         queries.select(
             F.col(query_id_col).alias("query_id"),
@@ -1102,7 +1117,8 @@ def knn_graph(
     Approximation contract: candidates are pairs sharing at least one of
     each node's ``nprobe`` nearest cells (the same cells-bound-the-
     quadratic design as SemDeDup — comparisons are sum(|cell|²)-scale,
-    never N²). ``nprobe=1`` is the pure within-cell regime; a node near
+    never N²); ``nprobe < 1`` raises ValueError, like every IVF probe
+    count. ``nprobe=1`` is the pure within-cell regime; a node near
     a cell boundary can miss a cross-cell true neighbor there, and
     ``nprobe=2`` closes exactly that: every node also meets its
     second-closest cell's population, recovering boundary neighbors
@@ -1142,28 +1158,14 @@ def knn_graph(
             # search rule would leave sum(|cell|²) growing N^1.5)
             n_centroids = auto_n_centroids(df, DEFAULT_CELL_SIZE)
         centroids = train_centroids(df, id_col, vec_col, n_centroids)
-    if nprobe <= 1:
+    if nprobe == 1:
         assigned = assign_cells(base, centroids, "__id", "__vec").select(
             "__id", "__vec", "__cell"
         )
     else:
-        wd = Window.partitionBy("__id").orderBy(
-            F.col("__d2").asc(), F.col("__cell").asc()
-        )
-        assigned = (
-            base.crossJoin(F.broadcast(centroids))
-            .select(
-                "__id",
-                "__vec",
-                F.col("centroid_id").alias("__cell"),
-                F.round(
-                    sq_dist(F.col("__vec"), F.col("__cent")), 6
-                ).alias("__d2"),
-            )
-            .withColumn("__crn", F.row_number().over(wd))
-            .filter(F.col("__crn") <= nprobe)
-            .select("__id", "__vec", "__cell")
-        )
+        assigned = _nearest_centroids(
+            base, ["__id"], "__vec", centroids, n=nprobe, carry=("__vec",)
+        ).select("__id", "__vec", F.col("__cid").alias("__cell"))
     # Perf shape (measured, round 12): higher-order-function folds run
     # INTERPRETED, so per-pair work dominates the query. Two exact
     # rewrites cut it ~6x with a bit-identical edge set: (a) each
@@ -1361,27 +1363,12 @@ def embedding_outliers(
     smallest flagged distance, max_d2), ordered by cell.
     """
     cents = train_centroids(df, id_col, vec_col, n_centroids)
-    dists = df.select(
-        F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")
-    ).crossJoin(F.broadcast(cents))
-    best = (
-        dists.select(
-            "__id",
-            F.struct(
-                F.round(sq_dist(F.col("__v"), F.col("__cent")), 6).alias(
-                    "d2"
-                ),
-                F.col("centroid_id").alias("cid"),
-            ).alias("__dc"),
-        )
-        .groupBy("__id")
-        .agg(F.min("__dc").alias("__dc"))
-        .select(
-            "__id",
-            F.col("__dc.d2").alias("__d2"),
-            F.col("__dc.cid").alias("cell"),
-        )
-    )
+    best = _nearest_centroids(
+        df.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")),
+        ["__id"],
+        "__v",
+        cents,
+    ).select("__id", "__d2", F.col("__cid").alias("cell"))
     wr = Window.partitionBy("cell").orderBy(
         F.col("__d2").desc(), F.col("__id").asc()
     )
@@ -1449,23 +1436,24 @@ def hard_negatives(
         F.col(label_col).alias("negative_label"),
         "__cell",
     )
-    qd = queries.filter(F.col(query_label_col).isNotNull()).select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_vec_col).alias("__qvec"),
-        F.col(query_label_col).alias("query_label"),
-    ).crossJoin(F.broadcast(cent))
-    pw = Window.partitionBy("query_id").orderBy(
-        F.round(sq_dist(F.col("__qvec"), F.col("__cent")), 6),
-        F.col("centroid_id"),
-    )
     probes = (
-        qd.withColumn("__pr", F.row_number().over(pw))
-        .filter(F.col("__pr") <= nprobe)
+        _nearest_centroids(
+            queries.filter(F.col(query_label_col).isNotNull()).select(
+                F.col(query_id_col).alias("query_id"),
+                F.col(query_vec_col).alias("__qvec"),
+                F.col(query_label_col).alias("query_label"),
+            ),
+            ["query_id"],
+            "__qvec",
+            cent,
+            n=nprobe,
+            carry=("__qvec", "query_label"),
+        )
         .select(
             "query_id",
             "__qvec",
             "query_label",
-            F.col("centroid_id").alias("__cell"),
+            F.col("__cid").alias("__cell"),
         )
         .withColumn("__qnrm", norm(F.col("__qvec")))
     )
@@ -1535,27 +1523,17 @@ def ivf_incremental_audit(
     )
 
     def stats(df: DataFrame, n_name: str, m_name: str) -> DataFrame:
-        d = df.select(
-            F.col(id_col).alias("__aid"), F.col(vec_col).alias("__avec")
-        ).crossJoin(F.broadcast(cent))
-        best = (
-            d.select(
-                "__aid",
-                F.struct(
-                    F.round(
-                        sq_dist(F.col("__avec"), F.col("__cent")), 6
-                    ).alias("d2"),
-                    F.col("centroid_id").alias("cid"),
-                ).alias("__dc"),
-            )
-            .groupBy("__aid")
-            .agg(F.min("__dc").alias("__dc"))
+        best = _nearest_centroids(
+            df.select(
+                F.col(id_col).alias("__aid"), F.col(vec_col).alias("__avec")
+            ),
+            ["__aid"],
+            "__avec",
+            cent,
         )
-        return best.groupBy(F.col("__dc.cid").alias("cell")).agg(
+        return best.groupBy(F.col("__cid").alias("cell")).agg(
             F.count(F.lit(1)).cast("bigint").alias(n_name),
-            F.sum(
-                F.round(F.col("__dc.d2") * 1e6, 0).cast("long")
-            ).alias(m_name),
+            F.sum(F.round(F.col("__d2") * 1e6, 0).cast("long")).alias(m_name),
         )
     b = stats(base, "n_base", "__mb")
     i = stats(incoming, "n_new", "__mi")
@@ -2326,18 +2304,19 @@ def ivf_range_search(
         F.col(vec_col).alias("__cvec"),
         "__cell",
     ).withColumn("__cnrm", norm(F.col("__cvec")))
-    qd = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_vec_col).alias("__qvec"),
-    ).crossJoin(F.broadcast(cent))
-    pw = Window.partitionBy("query_id").orderBy(
-        F.round(sq_dist(F.col("__qvec"), F.col("__cent")), 6),
-        F.col("centroid_id"),
-    )
     probes = (
-        qd.withColumn("__pr", F.row_number().over(pw))
-        .filter(F.col("__pr") <= nprobe)
-        .select("query_id", "__qvec", F.col("centroid_id").alias("__cell"))
+        _nearest_centroids(
+            queries.select(
+                F.col(query_id_col).alias("query_id"),
+                F.col(query_vec_col).alias("__qvec"),
+            ),
+            ["query_id"],
+            "__qvec",
+            cent,
+            n=nprobe,
+            carry=("__qvec",),
+        )
+        .select("query_id", "__qvec", F.col("__cid").alias("__cell"))
         .withColumn("__qnrm", norm(F.col("__qvec")))
     )
     scored = (

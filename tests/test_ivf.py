@@ -8,7 +8,12 @@ in plain pytest, plus the recall/refinement checks the driver can't do.
 
 from __future__ import annotations
 
+import inspect
+import random
+from pathlib import Path
+
 import duckdb
+import pytest
 from pyspark.sql import functions as F
 
 from calp_cva_tracking_pipeline_spark.catalog.scale import (
@@ -275,3 +280,462 @@ def test_auto_n_centroids_two_regimes(spark, sf_dir):
     assert sorted(map(tuple, k_auto.collect())) == sorted(
         map(tuple, k_explicit.collect())
     )
+
+
+def test_knn_graph_hand_computed_within_cell(spark):
+    from calp_cva_tracking_pipeline_spark.operators.similarity import (
+        knn_graph,
+    )
+
+    # 2 centroids (ids 0 and 1, lowest-id init); vectors near (1,0) land
+    # in cell 0, near (0,1) in cell 1. k=2 per node within its cell.
+    rows = [
+        (0, [1.0, 0.0]),
+        (1, [0.0, 1.0]),
+        (2, [0.9, 0.1]),
+        (3, [0.8, 0.2]),
+        (4, [0.1, 0.9]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    out = knn_graph(df, "vec_id", "embedding", k=2, n_centroids=2)
+    got = {
+        (r.vec_id, r.rank): r.neighbor_id for r in out.collect()
+    }
+    # cell 0 = {0, 2, 3}; cell 1 = {1, 4}
+    # cos(2,0)=0.993884 > cos(2,3)=0.990896 > cos(3,0)=0.970143
+    assert got[(0, 1)] == 2 and got[(0, 2)] == 3
+    assert got[(2, 1)] == 0 and got[(2, 2)] == 3
+    assert got[(3, 1)] == 2 and got[(3, 2)] == 0
+    assert got[(1, 1)] == 4 and got[(4, 1)] == 1
+    assert (1, 2) not in got  # only one same-cell neighbor exists
+
+
+def test_knn_graph_pre_collapse_and_layout_independent(spark):
+    from calp_cva_tracking_pipeline_spark.operators.similarity import (
+        knn_graph,
+    )
+
+    # 10 byte-identical vectors + 3 distinct: duplicates collapse to the
+    # min id, so no neighbor list is flooded with sim=1.0 self-copies
+    rows = [(i, [1.0, 0.0]) for i in range(10)] + [
+        (20, [0.9, 0.1]),
+        (21, [0.8, 0.2]),
+        (22, [0.7, 0.3]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    out = knn_graph(df, "vec_id", "embedding", k=3, n_centroids=1)
+    ids = {r.vec_id for r in out.collect()}
+    assert ids == {0, 20, 21, 22}  # representatives only
+    a = {(r.vec_id, r.rank): r.neighbor_id for r in out.collect()}
+    b = {
+        (r.vec_id, r.rank): r.neighbor_id
+        for r in knn_graph(
+            df.repartition(7), "vec_id", "embedding", k=3, n_centroids=1
+        ).collect()
+    }
+    assert a == b
+
+
+def test_knn_graph_nprobe2_recovers_boundary_neighbor(spark):
+    from calp_cva_tracking_pipeline_spark.operators.similarity import (
+        knn_graph,
+    )
+
+    # centroids = lowest-id vectors 0 ([1,0]) and 1 ([0,1]).
+    # node 5 = [0.72, 0.70]: primary cell 0 (barely), but its TRUE
+    # nearest neighbor is node 6 = [0.68, 0.74] in cell 1.
+    rows = [
+        (0, [1.0, 0.0]),
+        (1, [0.0, 1.0]),
+        (5, [0.72, 0.70]),
+        (6, [0.68, 0.74]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    got1 = {
+        (r.vec_id, r.rank): r.neighbor_id
+        for r in knn_graph(
+            df, "vec_id", "embedding", k=1, n_centroids=2, nprobe=1
+        ).collect()
+    }
+    got2 = {
+        (r.vec_id, r.rank): r.neighbor_id
+        for r in knn_graph(
+            df, "vec_id", "embedding", k=1, n_centroids=2, nprobe=2
+        ).collect()
+    }
+    # within-cell only: 5's best neighbor is limited to cell 0 → 0
+    assert got1[(5, 1)] == 0
+    # nprobe=2: 5 also meets cell 1 and finds its true neighbor 6
+    assert got2[(5, 1)] == 6
+    # layout independence of the multi-probe path
+    got2b = {
+        (r.vec_id, r.rank): r.neighbor_id
+        for r in knn_graph(
+            df.repartition(5), "vec_id", "embedding", k=1, n_centroids=2,
+            nprobe=2,
+        ).collect()
+    }
+    assert got2b == got2
+
+
+def test_lloyd_refinement_reduces_distortion_and_is_deterministic(spark):
+    import random
+
+    from calp_cva_tracking_pipeline_spark.operators.similarity import (
+        assign_cells,
+        sq_dist,
+        train_centroids,
+    )
+
+    rng = random.Random(3)
+    # two tight blobs; lowest-id init picks both seeds from blob A, so
+    # Lloyd must actually move a centroid to blob B to win
+    rows = [
+        (i, [rng.gauss(0, 0.05), rng.gauss(0, 0.05)]) for i in range(40)
+    ] + [
+        (100 + i, [rng.gauss(5, 0.05), rng.gauss(5, 0.05)])
+        for i in range(40)
+    ]
+    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+
+    def distortion(cent):
+        assigned = assign_cells(df, cent, "vec_id", "embedding")
+        joined = assigned.join(
+            cent, assigned["__cell"] == cent["centroid_id"]
+        )
+        return joined.agg(
+            F.sum(sq_dist(F.col("embedding"), F.col("__cent")))
+        ).collect()[0][0]
+
+    d0 = distortion(train_centroids(df, "vec_id", "embedding", 2, iters=0))
+    d2 = distortion(train_centroids(df, "vec_id", "embedding", 2, iters=2))
+    assert d2 < d0 * 0.5  # Lloyd must substantially improve the bad init
+
+    # bit-determinism across layouts (the decimal-mean discipline)
+    c_a = {
+        (r.centroid_id, tuple(r["__cent"]))
+        for r in train_centroids(df, "vec_id", "embedding", 2, iters=2).collect()
+    }
+    c_b = {
+        (r.centroid_id, tuple(r["__cent"]))
+        for r in train_centroids(
+            df.repartition(9), "vec_id", "embedding", 2, iters=2
+        ).collect()
+    }
+    assert c_a == c_b
+
+
+def test_lloyd_empty_cells_keep_previous_centroid(spark):
+    from calp_cva_tracking_pipeline_spark.operators.similarity import (
+        train_centroids,
+    )
+
+    # 4 centroids over 2 distinct points: two cells must go empty and
+    # keep their init vectors rather than vanishing
+    rows = [(0, [0.0, 0.0]), (1, [0.0, 0.0]), (2, [9.0, 9.0]), (3, [9.0, 9.0])]
+    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    cent = train_centroids(df, "vec_id", "embedding", 4, iters=2).collect()
+    assert len(cent) == 4  # k never shrinks
+
+
+def test_hard_negatives_labels_and_order(spark):
+    from calp_cva_tracking_pipeline_spark.operators.similarity import (
+        hard_negatives,
+    )
+
+    # anchors at the axes; one same-label near-duplicate that MUST be
+    # skipped in favor of a farther different-label vector
+    rows = [
+        (0, [1.0, 0.0], 0),
+        (1, [0.99, 0.01], 0),   # same label as anchor 0 — never a negative
+        (2, [0.9, 0.1], 1),     # hardest valid negative for anchor 0
+        (3, [0.0, 1.0], 1),
+        (4, [-1.0, 0.0], 2),
+        (5, [0.5, 0.5], None),  # unlabeled: excluded by contract
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, v array<double>, label int")
+    q = df.filter(F.col("vec_id") == 0)
+    out = hard_negatives(
+        df, q, "vec_id", "v", "label", "vec_id", "v", "label",
+        n_centroids=1, nprobe=1, k=2,
+    ).collect()
+    assert [r.negative_id for r in out] == [2, 3]
+    assert all(r.negative_label != r.query_label for r in out)
+    assert out[0].cosine > out[1].cosine
+
+
+def test_ivf_incremental_audit_invariants(spark):
+    from calp_cva_tracking_pipeline_spark.operators.similarity import (
+        ivf_incremental_audit,
+    )
+
+    base = spark.createDataFrame(
+        [(i, [float(i % 4), float((i * 7) % 5)]) for i in range(40)],
+        "vec_id long, v array<double>",
+    )
+    inc = spark.createDataFrame(
+        [(100 + i, [float(i % 4) + 0.25, 0.0]) for i in range(12)],
+        "vec_id long, v array<double>",
+    )
+    out = ivf_incremental_audit(base, inc, "vec_id", "v", n_centroids=4)
+    rows = out.collect()
+    assert len(rows) == 4  # every centroid reports, hot or dead
+    assert sum(r.n_base for r in rows) == 40
+    assert sum(r.n_new for r in rows) == 12
+    for r in rows:
+        if r.n_base > 0:
+            assert r.growth_ppm == 1_000_000 * r.n_new // r.n_base
+        else:
+            assert r.growth_ppm is None
+        if r.n_new == 0:
+            assert r.mean_d2_new is None and r.d2_drift is None
+
+
+def test_embedding_outliers_ceil_rule_and_flag_counts(spark):
+    from calp_cva_tracking_pipeline_spark.operators.similarity import (
+        embedding_outliers,
+    )
+
+    rng = random.Random(7)
+    rows = [
+        (i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(200)
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    out = embedding_outliers(
+        df, "vec_id", "embedding", n_centroids=4, flag_ppm=100000
+    ).collect()
+    assert sum(r.n for r in out) == 200
+    for r in out:
+        assert r.n_flagged == -(-100000 * r.n // 1000000)  # ceil rule
+        if r.n_flagged:
+            assert r.cut_d2 <= r.max_d2
+    # deterministic under repartition
+    out2 = embedding_outliers(
+        df.repartition(9), "vec_id", "embedding",
+        n_centroids=4, flag_ppm=100000,
+    ).collect()
+    assert sorted(map(tuple, out)) == sorted(map(tuple, out2))
+
+
+def test_range_search_contains_thresholded_topk(spark, sf_dir):
+    """Consistency across serving modes: with the same index/operating
+    point, every ivf_topk hit at cosine >= tau must appear in the range
+    result (range is the thresholded closure of the ranked view when
+    k <= max_results), and no range hit may fall below tau."""
+    from pyspark.sql import functions as F
+
+    from calp_cva_tracking_pipeline_spark.catalog.common import T
+    from calp_cva_tracking_pipeline_spark.catalog.scale import (
+        IVF_CENTROIDS,
+        IVF_NPROBE,
+        N_QUERIES,
+        RANGE_TAU,
+        TOP_K,
+    )
+    from calp_cva_tracking_pipeline_spark.operators.similarity import (
+        ivf_range_search,
+        ivf_topk,
+    )
+
+    e = T(spark, sf_dir, "embeddings")
+    q = e.filter(F.col("vec_id") < N_QUERIES)
+    topk = ivf_topk(
+        e, q, "vec_id", "embedding", "vec_id", "embedding",
+        n_centroids=IVF_CENTROIDS, nprobe=IVF_NPROBE, k=TOP_K,
+    ).collect()
+    rng = ivf_range_search(
+        e, q, "vec_id", "embedding", "vec_id", "embedding",
+        threshold=RANGE_TAU,
+        n_centroids=IVF_CENTROIDS, nprobe=IVF_NPROBE, max_results=100,
+    ).collect()
+    range_pairs = {(r.query_id, r.neighbor_id) for r in rng}
+    assert all(r.cosine >= RANGE_TAU for r in rng)
+    missing = [
+        (r.query_id, r.neighbor_id)
+        for r in topk
+        if r.cosine >= RANGE_TAU
+        and (r.query_id, r.neighbor_id) not in range_pairs
+    ]
+    assert not missing, missing
+
+
+# ---------------------------------------------------------------------------
+# the nearest-centroid kernel (_nearest_centroids) vs a pure-Python rule
+# ---------------------------------------------------------------------------
+
+
+def _ref_nearest(rows, cents, n):
+    """Per row id, its ``n`` nearest (d2, cid): d2 is the sequential
+    squared-L2 sum rounded to 6 dp, ordered by (d2, cid) with a NULL
+    distance first."""
+    out = {}
+    for rid, v in rows:
+        scored = sorted(
+            (
+                (v is not None, d2 or 0.0, cid, d2)
+                for cid, c in cents
+                for d2 in [
+                    None if v is None
+                    else round(sum((a - b) * (a - b) for a, b in zip(v, c)), 6)
+                ]
+            )
+        )
+        out[rid] = [(d2, cid) for _, _, cid, d2 in scored[:n]]
+    return out
+
+
+def _kernel_frames(spark, rows, cents):
+    from calp_cva_tracking_pipeline_spark.operators.similarity import (
+        _nearest_centroids,
+    )
+
+    r = spark.createDataFrame(rows, "__id long, __v array<double>")
+    c = spark.createDataFrame(cents, "centroid_id long, __cent array<double>")
+
+    def argmin():
+        return {
+            x["__id"]: [(x["__d2"], x["__cid"])]
+            for x in _nearest_centroids(r, ["__id"], "__v", c).collect()
+        }
+
+    def ranked(n):
+        got = {}
+        for x in sorted(
+            _nearest_centroids(r, ["__id"], "__v", c, n=n).collect(),
+            key=lambda x: (x["__id"], x["__rank"]),
+        ):
+            got.setdefault(x["__id"], []).append((x["__d2"], x["__cid"]))
+        return got
+
+    return r, c, argmin, ranked
+
+
+def test_kernel_equidistant_centroids_lower_id_wins(spark):
+    """Two centroids at the same rounded distance: the lower id is the
+    argmin and leads the probe order — in the kernel and in
+    assign_cells."""
+    from calp_cva_tracking_pipeline_spark.operators.similarity import (
+        assign_cells,
+    )
+
+    # centroid 7 and centroid 3 are mirror images around row 0 (d2 = 1
+    # each); row 1 sits exactly between centroids 3 and 9 (d2 = 4 each)
+    cents = [(7, [1.0, 0.0]), (3, [-1.0, 0.0]), (9, [3.0, 0.0])]
+    rows = [(0, [0.0, 0.0]), (1, [1.0, 0.0]), (2, [2.5, 0.0])]
+    r, c, argmin, ranked = _kernel_frames(spark, rows, cents)
+    ref = _ref_nearest(rows, cents, 3)
+    assert ref[0][0] == (1.0, 3) and ref[1][:2] == [(0.0, 7), (4.0, 3)]
+    assert argmin() == {k: v[:1] for k, v in ref.items()}
+    assert ranked(3) == ref
+    cells = {
+        x["__id"]: x["__cell"]
+        for x in assign_cells(r, c, "__id", "__v").collect()
+    }
+    assert cells == {k: v[0][1] for k, v in ref.items()}
+
+
+def test_kernel_null_vector_takes_the_lowest_id_cell(spark):
+    """A NULL vector scores NULL against every centroid; NULL sorts
+    first, so the row lands in the lowest-id cell and probes in id
+    order — the rule the argmin and the window both applied before the
+    kernel."""
+    cents = [(5, [0.0, 1.0]), (2, [1.0, 0.0]), (8, [4.0, 4.0])]
+    rows = [(0, None), (1, [0.9, 0.1])]
+    _, _, argmin, ranked = _kernel_frames(spark, rows, cents)
+    ref = _ref_nearest(rows, cents, 3)
+    assert ref[0] == [(None, 2), (None, 5), (None, 8)]
+    assert argmin() == {k: v[:1] for k, v in ref.items()}
+    assert ranked(2) == {k: v[:2] for k, v in ref.items()}
+
+
+def test_kernel_empty_centroid_frame_yields_nothing(spark):
+    """No centroids: assign_cells returns zero rows and no row gets a
+    probe, matching the pure-Python rule's empty lists."""
+    from calp_cva_tracking_pipeline_spark.operators.similarity import (
+        assign_cells,
+    )
+
+    rows = [(0, [0.0, 1.0]), (1, [2.0, 2.0])]
+    r, c, argmin, ranked = _kernel_frames(spark, rows, [])
+    assert _ref_nearest(rows, [], 2) == {0: [], 1: []}
+    assert argmin() == {} and ranked(2) == {}
+    assert assign_cells(r, c, "__id", "__v").count() == 0
+
+
+def test_kernel_n_beyond_centroid_count_returns_every_centroid(spark):
+    """n larger than the centroid count returns every centroid once per
+    row, in (d2, id) order."""
+    rng = random.Random(11)
+    cents = [(cid, [rng.uniform(-1, 1) for _ in range(4)]) for cid in range(5)]
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(4)]) for i in range(6)]
+    _, _, _, ranked = _kernel_frames(spark, rows, cents)
+    ref = _ref_nearest(rows, cents, 10)
+    assert all(len(v) == 5 for v in ref.values())
+    assert ranked(10) == ref
+
+
+def _probe_callers():
+    from calp_cva_tracking_pipeline_spark.operators import similarity as s
+
+    q = ("vec_id", "v")
+    return {
+        "ivf_topk": lambda df, c: s.ivf_topk(
+            df, df, *q, *q, nprobe=0, centroids=c
+        ),
+        "ivf_pq_topk": lambda df, c: s.ivf_pq_topk(
+            df, df, *q, *q, n_centroids=2, nprobe=0, m=2, k_codebook=2,
+            dim=2,
+        ),
+        "hard_negatives": lambda df, c: s.hard_negatives(
+            df, df, *q, "label", *q, "label", nprobe=0, centroids=c
+        ),
+        "ivf_range_search": lambda df, c: s.ivf_range_search(
+            df, df, *q, *q, threshold=0.5, nprobe=0, centroids=c
+        ),
+        "knn_graph": lambda df, c: s.knn_graph(
+            df, *q, k=2, nprobe=0, centroids=c
+        ),
+    }
+
+
+@pytest.mark.parametrize(
+    "caller",
+    ["ivf_topk", "ivf_pq_topk", "hard_negatives", "ivf_range_search",
+     "knn_graph"],
+)
+def test_probe_count_below_one_is_rejected(spark, caller):
+    """nprobe=0 is an error, not an empty result (a row_number <= 0 cut
+    kept no probe) and not a silent nprobe=1."""
+    df = spark.createDataFrame(
+        [(i, [float(i), 1.0], i % 2) for i in range(6)],
+        "vec_id long, v array<double>, label int",
+    )
+    cents = spark.createDataFrame(
+        [(0, [0.0, 1.0]), (1, [5.0, 1.0])],
+        "centroid_id long, __cent array<double>",
+    )
+    with pytest.raises(ValueError, match="probe count"):
+        _probe_callers()[caller](df, cents)
+
+
+def test_nearest_centroid_rule_lives_in_the_kernel():
+    """``sq_dist(`` meets a centroid or codebook frame only inside
+    ``_nearest_centroids``: linalg.py never spells it, and the other
+    similarity.py calls are the definition and the two PQ lookup-table
+    builds, which score every code and pick no argmin."""
+    from calp_cva_tracking_pipeline_spark.operators import linalg, similarity
+
+    for mod, want in (
+        (similarity, {"sq_dist": 1, "_nearest_centroids": 1, "pq_topk": 1,
+                      "ivf_pq_topk": 1}),
+        (linalg, {}),
+    ):
+        hits = {
+            name: n
+            for name, fn in inspect.getmembers(mod, inspect.isfunction)
+            if fn.__module__ == mod.__name__
+            and (n := inspect.getsource(fn).count("sq_dist("))
+        }
+        assert hits == want, (mod.__name__, hits)
+        src = Path(mod.__file__).read_text(encoding="utf-8")
+        assert src.count("sq_dist(") == sum(want.values()), mod.__name__

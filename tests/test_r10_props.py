@@ -1,6 +1,7 @@
 """Randomized / reference cross-checks for the round-10 wave (T152-T157):
 each operator against an independent brute-force reference on
 adversarial-ish synthetic inputs — the test_wave22_props.py discipline.
+The embedding_outliers cross-check lives in tests/test_ivf.py.
 """
 
 from __future__ import annotations
@@ -338,32 +339,6 @@ def test_time_split_rejects_unordered_boundaries(spark):
 # ---------------------------------------------------------------------------
 # T162/T163 wave-30 cross-checks
 # ---------------------------------------------------------------------------
-
-
-def test_embedding_outliers_ceil_rule_and_flag_counts(spark):
-    from calp_cva_tracking_pipeline_spark.operators.similarity import (
-        embedding_outliers,
-    )
-
-    rng = random.Random(7)
-    rows = [
-        (i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(200)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = embedding_outliers(
-        df, "vec_id", "embedding", n_centroids=4, flag_ppm=100000
-    ).collect()
-    assert sum(r.n for r in out) == 200
-    for r in out:
-        assert r.n_flagged == -(-100000 * r.n // 1000000)  # ceil rule
-        if r.n_flagged:
-            assert r.cut_d2 <= r.max_d2
-    # deterministic under repartition
-    out2 = embedding_outliers(
-        df.repartition(9), "vec_id", "embedding",
-        n_centroids=4, flag_ppm=100000,
-    ).collect()
-    assert sorted(map(tuple, out)) == sorted(map(tuple, out2))
 
 
 def test_token_budget_prefix_matches_brute_force(spark):

@@ -1,5 +1,6 @@
 """Tenth-wave operators: degree assortativity, Benford first-digit
-audit, per-label embedding centroids."""
+audit, per-label embedding centroids. The knn_graph pins live in
+tests/test_ivf.py."""
 
 from __future__ import annotations
 
@@ -237,104 +238,3 @@ def test_resample_interpolate_single_obs_key_yields_nothing_or_exact(spark):
         df, ("k",), "ts", "value", "event_id", "1 hour"
     ).collect()
     assert [(r.k, r.value, r.exact) for r in out] == [("on", 2.0, True)]
-
-
-# ---------------------------------------------------------------------------
-# knn_graph
-# ---------------------------------------------------------------------------
-
-
-def test_knn_graph_hand_computed_within_cell(spark):
-    from calp_cva_tracking_pipeline_spark.operators.similarity import (
-        knn_graph,
-    )
-
-    # 2 centroids (ids 0 and 1, lowest-id init); vectors near (1,0) land
-    # in cell 0, near (0,1) in cell 1. k=2 per node within its cell.
-    rows = [
-        (0, [1.0, 0.0]),
-        (1, [0.0, 1.0]),
-        (2, [0.9, 0.1]),
-        (3, [0.8, 0.2]),
-        (4, [0.1, 0.9]),
-    ]
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-    out = knn_graph(df, "vec_id", "embedding", k=2, n_centroids=2)
-    got = {
-        (r.vec_id, r.rank): r.neighbor_id for r in out.collect()
-    }
-    # cell 0 = {0, 2, 3}; cell 1 = {1, 4}
-    # cos(2,0)=0.993884 > cos(2,3)=0.990896 > cos(3,0)=0.970143
-    assert got[(0, 1)] == 2 and got[(0, 2)] == 3
-    assert got[(2, 1)] == 0 and got[(2, 2)] == 3
-    assert got[(3, 1)] == 2 and got[(3, 2)] == 0
-    assert got[(1, 1)] == 4 and got[(4, 1)] == 1
-    assert (1, 2) not in got  # only one same-cell neighbor exists
-
-
-def test_knn_graph_pre_collapse_and_layout_independent(spark):
-    from calp_cva_tracking_pipeline_spark.operators.similarity import (
-        knn_graph,
-    )
-
-    # 10 byte-identical vectors + 3 distinct: duplicates collapse to the
-    # min id, so no neighbor list is flooded with sim=1.0 self-copies
-    rows = [(i, [1.0, 0.0]) for i in range(10)] + [
-        (20, [0.9, 0.1]),
-        (21, [0.8, 0.2]),
-        (22, [0.7, 0.3]),
-    ]
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-    out = knn_graph(df, "vec_id", "embedding", k=3, n_centroids=1)
-    ids = {r.vec_id for r in out.collect()}
-    assert ids == {0, 20, 21, 22}  # representatives only
-    a = {(r.vec_id, r.rank): r.neighbor_id for r in out.collect()}
-    b = {
-        (r.vec_id, r.rank): r.neighbor_id
-        for r in knn_graph(
-            df.repartition(7), "vec_id", "embedding", k=3, n_centroids=1
-        ).collect()
-    }
-    assert a == b
-
-
-def test_knn_graph_nprobe2_recovers_boundary_neighbor(spark):
-    from calp_cva_tracking_pipeline_spark.operators.similarity import (
-        knn_graph,
-    )
-
-    # centroids = lowest-id vectors 0 ([1,0]) and 1 ([0,1]).
-    # node 5 = [0.72, 0.70]: primary cell 0 (barely), but its TRUE
-    # nearest neighbor is node 6 = [0.68, 0.74] in cell 1.
-    rows = [
-        (0, [1.0, 0.0]),
-        (1, [0.0, 1.0]),
-        (5, [0.72, 0.70]),
-        (6, [0.68, 0.74]),
-    ]
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-    got1 = {
-        (r.vec_id, r.rank): r.neighbor_id
-        for r in knn_graph(
-            df, "vec_id", "embedding", k=1, n_centroids=2, nprobe=1
-        ).collect()
-    }
-    got2 = {
-        (r.vec_id, r.rank): r.neighbor_id
-        for r in knn_graph(
-            df, "vec_id", "embedding", k=1, n_centroids=2, nprobe=2
-        ).collect()
-    }
-    # within-cell only: 5's best neighbor is limited to cell 0 → 0
-    assert got1[(5, 1)] == 0
-    # nprobe=2: 5 also meets cell 1 and finds its true neighbor 6
-    assert got2[(5, 1)] == 6
-    # layout independence of the multi-probe path
-    got2b = {
-        (r.vec_id, r.rank): r.neighbor_id
-        for r in knn_graph(
-            df.repartition(5), "vec_id", "embedding", k=1, n_centroids=2,
-            nprobe=2,
-        ).collect()
-    }
-    assert got2b == got2

@@ -1,5 +1,6 @@
 """Twelfth-wave operators: PMI collocations, per-group quota curation,
-fixed-edge histogram, RFM segmentation."""
+fixed-edge histogram, RFM segmentation. The Lloyd refinement pins live
+in tests/test_ivf.py."""
 
 from __future__ import annotations
 
@@ -224,71 +225,6 @@ def test_sliding_distinct_empty_days_estimate_zero(spark):
     assert len(out) == 11  # dense day grid spans the silence
     # day 8: window [day2, day8] holds nothing → linear-count 0
     assert out["2024-03-09"] == 0.0
-
-
-# ---------------------------------------------------------------------------
-# train_centroids iters>0 (oracle-exact Lloyd)
-# ---------------------------------------------------------------------------
-
-
-def test_lloyd_refinement_reduces_distortion_and_is_deterministic(spark):
-    import random
-
-    from calp_cva_tracking_pipeline_spark.operators.similarity import (
-        assign_cells,
-        sq_dist,
-        train_centroids,
-    )
-
-    rng = random.Random(3)
-    # two tight blobs; lowest-id init picks both seeds from blob A, so
-    # Lloyd must actually move a centroid to blob B to win
-    rows = [
-        (i, [rng.gauss(0, 0.05), rng.gauss(0, 0.05)]) for i in range(40)
-    ] + [
-        (100 + i, [rng.gauss(5, 0.05), rng.gauss(5, 0.05)])
-        for i in range(40)
-    ]
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-
-    def distortion(cent):
-        assigned = assign_cells(df, cent, "vec_id", "embedding")
-        joined = assigned.join(
-            cent, assigned["__cell"] == cent["centroid_id"]
-        )
-        return joined.agg(
-            F.sum(sq_dist(F.col("embedding"), F.col("__cent")))
-        ).collect()[0][0]
-
-    d0 = distortion(train_centroids(df, "vec_id", "embedding", 2, iters=0))
-    d2 = distortion(train_centroids(df, "vec_id", "embedding", 2, iters=2))
-    assert d2 < d0 * 0.5  # Lloyd must substantially improve the bad init
-
-    # bit-determinism across layouts (the decimal-mean discipline)
-    c_a = {
-        (r.centroid_id, tuple(r["__cent"]))
-        for r in train_centroids(df, "vec_id", "embedding", 2, iters=2).collect()
-    }
-    c_b = {
-        (r.centroid_id, tuple(r["__cent"]))
-        for r in train_centroids(
-            df.repartition(9), "vec_id", "embedding", 2, iters=2
-        ).collect()
-    }
-    assert c_a == c_b
-
-
-def test_lloyd_empty_cells_keep_previous_centroid(spark):
-    from calp_cva_tracking_pipeline_spark.operators.similarity import (
-        train_centroids,
-    )
-
-    # 4 centroids over 2 distinct points: two cells must go empty and
-    # keep their init vectors rather than vanishing
-    rows = [(0, [0.0, 0.0]), (1, [0.0, 0.0]), (2, [9.0, 9.0]), (3, [9.0, 9.0])]
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-    cent = train_centroids(df, "vec_id", "embedding", 4, iters=2).collect()
-    assert len(cent) == 4  # k never shrinks
 
 
 # ---------------------------------------------------------------------------

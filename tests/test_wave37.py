@@ -1,10 +1,9 @@
-"""Round-11 wave-37 operator pins: video-level near-dup, hard-negative
-mining, incremental IVF audit, exact-substring duplicate-run spans —
-hand-built inputs with independently-derived expectations."""
+"""Round-11 wave-37 operator pins: video-level near-dup and
+exact-substring duplicate-run spans — hand-built inputs with
+independently-derived expectations. The hard-negative mining and
+incremental IVF audit pins live in tests/test_ivf.py."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 
 def test_video_neardup_pairs_hand_videos(spark):
@@ -63,59 +62,6 @@ def test_video_neardup_single_decode_stage(spark):
     # self-join of the decode-derived frame); the per-video size join
     # reuses the distinct exchange
     assert plan.count("ArrowEvalPython") <= 1, plan.count("ArrowEvalPython")
-
-
-def test_hard_negatives_labels_and_order(spark):
-    from calp_cva_tracking_pipeline_spark.operators.similarity import (
-        hard_negatives,
-    )
-
-    # anchors at the axes; one same-label near-duplicate that MUST be
-    # skipped in favor of a farther different-label vector
-    rows = [
-        (0, [1.0, 0.0], 0),
-        (1, [0.99, 0.01], 0),   # same label as anchor 0 — never a negative
-        (2, [0.9, 0.1], 1),     # hardest valid negative for anchor 0
-        (3, [0.0, 1.0], 1),
-        (4, [-1.0, 0.0], 2),
-        (5, [0.5, 0.5], None),  # unlabeled: excluded by contract
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, v array<double>, label int")
-    q = df.filter(F.col("vec_id") == 0)
-    out = hard_negatives(
-        df, q, "vec_id", "v", "label", "vec_id", "v", "label",
-        n_centroids=1, nprobe=1, k=2,
-    ).collect()
-    assert [r.negative_id for r in out] == [2, 3]
-    assert all(r.negative_label != r.query_label for r in out)
-    assert out[0].cosine > out[1].cosine
-
-
-def test_ivf_incremental_audit_invariants(spark):
-    from calp_cva_tracking_pipeline_spark.operators.similarity import (
-        ivf_incremental_audit,
-    )
-
-    base = spark.createDataFrame(
-        [(i, [float(i % 4), float((i * 7) % 5)]) for i in range(40)],
-        "vec_id long, v array<double>",
-    )
-    inc = spark.createDataFrame(
-        [(100 + i, [float(i % 4) + 0.25, 0.0]) for i in range(12)],
-        "vec_id long, v array<double>",
-    )
-    out = ivf_incremental_audit(base, inc, "vec_id", "v", n_centroids=4)
-    rows = out.collect()
-    assert len(rows) == 4  # every centroid reports, hot or dead
-    assert sum(r.n_base for r in rows) == 40
-    assert sum(r.n_new for r in rows) == 12
-    for r in rows:
-        if r.n_base > 0:
-            assert r.growth_ppm == 1_000_000 * r.n_new // r.n_base
-        else:
-            assert r.growth_ppm is None
-        if r.n_new == 0:
-            assert r.mean_d2_new is None and r.d2_drift is None
 
 
 def test_duplicate_run_spans_hand_docs(spark):

@@ -1,6 +1,7 @@
 """Round-14 wave properties: the gate sweep is monotone, the script
 census conserves docs, and the MAD profile agrees with a python
-reference. The weighted HITS pins live in tests/test_graph.py."""
+reference. The weighted HITS pins live in tests/test_graph.py, the
+range-search/top-k consistency pin in tests/test_ivf.py."""
 
 from __future__ import annotations
 
@@ -124,48 +125,6 @@ def test_template_census_groups_number_swapped_docs(spark):
     assert len(rows) == 1
     r = rows[0]
     assert r.n_docs == 2 and r.n_sources == 2 and r.exemplar_id == 1
-
-
-def test_range_search_contains_thresholded_topk(spark, sf_dir):
-    """Consistency across serving modes: with the same index/operating
-    point, every ivf_topk hit at cosine >= tau must appear in the range
-    result (range is the thresholded closure of the ranked view when
-    k <= max_results), and no range hit may fall below tau."""
-    from pyspark.sql import functions as F
-
-    from calp_cva_tracking_pipeline_spark.catalog.common import T
-    from calp_cva_tracking_pipeline_spark.catalog.scale import (
-        IVF_CENTROIDS,
-        IVF_NPROBE,
-        N_QUERIES,
-        RANGE_TAU,
-        TOP_K,
-    )
-    from calp_cva_tracking_pipeline_spark.operators.similarity import (
-        ivf_range_search,
-        ivf_topk,
-    )
-
-    e = T(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < N_QUERIES)
-    topk = ivf_topk(
-        e, q, "vec_id", "embedding", "vec_id", "embedding",
-        n_centroids=IVF_CENTROIDS, nprobe=IVF_NPROBE, k=TOP_K,
-    ).collect()
-    rng = ivf_range_search(
-        e, q, "vec_id", "embedding", "vec_id", "embedding",
-        threshold=RANGE_TAU,
-        n_centroids=IVF_CENTROIDS, nprobe=IVF_NPROBE, max_results=100,
-    ).collect()
-    range_pairs = {(r.query_id, r.neighbor_id) for r in rng}
-    assert all(r.cosine >= RANGE_TAU for r in rng)
-    missing = [
-        (r.query_id, r.neighbor_id)
-        for r in topk
-        if r.cosine >= RANGE_TAU
-        and (r.query_id, r.neighbor_id) not in range_pairs
-    ]
-    assert not missing, missing
 
 
 def test_did_audit_nets_out_common_trends(spark):
