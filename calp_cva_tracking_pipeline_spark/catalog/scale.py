@@ -323,9 +323,15 @@ WHERE rank <= {TOP_K}
 IVF_CENTROIDS = 16
 IVF_NPROBE = 4
 
-_IVF_D2 = (
-    "ROUND(list_sum(list_transform(list_zip({a}, {b}),"
-    " x -> (x[1] - x[2]) * (x[1] - x[2]))), 6)"
+# similarity.sq_dist rounded to 6 dp, the one d² spelling of the oracles:
+# the squared terms fold left from 0.0 in index order, as Spark's
+# aggregate(zip_with(...)) does. A NULL element or a length mismatch (which
+# list_zip pads with NULL) makes the whole distance NULL on both engines;
+# list_sum would skip those terms instead.
+_D2 = (
+    "ROUND(list_reduce(list_prepend(0.0::DOUBLE, list_transform("
+    "list_zip({a}, {b}), x -> (x[1] - x[2]) * (x[1] - x[2]))),"
+    " (s, x) -> s + x), 6)"
 )
 
 
@@ -352,7 +358,7 @@ assign AS (
   SELECT vec_id, centroid_id AS cell FROM (
     SELECT a.vec_id, cent.centroid_id,
            ROW_NUMBER() OVER (PARTITION BY a.vec_id
-             ORDER BY {_IVF_D2.format(a='a.v', b='cent.cv')}, cent.centroid_id
+             ORDER BY {_D2.format(a='a.v', b='cent.cv')}, cent.centroid_id
            ) AS rn
     FROM c a CROSS JOIN cent) t
   WHERE rn = 1),
@@ -360,7 +366,7 @@ probes AS (
   SELECT query_id, centroid_id AS cell FROM (
     SELECT q.vec_id AS query_id, cent.centroid_id,
            ROW_NUMBER() OVER (PARTITION BY q.vec_id
-             ORDER BY {_IVF_D2.format(a='q.v', b='cent.cv')}, cent.centroid_id
+             ORDER BY {_D2.format(a='q.v', b='cent.cv')}, cent.centroid_id
            ) AS pr
     FROM (SELECT * FROM c WHERE vec_id < {N_QUERIES}) q CROSS JOIN cent) t
   WHERE pr <= {IVF_NPROBE}),
@@ -481,7 +487,7 @@ assign AS (
   SELECT vec_id, centroid_id AS cell FROM (
     SELECT a.vec_id, cent.centroid_id,
            ROW_NUMBER() OVER (PARTITION BY a.vec_id
-             ORDER BY {_IVF_D2.format(a='a.v', b='cent.cv')}, cent.centroid_id
+             ORDER BY {_D2.format(a='a.v', b='cent.cv')}, cent.centroid_id
            ) AS rn
     FROM c a CROSS JOIN cent) t
   WHERE rn = 1),
@@ -489,7 +495,7 @@ probes AS (
   SELECT query_id, centroid_id AS cell FROM (
     SELECT q.vec_id AS query_id, cent.centroid_id,
            ROW_NUMBER() OVER (PARTITION BY q.vec_id
-             ORDER BY {_IVF_D2.format(a='q.v', b='cent.cv')}, cent.centroid_id
+             ORDER BY {_D2.format(a='q.v', b='cent.cv')}, cent.centroid_id
            ) AS pr
     FROM (SELECT * FROM c WHERE vec_id < {N_QUERIES}) q CROSS JOIN cent) t
   WHERE pr <= {IVF_NPROBE}),
@@ -1890,13 +1896,6 @@ def ann_pq_topk(spark, sf_dir):
     )
 
 
-def _pq_d2(a: str, b: str) -> str:
-    return (
-        f"ROUND(list_sum(list_transform(list_zip({a}, {b}),"
-        f" x -> (x[1] - x[2]) * (x[1] - x[2]))), 6)"
-    )
-
-
 ANN_PQ_SQL = f"""
 WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 cb0 AS (SELECT CAST(vec_id AS BIGINT) AS centroid_id, v
@@ -1914,12 +1913,12 @@ codes AS (
   SELECT vec_id, m, centroid_id AS code FROM (
     SELECT sv.vec_id, sv.m, cb.centroid_id,
            ROW_NUMBER() OVER (PARTITION BY sv.vec_id, sv.m
-             ORDER BY {_pq_d2('sv.sub', 'cb.cbv')}, cb.centroid_id) AS rn
+             ORDER BY {_D2.format(a='sv.sub', b='cb.cbv')}, cb.centroid_id) AS rn
     FROM sv JOIN cb ON cb.m = sv.m) t
   WHERE rn = 1),
 lut AS (
   SELECT q.vec_id AS query_id, q.m, cb.centroid_id AS code,
-         {_pq_d2('q.sub', 'cb.cbv')} AS d2m
+         {_D2.format(a='q.sub', b='cb.cbv')} AS d2m
   FROM (SELECT * FROM sv WHERE vec_id < {N_QUERIES}) q
   JOIN cb ON cb.m = q.m),
 scored AS (
@@ -1977,7 +1976,7 @@ codes AS (
   SELECT vec_id, m, centroid_id AS code FROM (
     SELECT sv.vec_id, sv.m, cb.centroid_id,
            ROW_NUMBER() OVER (PARTITION BY sv.vec_id, sv.m
-             ORDER BY {_pq_d2('sv.sub', 'cb.cbv')}, cb.centroid_id) AS rn
+             ORDER BY {_D2.format(a='sv.sub', b='cb.cbv')}, cb.centroid_id) AS rn
     FROM sv JOIN cb ON cb.m = sv.m) t
   WHERE rn = 1),
 cent AS (
@@ -1987,7 +1986,7 @@ assign AS (
   SELECT vec_id, centroid_id AS cell FROM (
     SELECT a.vec_id, cent.centroid_id,
            ROW_NUMBER() OVER (PARTITION BY a.vec_id
-             ORDER BY {_IVF_D2.format(a='a.v', b='cent.cv')}, cent.centroid_id
+             ORDER BY {_D2.format(a='a.v', b='cent.cv')}, cent.centroid_id
            ) AS rn
     FROM c a CROSS JOIN cent) t
   WHERE rn = 1),
@@ -1995,13 +1994,13 @@ probes AS (
   SELECT query_id, centroid_id AS cell FROM (
     SELECT q.vec_id AS query_id, cent.centroid_id,
            ROW_NUMBER() OVER (PARTITION BY q.vec_id
-             ORDER BY {_IVF_D2.format(a='q.v', b='cent.cv')}, cent.centroid_id
+             ORDER BY {_D2.format(a='q.v', b='cent.cv')}, cent.centroid_id
            ) AS pr
     FROM (SELECT * FROM c WHERE vec_id < {N_QUERIES}) q CROSS JOIN cent) t
   WHERE pr <= {IVFPQ_NPROBE}),
 lut AS (
   SELECT q.vec_id AS query_id, q.m, cb.centroid_id AS code,
-         {_pq_d2('q.sub', 'cb.cbv')} AS d2m
+         {_D2.format(a='q.sub', b='cb.cbv')} AS d2m
   FROM (SELECT * FROM sv WHERE vec_id < {N_QUERIES}) q
   JOIN cb ON cb.m = q.m),
 scored AS (
@@ -2285,12 +2284,12 @@ codes AS (
   SELECT vec_id, m, centroid_id AS code FROM (
     SELECT sv.vec_id, sv.m, cb.centroid_id,
            ROW_NUMBER() OVER (PARTITION BY sv.vec_id, sv.m
-             ORDER BY {_pq_d2('sv.sub', 'cb.cbv')}, cb.centroid_id) AS rn
+             ORDER BY {_D2.format(a='sv.sub', b='cb.cbv')}, cb.centroid_id) AS rn
     FROM sv JOIN cb ON cb.m = sv.m) t
   WHERE rn = 1),
 lut AS (
   SELECT q.vec_id AS query_id, q.m, cb.centroid_id AS code,
-         {_pq_d2('q.sub', 'cb.cbv')} AS d2m
+         {_D2.format(a='q.sub', b='cb.cbv')} AS d2m
   FROM (SELECT * FROM sv WHERE vec_id < {N_QUERIES}) q
   JOIN cb ON cb.m = q.m),
 adc AS (
@@ -2869,7 +2868,7 @@ assign AS (
   SELECT vec_id, centroid_id AS cell, v FROM (
     SELECT a.vec_id, cent.centroid_id, a.v,
            ROW_NUMBER() OVER (PARTITION BY a.vec_id
-             ORDER BY {_IVF_D2.format(a='a.v', b='cent.cv')}, cent.centroid_id
+             ORDER BY {_D2.format(a='a.v', b='cent.cv')}, cent.centroid_id
            ) AS rn
     FROM u a CROSS JOIN cent) t
   WHERE rn = 1),
@@ -2931,7 +2930,7 @@ assign AS (
   SELECT vec_id, centroid_id AS cell, v FROM (
     SELECT a.vec_id, cent.centroid_id, a.v,
            ROW_NUMBER() OVER (PARTITION BY a.vec_id
-             ORDER BY {_IVF_D2.format(a='a.v', b='cent.cv')}, cent.centroid_id
+             ORDER BY {_D2.format(a='a.v', b='cent.cv')}, cent.centroid_id
            ) AS rn
     FROM u a CROSS JOIN cent) t
   WHERE rn <= {KNN_NPROBE}),
@@ -3245,7 +3244,7 @@ def _emb_kmeans_sql() -> str:
   SELECT vec_id, cid AS cell, v FROM (
     SELECT x.vec_id, {cent}.cid, x.v,
            ROW_NUMBER() OVER (PARTITION BY x.vec_id
-             ORDER BY {_IVF_D2.format(a='x.v', b=f'{cent}.cv')}, {cent}.cid
+             ORDER BY {_D2.format(a='x.v', b=f'{cent}.cv')}, {cent}.cid
            ) AS rn
     FROM c x CROSS JOIN {cent}) t
   WHERE rn = 1)"""
@@ -6796,9 +6795,9 @@ cent AS (
 assign AS (
   SELECT vec_id, centroid_id AS cell, d2 FROM (
     SELECT a.vec_id, cent.centroid_id,
-           ROUND({_IVF_D2.format(a='a.v', b='cent.cv')}, 6) AS d2,
+           ROUND({_D2.format(a='a.v', b='cent.cv')}, 6) AS d2,
            ROW_NUMBER() OVER (PARTITION BY a.vec_id
-             ORDER BY {_IVF_D2.format(a='a.v', b='cent.cv')},
+             ORDER BY {_D2.format(a='a.v', b='cent.cv')},
                       cent.centroid_id) AS rn
     FROM c a CROSS JOIN cent) t
   WHERE rn = 1),
@@ -8514,11 +8513,6 @@ def emb_confusion(spark, sf_dir):
     )
 
 
-_CONF_D2 = (
-    "ROUND(list_sum(list_transform(list_zip(cv, carr),"
-    " x -> (x[1] - x[2]) * (x[1] - x[2]))), 6)"
-)
-
 EMB_CONF_SQL = f"""
 WITH v AS (
   SELECT label, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings
@@ -8538,7 +8532,7 @@ rows_ AS (
   SELECT vec_id AS id, label, CAST(embedding AS DOUBLE[]) AS cv
   FROM embeddings WHERE embedding IS NOT NULL AND label IS NOT NULL),
 scored AS (
-  SELECT id, label, clabel, {_CONF_D2} AS d
+  SELECT id, label, clabel, {_D2.format(a='cv', b='carr')} AS d
   FROM rows_ CROSS JOIN carrs),
 m AS (SELECT id, label, MIN(d) AS md FROM scored GROUP BY 1, 2),
 best AS (
@@ -8661,7 +8655,7 @@ def _cluster_eval_sql() -> str:
   SELECT vec_id, cid AS cell FROM (
     SELECT x.vec_id, {cent}.cid,
            ROW_NUMBER() OVER (PARTITION BY x.vec_id
-             ORDER BY {_IVF_D2.format(a='x.v', b=f'{cent}.cv')}, {cent}.cid
+             ORDER BY {_D2.format(a='x.v', b=f'{cent}.cv')}, {cent}.cid
            ) AS rn
     FROM c x CROSS JOIN {cent}) t
   WHERE rn = 1)"""
@@ -8672,7 +8666,7 @@ def _cluster_eval_sql() -> str:
   SELECT vec_id, cid AS cell, v FROM (
     SELECT x.vec_id, {cent}.cid, x.v,
            ROW_NUMBER() OVER (PARTITION BY x.vec_id
-             ORDER BY {_IVF_D2.format(a='x.v', b=f'{cent}.cv')}, {cent}.cid
+             ORDER BY {_D2.format(a='x.v', b=f'{cent}.cv')}, {cent}.cid
            ) AS rn
     FROM c x CROSS JOIN {cent}) t
   WHERE rn = 1)"""
@@ -9919,7 +9913,7 @@ assign AS (
   SELECT vec_id, label, centroid_id AS cell FROM (
     SELECT a.vec_id, a.label, cent.centroid_id,
            ROW_NUMBER() OVER (PARTITION BY a.vec_id
-             ORDER BY {_IVF_D2.format(a='a.v', b='cent.cv')}, cent.centroid_id
+             ORDER BY {_D2.format(a='a.v', b='cent.cv')}, cent.centroid_id
            ) AS rn
     FROM c a CROSS JOIN cent) t
   WHERE rn = 1 AND label IS NOT NULL),
@@ -9928,7 +9922,7 @@ probes AS (
     SELECT q.vec_id AS query_id, q.label AS query_label,
            cent.centroid_id,
            ROW_NUMBER() OVER (PARTITION BY q.vec_id
-             ORDER BY {_IVF_D2.format(a='q.v', b='cent.cv')}, cent.centroid_id
+             ORDER BY {_D2.format(a='q.v', b='cent.cv')}, cent.centroid_id
            ) AS pr
     FROM (SELECT * FROM c
           WHERE vec_id < {N_QUERIES} AND label IS NOT NULL) q
@@ -9986,17 +9980,17 @@ cent AS (
 ab AS (
   SELECT vec_id, centroid_id AS cell, d2 FROM (
     SELECT a.vec_id, cent.centroid_id,
-           {_IVF_D2.format(a='a.v', b='cent.cv')} AS d2,
+           {_D2.format(a='a.v', b='cent.cv')} AS d2,
            ROW_NUMBER() OVER (PARTITION BY a.vec_id
-             ORDER BY {_IVF_D2.format(a='a.v', b='cent.cv')}, cent.centroid_id
+             ORDER BY {_D2.format(a='a.v', b='cent.cv')}, cent.centroid_id
            ) AS rn
     FROM cb a CROSS JOIN cent) t WHERE rn = 1),
 ai AS (
   SELECT vec_id, centroid_id AS cell, d2 FROM (
     SELECT a.vec_id, cent.centroid_id,
-           {_IVF_D2.format(a='a.v', b='cent.cv')} AS d2,
+           {_D2.format(a='a.v', b='cent.cv')} AS d2,
            ROW_NUMBER() OVER (PARTITION BY a.vec_id
-             ORDER BY {_IVF_D2.format(a='a.v', b='cent.cv')}, cent.centroid_id
+             ORDER BY {_D2.format(a='a.v', b='cent.cv')}, cent.centroid_id
            ) AS rn
     FROM ci a CROSS JOIN cent) t WHERE rn = 1),
 sb AS (SELECT cell, CAST(COUNT(*) AS BIGINT) AS n_base,
@@ -10962,8 +10956,7 @@ SELECT COALESCE(co.label, cn.label) AS label,
        CAST(COALESCE(n_old, 0) AS BIGINT) AS n_old,
        CAST(COALESCE(n_new, 0) AS BIGINT) AS n_new,
        CASE WHEN co.label IS NOT NULL AND cn.label IS NOT NULL THEN
-         ROUND(list_sum(list_transform(list_zip(co.c, cn.c),
-               x -> (x[1] - x[2]) * (x[1] - x[2]))), 6) END AS d2_drift
+         {_D2.format(a='co.c', b='cn.c')} END AS d2_drift
 FROM co FULL OUTER JOIN cn ON co.label = cn.label
 ORDER BY label
 """
@@ -12114,7 +12107,7 @@ assign AS (
   SELECT vec_id, centroid_id AS cell FROM (
     SELECT a.vec_id, cent.centroid_id,
            ROW_NUMBER() OVER (PARTITION BY a.vec_id
-             ORDER BY {_IVF_D2.format(a='a.v', b='cent.cv')}, cent.centroid_id
+             ORDER BY {_D2.format(a='a.v', b='cent.cv')}, cent.centroid_id
            ) AS rn
     FROM c a CROSS JOIN cent) t
   WHERE rn = 1),
@@ -12122,7 +12115,7 @@ probes AS (
   SELECT query_id, cell, pr FROM (
     SELECT q.vec_id AS query_id, cent.centroid_id AS cell,
            ROW_NUMBER() OVER (PARTITION BY q.vec_id
-             ORDER BY {_IVF_D2.format(a='q.v', b='cent.cv')}, cent.centroid_id
+             ORDER BY {_D2.format(a='q.v', b='cent.cv')}, cent.centroid_id
            ) AS pr
     FROM (SELECT * FROM c WHERE vec_id >= {IVF_CENTROIDS}
           AND vec_id < {IVF_CENTROIDS + FRONTIER_QUERIES}) q
@@ -12855,7 +12848,7 @@ assign AS (
   SELECT vec_id, label, centroid_id AS cell FROM (
     SELECT a.vec_id, a.label, cent.centroid_id,
            ROW_NUMBER() OVER (PARTITION BY a.vec_id
-             ORDER BY {_IVF_D2.format(a='a.v', b='cent.cv')}, cent.centroid_id
+             ORDER BY {_D2.format(a='a.v', b='cent.cv')}, cent.centroid_id
            ) AS rn
     FROM c a CROSS JOIN cent) t
   WHERE rn = 1),
@@ -12863,7 +12856,7 @@ probes AS (
   SELECT query_id, centroid_id AS cell FROM (
     SELECT q.vec_id AS query_id, cent.centroid_id,
            ROW_NUMBER() OVER (PARTITION BY q.vec_id
-             ORDER BY {_IVF_D2.format(a='q.v', b='cent.cv')}, cent.centroid_id
+             ORDER BY {_D2.format(a='q.v', b='cent.cv')}, cent.centroid_id
            ) AS pr
     FROM (SELECT * FROM c WHERE vec_id < {N_QUERIES}) q CROSS JOIN cent) t
   WHERE pr <= {IVF_NPROBE}),
@@ -13144,7 +13137,7 @@ assign AS (
   SELECT vec_id, centroid_id AS cell FROM (
     SELECT a.vec_id, cent.centroid_id,
            ROW_NUMBER() OVER (PARTITION BY a.vec_id
-             ORDER BY {_IVF_D2.format(a='a.v', b='cent.cv')}, cent.centroid_id
+             ORDER BY {_D2.format(a='a.v', b='cent.cv')}, cent.centroid_id
            ) AS rn
     FROM c a CROSS JOIN cent) t
   WHERE rn = 1),
@@ -14610,7 +14603,7 @@ def dd_semdedup_incr(spark, sf_dir):
 
 
 def _dd_semdedup_incr_sql() -> str:
-    d2 = _IVF_D2.format(a="x.v", b="cent.cv")
+    d2 = _D2.format(a="x.v", b="cent.cv")
     cos = (
         "ROUND(list_dot_product({a}, {b}) / "
         "(sqrt(list_dot_product({a}, {a}))"

@@ -268,23 +268,16 @@ def apply_patch_map(
     patches: list[tuple[str, str]],
     out_col: str | None = None,
 ) -> DataFrame:
-    """Override values via a small (from, to) patch table: broadcast left
-    join + coalesce(patched, original). The patch table is human-curated and
-    tiny, so this is a map-side hash probe — the 100 TB side never moves."""
-    out_col = out_col or key_col
-    spark = df.sparkSession
-    patch_df = spark.createDataFrame(
-        patches, schema="__patch_from string, __patch_to string"
+    """Override values via a small (from, to) patch list: a literal map
+    lookup, ``coalesce(patch[key], key)``. The list is human-curated and
+    tiny, so it travels inside the expression — no join, the 100 TB side
+    never moves, and a repeated ``from`` key maps once, to its last
+    target (``dict`` order), never multiplying the row."""
+    hit = F.try_element_at(
+        F.create_map(*(F.lit(s) for kv in dict(patches).items() for s in kv)),
+        F.col(key_col),
     )
-    return (
-        df.join(
-            F.broadcast(patch_df),
-            F.col(key_col) == F.col("__patch_from"),
-            "left",
-        )
-        .withColumn(out_col, F.coalesce("__patch_to", key_col))
-        .drop("__patch_from", "__patch_to")
-    )
+    return df.withColumn(out_col or key_col, F.coalesce(hit, F.col(key_col)))
 
 
 def multi_destination_collapse(

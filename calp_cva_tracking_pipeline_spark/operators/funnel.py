@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from calp_cva_tracking_pipeline_spark.operators.temporal import _span_us
 from calp_cva_tracking_pipeline_spark.session import cut
 
 
@@ -182,15 +183,7 @@ def touch_attribution(
     replicates every touch into every covering window — O(rows ×
     windows) — where this stays O(rows log rows).
     """
-    amount, unit = window_spec.strip().split()
-    unit_s = {
-        "second": 1, "seconds": 1,
-        "minute": 60, "minutes": 60,
-        "hour": 3600, "hours": 3600,
-        "day": 86400, "days": 86400,
-        "week": 604800, "weeks": 604800,
-    }[unit.lower()]
-    span_us = int(amount) * unit_s * 1_000_000
+    span_us = _span_us(window_spec)
 
     touch = F.when(
         F.col(type_col).isin(*touch_types),

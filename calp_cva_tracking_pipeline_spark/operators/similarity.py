@@ -27,6 +27,17 @@ rounded to 6 dp against a broadcast centroid frame, ordered by (d²,
 centroid id) so ties break on the lower id. The one exception is
 ``train_centroids``' inline-literal Lloyd branch, which evaluates the
 same order over driver-resident literals, not a frame.
+
+Every neighbour search is a candidate generator plus ONE shared tail.
+``_cosine_topk`` frames each side once (id, vector, norm folded per row),
+scores cosine = round(dot / (‖q‖·‖c‖), 6) and cuts through ``_rank_cut``,
+the per-query ``row_number`` ordered by (score, neighbour id) that the ADC
+rankers (``_adc_topk``: ``pq_topk``, ``ivf_pq_topk``) share ascending on
+distance. The generators are the broadcast cross pair (``brute_force_topk``),
+LSH buckets, the PQ shortlist, ``knn_graph``'s shared-cell self-join and
+the IVF probe join, which ``_ivf_search`` owns for ``ivf_topk``,
+``ivf_range_search`` and ``hard_negatives``. ``graph_search_frontier``
+spells the same order in SQL over its beam arrays.
 """
 
 from __future__ import annotations
@@ -80,6 +91,117 @@ def norm(a: Column) -> Column:
     )
 
 
+def _rank_cut(
+    scored: DataFrame,
+    k: int,
+    score: str,
+    nid: str = "neighbor_id",
+    carry: tuple[str, ...] = (),
+    asc: bool = False,
+) -> DataFrame:
+    """The per-query cut of every neighbour search: ``row_number`` per
+    ``query_id`` ordered by (``score``, ``nid``) — cosine descending, ADC
+    distance ascending (``asc``), ties on the lower neighbour id, so ranks
+    are stable under float jitter — kept to rank ≤ ``k``.
+    → (query_id, nid, carry…, score, rank)."""
+    by = F.col(score).asc() if asc else F.col(score).desc()
+    w = Window.partitionBy("query_id").orderBy(by, F.col(nid))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", nid, *carry, score, "rank")
+    )
+
+
+def _cosine_topk(
+    q: DataFrame,
+    c: DataFrame | None,
+    on: str | list[str] | None,
+    k: int,
+    pred: Column | None = None,
+    floor: float | None = None,
+    carry: tuple[str, ...] = (),
+    dedup: bool = False,
+    nid: str = "neighbor_id",
+) -> DataFrame:
+    """Score-and-rank tail of every cosine neighbour search: the
+    operators differ only in how they generate candidate pairs.
+
+    ``q`` holds (query_id, __qvec, …) and ``c`` (``nid``, __cvec, …).
+    Each side's norm folds ONCE per row here, never once per pair:
+    higher-order folds run interpreted, so per-pair work would be 3 folds
+    where 1 suffices. Bit-identical either way — the sqrt folds produce
+    the same doubles and cosine = dot/(‖q‖·‖c‖) keeps its multiplication
+    order. Candidates are ``c`` joined to the BROADCAST ``q`` on ``on``
+    (join keys, or None for every pair), kept where ``pred`` holds (by
+    default: not the query itself).
+
+    ``c=None`` is the all-pairs mode (``knn_graph``): ``q`` is the corpus
+    and both join sides. It is framed and cut once — a self-join of a
+    derived frame otherwise plans its upstream twice with no exchange
+    reuse — joined to itself on the ``on`` key keeping id-ordered pairs
+    (one dot per undirected pair; dot(a,b) ≡ dot(b,a): same index order,
+    commutative multiplies), and each pair then ranks from both ends.
+
+    Score: cosine = round(dot/(‖q‖·‖c‖), 6). ``dedup`` keeps one row per
+    (query, neighbour) — a pair meeting in several tables or cells scores
+    the same each time. ``floor`` keeps cosine ≥ floor. Then
+    ``_rank_cut`` → (query_id, nid, carry…, cosine, rank ≤ k).
+    """
+    q = q.withColumn("__qnrm", norm(F.col("__qvec")))
+    if c is None:
+        s = cut(q)
+        l, r = s.alias("l"), s.alias("r")
+        pairs = l.join(
+            r,
+            (F.col(f"l.{on}") == F.col(f"r.{on}"))
+            & (F.col("l.query_id") < F.col("r.query_id")),
+        ).select(
+            F.col("l.query_id").alias("query_id"),
+            F.col("r.query_id").alias(nid),
+            "l.__qvec",
+            "l.__qnrm",
+            F.col("r.__qvec").alias("__cvec"),
+            F.col("r.__qnrm").alias("__cnrm"),
+        )
+    else:
+        pairs = (
+            c.withColumn("__cnrm", norm(F.col("__cvec")))
+            .join(F.broadcast(q), on)
+            .filter(F.col("query_id") != F.col(nid) if pred is None else pred)
+        )
+    scored = pairs.select(
+        "query_id",
+        nid,
+        *carry,
+        F.round(
+            dot(F.col("__qvec"), F.col("__cvec"))
+            / (F.col("__qnrm") * F.col("__cnrm")),
+            6,
+        ).alias("cosine"),
+    )
+    if dedup:
+        scored = scored.groupBy("query_id", nid).agg(
+            F.max("cosine").alias("cosine")
+        )
+    if c is None:
+        scored = scored.select(
+            F.explode(
+                F.array(
+                    F.struct("query_id", nid, "cosine"),
+                    F.struct(
+                        F.col(nid).alias("query_id"),
+                        F.col("query_id").alias(nid),
+                        "cosine",
+                    ),
+                )
+            ).alias("__p")
+        ).select("__p.*")
+    if floor is not None:
+        scored = scored.filter(F.col("cosine") >= F.lit(float(floor)))
+    return _rank_cut(scored, k, "cosine", nid, carry)
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -96,37 +218,16 @@ def brute_force_topk(
     is (rounded cosine desc, id) so ranks are stable under float jitter.
     Returns (query_id, neighbor_id, cosine, rank).
     """
-    # norms fold ONCE per query row / corpus row instead of once per
-    # pair (the r12 knn_graph rewrite applied to the brute kernel —
-    # higher-order folds run interpreted, so per-pair work was 3 folds
-    # where 1 suffices). Bit-identical: cosine = dot/(nq*nc) is the
-    # same IEEE expression — the sqrt folds produce identical doubles
-    # and the multiplication order is unchanged.
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_vec_col).alias("__qvec"),
-    ).withColumn("__qnrm", norm(F.col("__qvec")))
-    c = spread_small_input(corpus).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec")
-    ).withColumn("__cnrm", norm(F.col("__cvec")))
-    scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            F.round(
-                dot(F.col("__qvec"), F.col("__cvec"))
-                / (F.col("__qnrm") * F.col("__cnrm")),
-                6,
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    return _cosine_topk(
+        queries.select(
+            F.col(query_id_col).alias("query_id"),
+            F.col(query_vec_col).alias("__qvec"),
+        ),
+        spread_small_input(corpus).select(
+            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec")
+        ),
+        None,
+        k,
     )
 
 
@@ -210,8 +311,6 @@ def lsh_topk(
             ]
         )
 
-    # norms fold once per (row, table) entry instead of once per pair
-    # (the r12 knn_graph pattern; bit-identical — see brute_force_topk)
     ct = (
         spread_small_input(corpus)
         .select(
@@ -225,7 +324,6 @@ def lsh_topk(
             F.col("__tb.tbl").alias("__tbl"),
             F.col("__tb.bkt").alias("__bkt"),
         )
-        .withColumn("__cnrm", norm(F.col("__cvec")))
     )
     # multiprobe: the query side additionally probes every bucket whose
     # sign pattern differs in <= n_probe_flips bits (XOR masks); corpus
@@ -266,32 +364,9 @@ def lsh_topk(
             F.col("__tb.tbl").alias("__tbl"),
             F.col("__tb.bkt").alias("__bkt"),
         )
-        .withColumn("__qnrm", norm(F.col("__qvec")))
     )
-    scored = (
-        ct.join(F.broadcast(qt), ["__tbl", "__bkt"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("__qvec"), F.col("__cvec"))
-                / (F.col("__qnrm") * F.col("__cnrm")),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    dedup = scored.groupBy("query_id", "neighbor_id").agg(
-        F.max("cosine").alias("cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        dedup.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    # a pair colliding in several tables scores identically: dedup
+    return _cosine_topk(qt, ct, ["__tbl", "__bkt"], k, dedup=True)
 
 
 def sq_dist(a: Column, b: Column) -> Column:
@@ -632,6 +707,93 @@ def load_ivf_index(spark, table: str) -> tuple[DataFrame, DataFrame]:
     return spark.table(table), spark.table(f"{table}_centroids")
 
 
+def _ivf_index(
+    name: str,
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    n_centroids: int | None,
+    centroids: DataFrame | None,
+    cells: DataFrame | None,
+) -> tuple[DataFrame, DataFrame]:
+    """(centroids, cells) of an IVF operator: the prebuilt index when one
+    is passed, else trained and assigned from ``corpus``. A prebuilt
+    ``cells`` (corpus columns + ``__cell``, e.g. from load_ivf_index)
+    needs the ``centroids`` it was built with; ``name`` is the public
+    operator the error names."""
+    if cells is not None and centroids is None:
+        raise ValueError(
+            f"{name}: a prebuilt `cells` index requires the `centroids` "
+            "it was built with (load_ivf_index returns both)"
+        )
+    cent = centroids if centroids is not None else train_centroids(
+        corpus, id_col, vec_col, n_centroids
+    )
+    if cells is None:
+        cells = assign_cells(corpus, cent, id_col, vec_col)
+    return cent, cells
+
+
+def _ivf_search(
+    name: str,
+    corpus: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+    query_vec_col: str,
+    n_centroids: int | None,
+    nprobe: int,
+    k: int,
+    centroids: DataFrame | None,
+    cells: DataFrame | None,
+    pred: Column | None = None,
+    floor: float | None = None,
+    qcols: dict[str, str] | None = None,
+    ccols: dict[str, str] | None = None,
+    nid: str = "neighbor_id",
+) -> DataFrame:
+    """The IVF search shared by ``ivf_topk``, ``ivf_range_search`` and
+    ``hard_negatives``: resolve the index (``_ivf_index``), rank each
+    query's ``nprobe`` nearest cells (``_nearest_centroids``), and
+    broadcast those probe lists into the cell join, so the corpus never
+    shuffles at search time. ``_cosine_topk`` scores and cuts the probed
+    cells' rows. ``qcols``/``ccols`` map extra output columns to query /
+    corpus source columns; they ride along to the output, and ``pred``
+    may compare them."""
+    qcols, ccols = qcols or {}, ccols or {}
+    cent, cells = _ivf_index(
+        name, corpus, id_col, vec_col, n_centroids, centroids, cells
+    )
+    probes = _nearest_centroids(
+        queries.select(
+            F.col(query_id_col).alias("query_id"),
+            F.col(query_vec_col).alias("__qvec"),
+            *(F.col(v).alias(o) for o, v in qcols.items()),
+        ),
+        ["query_id"],
+        "__qvec",
+        cent,
+        n=nprobe,
+        carry=("__qvec", *qcols),
+    ).select("query_id", "__qvec", *qcols, F.col("__cid").alias("__cell"))
+    return _cosine_topk(
+        probes,
+        cells.select(
+            F.col(id_col).alias(nid),
+            F.col(vec_col).alias("__cvec"),
+            *(F.col(v).alias(o) for o, v in ccols.items()),
+            "__cell",
+        ),
+        ["__cell"],
+        k,
+        pred=pred,
+        floor=floor,
+        carry=(*qcols, *ccols),
+        nid=nid,
+    )
+
+
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -668,59 +830,9 @@ def ivf_topk(
     load_ivf_index) — requires ``centroids`` from the same build; when
     given, ``corpus`` is ignored and no assignment runs at search time.
     """
-    if cells is not None and centroids is None:
-        raise ValueError(
-            "ivf_topk: a prebuilt `cells` index requires the `centroids` "
-            "it was built with (load_ivf_index returns both)"
-        )
-    cent = centroids if centroids is not None else train_centroids(
-        corpus, id_col, vec_col, n_centroids
-    )
-    if cells is None:
-        cells = assign_cells(corpus, cent, id_col, vec_col)
-    # norms fold once per corpus row / query row instead of once per
-    # (probe-cell x corpus-row) pair (the r12 knn_graph pattern;
-    # bit-identical — see brute_force_topk)
-    cells = cells.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cvec"),
-        "__cell",
-    ).withColumn("__cnrm", norm(F.col("__cvec")))
-    probes = (
-        _nearest_centroids(
-            queries.select(
-                F.col(query_id_col).alias("query_id"),
-                F.col(query_vec_col).alias("__qvec"),
-            ),
-            ["query_id"],
-            "__qvec",
-            cent,
-            n=nprobe,
-            carry=("__qvec",),
-        )
-        .select("query_id", "__qvec", F.col("__cid").alias("__cell"))
-        .withColumn("__qnrm", norm(F.col("__qvec")))
-    )
-    scored = (
-        cells.join(F.broadcast(probes), ["__cell"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("__qvec"), F.col("__cvec"))
-                / (F.col("__qnrm") * F.col("__cnrm")),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    return _ivf_search(
+        "ivf_topk", corpus, queries, id_col, vec_col, query_id_col,
+        query_vec_col, n_centroids, nprobe, k, centroids, cells,
     )
 
 
@@ -871,6 +983,56 @@ def pq_encode(
     ).select("__id", "m", F.col("__cid").alias("code"))
 
 
+def _adc_topk(
+    codes: DataFrame,
+    queries: DataFrame,
+    query_id_col: str,
+    query_vec_col: str,
+    cb: DataFrame,
+    m: int,
+    dim: int,
+    k: int,
+    on: list[str],
+) -> DataFrame:
+    """Asymmetric-distance tail of the PQ searches: per query a BROADCAST
+    lookup table of subvector-to-codeword distances (sq_dist rounded to
+    6 dp), joined to the corpus ``codes`` (__id, m, code, …) on ``on``;
+    each (query, neighbour) sums its m entries as integer micro-units
+    (order-exact across engines), self matches dropped, then
+    ``_rank_cut`` ascending → (query_id, neighbor_id, adist, rank ≤ k)."""
+    lut = (
+        _explode_subspaces(
+            queries.select(
+                F.col(query_id_col).alias("query_id"),
+                F.col(query_vec_col).alias("__qv"),
+            ),
+            "query_id",
+            "__qv",
+            m,
+            dim,
+        )
+        .join(F.broadcast(cb), "m")
+        .select(
+            "query_id",
+            "m",
+            F.col("centroid_id").alias("code"),
+            F.round(sq_dist(F.col("__sub"), F.col("__cb")), 6).alias("__d2m"),
+        )
+    )
+    scored = (
+        codes.join(F.broadcast(lut), on)
+        .filter(F.col("__id") != F.col("query_id"))
+        .select(
+            "query_id",
+            F.col("__id").alias("neighbor_id"),
+            F.round(F.col("__d2m") * 1e6, 0).cast("long").alias("__micro"),
+        )
+        .groupBy("query_id", "neighbor_id")
+        .agg(F.round(F.sum("__micro") / F.lit(1e6), 6).alias("adist"))
+    )
+    return _rank_cut(scored, k, "adist", asc=True)
+
+
 def pq_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -907,42 +1069,9 @@ def pq_topk(
     cb = (codebooks if codebooks is not None else
           cut(pq_codebooks(corpus, id_col, vec_col, m, k_codebook, dim)))
     codes = pq_encode(corpus, cb, id_col, vec_col, m, dim)
-    qrows = _explode_subspaces(
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(query_vec_col).alias("__qv"),
-        ),
-        "query_id",
-        "__qv",
-        m,
-        dim,
-    )
-    lut = qrows.join(F.broadcast(cb), "m").select(
-        "query_id",
-        "m",
-        F.col("centroid_id").alias("code"),
-        F.round(sq_dist(F.col("__sub"), F.col("__cb")), 6).alias("__d2m"),
-    )
-    scored = (
-        codes.join(F.broadcast(lut), ["m", "code"])
-        .filter(F.col("__id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("__id").alias("neighbor_id"),
-            F.round(F.col("__d2m") * 1e6, 0).cast("long").alias("__micro"),
-        )
-        .groupBy("query_id", "neighbor_id")
-        .agg(
-            F.round(F.sum("__micro") / F.lit(1e6), 6).alias("adist")
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adist").asc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adist", "rank")
+    return _adc_topk(
+        codes, queries, query_id_col, query_vec_col, cb, m, dim, k,
+        ["m", "code"],
     )
 
 
@@ -994,41 +1123,10 @@ def ivf_pq_topk(
         cent,
         n=nprobe,
     ).select("query_id", F.col("__cid").alias("__cell"))
-    qrows = _explode_subspaces(
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(query_vec_col).alias("__qv"),
-        ),
-        "query_id",
-        "__qv",
-        m,
-        dim,
-    )
-    lut = qrows.join(F.broadcast(cb), "m").select(
-        "query_id",
-        "m",
-        F.col("centroid_id").alias("code"),
-        F.round(sq_dist(F.col("__sub"), F.col("__cb")), 6).alias("__d2m"),
-    )
-    scored = (
-        coded.join(F.broadcast(probes), "__cell")
-        .join(F.broadcast(lut), ["query_id", "m", "code"])
-        .filter(F.col("__id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("__id").alias("neighbor_id"),
-            F.round(F.col("__d2m") * 1e6, 0).cast("long").alias("__micro"),
-        )
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.round(F.sum("__micro") / F.lit(1e6), 6).alias("adist"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adist").asc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adist", "rank")
+    return _adc_topk(
+        coded.join(F.broadcast(probes), "__cell"),
+        queries, query_id_col, query_vec_col, cb, m, dim, k,
+        ["query_id", "m", "code"],
     )
 
 
@@ -1064,36 +1162,17 @@ def pq_rerank_topk(
         corpus, queries, id_col, vec_col, query_id_col, query_vec_col,
         m=m, k_codebook=k_codebook, k=shortlist, dim=dim,
     ).select("query_id", "neighbor_id")
-    # norms fold once per side row instead of once per shortlist pair
-    # (the r12 knn_graph pattern; bit-identical — see brute_force_topk)
-    qv = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_vec_col).alias("__qvec"),
-    ).withColumn("__qnrm", norm(F.col("__qvec")))
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cvec"),
-    ).withColumn("__cnrm", norm(F.col("__cvec")))
-    scored = (
-        cv.join(F.broadcast(pool), "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("__qvec"), F.col("__cvec"))
-                / (F.col("__qnrm") * F.col("__cnrm")),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    return _cosine_topk(
+        queries.select(
+            F.col(query_id_col).alias("query_id"),
+            F.col(query_vec_col).alias("__qvec"),
+        ),
+        corpus.select(
+            F.col(id_col).alias("neighbor_id"),
+            F.col(vec_col).alias("__cvec"),
+        ).join(F.broadcast(pool), "neighbor_id"),
+        "query_id",
+        k,
     )
 
 
@@ -1142,11 +1221,6 @@ def knn_graph(
     by the candidate-pair count. Output: (id, neighbor_id, sim,
     rank ≤ k).
     """
-    from calp_cva_tracking_pipeline_spark.operators.partitioning import (
-        spread_small_input,
-    )
-    from pyspark.sql import Window
-
     base = spread_small_input(df).select(
         F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec")
     )
@@ -1159,75 +1233,32 @@ def knn_graph(
             n_centroids = auto_n_centroids(df, DEFAULT_CELL_SIZE)
         centroids = train_centroids(df, id_col, vec_col, n_centroids)
     if nprobe == 1:
-        assigned = assign_cells(base, centroids, "__id", "__vec").select(
-            "__id", "__vec", "__cell"
-        )
+        assigned = assign_cells(base, centroids, "__id", "__vec")
     else:
         assigned = _nearest_centroids(
             base, ["__id"], "__vec", centroids, n=nprobe, carry=("__vec",)
-        ).select("__id", "__vec", F.col("__cid").alias("__cell"))
+        ).withColumnRenamed("__cid", "__cell")
     # Perf shape (measured, round 12): higher-order-function folds run
-    # INTERPRETED, so per-pair work dominates the query. Two exact
-    # rewrites cut it ~6x with a bit-identical edge set: (a) each
-    # node's norm folds ONCE here instead of once per pair (cosine =
-    # dot/(nl*nr) is the same IEEE expression — sqrt folds are
-    # identical doubles, multiplication order unchanged); (b) the
-    # self-join keeps only id< pairs, folds ONE dot per undirected
-    # pair (dot(a,b) ≡ dot(b,a): same index order, commutative
-    # multiplies), and explodes to both directions afterwards.
-    # r15: the cell-assignment subtree (pre-collapse groupBy, centroid
-    # crossJoin + argmin/window, norm fold) feeds BOTH sides of the
-    # shared-cell self-join, and a self-join of a derived DataFrame
-    # plans two full copies of its upstream with zero exchange reuse
-    # (the documented minhash_lsh_candidates lesson). One lazy cut
-    # materializes the assignment once inside the output job: the
-    # before-plan held 8 corpus scans / 24 exchanges / 0 reuse.
-    assigned = cut(assigned.withColumn("__nrm", norm(F.col("__vec"))))
-    l, r = assigned.alias("l"), assigned.alias("r")
-    half = (
-        l.join(
-            r,
-            (F.col("l.__cell") == F.col("r.__cell"))
-            & (F.col("l.__id") < F.col("r.__id")),
-        )
-        .select(
-            F.col("l.__id").alias("a"),
-            F.col("r.__id").alias("b"),
-            F.round(
-                dot(F.col("l.__vec"), F.col("r.__vec"))
-                / (F.col("l.__nrm") * F.col("r.__nrm")),
-                6,
-            ).alias("sim"),
-        )
-    )
-    if nprobe > 1:
-        # a pair sharing several probed cells appears once per shared
-        # cell with the identical sim — collapse before ranking (on the
-        # halved set: half the dedup exchange volume too)
-        half = half.groupBy("a", "b").agg(F.max("sim").alias("sim"))
-    pairs = half.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("a").alias("id"),
-                    F.col("b").alias("neighbor_id"),
-                    F.col("sim"),
-                ),
-                F.struct(
-                    F.col("b").alias("id"),
-                    F.col("a").alias("neighbor_id"),
-                    F.col("sim"),
-                ),
-            )
-        ).alias("__p")
-    ).select("__p.id", "__p.neighbor_id", "__p.sim")
-    w = Window.partitionBy("id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(F.col("id").alias(id_col), "neighbor_id", "sim", "rank")
+    # INTERPRETED, so per-pair work dominates the query. The all-pairs
+    # kernel folds each node's norm once and one dot per undirected
+    # pair, ~6x less than the per-pair form with a bit-identical edge
+    # set. Its one lazy cut materializes the assignment once (r15: the
+    # before-plan held 8 corpus scans / 24 exchanges / 0 reuse).
+    return _cosine_topk(
+        assigned.select(
+            F.col("__id").alias("query_id"),
+            F.col("__vec").alias("__qvec"),
+            "__cell",
+        ),
+        None,
+        "__cell",
+        k,
+        dedup=nprobe > 1,
+    ).select(
+        F.col("query_id").alias(id_col),
+        "neighbor_id",
+        F.col("cosine").alias("sim"),
+        "rank",
     )
 
 
@@ -1420,77 +1451,17 @@ def hard_negatives(
     can't be certified negative). Output: (query_id, negative_id,
     query_label, negative_label, cosine, rank ≤ k).
     """
-    if cells is not None and centroids is None:
-        raise ValueError(
-            "hard_negatives: a prebuilt `cells` index requires the "
-            "`centroids` it was built with"
-        )
-    cent = centroids if centroids is not None else train_centroids(
-        corpus, id_col, vec_col, n_centroids
-    )
-    if cells is None:
-        cells = assign_cells(corpus, cent, id_col, vec_col)
-    cells = cells.filter(F.col(label_col).isNotNull()).select(
-        F.col(id_col).alias("negative_id"),
-        F.col(vec_col).alias("__cvec"),
-        F.col(label_col).alias("negative_label"),
-        "__cell",
-    )
-    probes = (
-        _nearest_centroids(
-            queries.filter(F.col(query_label_col).isNotNull()).select(
-                F.col(query_id_col).alias("query_id"),
-                F.col(query_vec_col).alias("__qvec"),
-                F.col(query_label_col).alias("query_label"),
-            ),
-            ["query_id"],
-            "__qvec",
-            cent,
-            n=nprobe,
-            carry=("__qvec", "query_label"),
-        )
-        .select(
-            "query_id",
-            "__qvec",
-            "query_label",
-            F.col("__cid").alias("__cell"),
-        )
-        .withColumn("__qnrm", norm(F.col("__qvec")))
-    )
-    # norms fold once per side row instead of once per probe pair
-    # (the r12 knn_graph pattern; bit-identical — see brute_force_topk)
-    scored = (
-        cells.withColumn("__cnrm", norm(F.col("__cvec")))
-        .join(F.broadcast(probes), ["__cell"])
-        .filter(F.col("negative_label") != F.col("query_label"))
-        .select(
-            "query_id",
-            "negative_id",
-            "query_label",
-            "negative_label",
-            F.round(
-                dot(F.col("__qvec"), F.col("__cvec"))
-                / (F.col("__qnrm") * F.col("__cnrm")),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("negative_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "negative_id",
-            "query_label",
-            "negative_label",
-            "cosine",
-            "rank",
-        )
-        .orderBy("query_id", "rank")
-    )
+    # a NULL corpus label fails the mismatch predicate like any pair
+    return _ivf_search(
+        "hard_negatives", corpus,
+        queries.filter(F.col(query_label_col).isNotNull()), id_col,
+        vec_col, query_id_col, query_vec_col, n_centroids, nprobe, k,
+        centroids, cells,
+        pred=F.col("negative_label") != F.col("query_label"),
+        qcols={"query_label": query_label_col},
+        ccols={"negative_label": label_col},
+        nid="negative_id",
+    ).orderBy("query_id", "rank")
 
 
 def ivf_incremental_audit(
@@ -1754,7 +1725,7 @@ def pair_cosine_hist(
     if not strides or any(s <= 0 for s in strides):
         raise ValueError(f"strides must be positive: {strides}")
     # norms fold once per node row instead of once per strided pair
-    # (the r12 knn_graph pattern; bit-identical — see brute_force_topk)
+    # (bit-identical — see _cosine_topk)
     base = df.filter(
         F.col(id_col).isNotNull() & F.col(vec_col).isNotNull()
     ).select(
@@ -1941,16 +1912,10 @@ def ivf_filtered_topk(
     residual predicate pushed against the cell scan — with a persisted
     bucketed index it prunes at the scan, before any join.
     """
-    if cells is not None and centroids is None:
-        raise ValueError(
-            "ivf_filtered_topk: a prebuilt `cells` index requires the "
-            "`centroids` it was built with"
-        )
-    cent = centroids if centroids is not None else train_centroids(
-        corpus, id_col, vec_col, n_centroids
+    cent, cells = _ivf_index(
+        "ivf_filtered_topk", corpus, id_col, vec_col, n_centroids,
+        centroids, cells,
     )
-    if cells is None:
-        cells = assign_cells(corpus, cent, id_col, vec_col)
     # string-compare both sides: an int predicate against a string
     # column must FILTER, not ANSI-throw on a malformed cast (the
     # degenerate-skew sweep feeds string labels); on a typed column
@@ -1998,16 +1963,10 @@ def ivf_cell_balance(
     all. Output: (cell, n_vecs, share_ppm, oversized, split_into)
     ordered by cell.
     """
-    if cells is not None and centroids is None:
-        raise ValueError(
-            "ivf_cell_balance: a prebuilt `cells` index requires the "
-            "`centroids` it was built with"
-        )
-    cent = centroids if centroids is not None else train_centroids(
-        corpus, id_col, vec_col, n_centroids
+    _, cells = _ivf_index(
+        "ivf_cell_balance", corpus, id_col, vec_col, n_centroids,
+        centroids, cells,
     )
-    if cells is None:
-        cells = assign_cells(corpus, cent, id_col, vec_col)
     counts = cells.groupBy(
         F.col("__cell").cast("bigint").alias("cell")
     ).agg(F.count("*").cast("bigint").alias("n_vecs"))
@@ -2286,58 +2245,8 @@ def ivf_range_search(
         raise ValueError(f"cosine threshold outside [-1,1]: {threshold}")
     if max_results < 1:
         raise ValueError(f"max_results must be >= 1: {max_results}")
-    if cells is not None and centroids is None:
-        raise ValueError(
-            "ivf_range_search: a prebuilt `cells` index requires the "
-            "`centroids` it was built with"
-        )
-    cent = centroids if centroids is not None else train_centroids(
-        corpus, id_col, vec_col, n_centroids
-    )
-    if cells is None:
-        cells = assign_cells(corpus, cent, id_col, vec_col)
-    # norms fold once per corpus row / query row instead of once per
-    # probe pair (the r12 knn_graph pattern; bit-identical — see
-    # brute_force_topk)
-    cells = cells.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cvec"),
-        "__cell",
-    ).withColumn("__cnrm", norm(F.col("__cvec")))
-    probes = (
-        _nearest_centroids(
-            queries.select(
-                F.col(query_id_col).alias("query_id"),
-                F.col(query_vec_col).alias("__qvec"),
-            ),
-            ["query_id"],
-            "__qvec",
-            cent,
-            n=nprobe,
-            carry=("__qvec",),
-        )
-        .select("query_id", "__qvec", F.col("__cid").alias("__cell"))
-        .withColumn("__qnrm", norm(F.col("__qvec")))
-    )
-    scored = (
-        cells.join(F.broadcast(probes), ["__cell"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("__qvec"), F.col("__cvec"))
-                / (F.col("__qnrm") * F.col("__cnrm")),
-                6,
-            ).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= F.lit(float(threshold)))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= max_results)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    return _ivf_search(
+        "ivf_range_search", corpus, queries, id_col, vec_col, query_id_col,
+        query_vec_col, n_centroids, nprobe, max_results, centroids, cells,
+        floor=threshold,
     )

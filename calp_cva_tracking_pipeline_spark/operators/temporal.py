@@ -346,6 +346,23 @@ def interval_join(
     return joined
 
 
+_UNIT_S = {
+    "second": 1, "seconds": 1,
+    "minute": 60, "minutes": 60,
+    "hour": 3600, "hours": 3600,
+    "day": 86400, "days": 86400,
+    "week": 604800, "weeks": 604800,
+}
+
+
+def _span_us(window_spec: str) -> int:
+    """``"<n> <unit>"`` (second … week, singular or plural, any case) →
+    microseconds, the RANGE-frame length over ``unix_micros``. An unknown
+    unit raises ``KeyError``."""
+    amount, unit = window_spec.strip().split()
+    return int(amount) * _UNIT_S[unit.lower()] * 1_000_000
+
+
 def rolling_time_window(
     df: DataFrame,
     keys: list[str],
@@ -380,15 +397,7 @@ def rolling_time_window(
     by exact ``unix_micros`` and the window length is converted to
     microseconds (exact for any whole-second spec).
     """
-    amount, unit = window_spec.strip().split()
-    unit_s = {
-        "second": 1, "seconds": 1,
-        "minute": 60, "minutes": 60,
-        "hour": 3600, "hours": 3600,
-        "day": 86400, "days": 86400,
-        "week": 604800, "weeks": 604800,
-    }[unit.lower()]
-    span_us = int(amount) * unit_s * 1_000_000
+    span_us = _span_us(window_spec)
 
     ordered = df.withColumn("__ts_us", F.unix_micros(F.col(ts_col)))
     w = (
@@ -617,15 +626,7 @@ def rolling_anomaly(
     One keyed exchange + sort (rides the same RANGE-frame machinery as
     ``rolling_time_window``); the anomaly filter is a projection on top.
     """
-    amount, unit = window_spec.strip().split()
-    unit_s = {
-        "second": 1, "seconds": 1,
-        "minute": 60, "minutes": 60,
-        "hour": 3600, "hours": 3600,
-        "day": 86400, "days": 86400,
-        "week": 604800, "weeks": 604800,
-    }[unit.lower()]
-    span_us = int(amount) * unit_s * 1_000_000
+    span_us = _span_us(window_spec)
 
     enc = (
         df.filter(F.col(value_col).isNotNull() & F.col(ts_col).isNotNull())

@@ -59,6 +59,20 @@ MAX_AUTO_SHUFFLE_PARTITIONS = 1 << 17
 # 1000 is ~6x the largest. Static conf: read once, when the session is built.
 CODEGEN_CACHE_MAX_ENTRIES = 1000
 
+# Runtime-settable conf the engine relies on: get_spark builds sessions
+# with it and normalize_session applies it to a foreign session.
+RUNTIME_CONF = {
+    # results are timezone-stable whoever built the session
+    "spark.sql.session.timeZone": "UTC",
+    # the default minPartitionSize (1m) coalesces small-byte/high-CPU
+    # shuffle stages (md5 shingling, per-row scoring) onto 1-2 cores; 64k
+    # keeps parallelismFirst actually parallel. At scale partitions are
+    # far above either bound, so this only affects the small end.
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
+    # AQE may coalesce a cached plan's output (see the module docstring)
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+}
+
 
 def get_spark(
     app_name: str = "calp-cva-spark",
@@ -68,24 +82,15 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's tuned defaults."""
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "*")
-    shuffle = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
-    )
+    shuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # default minPartitionSize (1m) coalesces small-byte/high-CPU
-        # shuffle stages (md5 shingling, per-row scoring) onto 1-2 cores;
-        # 64k keeps parallelismFirst actually parallel. At scale partitions
-        # are far above either bound, so this only affects the small end.
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.shuffle.partitions", str(shuffle))
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         # PySpark 4's per-API-call Python call-site capture costs 2 extra
@@ -110,7 +115,7 @@ def get_spark(
         .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")
         .config("spark.executor.extraJavaOptions", "-Duser.timezone=UTC")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**RUNTIME_CONF, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
@@ -186,16 +191,8 @@ def normalize_session(spark: SparkSession) -> SparkSession:
     # conf.set is a py4j round trip; normalize once per session (T() calls
     # this on every table read — the guard keeps that O(1) driver-side)
     if not getattr(spark, "_calp_normalized", False):
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        # runtime-settable perf conf (see get_spark): keep CPU-heavy
-        # small-byte shuffle stages parallel instead of size-coalesced
-        # onto 1-2 cores
-        spark.conf.set(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k"
-        )
-        spark.conf.set(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
-        )
+        for k, v in RUNTIME_CONF.items():
+            spark.conf.set(k, v)
         # driver-side plan-build cost: disable PySpark's per-call call-site
         # capture (see get_spark). The conf is STATIC (settable only at
         # session build), so for a foreign session flip pyspark's documented

@@ -9,7 +9,9 @@ in plain pytest, plus the recall/refinement checks the driver can't do.
 from __future__ import annotations
 
 import inspect
+import math
 import random
+import re
 from pathlib import Path
 
 import duckdb
@@ -721,13 +723,12 @@ def test_probe_count_below_one_is_rejected(spark, caller):
 def test_nearest_centroid_rule_lives_in_the_kernel():
     """``sq_dist(`` meets a centroid or codebook frame only inside
     ``_nearest_centroids``: linalg.py never spells it, and the other
-    similarity.py calls are the definition and the two PQ lookup-table
-    builds, which score every code and pick no argmin."""
+    similarity.py calls are the definition and the PQ lookup-table build
+    (``_adc_topk``), which scores every code and picks no argmin."""
     from calp_cva_tracking_pipeline_spark.operators import linalg, similarity
 
     for mod, want in (
-        (similarity, {"sq_dist": 1, "_nearest_centroids": 1, "pq_topk": 1,
-                      "ivf_pq_topk": 1}),
+        (similarity, {"sq_dist": 1, "_nearest_centroids": 1, "_adc_topk": 1}),
         (linalg, {}),
     ):
         hits = {
@@ -739,3 +740,257 @@ def test_nearest_centroid_rule_lives_in_the_kernel():
         assert hits == want, (mod.__name__, hits)
         src = Path(mod.__file__).read_text(encoding="utf-8")
         assert src.count("sq_dist(") == sum(want.values()), mod.__name__
+
+
+# ---------------------------------------------------------------------------
+# the IVF search family: filtered search and the k-NN graph serving path
+# ---------------------------------------------------------------------------
+
+
+def test_filtered_ann_only_matching_labels_and_true_topk(spark):
+    from calp_cva_tracking_pipeline_spark.operators.similarity import (
+        ivf_filtered_topk,
+    )
+
+    # 1 centroid -> every vector in one cell: the filtered search IS
+    # the exact filtered top-k, so the contract is directly checkable
+    rows = [
+        (0, [1.0, 0.0], 9),          # query (label irrelevant)
+        (1, [1.0, 0.1], 1),          # closest overall, WRONG label
+        (2, [1.0, 0.2], 2),          # right label, 2nd closest
+        (3, [0.0, 1.0], 2),          # right label, far
+        (4, [1.0, 0.05], None),      # NULL label never matches
+    ]
+    df = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>, label int"
+    )
+    q = df.filter("vec_id = 0")
+    out = ivf_filtered_topk(
+        df, q, "vec_id", "embedding", "vec_id", "embedding",
+        "label", 2, n_centroids=1, nprobe=1, k=2,
+    ).collect()
+    assert [(r.neighbor_id, r.rank) for r in out] == [(2, 1), (3, 2)]
+    # the wrong-label closest vector never appears
+    assert all(r.neighbor_id != 1 for r in out)
+
+
+def test_filtered_ann_prebuilt_cells_requires_centroids(spark):
+    from calp_cva_tracking_pipeline_spark.operators.similarity import (
+        ivf_filtered_topk,
+    )
+
+    df = spark.createDataFrame(
+        [(0, [1.0], 1)], "vec_id long, embedding array<double>, label int"
+    )
+    with pytest.raises(ValueError, match="requires the `centroids`"):
+        ivf_filtered_topk(
+            df, df, "vec_id", "embedding", "vec_id", "embedding",
+            "label", 1, cells=df,
+        )
+
+
+def test_knn_graph_serve_path_identical_to_cold_build(spark, sf_dir):
+    """The bench's emb_knn_graph_serve entry (prebuilt cached centroids)
+    must emit EXACTLY the cold build+search edges — centroid training is
+    deterministic, so reusing the quantizer may change only the timing,
+    never the graph."""
+    import bench
+    from calp_cva_tracking_pipeline_spark.catalog.scale import (
+        emb_knn_graph,
+    )
+
+    bench._KNN_CENTROID_CACHE.clear()
+    cold = {tuple(r) for r in emb_knn_graph(spark, sf_dir).collect()}
+    served = {
+        tuple(r) for r in bench._knn_graph_serve(spark, sf_dir).collect()
+    }
+    assert served == cold and len(cold) > 0
+    # second call reuses the cache (no retrain) and still matches
+    served2 = {
+        tuple(r) for r in bench._knn_graph_serve(spark, sf_dir).collect()
+    }
+    assert served2 == cold
+    bench._KNN_CENTROID_CACHE.clear()
+
+
+# ---------------------------------------------------------------------------
+# the score-and-rank kernel (_cosine_topk) vs a pure-Python rule
+# ---------------------------------------------------------------------------
+
+
+def _ref_cosine_topk(queries, corpus, k, floor=None):
+    """Per query id, its ``k`` best (neighbour id, cosine): cosine =
+    round(dot / (|q|·|c|), 6) with every sum folded left from 0.0, the
+    query itself excluded, cosine >= ``floor``, ordered by cosine desc
+    then the lower neighbour id."""
+
+    def dot(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc += x * y
+        return acc
+
+    out = {}
+    for qid, qv in queries:
+        scored = sorted(
+            (-cos, cid)
+            for cid, cv in corpus
+            if cid != qid
+            for cos in [
+                round(
+                    dot(qv, cv) / (math.sqrt(dot(qv, qv)) * math.sqrt(dot(cv, cv))),
+                    6,
+                )
+            ]
+            if floor is None or cos >= floor
+        )
+        out[qid] = [(cid, -neg) for neg, cid in scored[:k]]
+    return out
+
+
+# ids 4 and 9 share a vector, and 2 / 5 mirror each other about the x
+# axis: query 0 meets two exact cosine ties (0.707107 and 0.6)
+_CORPUS = [
+    (0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [3.0, -4.0]), (5, [3.0, 4.0]),
+    (4, [1.0, 1.0]), (9, [1.0, 1.0]), (7, [-1.0, 0.5]),
+]
+_QUERIES = [(0, [1.0, 0.0]), (100, [1.0, 1.0]), (101, [0.3, -0.7])]
+
+
+def _kernel_topk(spark, queries, corpus, k, floor=None):
+    from calp_cva_tracking_pipeline_spark.operators.similarity import (
+        _cosine_topk,
+    )
+
+    q = spark.createDataFrame(queries, "query_id long, __qvec array<double>")
+    c = spark.createDataFrame(corpus, "neighbor_id long, __cvec array<double>")
+    return _ranked(_cosine_topk(q, c, None, k, floor=floor).collect())
+
+
+def _ranked(rows):
+    got = {}
+    for r in sorted(rows, key=lambda r: (r[0], r["rank"])):
+        got.setdefault(r[0], []).append((r[1], r[-2]))
+        assert r["rank"] == len(got[r[0]])
+    return got
+
+
+def test_cosine_kernel_ties_break_on_lower_neighbour_and_skip_self(spark):
+    """Equal cosines rank the lower neighbour id first, and a query that
+    is also a corpus row never meets itself."""
+    ref = _ref_cosine_topk(_QUERIES, _CORPUS, 4)
+    assert ref[0] == [(4, 0.707107), (9, 0.707107), (2, 0.6), (5, 0.6)]
+    assert ref[100][:2] == [(4, 1.0), (9, 1.0)]
+    assert _kernel_topk(spark, _QUERIES, _CORPUS, 4) == ref
+
+
+def test_cosine_kernel_k_above_candidate_count_keeps_every_candidate(spark):
+    """k larger than the candidates keeps each candidate once, ranked
+    1..n; the self-excluded query has one candidate fewer."""
+    ref = _ref_cosine_topk(_QUERIES, _CORPUS, 50)
+    assert len(ref[0]) == len(_CORPUS) - 1
+    assert len(ref[100]) == len(_CORPUS)
+    assert _kernel_topk(spark, _QUERIES, _CORPUS, 50) == ref
+
+
+def test_cosine_kernel_range_floor_is_inclusive(spark):
+    """A neighbour exactly at the floor stays: query 0's 0.6 pair survives
+    a 0.6 floor, in the kernel and through ivf_range_search (one cell, so
+    the probe sees the whole corpus)."""
+    from calp_cva_tracking_pipeline_spark.operators.similarity import (
+        ivf_range_search,
+    )
+
+    ref = _ref_cosine_topk(_QUERIES, _CORPUS, 50, floor=0.6)
+    assert ref[0] == [(4, 0.707107), (9, 0.707107), (2, 0.6), (5, 0.6)]
+    assert _kernel_topk(spark, _QUERIES, _CORPUS, 50, floor=0.6) == {
+        qid: v for qid, v in ref.items() if v
+    }
+    df = spark.createDataFrame(_CORPUS, "vec_id long, v array<double>")
+    got = _ranked(
+        ivf_range_search(
+            df, spark.createDataFrame(_QUERIES[:1], "vec_id long, v array<double>"),
+            "vec_id", "v", "vec_id", "v", 0.6, n_centroids=1, nprobe=1,
+        ).collect()
+    )
+    assert got == {0: ref[0]}
+
+
+def test_cosine_kernel_all_pairs_mode_ranks_from_both_ends(spark):
+    """c=None (the knn_graph mode) scores each undirected pair once and
+    ranks it from both ends: with every row in one cell it equals the
+    rule with the corpus as its own query set."""
+    from calp_cva_tracking_pipeline_spark.operators.similarity import (
+        _cosine_topk,
+    )
+
+    q = spark.createDataFrame(
+        [(i, v, 0) for i, v in _CORPUS],
+        "query_id long, __qvec array<double>, __cell int",
+    )
+    got = _ranked(_cosine_topk(q, None, "__cell", 3).collect())
+    assert got == _ref_cosine_topk(_CORPUS, _CORPUS, 3)
+
+
+def test_cosine_score_and_neighbour_cut_live_in_the_kernels():
+    """The cosine ``dot(…) / (…*…)`` is spelled only in ``_cosine_topk``
+    and the per-query ``row_number()`` cut only in ``_rank_cut`` (the
+    cosine and ADC searches both rank through it). The other
+    ``row_number()`` calls rank centroids (``_nearest_centroids``) and
+    per-cell outliers (``embedding_outliers``), not neighbours;
+    ``pair_cosine_hist`` buckets pair cosines in micro-units and ranks
+    nothing; ``graph_search_frontier`` spells its beam in SQL."""
+    from calp_cva_tracking_pipeline_spark.operators import similarity
+
+    cosine = re.compile(r"dot\((?:[^()]|\([^()]*\))*\)\s*/\s*\(")
+    want_cos = {"_cosine_topk": 1, "pair_cosine_hist": 1}
+    want_cut = {"_rank_cut": 1, "_nearest_centroids": 1,
+                "embedding_outliers": 1}
+    got_cos, got_cut = {}, {}
+    for name, fn in inspect.getmembers(similarity, inspect.isfunction):
+        if fn.__module__ != similarity.__name__:
+            continue
+        src = inspect.getsource(fn)
+        if n := len(cosine.findall(src)):
+            got_cos[name] = n
+        if n := src.count("row_number()"):
+            got_cut[name] = n
+    assert (got_cos, got_cut) == (want_cos, want_cut)
+    src = Path(similarity.__file__).read_text(encoding="utf-8")
+    assert len(cosine.findall(src)) == sum(want_cos.values())
+    assert src.count("row_number()") == sum(want_cut.values())
+
+
+def test_oracle_d2_is_null_where_sq_dist_is(spark):
+    """The DuckDB d² fragment and ``sq_dist`` agree where a term is NULL:
+    a NULL element or a length mismatch makes the distance NULL on both
+    engines (list_sum would skip the NULL terms and return 5.0 and 1.0)."""
+    from calp_cva_tracking_pipeline_spark.catalog.scale import _D2
+    from calp_cva_tracking_pipeline_spark.operators.similarity import sq_dist
+
+    cases = [
+        ([1.0, None, 2.0], [0.0, 0.0, 0.0]),
+        ([1.0], [0.0, 3.0]),
+        ([1.0, 2.0], [0.5, 0.25]),
+    ]
+    df = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(cases)],
+        "i int, a array<double>, b array<double>",
+    )
+    spark_d2 = [
+        r[1]
+        for r in sorted(
+            df.select("i", F.round(sq_dist(F.col("a"), F.col("b")), 6))
+            .collect()
+        )
+    ]
+    con = duckdb.connect()
+    duck_d2 = [
+        con.execute(
+            f"SELECT {_D2.format(a='a', b='b')}"
+            " FROM (SELECT ?::DOUBLE[] AS a, ?::DOUBLE[] AS b)",
+            [a, b],
+        ).fetchone()[0]
+        for a, b in cases
+    ]
+    assert spark_d2 == duck_d2 == [None, None, 3.3125]

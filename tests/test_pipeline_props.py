@@ -260,6 +260,19 @@ def test_cc6_patch_map(spark):
     assert {r["iso"] for r in out.collect()} == {"PSE", "FRA", "RUS"}
 
 
+def test_cc6_patch_map_repeated_from_maps_once(spark):
+    """A repeated ``from`` key maps each row once, to its last target: a
+    join against the patch table would emit one row per matching patch."""
+    df = spark.createDataFrame([("WBG",), ("FRA",)], "iso string")
+    out = apply_patch_map(
+        df, "iso", [("WBG", "XXX"), ("WBG", "PSE")], out_col="iso_fixed"
+    )
+    assert sorted(tuple(r) for r in out.collect()) == [
+        ("FRA", "FRA"), ("WBG", "PSE")
+    ]
+    assert apply_patch_map(df, "iso", []).collect() == df.collect()
+
+
 # --- W1: non-positive factors poison the running product ---------------------
 
 

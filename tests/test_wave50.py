@@ -4,53 +4,9 @@ values, plus plan shapes."""
 
 from __future__ import annotations
 
-import pytest
-
 
 def _executed(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_filtered_ann_only_matching_labels_and_true_topk(spark):
-    from calp_cva_tracking_pipeline_spark.operators.similarity import (
-        ivf_filtered_topk,
-    )
-
-    # 1 centroid -> every vector in one cell: the filtered search IS
-    # the exact filtered top-k, so the contract is directly checkable
-    rows = [
-        (0, [1.0, 0.0], 9),          # query (label irrelevant)
-        (1, [1.0, 0.1], 1),          # closest overall, WRONG label
-        (2, [1.0, 0.2], 2),          # right label, 2nd closest
-        (3, [0.0, 1.0], 2),          # right label, far
-        (4, [1.0, 0.05], None),      # NULL label never matches
-    ]
-    df = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>, label int"
-    )
-    q = df.filter("vec_id = 0")
-    out = ivf_filtered_topk(
-        df, q, "vec_id", "embedding", "vec_id", "embedding",
-        "label", 2, n_centroids=1, nprobe=1, k=2,
-    ).collect()
-    assert [(r.neighbor_id, r.rank) for r in out] == [(2, 1), (3, 2)]
-    # the wrong-label closest vector never appears
-    assert all(r.neighbor_id != 1 for r in out)
-
-
-def test_filtered_ann_prebuilt_cells_requires_centroids(spark):
-    from calp_cva_tracking_pipeline_spark.operators.similarity import (
-        ivf_filtered_topk,
-    )
-
-    df = spark.createDataFrame(
-        [(0, [1.0], 1)], "vec_id long, embedding array<double>, label int"
-    )
-    with pytest.raises(ValueError, match="requires the `centroids`"):
-        ivf_filtered_topk(
-            df, df, "vec_id", "embedding", "vec_id", "embedding",
-            "label", 1, cells=df,
-        )
 
 
 def test_bloom_prescreen_hand_corpus(spark):
