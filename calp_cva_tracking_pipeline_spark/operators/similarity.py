@@ -128,7 +128,8 @@ def _cosine_topk(
     operators differ only in how they generate candidate pairs.
 
     ``q`` holds (query_id, __qvec, …) and ``c`` (``nid``, __cvec, …).
-    Each side's norm folds ONCE per row here, never once per pair:
+    Each side's norm folds ONCE per row here (a side that already carries
+    ``__qnrm``/``__cnrm`` keeps it), never once per pair:
     higher-order folds run interpreted, so per-pair work would be 3 folds
     where 1 suffices. Bit-identical either way — the sqrt folds produce
     the same doubles and cosine = dot/(‖q‖·‖c‖) keeps its multiplication
@@ -148,7 +149,8 @@ def _cosine_topk(
     the same each time. ``floor`` keeps cosine ≥ floor. Then
     ``_rank_cut`` → (query_id, nid, carry…, cosine, rank ≤ k).
     """
-    q = q.withColumn("__qnrm", norm(F.col("__qvec")))
+    if "__qnrm" not in q.columns:
+        q = q.withColumn("__qnrm", norm(F.col("__qvec")))
     if c is None:
         s = cut(q)
         l, r = s.alias("l"), s.alias("r")
@@ -165,9 +167,10 @@ def _cosine_topk(
             F.col("r.__qnrm").alias("__cnrm"),
         )
     else:
+        if "__cnrm" not in c.columns:
+            c = c.withColumn("__cnrm", norm(F.col("__cvec")))
         pairs = (
-            c.withColumn("__cnrm", norm(F.col("__cvec")))
-            .join(F.broadcast(q), on)
+            c.join(F.broadcast(q), on)
             .filter(F.col("query_id") != F.col(nid) if pred is None else pred)
         )
     scored = pairs.select(
@@ -311,16 +314,25 @@ def lsh_topk(
             ]
         )
 
+    # each side's norm folds once per input row, before the (table,
+    # bucket) explode copies the row
     ct = (
         spread_small_input(corpus)
         .select(
             F.col(id_col).alias("neighbor_id"),
             F.col(vec_col).alias("__cvec"),
-            F.explode(_buckets(F.col(vec_col))).alias("__tb"),
+            norm(F.col(vec_col)).alias("__cnrm"),
         )
         .select(
             "neighbor_id",
             "__cvec",
+            "__cnrm",
+            F.explode(_buckets(F.col("__cvec"))).alias("__tb"),
+        )
+        .select(
+            "neighbor_id",
+            "__cvec",
+            "__cnrm",
             F.col("__tb.tbl").alias("__tbl"),
             F.col("__tb.bkt").alias("__bkt"),
         )
@@ -356,11 +368,18 @@ def lsh_topk(
         queries.select(
             F.col(query_id_col).alias("query_id"),
             F.col(query_vec_col).alias("__qvec"),
-            F.explode(_probe_buckets(F.col(query_vec_col))).alias("__tb"),
+            norm(F.col(query_vec_col)).alias("__qnrm"),
         )
         .select(
             "query_id",
             "__qvec",
+            "__qnrm",
+            F.explode(_probe_buckets(F.col("__qvec"))).alias("__tb"),
+        )
+        .select(
+            "query_id",
+            "__qvec",
+            "__qnrm",
             F.col("__tb.tbl").alias("__tbl"),
             F.col("__tb.bkt").alias("__bkt"),
         )

@@ -1,4 +1,4 @@
-"""Temporal join operators: as-of join and interval (range) join.
+"""Temporal operators: as-of and interval joins, windows, recurrences.
 
 Neither exists in the reference (its joins are all equi/fuzzy — SURVEY.md
 §2.4); they are engine additions for the time-series side of a large-scale
@@ -26,10 +26,27 @@ Scale design:
   cross-product. Bucket width trades replication of the interval side
   (len/width copies) against join selectivity; point rows are never
   replicated.
+
+- The integer recurrences (EWMA, Holt, CUSUM) are each spelled once, as
+  a fold of one time-slice against key-sized carried state; a one-shot
+  smoother is its fold run with no carried state (``state=None`` plans no
+  state join). EWMA and Holt are serial, so both run in ``_series_fold``:
+  one ``applyInPandas`` kernel that joins the state, runs the per-key
+  step (``_ewma_series``, ``_holt_series``) in (ts, tiebreak) order,
+  emits the raw integer state of each key's last row and carries silent
+  keys (``_carried``). ``ewma_smooth`` is the EWMA fold run once,
+  ``ewma_smooth_chunked`` runs it once per epoch, and ``holt_smooth`` is
+  ``holt_fold`` run once. CUSUM has a closed form, so ``cusum_fold`` is
+  two stacked JVM windows and ``cusum_detect`` is that fold run once.
+  ``_encoded`` owns the NULL filter and the ``round(value·scale)`` → long
+  encode for all of them and for ``rolling_anomaly``.
 """
 
 from __future__ import annotations
 
+from functools import partial, reduce
+
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -411,6 +428,133 @@ def rolling_time_window(
     return out.drop("__ts_us")
 
 
+def _encoded(
+    df: DataFrame, ts_col: str, value_col: str, scale: int, *cols
+) -> DataFrame:
+    """The rows a recurrence or window statistic can use — value and
+    timestamp both non-NULL (a NULL has no slot in a recurrence, and every
+    oracle drops it too) — as ``cols`` plus ``__x`` = ``round(value·scale)``
+    as a long. The encode runs JVM-side: half away from zero in both
+    engines, and .5-exact products cannot arise from data with fewer
+    decimals than the scale, so Python kernels only ever see ints."""
+    return df.filter(
+        F.col(value_col).isNotNull() & F.col(ts_col).isNotNull()
+    ).select(
+        *cols,
+        F.round(F.col(value_col).cast("double") * scale)
+        .cast("long")
+        .alias("__x"),
+    )
+
+
+def _carried(
+    new: DataFrame, state: DataFrame | None, enc: DataFrame, keys: list[str]
+) -> DataFrame:
+    """A fold's next state: ``new`` plus the ``state`` rows of the keys
+    with no row in the batch ``enc``, which carry through untouched."""
+    if state is None:
+        return new
+    silent = state.join(enc.select(*keys).distinct(), keys, "left_anti")
+    return new.unionByName(silent)
+
+
+def _series_fold(
+    batch: DataFrame,
+    state: DataFrame | None,
+    keys: list[str],
+    ts_col: str,
+    value_col: str,
+    tiebreak_col: str,
+    scale: int,
+    step,
+    outs: tuple[str, ...],
+    carry: tuple[str, ...],
+) -> tuple[DataFrame, DataFrame]:
+    """The fold kernel of the serial integer recurrences (EWMA, Holt).
+
+    ``step(xs, seed)`` runs the recurrence over one key's ordered integer
+    values, resumed from ``seed`` (a tuple of ints; None for a fresh
+    series), and returns (one integer series per ``outs`` column, the
+    final state tuple). The batch is encoded (``_encoded``), left-joined
+    to ``state`` (keys + one long per ``carry`` name; None plans no
+    join), and grouped by key into one ``applyInPandas`` call that sorts
+    by (ts, tiebreak) and runs ``step``. Each series comes back as doubles
+    v/scale; the raw integer state rides on the key's last row only (a
+    state re-read from a double would lose exactness once |v| ≥ 2⁵³),
+    and keys absent from the batch carry through untouched.
+    → (keys + tiebreak + ``outs``, next state).
+    """
+    enc = _encoded(
+        batch, ts_col, value_col, scale,
+        *keys, tiebreak_col, F.col(ts_col).alias("__ts"),
+    )
+    seeded = state is not None
+    schema = ", ".join(
+        [
+            f"{f.name} {f.dataType.simpleString()}"
+            for f in enc.schema.fields[: len(keys) + 1]
+        ]
+        + [f"{c} double" for c in outs]
+        + [f"__{c} long" for c in carry]
+    )
+
+    def fold(pdf):
+        # numpy sorts and a one-shot frame build: a key's group is often
+        # tens of rows, where pandas' per-call overhead dominates
+        order = np.lexsort(
+            (pdf[tiebreak_col].to_numpy(), pdf["__ts"].to_numpy())
+        )
+        seed = None
+        if seeded and pd.notna(pdf[carry[0]].iloc[0]):
+            seed = tuple(int(pdf[c].iloc[0]) for c in carry)
+        series, last = step(pdf["__x"].to_numpy()[order].tolist(), seed)
+        res = {c: pdf[c].to_numpy()[order] for c in (*keys, tiebreak_col)}
+        for c, vs in zip(outs, series):
+            res[c] = [v / scale for v in vs]
+        held = np.ones(len(order), bool)
+        held[-1] = False
+        for c, v in zip(carry, last):
+            vals = np.zeros(len(order), np.int64)
+            vals[-1] = v
+            res[f"__{c}"] = pd.arrays.IntegerArray(vals, held)
+        return pd.DataFrame(res)
+
+    res = (enc.join(state, keys, "left") if seeded else enc).groupBy(
+        *keys
+    ).applyInPandas(fold, schema)
+    new = res.filter(F.col(f"__{carry[0]}").isNotNull()).select(
+        *keys, *(F.col(f"__{c}").alias(c) for c in carry)
+    )
+    return (
+        res.select(*keys, tiebreak_col, *outs),
+        _carried(new, state, enc, keys),
+    )
+
+
+def _ewma_series(xs, seed, alpha_num, alpha_den):
+    """The integer EWMA recurrence over one ordered series, resumed from
+    ``seed`` = (s,). → ([s per row], (s,))."""
+    keep = alpha_den - alpha_num
+    s = seed[0] if seed else None
+    ss = []
+    for x in xs:
+        s = x if s is None else (alpha_num * x + keep * s) // alpha_den
+        ss.append(s)
+    return [ss], (s,)
+
+
+def _ewma_fold(
+    batch, state, keys, ts_col, value_col, tiebreak_col,
+    alpha_num, alpha_den, scale,
+):
+    """One EWMA time-slice against carried state (keys + ``s`` long)."""
+    step = partial(_ewma_series, alpha_num=alpha_num, alpha_den=alpha_den)
+    return _series_fold(
+        batch, state, keys, ts_col, value_col, tiebreak_col, scale, step,
+        ("ewma",), ("s",),
+    )
+
+
 def ewma_smooth(
     df: DataFrame,
     keys: list[str],
@@ -431,56 +575,18 @@ def ewma_smooth(
     DuckDB recursive CTE replays it exactly, so the catalog oracle
     checks every smoothed point.
 
-    Physical shape: the recurrence is inherently serial PER KEY (each
-    state needs its predecessor), so it runs as ``applyInPandas`` over
-    key groups — the state is one integer, keys distribute freely, and
-    the per-group pandas frame holds only that key's history (the same
-    per-entity-stream bound as sessionization). A key with an UNBOUNDED
-    history (one entity, 10⁹ events) would pin one task on one giant
-    pandas frame — use ``ewma_smooth_chunked`` for that regime: it
-    slices time into epochs and carries the one-integer state across
-    slices, so no task ever holds more than one epoch of one key.
-    Rows with NULL values or timestamps are excluded before smoothing
-    (they have no place in a recurrence); the oracle mirrors the
-    exclusion.
-
-    Output: keys + tiebreak + ``ewma`` (double, exact multiple of
-    1/scale). Encoding to integer units happens JVM-side
-    (``round(value·scale)`` — half-away-from-zero in both engines, and
-    .5-exact products cannot arise from data with fewer decimals than
-    the scale); the Python side only ever sees ints.
+    The EWMA fold run once with no carried state. The recurrence is
+    serial per key, so each task holds one key's whole history; a key
+    with an UNBOUNDED history (one entity, 10⁹ events) would pin one
+    task on one giant pandas frame — use ``ewma_smooth_chunked`` there.
+    Rows with NULL values or timestamps are excluded (the oracle mirrors
+    the exclusion). Output: keys + tiebreak + ``ewma`` (double, exact
+    multiple of 1/scale).
     """
-    out_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.select(*keys, tiebreak_col).schema.fields
-    )
-    schema = f"{out_fields}, ewma double"
-    enc = (
-        df.filter(F.col(value_col).isNotNull() & F.col(ts_col).isNotNull())
-        .select(
-            *keys,
-            tiebreak_col,
-            F.col(ts_col).alias("__ts"),
-            F.round(F.col(value_col).cast("double") * scale)
-            .cast("long")
-            .alias("__x"),
-        )
-    )
-    keep = alpha_den - alpha_num
-
-    def smooth(pdf):
-        pdf = pdf.sort_values(["__ts", tiebreak_col], kind="mergesort")
-        s = None
-        out = []
-        for x in pdf["__x"]:
-            x = int(x)
-            s = x if s is None else (alpha_num * x + keep * s) // alpha_den
-            out.append(s / scale)
-        pdf = pdf[[*keys, tiebreak_col]].copy()
-        pdf["ewma"] = out
-        return pdf
-
-    return enc.groupBy(*keys).applyInPandas(smooth, schema)
+    return _ewma_fold(
+        df, None, keys, ts_col, value_col, tiebreak_col,
+        alpha_num, alpha_den, scale,
+    )[0]
 
 
 def ewma_smooth_chunked(
@@ -495,101 +601,49 @@ def ewma_smooth_chunked(
     epoch: str = "30 days",
 ) -> DataFrame:
     """``ewma_smooth`` for keys with UNBOUNDED histories: identical
-    integer-floor recurrence, identical output (proven equal row-for-row
-    by ``tests/test_wave8.py``), but time is sliced into ``epoch``-wide
-    chunks and the one-integer per-key state is carried across slices —
-    so no task ever materializes more than one epoch of one key's
-    history, and a single 10⁹-event entity distributes over
-    history/epoch tasks instead of pinning one.
+    integer-floor recurrence, identical output row for row, but time is
+    sliced into ``epoch``-wide chunks and the EWMA fold runs once per
+    epoch, carrying the one-integer per-key state — so no task ever
+    materializes more than one epoch of one key's history, and a single
+    10⁹-event entity distributes over history/epoch tasks instead of
+    pinning one.
 
-    Physical shape per epoch: filter (partition-prunable when the input
-    is date-partitioned) → broadcast-join the key-sized seed relation →
-    the same ``applyInPandas`` recurrence seeded from the carried state
-    → a key-sized ``max_by`` aggregate producing the next seed. ONLY the
-    seed is cut (``session.cut``, eager) each epoch (key-sized, stays
-    distributed — this is an iterative operator like PageRank, and the
-    checkpoint is what keeps the plan from re-running every earlier
-    epoch once per later epoch; epoch outputs themselves are never
-    materialized — the deterministic kernel recomputes each epoch once
-    at final collection, so nothing row-scaled is ever checkpointed).
-    The driver holds only the list of epoch boundaries —
+    Only the key-sized state is cut (``session.cut``, eager) after each
+    epoch: this is an iterative operator like PageRank, and the cut keeps
+    each epoch's plan from re-running every earlier epoch. Epoch outputs
+    are never materialized — the deterministic kernel recomputes each
+    epoch once at final collection, so nothing row-scaled is ever
+    checkpointed. The driver holds only the list of epoch boundaries —
     calendar-bounded (time span / epoch), never row- or key-scaled.
 
     Epochs partition time globally, so per-key slice order is exactly
     history order and the recurrence composes: s at an epoch boundary is
     the same integer whether the boundary exists or not — that algebraic
-    fact is WHY chunking is exact, and the equivalence test pins it.
+    fact is WHY chunking is exact.
     """
-    out_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.select(*keys, tiebreak_col).schema.fields
-    )
-    schema = f"{out_fields}, ewma double, __ts timestamp, __state bigint"
-    enc = (
-        df.filter(F.col(value_col).isNotNull() & F.col(ts_col).isNotNull())
-        .select(
-            *keys,
-            tiebreak_col,
-            F.col(ts_col).alias("__ts"),
-            F.round(F.col(value_col).cast("double") * scale)
-            .cast("long")
-            .alias("__x"),
-            F.window(F.col(ts_col), epoch).start.alias("__epoch"),
-        )
-    )
+    tagged = df.withColumn("__epoch", F.window(F.col(ts_col), epoch).start)
     epochs = [
         r["__epoch"]
-        for r in enc.select("__epoch").distinct().orderBy("__epoch").collect()
+        for r in _encoded(tagged, ts_col, value_col, scale, "__epoch")
+        .select("__epoch")
+        .distinct()
+        .orderBy("__epoch")
+        .collect()
     ]
-    keep = alpha_den - alpha_num
-
-    def smooth(pdf):
-        pdf = pdf.sort_values(["__ts", tiebreak_col], kind="mergesort")
-        seed = pdf["__seed"].iloc[0]
-        s = None if pd.isna(seed) else int(seed)
-        out = []
-        states = []
-        for x in pdf["__x"]:
-            x = int(x)
-            s = x if s is None else (alpha_num * x + keep * s) // alpha_den
-            out.append(s / scale)
-            # the RAW integer state rides along so the next epoch seeds
-            # from it directly — round(ewma*scale) on the double output
-            # would silently lose exactness once |s| >= 2^53
-            states.append(s)
-        res = pdf[[*keys, tiebreak_col, "__ts"]].copy()
-        res["ewma"] = out
-        res["__state"] = states
-        return res[[*keys, tiebreak_col, "ewma", "__ts", "__state"]]
-
-    spark = df.sparkSession
-    seed = spark.createDataFrame(
-        [],
-        df.select(*keys).schema.add("__seed", "long"),
-    )
-    parts: list[DataFrame] = []
-    order_struct = ", ".join(["__ts", tiebreak_col])
+    parts, state = [], None
     for e in epochs:
-        rows_e = enc.filter(F.col("__epoch") == F.lit(e)).drop("__epoch")
-        seeded = rows_e.join(F.broadcast(seed), keys, "left")
-        out_e = seeded.groupBy(*keys).applyInPandas(smooth, schema)
-        parts.append(out_e.select(*keys, tiebreak_col, "ewma"))
-        new_states = out_e.groupBy(*keys).agg(
-            F.expr(f"max_by(__state, struct({order_struct}))").alias(
-                "__seed"
-            )
+        part, state = _ewma_fold(
+            tagged.filter(F.col("__epoch") == F.lit(e)), state, keys,
+            ts_col, value_col, tiebreak_col, alpha_num, alpha_den, scale,
         )
-        # keys silent this epoch keep their carried state
-        carried = seed.join(new_states, keys, "left_anti")
-        seed = cut(new_states.unionByName(carried), eager=True)
+        parts.append(part)
+        state = cut(state, eager=True)
     if not parts:
-        return df.sparkSession.createDataFrame(
-            [], df.select(*keys, tiebreak_col).schema.add("ewma", "double")
+        return ewma_smooth(
+            df, keys, ts_col, value_col, tiebreak_col,
+            alpha_num, alpha_den, scale,
         )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return reduce(DataFrame.unionByName, parts)
 
 
 def rolling_anomaly(
@@ -617,24 +671,22 @@ def rolling_anomaly(
     expression order (IEEE division and sqrt are correctly rounded, so
     even pre-round the z is bit-identical across engines). Rows with a
     NULL value or timestamp are dropped BEFORE the window (same contract
-    as ``ewma_smooth``) so the window population n counts exactly the
-    rows that feed Σx/Σx² — counting unusable rows would bias the mean
-    downward and the ``min_points`` gate upward. Windows with fewer than
-    ``min_points`` rows or zero variance are never flagged — a 2-point
-    history is not a distribution.
+    and encode as ``ewma_smooth``) so the window population n counts
+    exactly the rows that feed Σx/Σx² — counting unusable rows would bias
+    the mean downward and the ``min_points`` gate upward. Windows with
+    fewer than ``min_points`` rows or zero variance are never flagged — a
+    2-point history is not a distribution — and a one-row window has no
+    sample variance at all, so its z is NULL whatever ``min_points`` is.
 
     One keyed exchange + sort (rides the same RANGE-frame machinery as
     ``rolling_time_window``); the anomaly filter is a projection on top.
     """
     span_us = _span_us(window_spec)
 
-    enc = (
-        df.filter(F.col(value_col).isNotNull() & F.col(ts_col).isNotNull())
-        .withColumn(
-            "__x",
-            F.round(F.col(value_col).cast("double") * cents).cast("long"),
-        )
-        .withColumn("__ts_us", F.unix_micros(F.col(ts_col)))
+    enc = _encoded(
+        df, ts_col, value_col, cents,
+        *keys, id_col, ts_col, value_col,
+        F.unix_micros(F.col(ts_col)).alias("__ts_us"),
     )
     w = (
         Window.partitionBy(*keys)
@@ -654,7 +706,8 @@ def rolling_anomaly(
     nD = F.col("__n").cast("double")
     s1D = F.col("__s1").cast("double")
     s2D = F.col("__s2").cast("double")
-    var = (nD * s2D - s1D * s1D) / (nD * (nD - 1))
+    # a one-row window has no sample variance: NULL, not a division by 0
+    var = (nD * s2D - s1D * s1D) / F.when(F.col("__n") > 1, nD * (nD - 1))
     z = (F.col("__x").cast("double") - s1D / nD) / F.sqrt(var)
     flagged = stats.withColumn(
         "z",
@@ -688,15 +741,14 @@ def cusum_detect(
     of the event stream plus a per-key sort — identical to any keyed
     window, with the usual skew remedy (salt a mega-key upstream).
 
-    Exactness: values and the target/slack/threshold parameters are
-    encoded to ``scale`` integer units up front (same half-away-from-
-    zero contract as ``ewma_smooth``), so every running sum, min and
+    ``cusum_fold`` run once with no carried state (so no state join).
+    Values and the target/slack/threshold parameters are encoded to
+    ``scale`` integer units up front, so every running sum, min and
     comparison is 64-bit integer arithmetic — bit-identical across
     partitionings, re-runs and engines, and the DuckDB oracle replays
     it with the same two-level window. Rows with NULL value or
-    timestamp are dropped before the windows (a recurrence has no slot
-    for them; same contract as ``ewma_smooth``/``rolling_anomaly``).
-    Ordering within a key is (ts, tiebreak) and must be total.
+    timestamp are dropped. Ordering within a key is (ts, tiebreak) and
+    must be total.
 
     Output: keys + tiebreak + ts + ``cusum_pos``/``cusum_neg`` (doubles,
     exact multiples of 1/scale) + ``alarm_pos``/``alarm_neg`` booleans
@@ -704,42 +756,10 @@ def cusum_detect(
     for micro-scaled |value| ≤ ~9·10⁹ per 10⁶-row key history — the
     same envelope as the EWMA tier.
     """
-    t_i = int(round(target * scale))
-    k_i = int(round(slack * scale))
-    h_i = int(round(threshold * scale))
-    enc = df.filter(
-        F.col(value_col).isNotNull() & F.col(ts_col).isNotNull()
-    ).select(
-        *keys,
-        tiebreak_col,
-        F.col(ts_col).alias("__ts"),
-        F.round(F.col(value_col).cast("double") * scale)
-        .cast("long")
-        .alias("__x"),
-    )
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy("__ts", tiebreak_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    pre = enc.select(
-        *keys,
-        tiebreak_col,
-        "__ts",
-        F.sum(F.col("__x") - F.lit(t_i) - F.lit(k_i)).over(w).alias("__pp"),
-        F.sum(F.lit(t_i) - F.col("__x") - F.lit(k_i)).over(w).alias("__pn"),
-    )
-    sp = F.col("__pp") - F.least(F.lit(0).cast("long"), F.min("__pp").over(w))
-    sn = F.col("__pn") - F.least(F.lit(0).cast("long"), F.min("__pn").over(w))
-    return pre.select(
-        *keys,
-        tiebreak_col,
-        F.col("__ts").alias(ts_col),
-        (sp / scale).alias("cusum_pos"),
-        (sn / scale).alias("cusum_neg"),
-        (sp > h_i).alias("alarm_pos"),
-        (sn > h_i).alias("alarm_neg"),
-    )
+    return cusum_fold(
+        df, None, keys, ts_col, value_col, tiebreak_col,
+        target, slack, threshold, scale,
+    )[0]
 
 
 def cusum_fold(
@@ -764,93 +784,162 @@ def cusum_fold(
     its key's carried ``(S, M)`` pair — P within the slice is S plus the
     local prefix sum, and the running min is min(M, local running min).
     Both are 64-bit integer values, so a chunked fold is BIT-IDENTICAL
-    to the one-shot window (pinned by tests/test_streaming.py), the
-    same algebra that makes ``ewma_smooth_chunked`` exact.
+    to the one-shot window, the same algebra that makes
+    ``ewma_smooth_chunked`` exact.
 
     ``state`` columns: keys + ``s_pp s_pn m_pp m_pn`` (long; the last
-    prefix sums and running mins per side). Pass ``None`` (or an empty
-    frame) to start. Keys absent from the batch carry through untouched.
-    Batches must arrive in (ts, tiebreak) order per key — the standard
-    append-stream contract, same as every recurrence fold.
+    prefix sums and running mins per side). Pass ``None`` (no state
+    join is planned) or an empty frame to start. Keys absent from the
+    batch carry through untouched. Batches must arrive in (ts, tiebreak)
+    order per key — the standard append-stream contract, same as every
+    recurrence fold.
 
     Physical shape: one keyed window over the slice + a key-sized state
     join (broadcastable while the key set is dimension-sized; AQE
     decides) + a key-sized aggregate for the next state. Nothing
     row-scaled is ever carried between slices.
     """
-    t_i = int(round(target * scale))
-    k_i = int(round(slack * scale))
-    h_i = int(round(threshold * scale))
-    spark = batch.sparkSession
-    state_schema = (
-        ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in batch.select(*keys).schema.fields
-        )
-        + ", s_pp long, s_pn long, m_pp long, m_pn long"
+    t_i, k_i, h_i = (round(v * scale) for v in (target, slack, threshold))
+    # every running sum and min shares one frame; the columns are SQL
+    # strings, one py4j call each instead of one per operator
+    ts, tb = f"`{ts_col}`", f"`{tiebreak_col}`"
+    run = (
+        f" OVER (PARTITION BY {', '.join(f'`{k}`' for k in keys)}"
+        f" ORDER BY {ts}, {tb}"
+        " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
     )
-    if state is None:
-        state = spark.createDataFrame([], state_schema)
-    enc = batch.filter(
-        F.col(value_col).isNotNull() & F.col(ts_col).isNotNull()
-    ).select(
-        *keys,
-        tiebreak_col,
-        F.col(ts_col).alias("__ts"),
-        F.round(F.col(value_col).cast("double") * scale)
-        .cast("long")
-        .alias("__x"),
-    )
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy("__ts", tiebreak_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
+    enc = _encoded(
+        batch, ts_col, value_col, scale, *keys, tiebreak_col, ts_col
     )
     loc = enc.select(
         *keys,
         tiebreak_col,
-        "__ts",
-        F.sum(F.col("__x") - F.lit(t_i) - F.lit(k_i)).over(w).alias("__lp"),
-        F.sum(F.lit(t_i) - F.col("__x") - F.lit(k_i)).over(w).alias("__ln"),
-        F.min(
-            F.sum(F.col("__x") - F.lit(t_i) - F.lit(k_i)).over(w)
-        ).over(w).alias("__rmp"),
-        F.min(
-            F.sum(F.lit(t_i) - F.col("__x") - F.lit(k_i)).over(w)
-        ).over(w).alias("__rmn"),
+        ts_col,
+        F.expr(f"sum(__x - {t_i} - {k_i}){run} AS __lp"),
+        F.expr(f"sum({t_i} - __x - {k_i}){run} AS __ln"),
     )
-    j = (
-        loc.join(state, keys, "left")
-        .fillna({"s_pp": 0, "s_pn": 0})
-    )
-    pp = F.col("__lp") + F.col("s_pp")
-    pn = F.col("__ln") + F.col("s_pn")
-    # F.least skips NULLs: an absent m_* (fresh key) leaves the local
-    # running min as the global one.
-    m_run_p = F.least(F.col("m_pp"), F.col("__rmp") + F.col("s_pp"))
-    m_run_n = F.least(F.col("m_pn"), F.col("__rmn") + F.col("s_pn"))
-    zero = F.lit(0).cast("long")
-    sp = pp - F.least(zero, m_run_p)
-    sn = pn - F.least(zero, m_run_n)
+    if state is None:
+        j, s, m = loc, {"p": "0L", "n": "0L"}, {"p": "NULL", "n": "NULL"}
+    else:
+        j = loc.join(state, keys, "left")
+        s = {d: f"coalesce(s_p{d}, 0L)" for d in "pn"}
+        m = {d: f"m_p{d}" for d in "pn"}
+    # per side: S = P − min(0, M, local running min + S_carried), with P =
+    # local prefix sum + S_carried; least skips NULLs, so a fresh key (no
+    # M) keeps the local running min
+    stat = {
+        d: f"(__l{d} + {s[d]}"
+        f" - least(0L, {m[d]}, min(__l{d}){run} + {s[d]}))"
+        for d in "pn"
+    }
     out = j.select(
         *keys,
         tiebreak_col,
-        F.col("__ts").alias(ts_col),
-        (sp / scale).alias("cusum_pos"),
-        (sn / scale).alias("cusum_neg"),
-        (sp > h_i).alias("alarm_pos"),
-        (sn > h_i).alias("alarm_neg"),
+        ts_col,
+        F.expr(f"{stat['p']} / {scale} AS cusum_pos"),
+        F.expr(f"{stat['n']} / {scale} AS cusum_neg"),
+        F.expr(f"{stat['p']} > {h_i} AS alarm_pos"),
+        F.expr(f"{stat['n']} > {h_i} AS alarm_neg"),
     )
-    ordkey = F.struct("__ts", tiebreak_col)
-    updates = j.groupBy(*keys).agg(
-        F.max_by(pp, ordkey).alias("s_pp"),
-        F.max_by(pn, ordkey).alias("s_pn"),
-        F.least(F.min(F.col("m_pp")), F.min(F.col("__rmp") + F.col("s_pp"))).alias("m_pp"),
-        F.least(F.min(F.col("m_pn")), F.min(F.col("__rmn") + F.col("s_pn"))).alias("m_pn"),
+    # next state: the slice's last prefix sum and min over its prefix sums
+    last = f"struct({ts}, {tb})"
+    new = j.groupBy(*keys).agg(
+        *(F.expr(f"max_by(__l{d} + {s[d]}, {last}) AS s_p{d}") for d in "pn"),
+        *(
+            F.expr(f"min(least({m[d]}, __l{d} + {s[d]})) AS m_p{d}")
+            for d in "pn"
+        ),
     )
-    untouched = state.join(updates.select(*keys), keys, "left_anti")
-    new_state = updates.unionByName(untouched)
-    return out, new_state
+    return out, _carried(new, state, enc, keys)
+
+
+def _holt_series(xs, seed, alpha_num, alpha_den, beta_num, beta_den):
+    """The integer Holt recurrence over one ordered series, resumed from
+    ``seed`` = (l, b). → ([levels, trends, forecasts], (l, b))."""
+    a_keep = alpha_den - alpha_num
+    b_keep = beta_den - beta_num
+    lvl, trd = seed or (None, 0)
+    levels, trends = [], []
+    for x in xs:
+        if lvl is None:
+            lvl, trd = x, 0
+        else:
+            nl = (alpha_num * x + a_keep * (lvl + trd)) // alpha_den
+            trd = (beta_num * (nl - lvl) + b_keep * trd) // beta_den
+            lvl = nl
+        levels.append(lvl)
+        trends.append(trd)
+    forecasts = [lv + tr for lv, tr in zip(levels, trends)]
+    return [levels, trends, forecasts], (lvl, trd)
+
+
+def holt_smooth(
+    df: DataFrame,
+    keys: list[str],
+    ts_col: str,
+    value_col: str,
+    tiebreak_col: str,
+    alpha_num: int = 1,
+    alpha_den: int = 4,
+    beta_num: int = 1,
+    beta_den: int = 8,
+    scale: int = 1_000_000,
+) -> DataFrame:
+    """Per-key Holt double-exponential smoothing (level + trend) with a
+    BIT-EXACT two-integer recurrence — ``ewma_smooth``'s discipline
+    extended to the trending-series case EWMA systematically lags:
+
+        l₀ = x₀, b₀ = 0
+        lₜ = ⌊(αn·xₜ + (αd−αn)·(lₜ₋₁+bₜ₋₁)) / αd⌋
+        bₜ = ⌊(βn·(lₜ−lₜ₋₁) + (βd−βn)·bₜ₋₁) / βd⌋
+
+    over values pre-rounded to ``scale`` integer units; the one-step
+    forecast lₜ+bₜ rides along. Identical across partitionings, re-runs
+    and engines — the oracle replays it as a recursive CTE carrying the
+    same two integers (with the floor-division spelled out, since SQL
+    ``//`` truncates). ``holt_fold`` run once with no carried state.
+    NULL values/timestamps are excluded (mirrored in the oracle).
+    Output: keys + tiebreak + (level, trend, forecast), each an exact
+    multiple of 1/scale. Engine addition; no reference counterpart.
+    """
+    return holt_fold(
+        df, None, keys, ts_col, value_col, tiebreak_col,
+        alpha_num, alpha_den, beta_num, beta_den, scale,
+    )[0]
+
+
+def holt_fold(
+    batch: DataFrame,
+    state: DataFrame | None,
+    keys: list[str],
+    ts_col: str,
+    value_col: str,
+    tiebreak_col: str,
+    alpha_num: int = 1,
+    alpha_den: int = 4,
+    beta_num: int = 1,
+    beta_den: int = 8,
+    scale: int = 1_000_000,
+) -> tuple[DataFrame, DataFrame]:
+    """``holt_smooth`` for continuous ingest: fold ONE time-slice
+    against a key-sized carried (level, trend) state and return
+    ``(batch_output, new_state)`` — the foreachBatch resident, the
+    cusum_fold contract with two integers of carried state instead of
+    four. Because the recurrence is integer-exact, a chunked fold is
+    BIT-IDENTICAL to the one-shot smoother. ``state`` columns: keys +
+    (l long, b long); pass None to start (no state join is planned).
+    Keys absent from the batch carry through untouched. Batches must
+    arrive in (ts, tiebreak) order per key — the standard append-stream
+    contract.
+    """
+    step = partial(
+        _holt_series, alpha_num=alpha_num, alpha_den=alpha_den,
+        beta_num=beta_num, beta_den=beta_den,
+    )
+    return _series_fold(
+        batch, state, keys, ts_col, value_col, tiebreak_col, scale, step,
+        ("level", "trend", "forecast"), ("l", "b"),
+    )
 
 
 def interval_union_length(
@@ -1158,181 +1247,6 @@ def interval_overlap_join(
             F.least("__le", "__re") - F.greatest("__ls", "__rs")
         ).cast("bigint").alias("overlap_us"),
     )
-
-
-def holt_smooth(
-    df: DataFrame,
-    keys: list[str],
-    ts_col: str,
-    value_col: str,
-    tiebreak_col: str,
-    alpha_num: int = 1,
-    alpha_den: int = 4,
-    beta_num: int = 1,
-    beta_den: int = 8,
-    scale: int = 1_000_000,
-) -> DataFrame:
-    """Per-key Holt double-exponential smoothing (level + trend) with a
-    BIT-EXACT two-integer recurrence — ``ewma_smooth``'s discipline
-    extended to the trending-series case EWMA systematically lags:
-
-        l₀ = x₀, b₀ = 0
-        lₜ = ⌊(αn·xₜ + (αd−αn)·(lₜ₋₁+bₜ₋₁)) / αd⌋
-        bₜ = ⌊(βn·(lₜ−lₜ₋₁) + (βd−βn)·bₜ₋₁) / βd⌋
-
-    over values pre-rounded to ``scale`` integer units; the one-step
-    forecast lₜ+bₜ rides along. Identical across partitionings, re-runs
-    and engines — the oracle replays it as a recursive CTE carrying the
-    same two integers (with the floor-division spelled out, since SQL
-    ``//`` truncates). Serial per key, so it runs as ``applyInPandas``
-    over key groups with two integers of state; for keys with unbounded
-    histories apply the ``ewma_smooth_chunked`` epoch-slicing pattern —
-    the carried state is (l, b) instead of one integer, nothing else
-    changes. NULL values/timestamps are excluded (mirrored in the
-    oracle). Output: keys + tiebreak + (level, trend, forecast), each
-    an exact multiple of 1/scale. Engine addition; no reference
-    counterpart.
-    """
-    out_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.select(*keys, tiebreak_col).schema.fields
-    )
-    schema = f"{out_fields}, level double, trend double, forecast double"
-    enc = (
-        df.filter(F.col(value_col).isNotNull() & F.col(ts_col).isNotNull())
-        .select(
-            *keys,
-            tiebreak_col,
-            F.col(ts_col).alias("__ts"),
-            F.round(F.col(value_col).cast("double") * scale)
-            .cast("long")
-            .alias("__x"),
-        )
-    )
-    def smooth(pdf):
-        pdf = pdf.sort_values(["__ts", tiebreak_col], kind="mergesort")
-        levels, trends, _, _ = _holt_series(
-            pdf["__x"], alpha_num, alpha_den, beta_num, beta_den,
-            None, 0,
-        )
-        out = pdf[[*keys, tiebreak_col]].copy()
-        out["level"] = [v / scale for v in levels]
-        out["trend"] = [v / scale for v in trends]
-        out["forecast"] = [
-            (lv + tr) / scale for lv, tr in zip(levels, trends)
-        ]
-        return out
-
-    return enc.groupBy(*keys).applyInPandas(smooth, schema)
-
-
-def _holt_series(xs, alpha_num, alpha_den, beta_num, beta_den, lvl, trd):
-    """The integer Holt recurrence over one ordered series, resumable
-    from carried (lvl, trd) state (lvl None = fresh series). Returns
-    (levels, trends, lvl, trd) — all scaled integers."""
-    a_keep = alpha_den - alpha_num
-    b_keep = beta_den - beta_num
-    levels, trends = [], []
-    for x in xs:
-        x = int(x)
-        if lvl is None:
-            lvl, trd = x, 0
-        else:
-            nl = (alpha_num * x + a_keep * (lvl + trd)) // alpha_den
-            trd = (beta_num * (nl - lvl) + b_keep * trd) // beta_den
-            lvl = nl
-        levels.append(lvl)
-        trends.append(trd)
-    return levels, trends, lvl, trd
-
-
-def holt_fold(
-    batch: DataFrame,
-    state: DataFrame | None,
-    keys: list[str],
-    ts_col: str,
-    value_col: str,
-    tiebreak_col: str,
-    alpha_num: int = 1,
-    alpha_den: int = 4,
-    beta_num: int = 1,
-    beta_den: int = 8,
-    scale: int = 1_000_000,
-) -> tuple[DataFrame, DataFrame]:
-    """``holt_smooth`` for continuous ingest: fold ONE time-slice
-    against a key-sized carried (level, trend) state and return
-    ``(batch_output, new_state)`` — the foreachBatch resident, the
-    cusum_fold contract with two integers of carried state instead of
-    four. Because the recurrence is integer-exact, a chunked fold is
-    BIT-IDENTICAL to the one-shot smoother (pinned in
-    tests/test_streaming.py). ``state`` columns: keys + (l long,
-    b long); pass None to start. Keys absent from the batch carry
-    through untouched. Batches must arrive in (ts, tiebreak) order per
-    key — the standard append-stream contract.
-    """
-    spark = batch.sparkSession
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in batch.select(*keys).schema.fields
-    )
-    state_schema = f"{key_schema}, l long, b long"
-    if state is None:
-        state = spark.createDataFrame([], state_schema)
-    enc = (
-        batch.filter(
-            F.col(value_col).isNotNull() & F.col(ts_col).isNotNull()
-        )
-        .select(
-            *keys,
-            tiebreak_col,
-            F.col(ts_col).alias("__ts"),
-            F.round(F.col(value_col).cast("double") * scale)
-            .cast("long")
-            .alias("__x"),
-        )
-        .join(state, keys, "left")
-    )
-    out_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in batch.select(*keys, tiebreak_col).schema.fields
-    )
-    schema = (
-        f"{out_fields}, level double, trend double, forecast double,"
-        f" __l long, __b long, __last int"
-    )
-
-    def smooth(pdf):
-        pdf = pdf.sort_values(["__ts", tiebreak_col], kind="mergesort")
-        l0 = pdf["l"].iloc[0]
-        lvl = None if pd.isna(l0) else int(l0)
-        trd = 0 if lvl is None else int(pdf["b"].iloc[0])
-        levels, trends, lvl, trd = _holt_series(
-            pdf["__x"], alpha_num, alpha_den, beta_num, beta_den,
-            lvl, trd,
-        )
-        out = pdf[[*keys, tiebreak_col]].copy()
-        out["level"] = [v / scale for v in levels]
-        out["trend"] = [v / scale for v in trends]
-        out["forecast"] = [
-            (lv + tr) / scale for lv, tr in zip(levels, trends)
-        ]
-        out["__l"] = lvl
-        out["__b"] = trd
-        flags = [0] * len(out)
-        if flags:
-            flags[-1] = 1
-        out["__last"] = flags
-        return out
-
-    res = enc.groupBy(*keys).applyInPandas(smooth, schema)
-    out = res.select(*keys, tiebreak_col, "level", "trend", "forecast")
-    new_from_batch = res.filter(F.col("__last") == 1).select(
-        *keys, F.col("__l").alias("l"), F.col("__b").alias("b")
-    )
-    untouched = state.join(
-        enc.select(*keys).distinct(), keys, "left_anti"
-    )
-    return out, new_from_batch.unionByName(untouched)
 
 
 def seasonal_anomaly(

@@ -80,7 +80,8 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession with the engine's tuned defaults."""
+    """Build (or fetch) a SparkSession with the engine's tuned defaults,
+    with this package shipped to its Python workers (``_ship_package``)."""
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "*")
     shuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
     builder = (
@@ -117,7 +118,9 @@ def get_spark(
     )
     for k, v in {**RUNTIME_CONF, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    _ship_package(spark)
+    return spark
 
 
 def cut(df: DataFrame, eager: bool = False) -> DataFrame:

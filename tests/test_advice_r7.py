@@ -22,18 +22,11 @@ import duckdb
 import pandas as pd
 
 from calp_cva_tracking_pipeline_spark.catalog.scale import (
-    EV_ANOMALY_SQL,
     PF_REGRESSION_SQL,
     RT_OHLC_SQL,
-    TS_EWMA_SQL,
 )
 from calp_cva_tracking_pipeline_spark.operators.profiling import group_ols
 from calp_cva_tracking_pipeline_spark.operators.rollup import ohlc_downsample
-from calp_cva_tracking_pipeline_spark.operators.temporal import (
-
-    ewma_smooth,
-    rolling_anomaly,
-)
 
 T0 = dt.datetime(2024, 1, 1)
 
@@ -44,108 +37,6 @@ def _duck_on(frames: dict[str, pd.DataFrame]) -> duckdb.DuckDBPyConnection:
         con.register(f"__{name}", pdf)
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM __{name}")
     return con
-
-
-# ---------------------------------------------------------------------------
-# TS_EWMA_SQL // was truncate-toward-zero; kernel floors. Negative inputs
-# with a non-divisible numerator used to diverge (python -2e-06 vs duck
-# -1e-06 on the advisor's repro).
-# ---------------------------------------------------------------------------
-
-
-def test_ewma_oracle_floors_on_negative_inputs(spark):
-    rows = [
-        # one user, values chosen so the recurrence numerator goes negative
-        # and is NOT divisible by alpha_den=4 at several steps
-        (1, 0, T0, -0.000007),
-        (1, 1, T0 + dt.timedelta(minutes=1), 0.000001),
-        (1, 2, T0 + dt.timedelta(minutes=2), -0.000003),
-        (1, 3, T0 + dt.timedelta(minutes=3), -1.25),
-        (1, 4, T0 + dt.timedelta(minutes=4), 0.33),
-    ]
-    df = spark.createDataFrame(
-        rows, "user_id bigint, event_id bigint, ts timestamp, value double"
-    )
-    got = {
-        r.event_id: r.ewma
-        for r in ewma_smooth(
-            df, ["user_id"], "ts", "value", "event_id"
-        ).collect()
-    }
-
-    # python floor reference (the kernel's own law)
-    s = None
-    want = {}
-    for _, i, _, v in rows:
-        x = round(v * 1_000_000)
-        s = x if s is None else (x + 3 * s) // 4
-        want[i] = s / 1_000_000
-    assert got == want
-
-    # the REAL catalog oracle must replay it identically now that the //
-    # is the explicit floor form
-    con = _duck_on(
-        {
-            "events": pd.DataFrame(
-                rows, columns=["user_id", "event_id", "ts", "value"]
-            )
-        }
-    )
-    oracle = {
-        r[1]: r[2]
-        for r in con.execute(TS_EWMA_SQL).fetchall()
-    }
-    assert oracle == want
-
-
-# ---------------------------------------------------------------------------
-# rolling_anomaly counted NULL-value rows into the window n while Σx/Σx²
-# skipped them; both engines now drop NULL value/ts rows pre-window.
-# ---------------------------------------------------------------------------
-
-
-def test_rolling_anomaly_ignores_null_rows_in_window_population(spark):
-    # 10 calm non-null points + 1 spike = n reaches min_points=10 exactly
-    # at the spike; 5 interleaved NULL rows must not inflate n or shift
-    # the mean.
-    rows = []
-    for i in range(10):
-        rows.append((1, i, T0 + dt.timedelta(hours=i), 10.0))
-    for j in range(5):
-        rows.append((1, 100 + j, T0 + dt.timedelta(hours=j, minutes=30), None))
-    rows.append((1, 999, T0 + dt.timedelta(hours=10), 1000.0))
-    df = spark.createDataFrame(
-        rows, "user_id bigint, event_id bigint, ts timestamp, value double"
-    )
-    out = rolling_anomaly(
-        df,
-        keys=["user_id"],
-        ts_col="ts",
-        value_col="value",
-        id_col="event_id",
-        window_spec="7 days",
-        z_threshold=3.0,
-        min_points=10,
-    ).collect()
-    assert [r.event_id for r in out] == [999]
-
-    # hand-computed z over the 11 NON-NULL rows only
-    xs = [1000] * 10 + [100000]  # cent units
-    n, s1, s2 = len(xs), sum(xs), sum(x * x for x in xs)
-    var = (n * s2 - s1 * s1) / (n * (n - 1))
-    z = round((xs[-1] - s1 / n) / var**0.5, 6)
-    assert out[0].z == z
-
-    # oracle replays the same exclusion on the same frame
-    con = _duck_on(
-        {
-            "events": pd.DataFrame(
-                rows, columns=["user_id", "event_id", "ts", "value"]
-            ).astype({"value": "float64"})
-        }
-    )
-    oracle = con.execute(EV_ANOMALY_SQL).fetchall()
-    assert [(r[1], r[4]) for r in oracle] == [(999, z)]
 
 
 # ---------------------------------------------------------------------------

@@ -32,10 +32,6 @@ from calp_cva_tracking_pipeline_spark.operators.profiling import (
 from calp_cva_tracking_pipeline_spark.operators.rollup import (
     resample_interpolate,
 )
-from calp_cva_tracking_pipeline_spark.operators.temporal import (
-    ewma_smooth,
-    ewma_smooth_chunked,
-)
 from calp_cva_tracking_pipeline_spark.operators.textops import (
 
     pmi_collocations,
@@ -159,45 +155,3 @@ def test_resample_grid_correct_for_pre_1970_timestamps(spark):
     assert got[dt.datetime(1970, 1, 1, 0, 0)] == (25.0, False)
 
 
-# ---------------------------------------------------------------------------
-# ewma_smooth_chunked seed fidelity: the carried state used to be
-# round(ewma*scale) on a double, silently diverging from ewma_smooth
-# once |s| >= 2^53 micro-units. The kernel now emits the raw integer
-# state and seeds from it directly.
-# ---------------------------------------------------------------------------
-
-
-def test_ewma_chunked_exact_beyond_double_precision(spark):
-    # values ~4e12 at scale=1e6 → integer state ~4e18: above 2^53
-    # (~9.0e15) where doubles lose integer exactness, below 2^63.
-    t0 = dt.datetime(2024, 1, 1)
-    vals = [4.0e12 + k * 1.000001e6 + 0.33 for k in range(8)]
-    rows = [
-        (1, i, t0 + dt.timedelta(days=20 * i), v)
-        for i, v in enumerate(vals)
-    ]
-    df = spark.createDataFrame(
-        rows, "user_id bigint, event_id bigint, ts timestamp, value double"
-    )
-    flat = {
-        r.event_id: r.ewma
-        for r in ewma_smooth(df, ["user_id"], "ts", "value", "event_id").collect()
-    }
-    chunked = {
-        r.event_id: r.ewma
-        for r in ewma_smooth_chunked(
-            df, ["user_id"], "ts", "value", "event_id", epoch="30 days"
-        ).collect()
-    }
-    # 8 rows at 20-day spacing / 30-day epochs → ≥4 epoch boundaries
-    # crossed; every row must match the unchunked integer recurrence
-    # bit-for-bit (exact double equality, no tolerance).
-    assert chunked == flat
-
-    # and the integer states really do exceed 2^53 (test is vacuous
-    # otherwise)
-    s = None
-    for _, _, _, v in rows:
-        x = round(v * 1_000_000)
-        s = x if s is None else (x + 3 * s) // 4
-        assert abs(s) > 2**53

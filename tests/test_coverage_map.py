@@ -141,7 +141,8 @@ NON_SQL_QUERIES = {"pk_sequences"}
 # pf_dq_checks (pf_ref_integrity keeps the rule-ledger family; the dq
 # fold stays batch≡stream-pinned in test_streaming.py), ts_cusum
 # (ts_ewma gates the keyed cumulative fold; cusum fold likewise
-# stream-pinned), ev_json_stats (semistruct parsing keeps 3-SF parity
+# stream-pinned in test_streaming.py and slicing-pinned in
+# test_temporal.py), ev_json_stats (semistruct parsing keeps 3-SF parity
 # with its schema-inference twin), cdc_snapshot_diff (cdc_upsert keeps
 # the CDC merge kernel gated).
 DRIVER_GATE = [

@@ -3,7 +3,7 @@ reference implementations — same one-big-DataFrame seeded-random pattern
 as test_cdc_funnel_props (hypothesis-per-example would pay one Spark job
 per example). Catches the pathologies the star-schema oracle data can't:
 touching/nested/zero-length intervals, tied gap timestamps, degenerate
-one-row groups, random slice boundaries on the streaming fold.
+one-row groups. (The cusum_fold slicing check lives in test_temporal.py.)
 """
 
 from __future__ import annotations
@@ -11,8 +11,6 @@ from __future__ import annotations
 import datetime as dt
 import math
 import random
-
-from pyspark.sql import functions as F
 
 _D0 = dt.datetime(2024, 1, 1)
 
@@ -86,64 +84,6 @@ def test_gini_matches_python_reference(spark):
         want = round((2 * sr - (n + 1) * s1) / (n * s1), 6)
         assert got[g][0] == n
         assert math.isclose(got[g][1], want, abs_tol=1e-9), g
-
-
-def test_cusum_fold_random_slicing_equals_one_shot(spark):
-    from calp_cva_tracking_pipeline_spark.operators.temporal import (
-        cusum_detect,
-        cusum_fold,
-    )
-
-    rng = random.Random(9903)
-    rows = []
-    eid = 0
-    for u in range(12):
-        t = 0
-        for _ in range(rng.randint(1, 40)):
-            t += rng.randint(0, 3)  # dense ties across users
-            rows.append(
-                (u, eid, _D0 + dt.timedelta(minutes=t),
-                 rng.uniform(30.0, 70.0))
-            )
-            eid += 1
-    df = spark.createDataFrame(
-        rows, "user_id long, event_id long, ts timestamp, value double"
-    )
-    params = dict(
-        keys=["user_id"], ts_col="ts", value_col="value",
-        tiebreak_col="event_id", target=50.0, slack=5.0, threshold=60.0,
-    )
-    one_shot = {
-        (r.user_id, r.event_id): (
-            r.cusum_pos, r.cusum_neg, r.alarm_pos, r.alarm_neg
-        )
-        for r in cusum_detect(df, **params).collect()
-    }
-    # three random GLOBAL time slicings, folded sequentially
-    for trial in range(3):
-        cuts = sorted(
-            rng.sample(range(1, 120), rng.randint(1, 4))
-        )
-        bounds = [_D0 + dt.timedelta(minutes=c) for c in cuts]
-        state = None
-        folded = {}
-        lo = None
-        for hi in [*bounds, None]:
-            cond = F.lit(True)
-            if lo is not None:
-                cond = cond & (F.col("ts") > lo)
-            if hi is not None:
-                cond = cond & (F.col("ts") <= hi)
-            batch = df.filter(cond)
-            out, state = cusum_fold(batch, state, **params)
-            for r in out.collect():
-                folded[(r.user_id, r.event_id)] = (
-                    r.cusum_pos, r.cusum_neg, r.alarm_pos, r.alarm_neg
-                )
-            # materialize state like a real foreachBatch loop would
-            state = spark.createDataFrame(state.collect(), state.schema)
-            lo = hi
-        assert folded == one_shot, f"trial {trial} cuts {cuts}"
 
 
 def test_interarrival_matches_python_reference(spark):

@@ -1,7 +1,7 @@
-"""Sixteenth-wave operators (round 8): CUSUM drift detection, basket
-association rules, FK integrity audit, label-propagation communities —
-hand-computed expectations (oracle parity runs separately in
-test_oracle_parity.py via the catalog entries)."""
+"""Sixteenth-wave operators (round 8): basket association rules, FK
+integrity audit, label-propagation communities — hand-computed
+expectations (oracle parity runs separately in test_oracle_parity.py via
+the catalog entries; the CUSUM tests live in test_temporal.py)."""
 
 from __future__ import annotations
 
@@ -19,80 +19,6 @@ from calp_cva_tracking_pipeline_spark.operators.graph import (
 from calp_cva_tracking_pipeline_spark.operators.profiling import (
     ref_integrity,
 )
-from calp_cva_tracking_pipeline_spark.operators.temporal import cusum_detect
-
-
-# --- CUSUM ---
-
-
-def _cusum_naive(xs, target, slack, h, scale=1_000_000):
-    """Page's recurrence, literally — the serial definition the closed
-    form must reproduce."""
-    t, k, hh = (round(v * scale) for v in (target, slack, h))
-    sp = sn = 0
-    out = []
-    for x in xs:
-        xi = round(x * scale)
-        sp = max(0, sp + (xi - t - k))
-        sn = max(0, sn + (t - xi - k))
-        out.append((sp / scale, sn / scale, sp > hh, sn > hh))
-    return out
-
-
-def test_cusum_closed_form_matches_recurrence(spark):
-    # Mixed signs, a drift-up burst, a drift-down tail, and values that
-    # cross the threshold both ways.
-    xs = [5.0, -3.25, 12.5, 40.0, 41.0, 39.5, -60.0, -55.0, -58.5, 10.0]
-    rows = [
-        Row(k="a", ts=i, ev=i, v=x) for i, x in enumerate(xs)
-    ]
-    df = spark.createDataFrame(rows)
-    got = (
-        cusum_detect(
-            df,
-            keys=["k"],
-            ts_col="ts",
-            value_col="v",
-            tiebreak_col="ev",
-            target=2.0,
-            slack=1.0,
-            threshold=30.0,
-        )
-        .orderBy("ev")
-        .collect()
-    )
-    want = _cusum_naive(xs, 2.0, 1.0, 30.0)
-    assert [
-        (r.cusum_pos, r.cusum_neg, r.alarm_pos, r.alarm_neg) for r in got
-    ] == want
-    assert any(r.alarm_pos for r in got) and any(r.alarm_neg for r in got)
-
-
-def test_cusum_keys_independent_and_nulls_dropped(spark):
-    rows = [
-        Row(k="a", ts=1, ev=1, v=100.0),
-        Row(k="a", ts=2, ev=2, v=None),  # dropped, not a zero
-        Row(k="a", ts=3, ev=3, v=100.0),
-        Row(k="b", ts=1, ev=4, v=0.0),  # separate key: no carryover
-    ]
-    df = spark.createDataFrame(rows)
-    got = {
-        r.ev: (r.cusum_pos, r.cusum_neg)
-        for r in cusum_detect(
-            df,
-            keys=["k"],
-            ts_col="ts",
-            value_col="v",
-            tiebreak_col="ev",
-            target=10.0,
-            slack=0.0,
-            threshold=1000.0,
-        ).collect()
-    }
-    assert 2 not in got
-    assert got[1] == (90.0, 0.0)
-    assert got[3] == (180.0, 0.0)  # null row contributed nothing
-    assert got[4] == (0.0, 10.0)
 
 
 # --- association rules ---

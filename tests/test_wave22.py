@@ -511,49 +511,6 @@ def test_interval_overlap_join_bins_and_boundaries(spark):
     }
 
 
-def test_holt_tracks_linear_ramp_and_replays_exactly(spark):
-    import datetime as dt
-
-    from calp_cva_tracking_pipeline_spark.operators.temporal import (
-        holt_smooth,
-    )
-
-    t0 = dt.datetime(2024, 1, 1)
-    # perfect ramp x_t = 10*t: Holt's trend converges toward 10/step
-    rows = [
-        (1, i, t0 + dt.timedelta(hours=i), float(10 * i))
-        for i in range(60)
-    ]
-    df = spark.createDataFrame(
-        rows, "user_id long, event_id long, ts timestamp, value double"
-    )
-    out = {
-        r.event_id: r
-        for r in holt_smooth(
-            df, ["user_id"], "ts", "value", "event_id"
-        ).collect()
-    }
-    # exact Python replay of the integer recurrence
-    lvl, trd = None, 0
-    for i in range(60):
-        x = 10 * i * 1_000_000
-        if lvl is None:
-            lvl, trd = x, 0
-        else:
-            nl = (1 * x + 3 * (lvl + trd)) // 4
-            trd = (1 * (nl - lvl) + 7 * trd) // 8
-            lvl = nl
-        r = out[i]
-        assert r.level == lvl / 1e6 and r.trend == trd / 1e6
-        assert r.forecast == (lvl + trd) / 1e6
-    # late in the ramp the trend estimate is positive and substantial,
-    # and the one-step-AHEAD forecast beats the pure level at
-    # predicting the next value x_60 = 600
-    last = out[59]
-    assert last.trend > 5.0
-    assert abs(last.forecast - 600.0) < abs(last.level - 600.0)
-
-
 def test_seasonal_anomaly_ignores_rhythm_flags_spike(spark):
     import datetime as dt
 

@@ -1,9 +1,9 @@
-"""Eighth-wave operators: integer-exact EWMA, rolling z-score anomalies,
-inverted-index posting lists, int8 quantization, k-anonymity audit."""
+"""Eighth-wave operators: inverted-index posting lists, int8
+quantization, k-anonymity audit (the EWMA and rolling-anomaly tests live
+in test_temporal.py)."""
 
 from __future__ import annotations
 
-import datetime as dt
 import random
 
 from pyspark.sql import functions as F
@@ -11,117 +11,10 @@ from pyspark.sql import functions as F
 from calp_cva_tracking_pipeline_spark.operators.linalg import quantize_int8
 from calp_cva_tracking_pipeline_spark.operators.profiling import k_anonymity
 from calp_cva_tracking_pipeline_spark.operators.retrieval import posting_lists
-from calp_cva_tracking_pipeline_spark.operators.temporal import (
-    ewma_smooth,
-    rolling_anomaly,
-)
 
 
 def _executed(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-# ---------------------------------------------------------------------------
-# ewma_smooth
-# ---------------------------------------------------------------------------
-
-
-def _ewma_ref(rows, alpha_num=1, alpha_den=4, scale=1_000_000):
-    """Pure-python integer recurrence reference."""
-    import math
-
-    state: dict = {}
-    out = {}
-    for u, i, ts, v in sorted(rows, key=lambda r: (r[0], r[2], r[1])):
-        x = int(math.floor(v * scale + 0.5))
-        s = state.get(u)
-        s = x if s is None else (alpha_num * x + (alpha_den - alpha_num) * s) // alpha_den
-        state[u] = s
-        out[i] = s / scale
-    return out
-
-
-def test_ewma_matches_reference_and_layout_independent(spark):
-    rng = random.Random(31)
-    t0 = dt.datetime(2024, 1, 1)
-    rows = [
-        (
-            rng.randrange(5),
-            i,
-            t0 + dt.timedelta(minutes=rng.randrange(10000)),
-            round(rng.uniform(0, 300), 2),
-        )
-        for i in range(400)
-    ]
-    df = spark.createDataFrame(
-        rows, "user_id bigint, event_id bigint, ts timestamp, value double"
-    )
-    want = _ewma_ref(rows)
-
-    def run(d):
-        got = ewma_smooth(
-            d, ["user_id"], "ts", "value", "event_id"
-        ).collect()
-        return {r["event_id"]: r["ewma"] for r in got}
-
-    got = run(df)
-    assert got == want
-    assert run(df.repartition(9, "value")) == want  # bit-identical, any layout
-
-
-def test_ewma_excludes_null_rows_from_recurrence(spark):
-    t0 = dt.datetime(2024, 1, 1)
-    rows = [
-        (1, 1, t0, 100.0),
-        (1, 2, t0 + dt.timedelta(hours=1), None),
-        (1, 3, t0 + dt.timedelta(hours=2), 0.0),
-    ]
-    df = spark.createDataFrame(
-        rows, "user_id bigint, event_id bigint, ts timestamp, value double"
-    )
-    got = {r["event_id"]: r["ewma"] for r in ewma_smooth(
-        df, ["user_id"], "ts", "value", "event_id"
-    ).collect()}
-    assert set(got) == {1, 3}
-    assert got[3] == (0 + 3 * 100_000_000) // 4 / 1_000_000  # null row skipped
-
-
-# ---------------------------------------------------------------------------
-# rolling_anomaly
-# ---------------------------------------------------------------------------
-
-
-def test_rolling_anomaly_flags_planted_spike_only(spark):
-    t0 = dt.datetime(2024, 1, 1)
-    rows = [
-        (1, i, t0 + dt.timedelta(hours=i), 10.0 + (i % 3))
-        for i in range(40)
-    ]
-    rows.append((1, 99, t0 + dt.timedelta(hours=41), 500.0))
-    # another user with too-short history: never flagged
-    rows += [(2, 200 + i, t0 + dt.timedelta(hours=i), float(i * 100)) for i in range(5)]
-    df = spark.createDataFrame(
-        rows, "user_id bigint, event_id bigint, ts timestamp, value double"
-    )
-    out = rolling_anomaly(
-        df, ["user_id"], "ts", "value", "event_id", "7 days", 3.0, 10
-    ).collect()
-    assert [r["event_id"] for r in out] == [99]
-    assert out[0]["z"] > 3.0
-
-
-def test_rolling_anomaly_constant_series_never_divides_by_zero(spark):
-    t0 = dt.datetime(2024, 1, 1)
-    rows = [(1, i, t0 + dt.timedelta(hours=i), 7.0) for i in range(30)]
-    df = spark.createDataFrame(
-        rows, "user_id bigint, event_id bigint, ts timestamp, value double"
-    )
-    assert (
-        rolling_anomaly(
-            df, ["user_id"], "ts", "value", "event_id", "7 days", 3.0, 10
-        ).count()
-        == 0
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -208,57 +101,3 @@ def test_k_anonymity_flags_small_classes(spark):
     assert got[("FR", "a")] == (1, True)
 
 
-def test_ewma_chunked_equals_oneshot(spark):
-    """ewma_smooth_chunked slices time into epochs and carries the
-    one-integer state across them; the recurrence composes at epoch
-    boundaries, so it must equal the one-shot kernel ROW FOR ROW — on
-    data with negative values, keys silent for whole epochs (their state
-    must carry), ties, and keys that appear mid-stream."""
-    from calp_cva_tracking_pipeline_spark.operators.temporal import (
-        ewma_smooth_chunked,
-    )
-
-    rng = random.Random(43)
-    t0 = dt.datetime(2024, 1, 1)
-    rows = []
-    for i in range(600):
-        u = rng.randrange(6)
-        # user 3 goes silent between day 3 and day 11 (skips >2 epochs)
-        day = rng.choice([0, 1, 2, 11, 12]) if u == 3 else rng.uniform(0, 14)
-        rows.append(
-            (
-                u,
-                i,
-                t0 + dt.timedelta(days=day, seconds=rng.randrange(86400)),
-                round(rng.uniform(-200, 300), 2),
-            )
-        )
-    # user 5 appears only in the last epoch
-    rows = [r for r in rows if not (r[0] == 5 and r[3] < 250)]
-    df = spark.createDataFrame(
-        rows, "user_id bigint, event_id bigint, ts timestamp, value double"
-    )
-    oneshot = {
-        r.event_id: r.ewma
-        for r in ewma_smooth(df, ["user_id"], "ts", "value", "event_id").collect()
-    }
-    chunked = {
-        r.event_id: r.ewma
-        for r in ewma_smooth_chunked(
-            df, ["user_id"], "ts", "value", "event_id", epoch="2 days"
-        ).collect()
-    }
-    assert chunked == oneshot
-    # layout-independence of the chunked path
-    chunked2 = {
-        r.event_id: r.ewma
-        for r in ewma_smooth_chunked(
-            df.repartition(13, "event_id"),
-            ["user_id"],
-            "ts",
-            "value",
-            "event_id",
-            epoch="2 days",
-        ).collect()
-    }
-    assert chunked2 == oneshot

@@ -64,3 +64,43 @@ def test_ship_package_adds_the_zip_named_for_the_current_sources(
     with zipfile.ZipFile(added[0]) as zf:
         member = f"{src.name}/operators/similarity.py"
         assert zf.read(member) == (src / "operators" / "similarity.py").read_bytes()
+
+
+def test_get_spark_ships_the_package_to_python_workers(tmp_path):
+    """A driver run outside the repo root, on a session from ``get_spark``,
+    runs an ``applyInPandas`` operator: its Python workers import the
+    package from the shipped zip, since they do not see the driver's
+    ``sys.path``."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    root = Path(pkg.__file__).resolve().parent.parent
+    script = tmp_path / "drive.py"
+    script.write_text(textwrap.dedent(f"""
+        import datetime as dt
+        import sys
+
+        sys.path.insert(0, {str(root)!r})
+        from calp_cva_tracking_pipeline_spark.operators.temporal import (
+            holt_smooth,
+        )
+        from calp_cva_tracking_pipeline_spark.session import get_spark
+
+        spark = get_spark(cpus="2", shuffle_partitions=2)
+        t0 = dt.datetime(2024, 1, 1)
+        df = spark.createDataFrame(
+            [(1, i, t0 + dt.timedelta(hours=i), float(i)) for i in range(4)],
+            "user_id long, event_id long, ts timestamp, value double",
+        )
+        rows = holt_smooth(df, ["user_id"], "ts", "value", "event_id")
+        print("ROWS", len(rows.collect()))
+    """))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    run = subprocess.run(
+        [sys.executable, str(script)], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]
+    assert "ROWS 4" in run.stdout
