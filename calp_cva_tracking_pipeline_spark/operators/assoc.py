@@ -23,14 +23,14 @@ Scale design:
 - **Pair expansion without a self-join**: a within-basket self-join
   would plan the (distinct + frequent-filter) upstream TWICE (measured:
   Spark never fires exchange reuse for derived self-joins — SCALE.md);
-  instead baskets group once, items collect sorted into an array, and
-  ordered pairs unroll JVM-side with nested ``transform`` + ``flatten``
-  over the array — one exchange, upstream planned once. Per-basket cost
-  is C(|basket|, 2); a degenerate mega-basket (one basket holding the
-  whole catalog) would emit a quadratic pair list, so ``max_basket``
-  drops baskets above a size cap — the same explicit-volume-guard
-  pattern as the dedup bucket caps, and a cap the a-priori literature
-  applies routinely (oversized baskets carry near-zero signal per pair).
+  instead pairs are ``dedup.bucket_pairs`` with the basket as the
+  bucket — one exchange, upstream planned once. Per-basket cost is
+  C(|basket|, 2); a degenerate mega-basket (one basket holding the
+  whole catalog) would emit a quadratic pair list, so ``max_basket`` is
+  the kernel's bucket cap, which drops larger baskets before anything
+  is collected — the dedup tiers' explicit volume guard, and a cap the
+  a-priori literature applies routinely (oversized baskets carry
+  near-zero signal per pair).
 - **Exact integer counts end to end**: support/confidence/lift are
   ratios of 64-bit counts evaluated in one IEEE double division each
   and rounded to 6 dp — bit-identical across engines, so the DuckDB
@@ -46,6 +46,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from calp_cva_tracking_pipeline_spark.operators.dedup import bucket_pairs
 
 
 def association_rules(
@@ -94,30 +96,12 @@ def association_rules(
     # pair pipeline).
     kept = bi.join(freq, "__i").select("__b", "__i", "__in")
     pairs = (
-        kept.groupBy("__b")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("__i", "__in"))
-            ).alias("__items")
-        )
-        .filter(F.size("__items") <= max_basket)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(__items, (x, i) ->"
-                    " transform(slice(__items, i + 2,"
-                    "                 size(__items) - i - 1),"
-                    "   y -> struct(x.__i AS ia, x.__in AS na,"
-                    "               y.__i AS ic, y.__in AS nc))))"
-                )
-            ).alias("__p")
-        )
-        .select("__p.*")
-        .groupBy("ia", "ic")
+        bucket_pairs(kept, ["__b"], ["__i", "__in"], max_basket)
+        .groupBy(F.col("__i_a").alias("ia"), F.col("__i_b").alias("ic"))
         .agg(
             F.count(F.lit(1)).alias("pair_n"),
-            F.max("na").alias("__an"),
-            F.max("nc").alias("__cn"),
+            F.max("__in_a").alias("__an"),
+            F.max("__in_b").alias("__cn"),
         )
         .filter(F.col("pair_n") >= min_pair_count)
     )

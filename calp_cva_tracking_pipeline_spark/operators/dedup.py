@@ -6,6 +6,19 @@ exact-hash, MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine. All are
 expressed as DataFrame ops whose only shuffles are the unavoidable
 group-by-key exchanges; candidate generation is always bucketed (LSH bands /
 hamming blocks) so no all-pairs comparison ever materializes.
+
+Every bucket → candidate step is ``bucket_pairs``: group one row per
+(bucket, member) by the bucket key, collect the sorted members, expand each
+unordered pair in-array (``_pairs``, the package's one spelling of the
+expansion) and explode — one exchange, shared with the optional bucket cap,
+never a bucket-key self-join (Spark replans a derived self-join's whole
+upstream twice, 0 ReusedExchange — measured on minhash). Each caller keeps
+its own verify tail. Callers: ``minhash_lsh_candidates``,
+``neardup_incremental``, ``simhash_candidates``, ``passage_overlap_pairs``,
+``winnow_overlap_pairs``, ``split_leakage_audit`` (here);
+``graph.adamic_adar``, ``graph.square_census``, ``phash.image_phash_pairs``,
+``videoseq.video_neardup_pairs``, ``assoc.association_rules``; the
+catalog's ``_co_edges`` calls ``_pairs`` on its own ``collect_set``.
 """
 
 from __future__ import annotations
@@ -148,10 +161,22 @@ def minhash_signatures(
     return sig.select("__id", F.expr(f"array({sig_array}) AS __sig"))
 
 
+def _check_bands(num_hashes: int, bands: int) -> None:
+    """Banding splits the signature into ``bands`` equal slices: a count
+    below 1 or one that does not divide ``num_hashes`` would leave hashes
+    unused, or (more bands than hashes) make every key ``''`` and turn
+    banding into all-pairs."""
+    if bands < 1 or num_hashes % bands:
+        raise ValueError(
+            f"bands={bands} must divide num_hashes={num_hashes}"
+        )
+
+
 def _band_rows(sig_df: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     """(__id, band, key) LSH band rows from a signature table. One parsed
     expression per band (same tree as the Column-API spelling, far fewer
     py4j round trips — see minhash_signatures)."""
+    _check_bands(num_hashes, bands)
     rows_per_band = num_hashes // bands
     band_structs = ", ".join(
         f"struct({b} AS band, array_join(transform("
@@ -162,6 +187,63 @@ def _band_rows(sig_df: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     return sig_df.select(
         "__id", F.expr(f"explode(array({band_structs})) AS b")
     ).select("__id", F.col("b.band").alias("band"), F.col("b.key").alias("key"))
+
+
+def _pairs(arr: str, members: str | list[str]) -> Column:
+    """Every unordered pair of the array column ``arr``, in array order,
+    as an array of flat structs: ``<m>_a``/``<m>_b`` for the scalar
+    element ``members``, or for each field of a struct element. Pairs
+    are by position, so a repeated element pairs with itself. One SQL
+    expression: the package's only in-array pair expansion."""
+    if isinstance(members, str):
+        sides = {members: ""}
+    else:
+        sides = {m: f".`{m}`" for m in members}
+    body = ", ".join(
+        f"{v}{get} AS `{m}_{side}`"
+        for m, get in sides.items()
+        for v, side in (("x", "a"), ("y", "b"))
+    )
+    return F.expr(
+        f"flatten(transform({arr}, (x, i) -> transform("
+        f"slice({arr}, i + 2, size({arr})), y -> struct({body}))))"
+    )
+
+
+def _id_pairs(pairs: DataFrame) -> DataFrame:
+    """(id_a, id_b) of a ``bucket_pairs`` frame over the member ``__id``."""
+    return pairs.select(
+        F.col("__id_a").alias("id_a"), F.col("__id_b").alias("id_b")
+    )
+
+
+def bucket_pairs(
+    rows: DataFrame,
+    keys: list[str],
+    members: str | list[str],
+    cap: int | None = None,
+) -> DataFrame:
+    """One row per unordered member pair of each bucket → (*keys,
+    ``<m>_a``, ``<m>_b`` per member), from ``rows`` holding one row per
+    (bucket, member). Members are ``array_sort(collect_list(…))`` of the
+    one column ``members`` (NULLs skipped), or of a struct of the
+    ``members`` columns, whose first column orders the array; ``_a``
+    precedes ``_b`` in that order. With ``cap`` one count window first
+    drops buckets whose size is outside [2, cap], before anything is
+    collected (a bucket of B emits B(B-1)/2 pairs); it shares the
+    bucket-key exchange with the collect."""
+    if cap is not None:
+        size = F.count(F.lit(1)).over(Window.partitionBy(*keys))
+        rows = rows.withColumn("__bn", size).filter(
+            F.col("__bn").between(2, cap)
+        )
+    m = F.col(members) if isinstance(members, str) else F.struct(*members)
+    return (
+        rows.groupBy(*keys)
+        .agg(F.array_sort(F.collect_list(m)).alias("__m"))
+        .select(*keys, F.explode(_pairs("__m", members)).alias("__p"))
+        .select(*keys, "__p.*")
+    )
 
 
 def minhash_lsh_candidates(
@@ -176,9 +258,9 @@ def minhash_lsh_candidates(
 ) -> DataFrame:
     """MinHash+LSH near-dup candidate pairs (id_a < id_b, distinct).
 
-    Signature → split into ``bands`` bands → explode (id, band_key) →
-    per-bucket collect + in-array pair expansion (see the inline comment
-    for why NOT a band-key self-join). The only shuffle is the band-key
+    Signature → split into ``bands`` bands (``bands`` must divide
+    ``num_hashes``, else ``ValueError``) → explode (id, band_key) →
+    ``bucket_pairs`` on the band key. The only shuffle is the band-key
     exchange; band keys distribute uniformly (they are hashes), so no
     *hash* skew. At 100 TB this is the standard fuzzy-dedup shape:
     candidates ≪ all-pairs.
@@ -208,41 +290,12 @@ def minhash_lsh_candidates(
         df = dedup_exact(df, text_col, id_col)
     sig_df = minhash_signatures(df, id_col, text_col, num_hashes, k)
     banded = _band_rows(sig_df, num_hashes, bands)
-    # Pair generation is a per-bucket groupBy + in-array expansion, NOT a
-    # band-key self-join: Spark plans a self-join as two full copies of the
-    # upstream pipeline (scan → shingle → signatures → banding, verified: 0
-    # ReusedExchange in the executed plan), doubling the dominant cost. One
-    # collect-per-bucket computes it once — and shares the (band, key)
-    # exchange with the cap filter, so the whole candidate step is a single
-    # shuffle. The collected id array is bounded by ``max_bucket_docs``
-    # (buckets above the cap are dropped BEFORE collecting); without a cap
-    # it is bounded by the bucket population, which pre-collapse keeps to
-    # distinct texts — set the cap for adversarial corpora.
-    if max_bucket_docs is not None:
-        bucket_w = Window.partitionBy("band", "key")
-        banded = (
-            banded.withColumn("__bn", F.count("*").over(bucket_w))
-            .filter(F.col("__bn") <= max_bucket_docs)
-            .drop("__bn")
-        )
-    buckets = banded.groupBy("band", "key").agg(
-        F.array_sort(F.collect_list("__id")).alias("__ids")
-    )
-    ids = F.col("__ids")
-    pairs = F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + 2, F.size(ids)),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
-    )
-    return (
-        buckets.select(F.explode(pairs).alias("p"))
-        .select(F.col("p.id_a"), F.col("p.id_b"))
-        .distinct()
-    )
+    # without a cap the collected id array is bounded by the bucket
+    # population, which pre-collapse keeps to distinct texts — set the
+    # cap for adversarial corpora
+    return _id_pairs(
+        bucket_pairs(banded, ["band", "key"], "__id", max_bucket_docs)
+    ).distinct()
 
 
 def ngram_jaccard(
@@ -568,10 +621,9 @@ def neardup_incremental(
     minhash_lsh_candidates' single-pipeline rule, because here the
     re-planned side is the O(batch) side while the alternative (tagged
     union + one groupBy) would SHUFFLE THE ENTIRE STORE every ingest.
-    Recompute the small thing, never move the big thing. Intra pairs use
-    the same per-bucket collect+expand as the full pipeline (no
-    self-join); the store join is an equi-join that plans shuffle-free
-    on a (band, key)-bucketed store.
+    Recompute the small thing, never move the big thing. Intra pairs are
+    ``bucket_pairs``, as in the full pipeline; the store join is an
+    equi-join that plans shuffle-free on a (band, key)-bucketed store.
     """
     if pre_collapse_exact:
         new_batch = dedup_exact(new_batch, text_col, id_col)
@@ -591,22 +643,8 @@ def neardup_incremental(
         .distinct()
         .withColumn("vs_history", F.lit(True))
     )
-    buckets = nb.groupBy("band", "key").agg(
-        F.array_sort(F.collect_list("__id")).alias("__ids")
-    )
-    ids = F.col("__ids")
-    pairs = F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + 2, F.size(ids)),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
-    )
     intra = (
-        buckets.select(F.explode(pairs).alias("p"))
-        .select(F.col("p.id_a"), F.col("p.id_b"))
+        _id_pairs(bucket_pairs(nb, ["band", "key"], "__id"))
         .distinct()
         .withColumn("vs_history", F.lit(False))
     )
@@ -632,8 +670,8 @@ def simhash_candidates(
     (a JVM intrinsic — no token re-scan, unlike MinHash's Jaccard
     verification). Same skew guards as the LSH path: exact-dup
     pre-collapse (identical text ⇒ identical signature ⇒ same buckets)
-    and an optional per-bucket cap; pair expansion is the shared
-    per-bucket collect+expand, one exchange, no self-join.
+    and an optional per-bucket cap; candidates are ``bucket_pairs`` on
+    (block, value).
     """
     if pre_collapse_exact:
         df = dedup_exact(df, text_col, id_col)
@@ -659,46 +697,19 @@ def simhash_candidates(
         "__id", "__simhash",
         F.col("b.blk").alias("blk"), F.col("b.val").alias("val"),
     )
-    if max_bucket_docs is not None:
-        bucket_w = Window.partitionBy("blk", "val")
-        banded = (
-            banded.withColumn("__bn", F.count("*").over(bucket_w))
-            .filter(F.col("__bn") <= max_bucket_docs)
-            .drop("__bn")
-        )
-    buckets = banded.groupBy("blk", "val").agg(
-        F.array_sort(
-            F.collect_list(F.struct("__id", "__simhash"))
-        ).alias("__m")
+    pairs = bucket_pairs(
+        banded, ["blk", "val"], ["__id", "__simhash"], max_bucket_docs
     )
-    m = F.col("__m")
-    pairs = F.flatten(
-        F.transform(
-            m,
-            lambda x, i: F.transform(
-                F.slice(m, i + 2, F.size(m)),
-                lambda y: F.struct(
-                    x["__id"].alias("id_a"),
-                    y["__id"].alias("id_b"),
-                    x["__simhash"].alias("sig_a"),
-                    y["__simhash"].alias("sig_b"),
-                ),
-            ),
+    xor = F.col("__simhash_a").bitwiseXOR(F.col("__simhash_b"))
+    return (
+        pairs.select(
+            F.col("__id_a").alias("id_a"),
+            F.col("__id_b").alias("id_b"),
+            F.bit_count(xor).cast("int").alias("hamming"),
         )
-    )
-    out = (
-        buckets.select(F.explode(pairs).alias("p"))
-        .select("p.id_a", "p.id_b", "p.sig_a", "p.sig_b")
         .distinct()
-        .withColumn(
-            "hamming",
-            F.bit_count(
-                F.col("sig_a").bitwiseXOR(F.col("sig_b"))
-            ).cast("int"),
-        )
         .filter(F.col("hamming") <= max_hamming)
     )
-    return out.select("id_a", "id_b", "hamming")
 
 
 def passage_overlap_pairs(
@@ -724,15 +735,11 @@ def passage_overlap_pairs(
     hash-shuffled rows are 16 bytes wide regardless of span length.
     (Swap in xxhash64 for production ingest if md5 throughput ever shows
     up in a profile; keep stable_hash64 wherever an external engine must
-    reproduce the pairs.) Spans dedupe per document, then a per-span-hash
-    bucket groups sharers: buckets of 1 emit nothing, buckets above
-    ``max_docs_per_window`` are boilerplate (a span in B docs emits
-    B(B-1)/2 pairs — the quadratic-emission guard mirrored from the LSH
-    tiers, and in the SQL oracle) and are dropped whole. Pair expansion
-    is the per-bucket collect + in-array expansion sharing one exchange
-    with the cap filter — never a span-key self-join (a self-join
-    replans the entire tokenize→span→hash upstream twice; 0
-    ReusedExchange, measured on minhash).
+    reproduce the pairs.) Spans dedupe per document, then
+    ``bucket_pairs`` on the span hash groups sharers: buckets above
+    ``max_docs_per_window`` are boilerplate (the quadratic-emission
+    guard mirrored from the LSH tiers, and in the SQL oracle) and are
+    dropped whole.
     """
     base = df.select(
         F.col(id_col).alias("__id"),
@@ -751,30 +758,8 @@ def passage_overlap_pairs(
     hashed = spans.select(
         "__id", stable_hash64(F.col("__span")).alias("__h")
     ).distinct()
-    bucket_w = Window.partitionBy("__h")
-    capped = (
-        hashed.withColumn("__bn", F.count("*").over(bucket_w))
-        .filter(
-            (F.col("__bn") >= 2) & (F.col("__bn") <= max_docs_per_window)
-        )
-        .drop("__bn")
-    )
-    buckets = capped.groupBy("__h").agg(
-        F.array_sort(F.collect_list("__id")).alias("__ids")
-    )
-    ids = F.col("__ids")
-    pairs = F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + 2, F.size(ids)),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
-    )
     return (
-        buckets.select(F.explode(pairs).alias("p"))
-        .select("p.id_a", "p.id_b")
+        _id_pairs(bucket_pairs(hashed, ["__h"], "__id", max_docs_per_window))
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("n_shared"))
     )
@@ -1232,54 +1217,25 @@ def winnow_overlap_pairs(
     min(n_fp_a, n_fp_b) (6 dp, the only float). The MOSS-style
     plagiarism/boilerplate detector over ``winnow_fingerprints``:
     detection is guaranteed for shared token runs >= window+k-1, and
-    the pair-expansion machinery is the LSH-tier discipline — per-
-    fingerprint buckets of 1 emit nothing, buckets above
+    candidates are ``bucket_pairs`` on the fingerprint — buckets above
     ``max_docs_per_fp`` are boilerplate and drop whole (quadratic-
-    emission guard, mirrored in the oracle), expansion is the in-array
-    unrolling sharing one exchange with the cap filter, never a
-    fingerprint-key self-join (which would replan the tokenize→gram→
-    winnow upstream twice).
+    emission guard, mirrored in the oracle).
     """
     fps = winnow_fingerprints(
         df, id_col, text_col=text_col, k=k, window=window
     )
-    cnt_w = Window.partitionBy(id_col)
-    bucket_w = Window.partitionBy("fp")
-    capped = (
-        fps.withColumn("__nfp", F.count("*").over(cnt_w))
-        .withColumn("__bn", F.count("*").over(bucket_w))
-        .filter(
-            (F.col("__bn") >= 2) & (F.col("__bn") <= max_docs_per_fp)
-        )
-        .drop("__bn")
-    )
-    buckets = capped.groupBy("fp").agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col(id_col), F.col("__nfp")))
-        ).alias("__mem")
-    )
-    mem = F.col("__mem")
-    pairs = F.flatten(
-        F.transform(
-            mem,
-            lambda x, i: F.transform(
-                F.slice(mem, i + 2, F.size(mem)),
-                lambda y: F.struct(
-                    x[id_col].alias("id_a"),
-                    y[id_col].alias("id_b"),
-                    x["__nfp"].alias("n_fp_a"),
-                    y["__nfp"].alias("n_fp_b"),
-                ),
-            ),
-        )
+    counted = fps.withColumn(
+        "__nfp", F.count("*").over(Window.partitionBy(id_col))
     )
     shared = (
-        buckets.select(F.explode(pairs).alias("p"))
-        .select("p.id_a", "p.id_b", "p.n_fp_a", "p.n_fp_b")
-        .groupBy("id_a", "id_b")
+        bucket_pairs(counted, ["fp"], [id_col, "__nfp"], max_docs_per_fp)
+        .groupBy(
+            F.col(f"{id_col}_a").alias("id_a"),
+            F.col(f"{id_col}_b").alias("id_b"),
+        )
         .agg(
-            F.first("n_fp_a").alias("n_fp_a"),
-            F.first("n_fp_b").alias("n_fp_b"),
+            F.first("__nfp_a").alias("n_fp_a"),
+            F.first("__nfp_b").alias("n_fp_b"),
             F.count("*").alias("n_shared"),
         )
     )
@@ -1353,35 +1309,9 @@ def split_leakage_audit(
     hashed = base.filter(F.col(text_col).isNotNull()).select(
         "__id", F.md5(F.col(text_col)).alias("__h")
     )
-    bw = Window.partitionBy("__h")
-    ex_buckets = (
-        hashed.withColumn("__bn", F.count("*").over(bw))
-        .filter(
-            (F.col("__bn") >= 2) & (F.col("__bn") <= max_docs_per_hash)
-        )
-        .groupBy("__h")
-        .agg(F.array_sort(F.collect_list("__id")).alias("__ids"))
-    )
-    ids = F.col("__ids")
-    ex_pairs = (
-        ex_buckets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        ids,
-                        lambda x, i: F.transform(
-                            F.slice(ids, i + 2, F.size(ids)),
-                            lambda y: F.struct(
-                                x.alias("id_a"), y.alias("id_b")
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.id_a", "p.id_b")
-        .distinct()
-    )
+    ex_pairs = _id_pairs(
+        bucket_pairs(hashed, ["__h"], "__id", max_docs_per_hash)
+    ).distinct()
     near_pairs = winnow_overlap_pairs(
         df,
         id_col,
@@ -2110,11 +2040,8 @@ def lsh_banding_tuner(
     n_cand_pairs, n_hit, recall_ppm, precision_ppm), NULL ppm on empty
     denominators.
     """
-    for b in band_configs:
-        if num_hashes % b:
-            raise ValueError(
-                f"bands={b} must divide num_hashes={num_hashes}"
-            )
+    for b in band_configs:  # every config checked before any job runs
+        _check_bands(num_hashes, b)
     sl = df.filter(
         (F.col(id_col) < max_eval_id) & F.col(text_col).isNotNull()
     ).select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t"))

@@ -59,6 +59,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from calp_cva_tracking_pipeline_spark.operators.dedup import bucket_pairs
 from calp_cva_tracking_pipeline_spark.session import cut
 
 RANK_SCALE = 1_000_000_000  # one unit of total rank mass, in nano-units
@@ -1268,10 +1269,9 @@ def adamic_adar(
     fewer than ``min_shared`` shared neighbors or score below
     ``min_score_nano`` drop.
 
-    Physical shape: the SAME wedge machinery as T109 -- per-center
-    sorted collect_list + in-array pair unrolling over ONE exchange
-    (never a derived self-join), with the center's weight attached
-    BEFORE the unroll so each wedge row carries its nano-pinned
+    Physical shape: wedges are ``dedup.bucket_pairs`` on the center,
+    whose weight rides as a second bucket key (``deg`` is a function of
+    the center) so each wedge row carries its nano-pinned
     contribution; the per-pair sum is then a 64-bit integer
     aggregation, order-independent and engine-exact, and the score
     ships in integer NANO-units (a rounded float would sit on exact
@@ -1319,24 +1319,12 @@ def adamic_adar(
         *[F.lit(x).cast("long") for x in aa_weights_nano(max_neighbors)]
     )
     w_nano = F.element_at(wtab, F.col("deg").cast("int"))
-    buckets = centers.groupBy("w").agg(
-        F.array_sort(F.collect_list("n")).alias("__m"),
-        F.first(w_nano).alias("__w"),
-    )
-    m = F.col("__m")
-    pairs = F.flatten(
-        F.transform(
-            m,
-            lambda x, i: F.transform(
-                F.slice(m, i + 2, F.size(m)),
-                lambda y: F.struct(x.alias("na"), y.alias("nb")),
-            ),
-        )
+    wedges = bucket_pairs(
+        centers.select("w", w_nano.alias("__w"), "n"), ["w", "__w"], "n"
     )
     out = (
-        buckets.select(F.explode(pairs).alias("p"), F.col("__w"))
-        .groupBy(
-            F.col("p.na").alias("node_a"), F.col("p.nb").alias("node_b")
+        wedges.groupBy(
+            F.col("n_a").alias("node_a"), F.col("n_b").alias("node_b")
         )
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("shared"),
@@ -1629,11 +1617,10 @@ def square_census(
     centers: a centers-only cap would break diagonal parity and the
     closed-form would stop being integral).
 
-    Physical shape: co-degrees ride the SAME per-center sorted
-    collect_list + in-array pair expansion as ``neighbor_similarity``
-    (one exchange, wedge volume Σ deg(w)² — measured α≈1 linear at 64×
-    on identical machinery), then one (u,v)-keyed count and one global
-    sum. Output: one row (n_nodes, n_edges, n_codeg_pairs, n_squares).
+    Physical shape: co-degrees count ``dedup.bucket_pairs`` wedges on
+    the center (one exchange, wedge volume Σ deg(w)² — measured α≈1
+    linear at 64×), then one (u,v)-keyed count and one global sum.
+    Output: one row (n_nodes, n_edges, n_codeg_pairs, n_squares).
     """
     # r15: the canonical edge frame feeds the degree screen (twice),
     # the hub anti-joins and the adjacency union (twice) — un-cut, the
@@ -1671,23 +1658,9 @@ def square_census(
         .unionByName(e.select(F.col("d").alias("w"), F.col("s").alias("n")))
         .distinct()
     )
-    buckets = adj.groupBy("w").agg(
-        F.array_sort(F.collect_list("n")).alias("__m")
-    )
-    m = F.col("__m")
-    pairs = F.flatten(
-        F.transform(
-            m,
-            lambda x, i: F.transform(
-                F.slice(m, i + 2, F.size(m)),
-                lambda y: F.struct(x.alias("na"), y.alias("nb")),
-            ),
-        )
-    )
     codeg = (
-        buckets.select(F.explode(pairs).alias("p"))
-        .select("p.na", "p.nb")
-        .groupBy("na", "nb")
+        bucket_pairs(adj, ["w"], "n")
+        .groupBy("n_a", "n_b")
         .agg(F.count(F.lit(1)).cast("long").alias("cd"))
     )
     sq = codeg.agg(

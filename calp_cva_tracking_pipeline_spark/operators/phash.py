@@ -51,6 +51,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from calp_cva_tracking_pipeline_spark.operators.dedup import bucket_pairs
+
 CELLS_SCHEMA = StructType(
     [
         StructField("__id", LongType(), False),
@@ -237,8 +239,9 @@ def image_phash_pairs(
 
     Pipeline: real stdlib decode → grid² integer luma-box sums →
     aHash bit i = (cells[i]·grid² > total) in cross-multiplied integer
-    arithmetic → bits packed into ``max_hamming+1`` bands → band-bucket
-    candidate join (pigeonhole-exact recall within max_hamming) →
+    arithmetic → bits packed into ``max_hamming+1`` bands →
+    ``dedup.bucket_pairs`` on the band (pigeonhole-exact recall within
+    max_hamming) →
     hamming verify via bit_count(xor) per band, summed JVM-side.
     Undecodable rows are excluded (they carry no hash).
 
@@ -291,52 +294,24 @@ def image_phash_pairs(
         ).alias("b"),
     ).select("__id", "__bands", F.col("b.blk").alias("blk"),
              F.col("b.val").alias("val"))
-    if max_bucket_docs is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("blk", "val")
-        banded = (
-            banded.withColumn("__bn", F.count("*").over(w))
-            .filter(F.col("__bn") <= max_bucket_docs)
-            .drop("__bn")
-        )
-    # per-bucket collect + in-array expansion: one exchange, upstream
-    # planned once (a derived self-join would replan the decode — the
-    # measured no-exchange-reuse trap, SCALE.md).
-    buckets = banded.groupBy("blk", "val").agg(
-        F.array_sort(
-            F.collect_list(F.struct("__id", "__bands"))
-        ).alias("__m")
-    )
-    m = F.col("__m")
-    pairs = F.flatten(
-        F.transform(
-            m,
-            lambda x, i: F.transform(
-                F.slice(m, i + 2, F.size(m)),
-                lambda y: F.struct(
-                    x["__id"].alias("id_a"),
-                    y["__id"].alias("id_b"),
-                    x["__bands"].alias("ba"),
-                    y["__bands"].alias("bb"),
-                ),
-            ),
-        )
+    # bucket_pairs plans the decode once (a derived self-join would
+    # replan it — the measured no-exchange-reuse trap, SCALE.md)
+    pairs = bucket_pairs(
+        banded, ["blk", "val"], ["__id", "__bands"], max_bucket_docs
     )
     return (
-        buckets.select(F.explode(pairs).alias("p"))
-        .select("p.id_a", "p.id_b", "p.ba", "p.bb")
+        pairs.select("__id_a", "__id_b", "__bands_a", "__bands_b")
         .distinct()
-        .withColumn(
-            "hamming",
+        .select(
+            F.col("__id_a").alias("id_a"),
+            F.col("__id_b").alias("id_b"),
             F.expr(
-                "CAST(aggregate(zip_with(ba, bb,"
+                "CAST(aggregate(zip_with(__bands_a, __bands_b,"
                 " (x, y) -> bit_count(x ^ y)), 0, (acc, h) -> acc + h)"
                 " AS INT)"
-            ),
+            ).alias("hamming"),
         )
         .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
     )
 
 

@@ -41,6 +41,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from calp_cva_tracking_pipeline_spark.operators.dedup import bucket_pairs
+
 FRSQ_MAGIC = b"FRSQ"
 
 FRAME_STATS_SCHEMA = StructType(
@@ -316,10 +318,9 @@ def video_neardup_pairs(
     byte-different copies of the same frame still count as shared.
 
     Scale shape: ONE decode pass (shared ``_frame_digests`` stage) →
-    per-video DISTINCT frame digests → digest-bucketed pair expansion
-    via groupBy + collect_list + in-array pairs (NEVER a self-join of
-    the decode-derived frame — that would plan and run the Python
-    decode twice; the minhash-LSH lesson), with digests shared by more
+    per-video DISTINCT frame digests → ``dedup.bucket_pairs`` on the
+    digest (NEVER a self-join of the decode-derived frame — that would
+    plan and run the Python decode twice), with digests shared by more
     than ``max_videos_per_frame`` videos dropped as boilerplate
     (station idents shared by thousands of clips would explode pairs
     quadratically). Both per-video sizes and the pair counts aggregate
@@ -337,34 +338,11 @@ def video_neardup_pairs(
     vc = vf.groupBy(F.col("__id").alias("__v")).agg(
         F.count(F.lit(1)).cast("bigint").alias("__nf")
     )
-    bw = Window.partitionBy("digest")
-    buckets = (
-        vf.withColumn("__bn", F.count(F.lit(1)).over(bw))
-        .filter(
-            (F.col("__bn") >= 2)
-            & (F.col("__bn") <= max_videos_per_frame)
-        )
-        .groupBy("digest")
-        .agg(F.array_sort(F.collect_list("__id")).alias("__ids"))
-    )
-    ids = F.col("__ids")
     pairs = (
-        buckets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        ids,
-                        lambda x, i: F.transform(
-                            F.slice(ids, i + 2, F.size(ids)),
-                            lambda y: F.struct(
-                                x.alias("id_a"), y.alias("id_b")
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
+        bucket_pairs(vf, ["digest"], "__id", max_videos_per_frame)
+        .groupBy(
+            F.col("__id_a").alias("id_a"), F.col("__id_b").alias("id_b")
         )
-        .groupBy("p.id_a", "p.id_b")
         .agg(F.count(F.lit(1)).cast("bigint").alias("shared_frames"))
         .filter(F.col("shared_frames") >= min_shared)
     )

@@ -18,6 +18,7 @@ from __future__ import annotations
 import math
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -53,13 +54,21 @@ MIN_HISTORY = 5  # no verdicts until a key has this many observations
 def _score_batch(
     pdf: pd.DataFrame, n: int, mean: float, m2: float, threshold: float
 ) -> tuple[pd.DataFrame, int, float, float]:
-    """Welford update + z-score per row, in arrival order."""
-    out = {"user_id": [], "event_id": [], "value": [], "zscore": [],
-           "is_anomaly": []}
-    pdf = pdf.sort_values(["ts", "event_id"])
-    for uid, eid, v in zip(pdf["user_id"], pdf["event_id"], pdf["value"]):
+    """Welford update + z-score per row, in (ts, event_id) order, NULL ts
+    last (``sort_values``' order). numpy sorts and iterates: a key's
+    group is often tens of rows, where pandas' per-call overhead
+    dominates."""
+    ts = pdf["ts"].to_numpy()
+    if ts.dtype.kind == "M":
+        ts = ts.view("i8")
+    order = np.lexsort(
+        (pdf["event_id"].to_numpy(), ts, pdf["ts"].isna().to_numpy())
+    )
+    vals = pdf["value"].to_numpy()[order]
+    zs, flags = [], []
+    for v in vals.tolist():
         z = None
-        if v is not None and not pd.isna(v):
+        if v is not None and not math.isnan(v):
             if n >= MIN_HISTORY and m2 > 0:
                 std = math.sqrt(m2 / (n - 1))
                 z = (v - mean) / std if std > 0 else 0.0
@@ -68,12 +77,18 @@ def _score_batch(
             delta = v - mean
             mean += delta / n
             m2 += delta * (v - mean)
-        out["user_id"].append(uid)
-        out["event_id"].append(eid)
-        out["value"].append(v)
-        out["zscore"].append(round(z, 6) if z is not None else None)
-        out["is_anomaly"].append(bool(z is not None and abs(z) > threshold))
-    return pd.DataFrame(out), n, mean, m2
+        zs.append(round(z, 6) if z is not None else None)
+        flags.append(bool(z is not None and abs(z) > threshold))
+    out = pd.DataFrame(
+        {
+            "user_id": pdf["user_id"].to_numpy()[order],
+            "event_id": pdf["event_id"].to_numpy()[order],
+            "value": vals,
+            "zscore": zs,
+            "is_anomaly": flags,
+        }
+    )
+    return out, n, mean, m2
 
 
 def flag_anomalies_stream(

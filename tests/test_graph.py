@@ -4,10 +4,13 @@ pure-Python references, structural rank ordering, dangling-mass
 handling, mass conservation, partition-independence (the property the
 nano-unit design buys), the wrappers' bit-for-bit degenerations onto
 each other, plan linearity and the HITS overflow guard. Then the
-triangle census and neighbour similarity."""
+triangle census, neighbour similarity, Adamic-Adar and the 4-cycle
+census."""
 
 from __future__ import annotations
 
+import itertools
+import math
 import random
 from fractions import Fraction
 
@@ -510,3 +513,154 @@ def test_neighbor_similarity_known_graph(spark):
         ).collect()
     }
     assert capped[(1, 3)] == 2 and capped[(2, 4)] == 2
+
+
+# --- link prediction and 4-cycles (wedges via dedup.bucket_pairs) ---
+
+
+def test_adamic_adar_hand_graph(spark):
+    from calp_cva_tracking_pipeline_spark.operators.graph import (
+        aa_weights_nano,
+        adamic_adar,
+    )
+
+    # star through w (deg 3) plus a second shared neighbor v (deg 2)
+    # for the (1, 2) pair only
+    edges = [(1, 10), (2, 10), (3, 10), (1, 20), (2, 20)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    out = {
+        (r.node_a, r.node_b): r
+        for r in adamic_adar(df, min_shared=1).collect()
+    }
+    w = aa_weights_nano(64)
+
+    def wd(d):  # weight of degree d (the list is 0-based at degree 1)
+        return w[d - 1]
+
+    # node 10 has degree 3, node 20 degree 2; nodes 1,2 have degree 2,
+    # node 3 degree 1. Pair (1,2): shared {10, 20}
+    assert out[(1, 2)].shared == 2
+    assert out[(1, 2)].aa_nano == wd(3) + wd(2)
+    # pairs (1,3), (2,3): shared {10} only
+    assert out[(1, 3)].aa_nano == wd(3)
+    assert out[(2, 3)].aa_nano == wd(3)
+    # the weight table matches math.log
+    assert wd(3) == int(round(1e9 / math.log(3)))
+    # pair (10, 20): shared neighbors {1, 2} (deg 2 each)
+    assert out[(10, 20)].aa_nano == 2 * wd(2)
+
+
+def test_adamic_adar_matches_python_random_graph(spark):
+    from calp_cva_tracking_pipeline_spark.operators.graph import (
+        aa_weights_nano,
+        adamic_adar,
+    )
+
+    rng = random.Random(2047)
+    edges = list({
+        (rng.randint(0, 24), rng.randint(0, 24)) for _ in range(80)
+    })
+    df = spark.createDataFrame(edges, "src long, dst long")
+    cap = 10
+    got = {
+        (r.node_a, r.node_b): (r.shared, r.aa_nano)
+        for r in adamic_adar(
+            df, min_shared=1, max_neighbors=cap
+        ).collect()
+    }
+
+    adj: dict[int, set] = {}
+    for u, v in edges:
+        if u == v:
+            continue
+        adj.setdefault(u, set()).add(v)
+        adj.setdefault(v, set()).add(u)
+    w = aa_weights_nano(cap)
+    exp: dict = {}
+    for c, ns in adj.items():
+        if len(ns) > cap:
+            continue
+        for a in ns:
+            for b in ns:
+                if a < b:
+                    s, nano = exp.get((a, b), (0, 0))
+                    exp[(a, b)] = (s + 1, nano + w[len(ns) - 1])
+    assert got == exp
+
+
+def test_square_census_hand_graphs(spark):
+    from calp_cva_tracking_pipeline_spark.operators.graph import (
+        square_census,
+    )
+
+    # C4 (one square), plus a pendant and a duplicate/reversed edge
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 1), (2, 1), (1, 5)],
+        "src long, dst long",
+    )
+    row = square_census(edges).collect()[0]
+    assert (row.n_nodes, row.n_edges, row.n_squares) == (5, 5, 1)
+    # K4: 4 nodes, 6 edges, 3 squares (each pair of disjoint edges);
+    # every unordered pair has codeg 2 -> 6 pairs * C(2,2)=1 -> 6/2=3
+    k4 = spark.createDataFrame(
+        [(a, b) for a in range(4) for b in range(a + 1, 4)],
+        "src long, dst long",
+    )
+    row = square_census(k4).collect()[0]
+    assert (row.n_nodes, row.n_edges, row.n_squares) == (4, 6, 3)
+    # triangle: no squares
+    tri = spark.createDataFrame(
+        [(1, 2), (2, 3), (1, 3)], "src long, dst long"
+    )
+    assert square_census(tri).collect()[0].n_squares == 0
+
+
+def test_square_census_hub_prune_is_node_level(spark):
+    from calp_cva_tracking_pipeline_spark.operators.graph import (
+        square_census,
+    )
+
+    # star hub 0 with 5 leaves + a disjoint C4: pruning deg>4 drops
+    # node 0 AND its edges; the square remains
+    edges = spark.createDataFrame(
+        [(0, i) for i in range(1, 6)]
+        + [(10, 11), (11, 12), (12, 13), (13, 10)],
+        "src long, dst long",
+    )
+    row = square_census(edges, max_degree=4).collect()[0]
+    assert (row.n_nodes, row.n_edges, row.n_squares) == (4, 4, 1)
+
+
+def test_square_census_matches_bruteforce_random_graphs(spark):
+    from calp_cva_tracking_pipeline_spark.operators.graph import (
+        square_census,
+    )
+
+    rng = random.Random(17)
+    for trial in range(3):
+        n = rng.randint(5, 12)
+        edges = [
+            (a, b)
+            for a in range(n)
+            for b in range(a + 1, n)
+            if rng.random() < 0.4
+        ]
+        if not edges:
+            continue
+        adj = {i: set() for i in range(n)}
+        for a, b in edges:
+            adj[a].add(b)
+            adj[b].add(a)
+        brute = 0
+        for quad in itertools.combinations(range(n), 4):
+            for perm in itertools.permutations(quad):
+                a, b, c, d = perm
+                if (
+                    b in adj[a] and c in adj[b]
+                    and d in adj[c] and a in adj[d]
+                ):
+                    brute += 1
+        brute //= 8  # each 4-cycle counted 8x (4 rotations x 2 dirs)
+        df = spark.createDataFrame(edges, "src long, dst long")
+        got = square_census(df).collect()[0].n_squares
+        assert got == brute, (trial, edges)

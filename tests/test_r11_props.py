@@ -61,44 +61,6 @@ def test_mmr_matches_python_greedy_random_pools(spark):
         assert sorted(got[q]) == exp, q
 
 
-def test_adamic_adar_matches_python_random_graph(spark):
-    from calp_cva_tracking_pipeline_spark.operators.graph import (
-        aa_weights_nano,
-        adamic_adar,
-    )
-
-    rng = random.Random(2047)
-    edges = list({
-        (rng.randint(0, 24), rng.randint(0, 24)) for _ in range(80)
-    })
-    df = spark.createDataFrame(edges, "src long, dst long")
-    cap = 10
-    got = {
-        (r.node_a, r.node_b): (r.shared, r.aa_nano)
-        for r in adamic_adar(
-            df, min_shared=1, max_neighbors=cap
-        ).collect()
-    }
-
-    adj: dict[int, set] = {}
-    for u, v in edges:
-        if u == v:
-            continue
-        adj.setdefault(u, set()).add(v)
-        adj.setdefault(v, set()).add(u)
-    w = aa_weights_nano(cap)
-    exp: dict = {}
-    for c, ns in adj.items():
-        if len(ns) > cap:
-            continue
-        for a in ns:
-            for b in ns:
-                if a < b:
-                    s, nano = exp.get((a, b), (0, 0))
-                    exp[(a, b)] = (s + 1, nano + w[len(ns) - 1])
-    assert got == exp
-
-
 def test_matryoshka_recall_matches_python_brute(spark):
     from calp_cva_tracking_pipeline_spark.operators.similarity import (
         matryoshka_recall,
@@ -142,45 +104,6 @@ def test_matryoshka_recall_matches_python_brute(spark):
         hits = sum(len(pref[qi] & full[qi]) for qi in range(3))
         assert got[d].hits == hits, d
         assert got[d].recall_ppm == 1_000_000 * hits // (3 * k)
-
-
-def test_video_neardup_matches_python_sets(spark):
-    from calp_cva_tracking_pipeline_spark.operators.bmp_stdlib import (
-        encode_bmp,
-    )
-    from calp_cva_tracking_pipeline_spark.operators.videoseq import (
-        encode_frsq,
-        video_neardup_pairs,
-    )
-
-    rng = random.Random(7)
-    frames = {i: encode_bmp(2, 2, bytes((i,) * 12)) for i in range(12)}
-    vids = {
-        v: [rng.randint(0, 11) for _ in range(rng.randint(1, 6))]
-        for v in range(8)
-    }
-    df = spark.createDataFrame(
-        [(v, encode_frsq([frames[f] for f in fs])) for v, fs in vids.items()],
-        "doc_id long, payload binary",
-    )
-    got = {
-        (r.id_a, r.id_b): (
-            r.shared_frames, r.n_frames_a, r.n_frames_b, r.jaccard_ppm
-        )
-        for r in video_neardup_pairs(df, "doc_id", "payload").collect()
-    }
-    exp = {}
-    sets = {v: set(fs) for v, fs in vids.items()}
-    for a in sets:
-        for b in sets:
-            if a < b:
-                sh = len(sets[a] & sets[b])
-                if sh >= 1:
-                    na, nb = len(sets[a]), len(sets[b])
-                    exp[(a, b)] = (
-                        sh, na, nb, 1_000_000 * sh // (na + nb - sh)
-                    )
-    assert got == exp
 
 
 def test_twap_matches_python_integration(spark):

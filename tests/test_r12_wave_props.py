@@ -7,7 +7,6 @@ contract)."""
 from __future__ import annotations
 
 import hashlib
-import itertools
 import random
 
 
@@ -115,41 +114,6 @@ def test_growth_accounting_identity_and_flows_random(spark):
     assert sum(r.n_new + r.n_resurrected for r in out) == sum(
         r.n_churned for r in out
     )
-
-
-def test_square_census_matches_bruteforce_random_graphs(spark):
-    from calp_cva_tracking_pipeline_spark.operators.graph import (
-        square_census,
-    )
-
-    rng = random.Random(17)
-    for trial in range(3):
-        n = rng.randint(5, 12)
-        edges = [
-            (a, b)
-            for a in range(n)
-            for b in range(a + 1, n)
-            if rng.random() < 0.4
-        ]
-        if not edges:
-            continue
-        adj = {i: set() for i in range(n)}
-        for a, b in edges:
-            adj[a].add(b)
-            adj[b].add(a)
-        brute = 0
-        for quad in itertools.combinations(range(n), 4):
-            for perm in itertools.permutations(quad):
-                a, b, c, d = perm
-                if (
-                    b in adj[a] and c in adj[b]
-                    and d in adj[c] and a in adj[d]
-                ):
-                    brute += 1
-        brute //= 8  # each 4-cycle counted 8x (4 rotations x 2 dirs)
-        df = spark.createDataFrame(edges, "src long, dst long")
-        got = square_census(df).collect()[0].n_squares
-        assert got == brute, (trial, edges)
 
 
 def test_bloom_prescreen_fp_rate_sane_and_no_false_negatives(spark):

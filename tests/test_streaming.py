@@ -169,6 +169,54 @@ def test_stateful_anomaly_flags_outliers(spark):
     )
 
 
+def test_anomaly_ts_ties_break_by_event_id(spark):
+    """Events that share a ts score in event_id order, NULL ts last — the
+    order a pure-Python Welford replays here."""
+    import datetime
+    import math
+    import random
+
+    from calp_cva_tracking_pipeline_spark.streaming.anomaly import (
+        MIN_HISTORY,
+        flag_anomalies_batch,
+    )
+
+    rng = random.Random(11)
+    base = datetime.datetime(2025, 1, 1)
+    rows = []
+    for eid in rng.sample(range(1000), 40):
+        ts = None if eid % 9 == 0 else base + datetime.timedelta(
+            minutes=rng.randint(0, 4)
+        )
+        v = None if eid % 13 == 0 else rng.choice([1.0, 5.0, 50.0, 9.5])
+        rows.append((eid, ts, 1, v, "x", "p"))
+    df = spark.createDataFrame(
+        rows,
+        "event_id long, ts timestamp, user_id long, value double,"
+        " event_type string, props string",
+    )
+    got = {
+        r["event_id"]: r["zscore"]
+        for r in flag_anomalies_batch(df, threshold=1.0).collect()
+    }
+
+    exp, n, mean, m2 = {}, 0, 0.0, 0.0
+    for eid, ts, _, v, _, _ in sorted(
+        rows, key=lambda r: (r[1] is None, r[1] or base, r[0])
+    ):
+        z = None
+        if v is not None:
+            if n >= MIN_HISTORY and m2 > 0:
+                z = round((v - mean) / math.sqrt(m2 / (n - 1)), 6)
+            n += 1
+            delta = v - mean
+            mean += delta / n
+            m2 += delta * (v - mean)
+        exp[eid] = z
+    assert len({r[1] for r in rows}) < len(rows)  # ts ties exist
+    assert got == exp
+
+
 def test_ep2_classification_runs_on_a_stream(spark, tmp_path):
     """The EP2 classification chain (J7 join → C1/CC1 → M1 pandas_udf →
     CC2 → CC3) is ONE lazy DAG, so it must run unchanged as a Structured

@@ -1,7 +1,8 @@
-"""Sixteenth-wave operators (round 8): basket association rules, FK
-integrity audit, label-propagation communities — hand-computed
-expectations (oracle parity runs separately in test_oracle_parity.py via
-the catalog entries; the CUSUM tests live in test_temporal.py)."""
+"""Sixteenth-wave operators (round 8): FK integrity audit,
+label-propagation communities — hand-computed expectations (oracle
+parity runs separately in test_oracle_parity.py via the catalog entries;
+the CUSUM tests live in test_temporal.py, the association-rule tests in
+test_bucket_pairs.py)."""
 
 from __future__ import annotations
 
@@ -10,75 +11,12 @@ from itertools import combinations
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from calp_cva_tracking_pipeline_spark.operators.assoc import (
-    association_rules,
-)
 from calp_cva_tracking_pipeline_spark.operators.graph import (
     label_propagation,
 )
 from calp_cva_tracking_pipeline_spark.operators.profiling import (
     ref_integrity,
 )
-
-
-# --- association rules ---
-
-
-def test_association_rules_hand_computed(spark):
-    # 4 baskets over items 1..3; item 4 infrequent (appears once).
-    baskets = {
-        10: [1, 2, 3],
-        20: [1, 2],
-        30: [1, 2, 4],
-        40: [3, 1],
-    }
-    rows = [
-        Row(b=b, i=i) for b, items in baskets.items() for i in items
-    ]
-    df = spark.createDataFrame(rows)
-    got = {
-        (r.antecedent, r.consequent): (
-            r.pair_n,
-            r.support,
-            r.confidence,
-            r.lift,
-        )
-        for r in association_rules(
-            df, "b", "i", min_item_count=2, min_pair_count=2
-        ).collect()
-    }
-    # item counts: 1->4, 2->3, 3->2, 4->1 (dropped). pairs: (1,2)->3,
-    # (1,3)->2, (2,3)->1 (below floor). n_baskets = 4.
-    assert set(got) == {(1, 2), (2, 1), (1, 3), (3, 1)}
-    assert got[(1, 2)] == (3, 0.75, 0.75, 1.0)
-    assert got[(2, 1)] == (3, 0.75, 1.0, 1.0)
-    assert got[(1, 3)] == (2, 0.5, 0.5, 1.0)
-    assert got[(3, 1)] == (2, 0.5, 1.0, 1.0)
-
-
-def test_association_rules_mega_basket_guard_and_dup_rows(spark):
-    rows = [Row(b=1, i=i) for i in range(10)] + [
-        Row(b=2, i=0),
-        Row(b=2, i=1),
-        Row(b=2, i=0),  # duplicate (basket, item) row: counted once
-        Row(b=3, i=0),
-        Row(b=3, i=1),
-    ]
-    df = spark.createDataFrame(rows)
-    got = {
-        (r.antecedent, r.consequent): r.pair_n
-        for r in association_rules(
-            df,
-            "b",
-            "i",
-            min_item_count=1,
-            min_pair_count=2,
-            max_basket=5,
-        ).collect()
-    }
-    # basket 1 (10 items > cap) contributes no pairs; (0,1) co-occurs in
-    # baskets 2 and 3 only.
-    assert got == {(0, 1): 2, (1, 0): 2}
 
 
 # --- referential integrity ---

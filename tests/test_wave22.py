@@ -4,96 +4,6 @@ right answer is checkable by eye or by a tiny Python reference)."""
 
 from __future__ import annotations
 
-import hashlib
-
-
-def _h60(s: str) -> int:
-    """Python twin of functions.hashing.stable_hash64."""
-    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-
-
-def _winnow_ref(text: str, k: int, w: int) -> set[int]:
-    """Reference winnowing fingerprint set (Schleimer et al. Fig. 5,
-    set semantics: per full window keep the min gram hash; short docs
-    with >= 1 gram keep their global min)."""
-    toks = text.split()
-    grams = [
-        _h60(" ".join(toks[i : i + k])) for i in range(len(toks) - k + 1)
-    ]
-    if not grams:
-        return set()
-    if len(grams) < w:
-        return {min(grams)}
-    return {min(grams[i : i + w]) for i in range(len(grams) - w + 1)}
-
-
-def test_winnow_fingerprints_match_python_reference(spark):
-    from calp_cva_tracking_pipeline_spark.operators.dedup import (
-        winnow_fingerprints,
-    )
-
-    docs = [
-        (1, "the quick brown fox jumps over the lazy dog tonight"),
-        (2, "a b c d e f g h i j k l m n o p"),
-        (3, "one two three four five"),  # exactly 1 gram at k=5
-        (4, "too short"),  # < k tokens: no fingerprints
-        (5, "w x y z aa bb"),  # 2 grams < w: global min only
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    out = winnow_fingerprints(df, "doc_id", k=5, window=4)
-    got: dict[int, set[int]] = {}
-    for r in out.collect():
-        got.setdefault(r.doc_id, set()).add(r.fp)
-    for doc_id, text in docs:
-        assert got.get(doc_id, set()) == _winnow_ref(text, 5, 4), doc_id
-
-
-def test_winnow_detects_shared_runs_at_guarantee_length(spark):
-    from calp_cva_tracking_pipeline_spark.operators.dedup import (
-        winnow_overlap_pairs,
-    )
-
-    # k=5, w=4 -> guarantee t = 8 shared tokens. Docs 1/2 share an
-    # 8-token run embedded in otherwise-disjoint text; doc 3 is unrelated.
-    shared = "alpha beta gamma delta epsilon zeta eta theta"
-    docs = [
-        (1, "intro words here " + shared + " closing remarks follow now"),
-        (2, "completely different opening " + shared + " different tail"),
-        (3, "nothing in common with either document at all whatsoever ok"),
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    pairs = {
-        (r.id_a, r.id_b): r.n_shared
-        for r in winnow_overlap_pairs(
-            df, "doc_id", k=5, window=4
-        ).collect()
-    }
-    assert (1, 2) in pairs and pairs[(1, 2)] >= 1
-    assert all({a, b} == {1, 2} for a, b in pairs)
-
-
-def test_winnow_volume_strictly_below_all_grams(spark):
-    from pyspark.sql import functions as F
-
-    from calp_cva_tracking_pipeline_spark.operators.dedup import (
-        winnow_fingerprints,
-    )
-
-    # 60 distinct tokens -> 56 grams; winnowing must select far fewer
-    # (expected ~2/(w+1) of positions; distinct-set even fewer).
-    text = " ".join(f"tok{i * 7 % 61}" for i in range(60))
-    df = spark.createDataFrame([(1, text)], "doc_id long, text string")
-    n_fp = winnow_fingerprints(df, "doc_id", k=5, window=4).count()
-    n_grams = 60 - 5 + 1
-    assert 0 < n_fp < n_grams / 2
-    # deterministic across runs
-    assert (
-        winnow_fingerprints(df, "doc_id", k=5, window=4)
-        .agg(F.count("*"))
-        .first()[0]
-        == n_fp
-    )
-
 
 def test_cohens_kappa_textbook_and_edge_cases(spark):
     from calp_cva_tracking_pipeline_spark.operators.profiling import (
@@ -636,47 +546,6 @@ def test_pit_lookup_semantics_via_asof(spark):
         right_cols=["version", "attr"],
     ).orderBy("at").collect()
     assert [r.attr for r in out] == [None, "A", "A", "B", "C"]
-
-
-def test_split_leakage_audit_cross_cells(spark):
-    from calp_cva_tracking_pipeline_spark.operators.dedup import (
-        split_leakage_audit,
-    )
-    from calp_cva_tracking_pipeline_spark.operators.sampling import (
-        group_split,
-    )
-
-    shared = "alpha beta gamma delta epsilon zeta eta theta"
-    # 12 docs: 0/1 exact dups, 2/3 share an 8-token run, rest unique
-    docs = [
-        (0, "identical text body repeated exactly the same here okay"),
-        (1, "identical text body repeated exactly the same here okay"),
-        (2, "intro words here " + shared + " closing remarks follow"),
-        (3, "different opening " + shared + " and a different tail"),
-    ] + [
-        (i, f"totally unique document number {i} with filler words "
-            f"xx{i} yy{i} zz{i} ww{i} vv{i}")
-        for i in range(4, 12)
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    out = split_leakage_audit(df, "doc_id", "text").collect()
-    total_exact = sum(r.n_exact_pairs for r in out)
-    total_near = sum(r.n_near_pairs for r in out)
-    assert total_exact == 1  # the (0,1) pair
-    assert total_near >= 2   # (0,1) exact pair is also near; plus (2,3)
-    # the pair cells must be consistent with the actual assignment
-    splits = {
-        r["__id"]: r["split"]
-        for r in group_split(
-            df.selectExpr("doc_id as __id", "text"), "__id",
-            {"train": 0.8, "val": 0.1, "test": 0.1},
-        ).collect()
-    }
-    s0, s1 = sorted([splits[0], splits[1]])
-    ex_cell = {(r.split_a, r.split_b): r.n_exact_pairs for r in out}
-    assert ex_cell.get((s0, s1), 0) == 1
-    for r in out:
-        assert r.cross == (r.split_a != r.split_b)
 
 
 def test_markov_stationary_two_state_chain(spark):

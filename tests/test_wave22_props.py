@@ -2,8 +2,8 @@
 pure-Python references — the test_r9_props pattern (one big seeded-random
 DataFrame per property, not hypothesis-per-example). These catch what
 the star-schema oracle data cannot: adversarial tie pileups, degenerate
-groups, random interval geometry, and the winnowing guarantee under
-random shared runs.
+groups and random interval geometry (the winnowing guarantee under
+random shared runs lives in tests/test_bucket_pairs.py).
 """
 
 from __future__ import annotations
@@ -14,53 +14,6 @@ import math
 import random
 
 _D0 = dt.datetime(2024, 1, 1)
-
-
-def test_winnow_guarantee_under_random_shared_runs(spark):
-    """Any two docs sharing a random run of >= window+k-1 tokens MUST
-    pair (the winnowing correctness theorem), for random placements and
-    random surrounding text."""
-    from calp_cva_tracking_pipeline_spark.operators.dedup import (
-        winnow_overlap_pairs,
-    )
-
-    rng = random.Random(2201)
-    K, W = 5, 4
-    t = W + K - 1  # 8
-    docs = []
-    must_pair = set()
-    did = 0
-    for case in range(30):
-        run_len = rng.randint(t, t + 6)
-        shared = [f"s{case}_{j}" for j in range(run_len)]
-        ids = []
-        for side in range(2):
-            pre = [f"p{case}_{side}_{j}" for j in range(rng.randint(0, 10))]
-            post = [f"q{case}_{side}_{j}" for j in range(rng.randint(0, 10))]
-            docs.append((did, " ".join(pre + shared + post)))
-            ids.append(did)
-            did += 1
-        must_pair.add((min(ids), max(ids)))
-    # plus unique noise docs that must pair with nobody
-    for _ in range(20):
-        docs.append(
-            (did, " ".join(f"n{did}_{j}" for j in range(rng.randint(6, 30))))
-        )
-        did += 1
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = {
-        (r.id_a, r.id_b)
-        for r in winnow_overlap_pairs(
-            df, "doc_id", k=K, window=W, max_docs_per_fp=64
-        ).collect()
-    }
-    missing = must_pair - got
-    assert not missing, f"guarantee violated for {sorted(missing)[:5]}"
-    # noise docs never pair
-    noise_ids = set(range(60, did))
-    assert all(
-        a not in noise_ids and b not in noise_ids for a, b in got
-    )
 
 
 def test_kaplan_meier_matches_python_reference(spark):

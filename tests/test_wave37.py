@@ -1,67 +1,10 @@
-"""Round-11 wave-37 operator pins: video-level near-dup and
-exact-substring duplicate-run spans — hand-built inputs with
-independently-derived expectations. The hard-negative mining and
-incremental IVF audit pins live in tests/test_ivf.py."""
+"""Round-11 wave-37 operator pins: exact-substring duplicate-run spans —
+hand-built inputs with independently-derived expectations. The
+video-level near-dup pins live in tests/test_bucket_pairs.py, the
+hard-negative mining and incremental IVF audit pins in
+tests/test_ivf.py."""
 
 from __future__ import annotations
-
-
-def test_video_neardup_pairs_hand_videos(spark):
-    from calp_cva_tracking_pipeline_spark.operators.bmp_stdlib import (
-        encode_bmp,
-    )
-    from calp_cva_tracking_pipeline_spark.operators.videoseq import (
-        encode_frsq,
-        video_neardup_pairs,
-    )
-
-    def frame(level):
-        return encode_bmp(4, 4, bytes((level,) * 48))
-
-    A, B, C, D = frame(10), frame(20), frame(30), frame(40)
-    rows = [
-        (1, encode_frsq([A, B])),        # shares A,B with 2; A with 3
-        (2, encode_frsq([A, B, C])),     # shares A with 3
-        (3, encode_frsq([A, A, D])),     # duplicate frame collapses
-        (4, encode_frsq([frame(99)])),   # isolated
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    out = {
-        (r.id_a, r.id_b): r
-        for r in video_neardup_pairs(df, "doc_id", "payload").collect()
-    }
-    assert set(out) == {(1, 2), (1, 3), (2, 3)}
-    # v1={A,B} v2={A,B,C}: shared 2, jacc = 2/3
-    r = out[(1, 2)]
-    assert (r.shared_frames, r.n_frames_a, r.n_frames_b) == (2, 2, 3)
-    assert r.jaccard_ppm == 1_000_000 * 2 // 3
-    # v3's duplicate A counts once: {A,D}
-    r = out[(1, 3)]
-    assert (r.shared_frames, r.n_frames_a, r.n_frames_b) == (1, 2, 2)
-    assert r.jaccard_ppm == 1_000_000 // 3
-
-
-def test_video_neardup_single_decode_stage(spark):
-    from calp_cva_tracking_pipeline_spark.operators.bmp_stdlib import (
-        encode_bmp,
-    )
-    from calp_cva_tracking_pipeline_spark.operators.videoseq import (
-        encode_frsq,
-        video_neardup_pairs,
-    )
-
-    f = encode_bmp(2, 2, bytes(12))
-    df = spark.createDataFrame(
-        [(i, encode_frsq([f])) for i in range(4)],
-        "doc_id long, payload binary",
-    )
-    out = video_neardup_pairs(df, "doc_id", "payload")
-    out.collect()
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # the decode must be planned once (bucketed pair expansion, not a
-    # self-join of the decode-derived frame); the per-video size join
-    # reuses the distinct exchange
-    assert plan.count("ArrowEvalPython") <= 1, plan.count("ArrowEvalPython")
 
 
 def test_duplicate_run_spans_hand_docs(spark):

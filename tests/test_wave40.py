@@ -1,10 +1,10 @@
-"""Round-11 wave-40 operator pins: n-gram coverage, cohort value curve,
-Adamic-Adar — hand-built inputs with independently derived values."""
+"""Round-11 wave-40 operator pins: n-gram coverage, cohort value curve —
+hand-built inputs with independently derived values (the Adamic-Adar
+pin lives in tests/test_graph.py)."""
 
 from __future__ import annotations
 
 import datetime as dt
-import math
 
 
 def test_ngram_coverage_hand_docs(spark):
@@ -70,38 +70,6 @@ def test_cohort_value_curve_hand_events(spark):
     c = out[("2024-01-08", 0)]
     assert (c.n_active, c.period_value, c.cum_value) == (1, 5.0, 5.0)
     assert len(out) == 3
-
-
-def test_adamic_adar_hand_graph(spark):
-    from calp_cva_tracking_pipeline_spark.operators.graph import (
-        aa_weights_nano,
-        adamic_adar,
-    )
-
-    # star through w (deg 3) plus a second shared neighbor v (deg 2)
-    # for the (1, 2) pair only
-    edges = [(1, 10), (2, 10), (3, 10), (1, 20), (2, 20)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    out = {
-        (r.node_a, r.node_b): r
-        for r in adamic_adar(df, min_shared=1).collect()
-    }
-    w = aa_weights_nano(64)
-
-    def wd(d):  # weight of degree d (the list is 0-based at degree 1)
-        return w[d - 1]
-
-    # node 10 has degree 3, node 20 degree 2; nodes 1,2 have degree 2,
-    # node 3 degree 1. Pair (1,2): shared {10, 20}
-    assert out[(1, 2)].shared == 2
-    assert out[(1, 2)].aa_nano == wd(3) + wd(2)
-    # pairs (1,3), (2,3): shared {10} only
-    assert out[(1, 3)].aa_nano == wd(3)
-    assert out[(2, 3)].aa_nano == wd(3)
-    # the weight table matches math.log
-    assert wd(3) == int(round(1e9 / math.log(3)))
-    # pair (10, 20): shared neighbors {1, 2} (deg 2 each)
-    assert out[(10, 20)].aa_nano == 2 * wd(2)
 
 
 def test_json_schema_drift_hand_slices(spark):

@@ -1,6 +1,7 @@
-"""Round-12 wave-52 operator pins: 4-cycle census, forecast-baseline
-backtest, prune-plan simulator, chunk-dedup census — hand-built inputs
-with independently derived values, plus plan shapes."""
+"""Round-12 wave-52 operator pins: forecast-baseline backtest,
+prune-plan simulator, chunk-dedup census — hand-built inputs with
+independently derived values, plus plan shapes (the 4-cycle census
+pins live in tests/test_graph.py)."""
 
 from __future__ import annotations
 
@@ -9,49 +10,6 @@ import datetime as dt
 
 def _executed(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_square_census_hand_graphs(spark):
-    from calp_cva_tracking_pipeline_spark.operators.graph import (
-        square_census,
-    )
-
-    # C4 (one square), plus a pendant and a duplicate/reversed edge
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 1), (2, 1), (1, 5)],
-        "src long, dst long",
-    )
-    row = square_census(edges).collect()[0]
-    assert (row.n_nodes, row.n_edges, row.n_squares) == (5, 5, 1)
-    # K4: 4 nodes, 6 edges, 3 squares (each pair of disjoint edges);
-    # every unordered pair has codeg 2 -> 6 pairs * C(2,2)=1 -> 6/2=3
-    k4 = spark.createDataFrame(
-        [(a, b) for a in range(4) for b in range(a + 1, 4)],
-        "src long, dst long",
-    )
-    row = square_census(k4).collect()[0]
-    assert (row.n_nodes, row.n_edges, row.n_squares) == (4, 6, 3)
-    # triangle: no squares
-    tri = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 3)], "src long, dst long"
-    )
-    assert square_census(tri).collect()[0].n_squares == 0
-
-
-def test_square_census_hub_prune_is_node_level(spark):
-    from calp_cva_tracking_pipeline_spark.operators.graph import (
-        square_census,
-    )
-
-    # star hub 0 with 5 leaves + a disjoint C4: pruning deg>4 drops
-    # node 0 AND its edges; the square remains
-    edges = spark.createDataFrame(
-        [(0, i) for i in range(1, 6)]
-        + [(10, 11), (11, 12), (12, 13), (13, 10)],
-        "src long, dst long",
-    )
-    row = square_census(edges, max_degree=4).collect()[0]
-    assert (row.n_nodes, row.n_edges, row.n_squares) == (4, 4, 1)
 
 
 def test_forecast_backtest_hand_series(spark):
